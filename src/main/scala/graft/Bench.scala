@@ -29,32 +29,9 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // the suite has well over 100 whole-stage-codegen units, so the
-      // default 100-entry static codegen class cache thrashes: EVERY rep
-      // of EVERY query recompiles its generated code. Sizing the cache
-      // to hold the whole suite cut the full-suite sum-of-mins 26% at
-      // local[32] (measured A/B, tools/DiagBench) and removes the
-      // "slow in-suite, fast in isolation" anomaly class of r2-r4.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      // (limit.initialNumPartitions is no longer set here: the graph
-      // size gate scopes it around its own take — PageRank.takeUnderGate)
-      // see Tables.NanosAsLongKey: session-construction-time flag
-      .config(graft.sources.Tables.NanosAsLongKey, "true")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = GraftSession.local(cpus, "graft-bench")
     spark.sparkContext.setLogLevel("WARN")
-    // the hygiene unpersist below (see loop) fires one benign
-    // "locally checkpointed ... cannot be recomputed" WARN per dropped
-    // RDD; silence exactly that logger package — nothing is ever
-    // recomputed across queries, each lambda rebuilds from parquet
-    try org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.rdd", org.apache.logging.log4j.Level.ERROR)
-    catch { case _: Throwable => () }
 
     // warm-up: session init, codegen, parquet footer reads
     spark.range(1000000).selectExpr("sum(id)").collect()
@@ -77,25 +54,7 @@ object Bench {
       // per-query progress to stderr: a stalled in-suite run then says
       // exactly which query it was inside when the wall-clock vanished
       System.err.println(f"[bench] rep $r $name ${dt}%.2f s${if (ok) "" else " FAIL"}")
-      // UNTIMED inter-query hygiene: drop any cache a query leaked past
-      // its end and nudge the ContextCleaner to reap dereferenced
-      // checkpoint/broadcast blocks. Without this, a 113-query session
-      // accumulates pinned memory that inflates later entries' GC time —
-      // each timed run should start from the same no-pinned-state
-      // baseline it would see in isolation.
-      try spark.catalog.clearCache() catch { case _: Throwable => () }
-      // r16: also unpersist RDD-level blocks (localCheckpoint data)
-      // synchronously — clearCache only sees SQL-cached relations, and
-      // the ContextCleaner's reap of dereferenced checkpoint RDDs is
-      // ASYNC (post-GC), i.e. it would land inside the NEXT query's
-      // timed window. Nothing is reused across queries, so dropping
-      // everything here restores the same no-pinned-state baseline a
-      // query sees in isolation. Untimed hygiene only — the timed
-      // action, statistic, interleaving and query set are unchanged.
-      try spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      catch { case _: Throwable => () }
-      System.gc()
+      resetBetweenQueries(spark)
     }
     val results = ordered.map { case (name, _) => name -> times(name) }
     // the per-query statistic: median of successful reps (lower middle
@@ -168,5 +127,37 @@ object Bench {
       else f"${common.map(_._2).sum / common.map(_._3).sum}%.3f"
     println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$top10,"n_queries":${results.size},"failed":$failedJson,"ratio_vs_duck":$ratioSummary,"full":"$outFile","sf":"$sfDir"}""")
     spark.stop()
+  }
+
+  /** UNTIMED inter-query hygiene: drop any cache a query leaked past its
+    * end and nudge the ContextCleaner to reap dereferenced
+    * checkpoint/broadcast blocks. Without this, a 113-query session
+    * accumulates pinned memory that inflates later entries' GC time —
+    * each timed run should start from the same no-pinned-state baseline
+    * it would see in isolation. */
+  private[graft] def resetBetweenQueries(spark: SparkSession): Unit = {
+    try spark.catalog.clearCache() catch { case _: Throwable => () }
+    // r16: also unpersist RDD-level blocks (localCheckpoint data)
+    // synchronously — clearCache only sees SQL-cached relations, and
+    // the ContextCleaner's reap of dereferenced checkpoint RDDs is
+    // ASYNC (post-GC), i.e. it would land inside the NEXT query's timed
+    // window. Nothing is reused across queries: each lambda rebuilds
+    // from parquet. Each dropped checkpoint logs a benign "locally
+    // checkpointed ... cannot be recomputed" WARN under its runtime
+    // subclass's logger (MapPartitionsRDD, ...), so the whole
+    // org.apache.spark.rdd package is quieted for this loop only.
+    try quietly("org.apache.spark.rdd") {
+      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+    } catch { case _: Throwable => () }
+    System.gc()
+  }
+
+  /** Run `body` with `logger` at ERROR, restoring its previous level. */
+  private def quietly[A](logger: String)(body: => A): A = {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.config.Configurator
+    val prev = LogManager.getLogger(logger).getLevel
+    Configurator.setLevel(logger, Level.ERROR)
+    try body finally Configurator.setLevel(logger, prev)
   }
 }

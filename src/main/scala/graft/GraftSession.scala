@@ -23,8 +23,9 @@ object GraftSession {
       .config("spark.ui.enabled", "false")
       // static conf: the generated-class cache defaults to 100 entries,
       // which a many-query analytics session overflows — each re-run
-      // then recompiles its whole-stage codegen (measured 26% of a
-      // 114-query suite's wall-clock; see Bench)
+      // then recompiles its whole-stage codegen. Sizing it to hold the
+      // whole suite cut the full-suite sum-of-mins 26% at local[32]
+      // (measured A/B; probe removed, see git history at 894f351)
       .config("spark.sql.codegen.cache.maxEntries", "5000")
       // NOTE: spark.sql.limit.initialNumPartitions is deliberately NOT
       // set here. The graph operators' size gate wants a full-partition

@@ -39,8 +39,8 @@ object TextFns {
     * [[shingleAt]]`(toks, pos, n)` per row. [[shingles]] builds the
     * array with a `transform` HOF, which falls out of whole-stage
     * codegen into interpreted eval (~10× slower per element, measured
-    * in tools/DiagSpan2); the exploded-positions form keeps every
-    * expression codegen'd. Use when the shingles feed a row stream
+    * by a probe since removed; see git history at 894f351); the
+    * exploded-positions form keeps every expression codegen'd. Use when the shingles feed a row stream
     * anyway; keep [[shingles]]/[[shingleSet]] when an in-row array (or
     * in-row `array_distinct`) is the point. */
   def shinglePositions(toks: Column, n: Int): Column =

@@ -25,8 +25,9 @@ object VectorFns {
   /** Cosine similarity — backed by the native one-pass codegen
     * expression (`graft.plans.CosineSimExpr`): the HOF formulation
     * evaluates an interpreted lambda per element (~400 ns/element,
-    * measured in tools/DiagCos), which is the inner loop of every
-    * similarity operator at corpus scale. Same values, same null
+    * measured by a probe since removed; see git history at 894f351),
+    * which is the inner loop of every similarity operator at corpus
+    * scale. Same values, same null
     * semantics (cosineHof retained for the parity spec). */
   def cosine(a: Column, b: Column): Column =
     graft.plans.CosineSimExpr.cosineSim(d(a), d(b))

@@ -59,7 +59,8 @@ object Dedup {
     *    each shingle with row-level `element_at` concat — see
     *    TextFns.shinglePositions) instead of an in-row
     *    `array_distinct(transform(...))`: higher-order functions run
-    *    interpreted, ~10× slower per element (tools/DiagSpan2). The
+    *    interpreted, ~10× slower per element (probe removed, see git
+    *    history at 894f351). The
     *    per-doc dedup the array_distinct provided becomes a
     *    `groupBy(id, sh)` — EXCHANGE-FREE, because hash(id) from the
     *    repartition above already clusters (id, sh), and the agg output
@@ -331,7 +332,8 @@ object Dedup {
     *    with a `transform` HOF inside one row; higher-order functions
     *    fall out of whole-stage codegen into interpreted eval, and the
     *    measured cost was ~25µs/span vs ~2µs for the codegen'd
-    *    explode+slice shape (10-15× on the same data, tools/DiagSpan2).
+    *    explode+slice shape (10-15× on the same data; probe removed,
+    *    see git history at 894f351).
     *    Tokens are split once per doc either way; the exploded rows
     *    carry (id, pos, hash) only — the token array never crosses the
     *    shuffle;
@@ -712,11 +714,7 @@ object Dedup {
       converged = next.filter(col("__changed")).isEmpty
       labels = next.select(col("node"), col("comp"))
       i += 1
-      if (sys.env.contains("SPARK_GRAFT_CC_DEBUG"))
-        System.err.println(s"[cc] round $i done t=${System.nanoTime() / 1e9}")
     }
-    if (sys.env.contains("SPARK_GRAFT_CC_DEBUG"))
-      System.err.println(s"[cc] rounds=$i converged=$converged")
     if (!converged)
       // an unconverged result silently merges fewer clusters than the
       // true components — surface it loudly rather than return it quietly

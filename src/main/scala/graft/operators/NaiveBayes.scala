@@ -158,12 +158,16 @@ object NaiveBayes {
     // docs with no tokens score on the prior alone — their argmax is
     // one constant over the L-row collected prior LocalRelation,
     // attached to the anti-join remainder (the distinct mirrors the
-    // old groupBy's one-row-per-id contract for degenerate inputs)
+    // old groupBy's one-row-per-id contract for degenerate inputs).
+    // The anti-join is null-safe: `withTokens` already groups a
+    // tokenized NULL id into one row, so a plain `=` (NULL never
+    // matches) would emit that id a second time here.
     val zeroPred = priors
       .agg(max(struct(col("pw").as("s"), col("label").as("l"))).as("m"))
       .select(col("m.l").as("predicted"))
+    val tokenIds = docBuckets.select(col(idCol).as("__tok_id"))
     val zeros = docs.select(col(idCol)).distinct()
-      .join(docBuckets.select(col(idCol)), Seq(idCol), "left_anti")
+      .join(tokenIds, col(idCol) <=> col("__tok_id"), "left_anti")
       .crossJoin(broadcast(zeroPred))
     withTokens.unionByName(zeros)
   }

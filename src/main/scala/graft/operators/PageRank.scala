@@ -113,6 +113,14 @@ object PageRank {
     * 2M rows (~200 MB transient worst-case) bounds that footprint. */
   private[graft] val ProbeRowLimit: Long = 2L << 20
 
+  /** Diagnostic gate override (set by `tools.DiagScale` from
+    * SPARK_GRAFT_LOCAL_EDGE_LIMIT): when the system property is set, its
+    * value replaces every caller's localEdgeLimit — "0" forces the
+    * DISTRIBUTED path of all size-gated graph ops in one process, so the
+    * plans that would actually run at 100× scale can be wall-clocked
+    * against their local twins. Never set in production code paths. */
+  private[graft] val GateOverrideProp = "graft.gate.override"
+
   /** The size gate as ONE driver job in the common case: `take(probe+1)`
     * both answers "is the edge set under the gate?" and, when it is, IS
     * the collected edge list the local path iterates (with
@@ -128,14 +136,6 @@ object PageRank {
     * extra count+collect jobs; callers cache expensive edge pipelines,
     * so those re-scans hit the cache the probe just populated.
     * Returns None when over the gate (or the gate is disabled: ≤ 0). */
-  /** Diagnostic gate override (tools/DiagDistributed): when the system
-    * property is set, its value replaces every caller's localEdgeLimit —
-    * "0" forces the DISTRIBUTED path of all size-gated graph ops in one
-    * process, so the plans that would actually run at 100× scale can be
-    * wall-clocked against their local twins. Never set in production
-    * code paths. */
-  private[graft] val GateOverrideProp = "graft.gate.override"
-
   private[graft] def takeUnderGate(edges: DataFrame, localEdgeLimit0: Long,
       tag: String): Option[Array[Row]] = {
     val localEdgeLimit =

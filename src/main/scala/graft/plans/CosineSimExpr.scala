@@ -14,9 +14,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * Why custom (SURVEY §7.3 "only if measured"): the higher-order
   * `zip_with`/`aggregate` formulation evaluates an interpreted lambda per
   * array element — ~400 ns/element, 5.2 s for 2M×64-dim vectors on 32
-  * cores (tools/DiagCos). This is the inner loop of every similarity
-  * operator (brute-force top-k, LSH/IVF verify, near-dup pairs), so at
-  * corpus scale it IS the workload. One fused primitive loop per row
+  * cores (probe removed, see git history at 894f351). This is the inner
+  * loop of every similarity operator (brute-force top-k, LSH/IVF verify,
+  * near-dup pairs), so at corpus scale it IS the workload. One fused primitive loop per row
   * computes dot and both norms in a single pass and stays inside
   * whole-stage codegen.
   *

@@ -243,10 +243,10 @@ object WebQueries {
     * (urlset/url/loc+lastmod, the sitemaps.org schema) is scanned with
     * `regexp_extract_all` into POSITIONALLY PAIRED loc/lastmod lists
     * (posexplode + element_at) in BOTH dialects — the r13 A/B
-    * (tools/DiagQ157) measured the regex serving path 2.4× faster than
-    * the pooled-DOM `xpath` form for this fixed two-element schema, so
-    * the XPath form lives in the diagnostic and general-XML XPath
-    * coverage stays on q136's attribute-struct contract.
+    * (probe removed, see git history at 894f351) measured the regex
+    * serving path 2.4× faster than the pooled-DOM `xpath` form for this
+    * fixed two-element schema, so general-XML XPath coverage stays on
+    * q136's attribute-struct contract.
     * Already-visited locs (portable-hash bucket) are anti-joined away
     * and the frontier is budgeted per source with its lastmod window. */
   val q157SitemapFrontier = Q(
@@ -294,9 +294,9 @@ object WebQueries {
     // Serving path: regexp_extract_all, index-paired — the sitemap XML
     // is SYNTHESIZED well-formed, so the codegen'd regex scan is
     // semantically exact here and measures 2.4× the one-parse native
-    // XPath form (tools/DiagQ157, r13: 1.04 s vs 0.43 s warm at sf0.1 —
-    // even a pooled DOM parse pays object-tree allocation per row that
-    // a linear regex scan doesn't). General tag-soup XML keeps going
+    // XPath form (r13: 1.04 s vs 0.43 s warm at sf0.1; probe removed,
+    // see git history at 894f351 — even a pooled DOM parse pays
+    // object-tree allocation per row that a linear regex scan doesn't). General tag-soup XML keeps going
     // through XPathStructExpr/XPathArrayExpr, exercised by q136; this
     // query's contract is sitemaps.org-schema extraction, where the
     // regex is the right 100 TB constant factor.

@@ -7,8 +7,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Every reader is a plain `spark.read.parquet` — no schema override — so
   * Catalyst's vectorized parquet reader, predicate pushdown and column
   * pruning all apply. At 100 TB these would be partitioned/bucketed tables
-  * behind a catalog; the accessor indirection is the seam where that
-  * swap happens (see `graft.sources.Catalog`).
+  * behind a catalog (`spark.table(name)` on `Sinks.writeBucketed`
+  * output); this accessor indirection is the one seam where that swap
+  * happens, and no query code changes.
   */
 object Tables {
   def region(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "region")
@@ -20,8 +21,8 @@ object Tables {
   def lineitem(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "lineitem")
 
   /** The session conf `events` needs for the TIMESTAMP(NANOS) testdata
-    * generation. Set it at SESSION CONSTRUCTION (GraftSession, Bench,
-    * Verify and the test harness all do) — the loader below only
+    * generation. Set it at SESSION CONSTRUCTION (`GraftSession.local`
+    * does, for every graft session) — the loader below only
     * sets it as a fallback when the session was built without it,
     * because the flag cannot be scoped per-read: parquet schema
     * conversion consults it both at analysis AND lazily at task

@@ -144,17 +144,13 @@ object DiagScale {
     sys.env.get("SPARK_GRAFT_LOCAL_EDGE_LIMIT")
       .foreach(v => sys.props(graft.operators.PageRank.GateOverrideProp) = v)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val ks = sys.env.getOrElse("SPARK_GRAFT_SCALE_KS", "1,2,4")
       .split(",").map(_.trim.toInt).toSeq
     // comma-separated substrings; empty = all ops
     val opFilter = sys.env.getOrElse("SPARK_GRAFT_SCALE_OPS", "")
       .split(",").map(_.trim).filter(_.nonEmpty).toSeq
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local(cpus, "graft-scale")
     spark.sparkContext.setLogLevel("WARN")
     spark.range(1000000).selectExpr("sum(id)").collect()
 

@@ -72,11 +72,7 @@ object DiagSignedZero {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local(4, "graft-signed-zero")
     spark.sparkContext.setLogLevel("ERROR")
     val rows = audit(spark, sfDir)
     rows.foreach { case (qn, cn, fin) =>

@@ -2,6 +2,24 @@ package graft
 
 class GraftSessionSpec extends SparkSpec {
 
+  test("the shared test session is built by GraftSession.local, the one session builder") {
+    // production session config and function registry, with no
+    // explicit register* call in this case
+    assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") === "5000")
+    val c = spark.sql(
+      "SELECT graft_cosine_sim(array(1.0d, 0.0d), array(1.0d, 0.0d)) c")
+      .head().getDouble(0)
+    assert(math.abs(c - 1.0) < 1e-12)
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val builder = "SparkSession\\.builder".r
+    val builders = Files.walk(Paths.get("src/main")).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") &&
+        builder.findFirstIn(Files.readString(p)).nonEmpty)
+      .map(_.getFileName.toString).toSeq
+    assert(builders === Seq("GraftSession.scala"))
+  }
+
   test("registered SQL function graft_simhash64 matches the Column API") {
     GraftSession.registerFunctions(spark)
     import spark.implicits._

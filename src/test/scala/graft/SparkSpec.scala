@@ -4,18 +4,12 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (one per JVM — sbt forks a
-  * single test JVM, so every suite reuses this). */
+  * single test JVM, so every suite reuses this). Built by
+  * `GraftSession.local`, so tests run under the production session
+  * config, graft functions and aggregates registered. */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.limit.initialNumPartitions", "1000")
-      .config(graft.sources.Tables.NanosAsLongKey, "true")
-      .getOrCreate()
+    val s = GraftSession.local(4, "graft-test")
     s.sparkContext.setLogLevel("WARN")
     s
   }

@@ -39,6 +39,19 @@ class NaiveBayesSpec extends SparkSpec {
     assert(got(21L) === "fruit")
   }
 
+  test("a NULL id gets one row, whether or not its docs carry tokens") {
+    // 3:2 prior toward fruit, so the prior-only branch would say fruit
+    val model = NaiveBayes.fit(train.filter(col("id") =!= 6L), "text", "cls")
+    val docs = Seq[(Option[Long], String)](
+        (Some(30L), "apple pie"), (None, "steel gears"), (None, ""),
+        (Some(31L), "")).toDF("id", "text")
+    val got = NaiveBayes.classify(docs, "id", "text", model)
+      .as[(Option[Long], String)].collect()
+    assert(got.map(_._1).toSeq.sorted === Seq(None, Some(30L), Some(31L)))
+    // the NULL id's tokenized doc decides its label, not the prior
+    assert(got.toMap.apply(None) === "metal")
+  }
+
   test("training state is additive: union of deltas == one-shot fit") {
     val d1 = train.filter(col("id") <= 3L)
     val d2 = train.filter(col("id") > 3L)

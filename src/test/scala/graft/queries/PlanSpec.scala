@@ -580,7 +580,8 @@ class PlanSpec extends SparkSpec {
       "span pipeline duplicated — ReuseExchange regression:\n" + p)
     // the span hash must be a row-level expression after the explode,
     // not a transform HOF before it (HOFs run interpreted — 10× slower,
-    // see Dedup.duplicatedSpanCoverage / tools/DiagSpan2)
+    // see Dedup.duplicatedSpanCoverage; probe removed, see git history
+    // at 894f351)
     assert(!p.contains("lambdafunction"),
       "span hashing regressed to an interpreted higher-order function:\n" + p)
   }
