@@ -112,8 +112,8 @@ object TextFns {
     * starves recall as the corpus grows (at n=1M a df≤100 term is a
     * 0.01%-rare term; discriminative vocabulary scales with n), while an
     * unbounded one is quadratic. `max(8, ⌊10·log₂(n)⌋)` grows the
-    * ceiling logarithmically: work stays O(n log n) (DiagScale's
-    * q85_adaptive probe measures the exponent) and the admitted df BAND
+    * ceiling logarithmically: work stays O(n log n) (the q85 probe of
+    * `tools.Probe --scale` measures the exponent) and the admitted df BAND
     * tracks corpus growth. The formula is floor/log2 only so the DuckDB
     * oracle inlines the IDENTICAL arithmetic — the
     * `VectorFns.bitsForCorpus` pattern. */

@@ -55,38 +55,6 @@ object VectorFns {
     bits.reduce((x, y) => x.bitwiseOR(y))
   }
 
-  /** Banded random-hyperplane signature: `nBands` independent bucket
-    * keys, each from `bitsPerBand` sign bits (band b uses plane indices
-    * b·bitsPerBand+r, so no plane is shared between bands). Pairs that
-    * collide in ≥1 band are LSH candidates — the same OR-of-ANDs
-    * S-curve structure as MinHash banding (Dedup.minhashLshPairs).
-    *
-    * Scale: within-band bucket population is N / 2^bitsPerBand, so
-    * callers hold the pair-join linear by growing bitsPerBand with the
-    * corpus (bitsForCorpus); nBands buys back the recall that longer
-    * keys cost. A single fixed-width bucket (the shape this replaces)
-    * is quadratic at 100× — population grows linearly, pairs as its
-    * square.
-    *
-    * The sign bit is computed from the NATIVE one-pass cosine
-    * (CosineSimExpr — codegen'd, ~10× the interpreted HOF lambda);
-    * sign(cosine) ≡ sign(dot) since norms are positive, and the DuckDB
-    * oracle mirrors the identical `list_cosine_similarity(...) >= 0`
-    * predicate so the buckets are bit-identical across engines. */
-  def lshBandKeys(vec: Column, dim: Int, nBands: Int, bitsPerBand: Int,
-      seed: Long = 42L): Column = {
-    val v = d(vec)
-    array((0 until nBands).map { b =>
-      (0 until bitsPerBand).map { r =>
-        // plane coefs as ONE array literal per plane (constant
-        // ArrayData), not dim unrolled lit()s — r16 task-binary hoist
-        val coefs = typedLit(lshCoefs(b * bitsPerBand + r, dim, seed).toArray)
-        when(graft.plans.CosineSimExpr.cosineSim(v, coefs) >= 0,
-          lit(1L << r)).otherwise(lit(0L))
-      }.reduce((x, y) => x.bitwiseOR(y))
-    }: _*)
-  }
-
   /** bitsPerBand needed to hold within-band buckets at ~`targetBucket`
     * members for an `n`-vector corpus: log₂(n / targetBucket). Driver-side
     * twin of [[bitsForCorpusCol]] (same floor of 4, same ceil-log₂). */
@@ -130,11 +98,22 @@ object VectorFns {
       seed: Long = 42L): Column =
     maskedBandKey(d(vec), dim, bits, maxBits, planeBase = 0, seed)
 
-  /** [[lshBandKeys]] with a RUNTIME per-band bit count (same masking
-    * contract as [[lshBucketMasked]]). Band b draws planes from the
-    * STATIC window b·maxBitsPerBand+r — plane identity never depends
-    * on the resolved bit count, so growing the corpus only APPENDS
-    * sign bits to each band key (prefix-stable bucketing). */
+  /** Banded random-hyperplane signature: `nBands` independent bucket
+    * keys, each from the RUNTIME `bits` sign bits (same masking contract
+    * as [[lshBucketMasked]]). Pairs that collide in ≥1 band are LSH
+    * candidates — the same OR-of-ANDs S-curve structure as MinHash
+    * banding (Dedup.minhashLshPairs).
+    *
+    * Scale: within-band bucket population is N / 2^bits, so callers
+    * hold the pair-join linear by growing `bits` with the corpus
+    * ([[bitsForCorpusCol]]); nBands buys back the recall that longer
+    * keys cost. A fixed-width bucket is quadratic at 100× — population
+    * grows linearly, pairs as its square.
+    *
+    * Band b draws planes from the STATIC window b·maxBitsPerBand+r —
+    * plane identity never depends on the resolved bit count, so growing
+    * the corpus only APPENDS sign bits to each band key (prefix-stable
+    * bucketing). */
   def lshBandKeysMasked(vec: Column, dim: Int, nBands: Int, bits: Column,
       maxBitsPerBand: Int, seed: Long = 42L): Column = {
     val v = d(vec)

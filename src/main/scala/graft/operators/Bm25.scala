@@ -29,7 +29,8 @@ import graft.functions.TextFns
   * hot-posting bound the jaccard/TF-IDF family uses: it caps the
   * longest posting list (stopword-shaped terms carry ~zero idf mass
   * anyway), which is what keeps the join linear as the corpus grows
-  * (DiagScale `q137_bm25` measures exponents ≤ 0.6).
+  * (a ×k scale probe of the q137 shape measured exponents ≤ 0.6;
+  * `tools.Probe <sfDir> q137 --scale 1,2,4,8` re-measures it).
   */
 object Bm25 {
 

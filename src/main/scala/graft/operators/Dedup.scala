@@ -669,6 +669,8 @@ object Dedup {
     *
     * @param edges (id_a, id_b) undirected pair edges
     * @return (node, comp) where comp = min node id in the component
+    * @throws IllegalStateException when the distributed fixpoint is
+    *         still changing labels after `maxIter` rounds
     */
   def connectedComponents(edges: DataFrame, maxIter: Int = 20,
       localEdgeThreshold: Long = 1L << 20): DataFrame = {
@@ -716,10 +718,10 @@ object Dedup {
       i += 1
     }
     if (!converged)
-      // an unconverged result silently merges fewer clusters than the
-      // true components — surface it loudly rather than return it quietly
-      System.err.println(
-        s"[graft] WARN connectedComponents hit maxIter=$maxIter unconverged; raise maxIter")
+      // an unconverged result merges fewer clusters than the true
+      // components — refuse it rather than return it
+      throw new IllegalStateException(
+        s"connectedComponents hit maxIter=$maxIter unconverged; raise maxIter")
     labels
   }
 

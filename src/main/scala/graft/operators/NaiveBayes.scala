@@ -111,7 +111,10 @@ object NaiveBayes {
     * rows) and re-created as a LocalRelation, so the training subplan
     * executes exactly once AND the two broadcasts below are PROVABLY
     * bounded for the registry-wide broadcast sweep — a localCheckpoint
-    * would hide the bound behind an opaque LogicalRDD.
+    * would hide the bound behind an opaque LogicalRDD. The collected
+    * model must be non-empty and dense — exactly Dim weight rows plus
+    * one DocCountBucket prior per label — or classify throws
+    * IllegalArgumentException.
     * @return (idCol, predicted) */
   def classify(docs: DataFrame, idCol: String, textCol: String,
       model: DataFrame, maxLabels: Int = 64): DataFrame = {
@@ -124,6 +127,21 @@ object NaiveBayes {
         s"naive_bayes: model exceeds the documented labels x (Dim+1) driver " +
           s"bound ($bound rows at maxLabels=$maxLabels) — classify with a " +
           "coarser label domain or raise maxLabels explicitly")
+    // the scoring below assumes the DENSE model shape: an empty model
+    // would NULL-predict zero-token docs and drop every tokenized one,
+    // and a missing (label, bucket) row would silently drop that
+    // bucket's evidence for the label
+    if (rows.isEmpty)
+      throw new IllegalArgumentException(
+        "naive_bayes: empty model — fit on at least one labelled document")
+    val dense = DocCountBucket +: (0L until Dim)
+    rows.groupBy(_.get(0)).foreach { case (label, rs) =>
+      if (rs.map(_.get(1)).collect { case b: Number => b.longValue }.sorted.toSeq != dense)
+        throw new IllegalArgumentException(
+          s"naive_bayes: model label $label is not dense — it needs exactly " +
+            s"Dim=$Dim weight rows (buckets 0..${Dim - 1}) plus one " +
+            s"DocCountBucket=$DocCountBucket prior row (modelFromState's shape)")
+    }
     val m = spark.createDataFrame(
       java.util.Arrays.asList(rows: _*), proj.schema)
     val weights = m.filter(col("b") =!= DocCountBucket)

@@ -4449,7 +4449,7 @@ object TextQueries {
     * (mass DESC, source ASC) in both dialects. 24 > the 20-source
     * test corpus, so the registered result set is unchanged —
     * the cap is exercised by JsdCapSpec on a crafted wide corpus and
-    * by the DiagScale probe whose replicas multiply the source count. */
+    * by `tools.Probe --scale`, whose replicas multiply the source count. */
   private[queries] val JsdSourceCap = 24
 
   /** The q196 implementation over any (source, text) frame — see

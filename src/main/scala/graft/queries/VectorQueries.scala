@@ -1939,8 +1939,9 @@ object VectorQueries {
     * q34/q51/q133 banded class, with bits = ⌈log₂(N/64)⌉ resolved
     * IN-QUERY (VectorFns.bitsForCorpusCol) so within-bucket population
     * stays ~64 and the pair stage is linear at any corpus size (the
-    * r12 DiagScale fixed-bits probe measured the ∝N² alternative this
-    * replaces). Per-vector top-10 is a bucket-partitioned window;
+    * r12 fixed-bits scale probe measured the ∝N² alternative this
+    * replaces; `tools.Probe --scale` re-measures q220 itself).
+    * Per-vector top-10 is a bucket-partitioned window;
     * the final top-20 is a TakeOrdered, no global sort. Singleton
     * buckets have no neighbors and drop out (documented — a singleton
     * IS an outlier signal, but with no in-bucket evidence to score;

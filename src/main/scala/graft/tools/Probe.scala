@@ -1,13 +1,17 @@
 package graft.tools
 
+import java.io.File
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.functions._
 import graft.{Bench, GraftSession, SparkEntry}
+import graft.sources.Tables
 
-/** Time or explain selected registered queries in the session Bench
-  * uses (`GraftSession.local` on SPARK_GRAFT_CPUS cores).
+/** Time, explain or scale-probe selected registered queries in the
+  * session Bench uses (`GraftSession.local` on SPARK_GRAFT_CPUS cores).
   *
   * Usage: runMain graft.tools.Probe <sfDir> <substr>[,<substr>...] [reps]
-  *          [--explain|--explain-exec]
+  *          [--explain | --explain-exec | --scale k1,k2,...]
   *
   * Picks every query whose name contains one of the substrings. Timing
   * (the default) interleaves reps across the picked queries, as Bench
@@ -16,12 +20,33 @@ import graft.{Bench, GraftSession, SparkEntry}
   * running it; `--explain-exec` runs the query first (on its own
   * QueryExecution) and prints the final adaptive plan, where AQE stage
   * reuse shows.
+  *
+  * `--scale 1,8,32` times the picked queries the same way on a ×k
+  * replica of sfDir for each k ([[relTables]], written once and reused;
+  * every rep runs every k) and prints, per query and step, the growth
+  * exponent ln(median_b / median_a) / ln(b / a): ~1.0 is linear, ~2.0
+  * quadratic.
+  * The size-gated graph ops take their local leg at these sizes; to
+  * probe the distributed leg start the JVM with
+  * `-Dgraft.gate.override=0` ([[graft.operators.PageRank]]'s gate
+  * override; build.sbt forwards extra java options to forked runs).
   */
 object Probe {
+  private val Usage = "usage: Probe <sfDir> <substr>[,<substr>...] [reps] " +
+    "[--explain | --explain-exec | --scale k1,k2,...]"
+
   def main(args: Array[String]): Unit = {
-    val (flags, pos) = args.toSeq.partition(_.startsWith("--"))
-    require(pos.length >= 2 && flags.forall(Set("--explain", "--explain-exec")),
-      "usage: Probe <sfDir> <substr>[,<substr>...] [reps] [--explain|--explain-exec]")
+    val scaleAt = args.indexOf("--scale")
+    val ks = if (scaleAt < 0) Seq.empty[Int] else
+      args.lift(scaleAt + 1).filterNot(_.startsWith("--"))
+        .fold(Seq.empty[Int])(_.split(",").map(_.trim.toInt).toSeq)
+    val rest = if (scaleAt < 0) args.toSeq else args.toSeq.patch(scaleAt, Nil, 2)
+    val (flags, pos) = rest.partition(_.startsWith("--"))
+    require(pos.length >= 2 && flags.forall(Set("--explain", "--explain-exec")), Usage)
+    require(scaleAt < 0 || flags.isEmpty,
+      "--scale times queries; it cannot be combined with --explain or --explain-exec")
+    require(scaleAt < 0 || ks.nonEmpty && ks.head >= 1 && ks == ks.distinct.sorted,
+      s"--scale needs strictly increasing factors >= 1, e.g. --scale 1,8,32; $Usage")
     val sfDir = pos(0)
     val subs = pos(1).split(",").toSeq
     val reps = pos.lift(2).fold(3)(_.toInt)
@@ -39,21 +64,122 @@ object Probe {
       println(s"========== $name ==========")
       println(df.queryExecution.explainString(FormattedMode))
     } else {
+      val dirs = if (ks.isEmpty) Seq(1 -> sfDir)
+        else ks.map(k => k -> relTables(spark, sfDir, k))
       spark.range(1000000).selectExpr("sum(id)").collect() // warm-up
-      val times = picked.map(_._1 -> Seq.newBuilder[Double]).toMap
-      for (_ <- 1 to reps; (name, fn) <- picked) {
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).count()
-        times(name) += (System.nanoTime() - t0) / 1e9
-        Bench.resetBetweenQueries(spark)
-      }
+      // every k inside every rep: a cold JVM or a noisy window costs one
+      // rep of each (query, k), not every rep of the first k
+      val times = time(spark, for ((k, dir) <- dirs; (name, fn) <- picked)
+        yield (name, k) -> (() => fn(spark, dir)), reps)
       picked.foreach { case (name, _) =>
-        val ts = times(name).result()
-        val med = ts.sorted.apply((ts.size - 1) / 2)
-        println(f"$name%-32s min ${ts.min}%6.2f  median $med%6.2f  " +
-          s"runs ${ts.map(t => f"$t%.2f").mkString(" ")}")
+        dirs.foreach { case (k, _) =>
+          report(name, if (ks.isEmpty) "" else f" k=$k%-4d", times((name, k)))
+        }
+        ks.zip(ks.drop(1)).foreach { case (a, b) =>
+          val e = math.log(median(times((name, b))) / median(times((name, a)))) /
+            math.log(b.toDouble / a)
+          println(f"[scale] $name k=$a->$b exponent=$e%.2f")
+        }
       }
     }
     spark.stop()
+  }
+
+  /** Interleaved reps of every run, with Bench's untimed between-query
+    * reset: run key → seconds per rep. */
+  private def time[K](spark: SparkSession, runs: Seq[(K, () => DataFrame)],
+      reps: Int): Map[K, Seq[Double]] = {
+    val times = runs.map(_._1 -> Seq.newBuilder[Double]).toMap
+    for (_ <- 1 to reps; (key, build) <- runs) {
+      val t0 = System.nanoTime()
+      build().count()
+      times(key) += (System.nanoTime() - t0) / 1e9
+      Bench.resetBetweenQueries(spark)
+    }
+    times.map { case (key, b) => key -> b.result() }
+  }
+
+  private def median(ts: Seq[Double]): Double = ts.sorted.apply((ts.size - 1) / 2)
+
+  private def report(name: String, tag: String, ts: Seq[Double]): Unit =
+    println(f"$name%-32s$tag min ${ts.min}%6.2f  median ${median(ts)}%6.2f  " +
+      s"runs ${ts.map(t => f"$t%.2f").mkString(" ")}")
+
+  /** Tables that stay FIXED at every k: the bounded dimensions. Nation
+    * and region keep their 25/5 rows (per-nation groups grow ×k in
+    * rows); supplier keeps the q127/q131 seed set (s_suppkey <= 3) from
+    * multiplying, while replicated lineitem still grows the bipartite
+    * edge list ×k through the shared supplier nodes; part is not
+    * remapped either, so replicated lineitem rows keep pointing at the
+    * same parts. */
+  private[tools] val FixedTables = Seq("region", "nation", "supplier", "part")
+
+  /** Replica r of k for each replicated table. Every id moves to the ×k
+    * keyspace (id·k + r), so replicas share no id; each replica keeps
+    * the source's internal structure exactly and shares nothing else:
+    *  - documents: every token gets the prefix `r<r>x` and the source
+    *    `r<r>_`, so a replica keeps its shingle/dup structure, vocabulary
+    *    shape and distinct-value grain, but shares no shingle, token or
+    *    source with another replica;
+    *  - orders, customer, lineitem: keys remapped together (orders keep
+    *    their customer, lineitems their order); `c_mktsegment` gets the
+    *    `r<r>_` prefix, so each replica has its own segments;
+    *  - embeddings: replica r is multiplied element-wise by a
+    *    deterministic ±1 pattern (a diagonal orthogonal transform over
+    *    the 64-d vectors), which preserves every intra-replica cosine
+    *    exactly while decorrelating replicas;
+    *  - events: per-user streams (funnel step order, session structure)
+    *    are preserved within each replica; replicas never share a user. */
+  private[tools] def replicas(k: Int): Seq[(String, (DataFrame, Int) => DataFrame)] = Seq(
+    ("documents", (df, r) => df.select((col("doc_id") * k + r).as("doc_id"),
+      regexp_replace(col("text"), "(\\S+)", s"r${r}x$$1").as("text"),
+      col("lang"), concat(lit(s"r${r}_"), col("source")).as("source"),
+      col("n_chars"))),
+    ("orders", (df, r) => df.withColumn("o_orderkey", col("o_orderkey") * k + r)
+      .withColumn("o_custkey", col("o_custkey") * k + r)),
+    ("customer", (df, r) => df.withColumn("c_custkey", col("c_custkey") * k + r)
+      .withColumn("c_mktsegment", concat(lit(s"r${r}_"), col("c_mktsegment")))),
+    ("lineitem", (df, r) => df.withColumn("l_orderkey", col("l_orderkey") * k + r)),
+    ("embeddings", { (df, r) =>
+      val signs = array(graft.functions.VectorFns.lshCoefs(1000 + r, 64).map(lit): _*)
+      df.select((col("vec_id") * k + r).as("vec_id"),
+        zip_with(col("embedding").cast("array<double>"), signs, (x, s) => x * s)
+          .as("embedding"),
+        col("label"))
+    }),
+    ("events", (df, r) => df.select((col("event_id") * k + r).as("event_id"),
+      col("ts"), (col("user_id") * k + r).as("user_id"),
+      col("event_type"), col("value"), col("props"))))
+
+  /** Where the ×k replica of `sfDir` lives: keyed on the source dir's
+    * name and canonical path (two dirs that share a name, such as two
+    * copies of sf0.01, get different replicas), the table-set version
+    * and k. The version moves whenever the table set or a replication
+    * scheme changes (v6 added region), so a replica left by an older
+    * build never satisfies a probe that needs what it lacks. */
+  private[tools] def replicaDir(sfDir: String, k: Int,
+      root: String = "/tmp"): String = {
+    val src = new File(sfDir).getCanonicalFile
+    f"$root/graft_scale_rel_v6_${src.getName}_${src.getPath.hashCode}%08x_k$k"
+  }
+
+  /** Write (or reuse) the ×k replica of every table in `sfDir` and
+    * return its dir. A `_done` marker is created after the last table,
+    * so an interrupted build is redone; delete the dir to rebuild. */
+  private[tools] def relTables(spark: SparkSession, sfDir: String, k: Int,
+      root: String = "/tmp"): String = {
+    val dir = replicaDir(sfDir, k, root)
+    val done = new File(s"$dir/_done")
+    if (!done.exists()) {
+      FixedTables.foreach(t =>
+        Tables.byName(spark, sfDir, t).write.mode("overwrite").parquet(s"$dir/$t.parquet"))
+      replicas(k).foreach { case (t, replica) =>
+        val src = Tables.byName(spark, sfDir, t)
+        (0 until k).map(replica(src, _)).reduce(_ union _)
+          .write.mode("overwrite").parquet(s"$dir/$t.parquet")
+      }
+      done.createNewFile()
+    }
+    dir
   }
 }

@@ -79,6 +79,29 @@ class VectorFnsSpec extends SparkSpec {
     }
   }
 
+  test("lshCoefs planes are pinned, and the native coef table is built from them") {
+    // ±1 patterns recorded once: a change in the Scala runtime's
+    // MurmurHash3.productHash would rebucket every LSH query (and
+    // desynchronize driver and executors on mixed runtimes) — this
+    // fails loudly instead of as an oracle mismatch
+    val pinned = Map(
+      0 -> "-++-+----+++-+++-----+--+++-++--++--++++++---+-+++--+-+-+---+-+-",
+      977 -> "-++++--+++++------+-----+--+-+-+-+++--++----++-+---+++--+-++++-+",
+      1871 -> "-+--++++----+---+++-+++-+----+---+-+++++++++--+------+-++-+++-++")
+    pinned.foreach { case (plane, signs) =>
+      assert(VectorFns.lshCoefs(plane, 64).map(c => if (c > 0) '+' else '-').mkString
+        === signs, s"plane $plane")
+    }
+    // the serving near-dup table: 1871 is its last plane
+    val (bands, stride) = (graft.queries.VectorQueries.NdMaxBands,
+      graft.queries.VectorQueries.NdPlaneStride)
+    val table = graft.plans.LshBandKeysMaskedExpr.coefTable(bands, stride, 64, 42L)
+    assert(table.length === 1872)
+    table.zipWithIndex.foreach { case (row, plane) =>
+      assert(row.toDoubleArray().toSeq === VectorFns.lshCoefs(plane, 64), s"plane $plane")
+    }
+  }
+
   test("lshBandKeysMasked: prefix-stable growth and static plane windows") {
     val vecs = Seq.tabulate(40)(i =>
       Tuple1(Array.tabulate(16)(j => ((i * 13 + j * 5) % 23).toFloat / 12 - 0.9f)))

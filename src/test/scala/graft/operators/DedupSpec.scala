@@ -130,6 +130,20 @@ class DedupSpec extends SparkSpec {
       10L -> 10L, 11L -> 10L, 12L -> 10L, 20L -> 20L, 21L -> 20L))
   }
 
+  test("connectedComponents refuses an unconverged labeling") {
+    // a 40-node path needs several rounds of the distributed fixpoint
+    // (localEdgeThreshold = 0 skips the driver-side union-find)
+    val path = (1L until 40L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val e = intercept[IllegalStateException] {
+      Dedup.connectedComponents(path, maxIter = 1, localEdgeThreshold = 0).collect()
+    }
+    assert(e.getMessage.contains("maxIter=1"))
+    // with the default round budget the same path converges to one label
+    val got = Dedup.connectedComponents(path, localEdgeThreshold = 0)
+      .as[(Long, Long)].collect()
+    assert(got.length === 40 && got.forall(_._2 == 1L))
+  }
+
   test("dropNearDuplicates keeps one doc per cluster plus all singletons") {
     val edges = Seq((1L, 2L), (2L, 3L)).toDF("id_a", "id_b")
     val got = Dedup.dropNearDuplicates(docs, "doc_id", edges)

@@ -52,6 +52,25 @@ class NaiveBayesSpec extends SparkSpec {
     assert(got.toMap.apply(None) === "metal")
   }
 
+  test("an empty model is refused, not NULL-predicted") {
+    val empty = NaiveBayes.fit(train.filter(lit(false)), "text", "cls")
+    val docs = Seq((40L, "apple pie"), (41L, "")).toDF("id", "text")
+    val e = intercept[IllegalArgumentException] {
+      NaiveBayes.classify(docs, "id", "text", empty).collect()
+    }
+    assert(e.getMessage.contains("empty model"))
+  }
+
+  test("a model missing a (label, bucket) row is refused") {
+    val model = NaiveBayes.fit(train, "text", "cls")
+    val sparse = model.filter(!(col("label") === "metal" && col("b") === 7L))
+    val docs = Seq((50L, "steel gears")).toDF("id", "text")
+    val e = intercept[IllegalArgumentException] {
+      NaiveBayes.classify(docs, "id", "text", sparse).collect()
+    }
+    assert(e.getMessage.contains("label metal is not dense"))
+  }
+
   test("training state is additive: union of deltas == one-shot fit") {
     val d1 = train.filter(col("id") <= 3L)
     val d2 = train.filter(col("id") > 3L)
