@@ -30,7 +30,7 @@ object GraftSession {
       // NOTE: spark.sql.limit.initialNumPartitions is deliberately NOT
       // set here. The graph operators' size gate wants a full-partition
       // single-job take and scopes the conf around its own take
-      // (PageRank.takeUnderGate); session-global it would also make
+      // (LocalGate.take); session-global it would also make
       // every small interactive LIMIT scan all partitions up front,
       // losing the incremental-scan early-out.
       // int64-nanos parquet timestamps read as raw longs (normalized by

@@ -14,15 +14,13 @@ import org.apache.spark.sql.functions._
   * stage is the word-dictionary build — one explode + one groupBy —
   * because pair counts factor through word frequencies. Every merge
   * round then runs at DICT grain (Heaps-law bounded, ~O(corpusᵝ),
-  * β≈0.5). Like every iterate-class operator here
-  * ([[PageRank.LocalEdgeLimit]], `Dedup.connectedComponents`), the
-  * round loop is SIZE-GATED: a dictionary under [[LocalDictLimit]]
-  * rows collects once and the rounds run driver-local (a k-round
-  * DataFrame loop pays k× scheduler/AQE latency that dwarfs the
-  * compute for small dictionaries); above the gate the same algorithm
-  * runs as a distributed loop with a lineage cut every 8 rounds. The
-  * two paths are property-tested equal (BpeSpec forces the distributed
-  * leg with localDictLimit = 0).
+  * β≈0.5). Like every iterate-class operator here, the round loop is
+  * SIZE-GATED ([[LocalGate]]): a dictionary under
+  * [[LocalGate.DictLimit]] rows collects once and the rounds run
+  * driver-local; above the gate the same algorithm runs as a
+  * distributed loop with a lineage cut every 8 rounds. The two paths
+  * are property-tested equal (BpeSpec). A dictionary row with a NULL
+  * word or count is dropped on both paths (the gate's NULL rule).
   *
   * Symbol encoding (distributed path): a word's current segmentation
   * travels as ONE string with every symbol wrapped in `~` fences —
@@ -42,13 +40,6 @@ import org.apache.spark.sql.functions._
   * emit no row, identically in both dialects and both legs.
   */
 object Bpe {
-
-  /** At or below this dictionary row count the merge rounds run
-    * driver-local over collected (word, cnt) pairs — ~4M words ≈ a few
-    * hundred MB of driver strings, the [[PageRank.LocalEdgeLimit]]
-    * convention. Real web-corpus dictionaries (tens of millions of
-    * words) take the distributed loop. */
-  val LocalDictLimit: Long = 4L << 20
 
   /** The additive vocabulary-induction state: (word, cnt) — word-grain
     * lowercase [a-z]+ frequencies, the one corpus-sized stage. Additive
@@ -159,8 +150,9 @@ object Bpe {
     import spark.implicits._
     var cur = cur0
     def totals(d: DataFrame): (Long, Long) = d
-      .select(sum(col("cnt") * size(split(trim(col("s"), "~"), "~~"))).as("t"),
-        sum(col("cnt")).as("w"))
+      .select(
+        coalesce(sum(col("cnt") * size(split(trim(col("s"), "~"), "~~"))), lit(0L)).as("t"),
+        coalesce(sum(col("cnt")), lit(0L)).as("w"))
       .as[(Long, Long)].head()
     val (t0, w) = totals(cur)
     var total = t0
@@ -188,20 +180,13 @@ object Bpe {
     (w, t0, out.toSeq)
   }
 
-  private def runRounds(docs: DataFrame, textCol: String, rounds: Int,
-      localDictLimit: Long, withTotals: Boolean): (Long, Long, Seq[Step]) =
-    runRoundsOverDict(wordDict(docs, textCol), rounds, localDictLimit,
-      withTotals)
-
-  private def runRoundsOverDict(dict: DataFrame, rounds: Int,
-      localDictLimit: Long, withTotals: Boolean): (Long, Long, Seq[Step]) = {
-    val cur0 = dict.localCheckpoint()
-    PageRank.takeUnderGate(cur0.select(col("word"), col("cnt")),
-        localDictLimit, "bpe") match {
-      case Some(rows) => localRounds(rows, rounds)
-      case None => distRounds(cur0, rounds, withTotals)
+  private def runRounds(dict: DataFrame, rounds: Int,
+      withTotals: Boolean): (Long, Long, Seq[Step]) =
+    LocalGate(dict.localCheckpoint(), Seq("word", "cnt"), LocalGate.DictLimit,
+        "bpe") match {
+      case LocalGate.Local(rows) => localRounds(rows, rounds)
+      case LocalGate.Distributed(cur0) => distRounds(cur0, rounds, withTotals)
     }
-  }
 
   /** N rounds of exact merge learning over the corpus' word dictionary.
     * Production vocab induction (30–50k merges) batches the selection —
@@ -210,9 +195,8 @@ object Bpe {
     * here is the reference-semantics deep prefix of that.
     * @return (step, lhs, rhs, pair_count) — the learned merge table in
     *         merge order */
-  def learnMerges(docs: DataFrame, textCol: String, rounds: Int,
-      localDictLimit: Long = LocalDictLimit): DataFrame =
-    learnMergesFromCounts(wordCounts(docs, textCol), rounds, localDictLimit)
+  def learnMerges(docs: DataFrame, textCol: String, rounds: Int): DataFrame =
+    learnMergesFromCounts(wordCounts(docs, textCol), rounds)
 
   /** [[learnMerges]] over ALREADY-AGGREGATED (word, cnt) state — the
     * serving read of the standing vocabulary monitor
@@ -220,12 +204,11 @@ object Bpe {
     * rounds the batch fit runs (StreamOpsSpec pins serving ≡ batch
     * across a checkpoint bounce), so a tokenizer refresh wired to the
     * monitor and the batch fit can never disagree. */
-  def learnMergesFromCounts(counts: DataFrame, rounds: Int,
-      localDictLimit: Long = LocalDictLimit): DataFrame = {
+  def learnMergesFromCounts(counts: DataFrame, rounds: Int): DataFrame = {
     val spark = counts.sparkSession
     import spark.implicits._
-    val (_, _, steps) = runRoundsOverDict(dictFromCounts(counts), rounds,
-      localDictLimit, withTotals = false)
+    val (_, _, steps) = runRounds(dictFromCounts(counts), rounds,
+      withTotals = false)
     steps.map(s => (s._1, s._2, s._3, s._4))
       .toDF("step", "lhs", "rhs", "pair_count")
       .orderBy(col("step"))
@@ -253,11 +236,10 @@ object Bpe {
     * both legs RECOUNT the total instead of decrementing.
     * @return (step, lhs, rhs, pair_count, total_tokens,
     *         tokens_per_word) */
-  def compressionCurve(docs: DataFrame, textCol: String, rounds: Int,
-      localDictLimit: Long = LocalDictLimit): DataFrame = {
+  def compressionCurve(docs: DataFrame, textCol: String, rounds: Int): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val (w, t0, steps) = runRounds(docs, textCol, rounds, localDictLimit,
+    val (w, t0, steps) = runRounds(wordDict(docs, textCol), rounds,
       withTotals = true)
     val rows = (0, None: Option[String], None: Option[String],
         None: Option[Long], t0) +:

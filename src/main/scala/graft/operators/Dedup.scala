@@ -658,33 +658,30 @@ object Dedup {
     *
     * Size-gated hybrid: dup-cluster edge sets are usually MUCH smaller
     * than the corpus (each edge already cost an LSH collision + verify),
-    * so when the edge count is below `localEdgeThreshold` the components
+    * so at or below [[LocalGate.ComponentLimit]] edges the components
     * are solved with a driver-side union-find on the collected edges —
     * the same size-gating Spark itself applies when it broadcasts a
     * small join side, and it removes ~25 per-round driver jobs for tiny
-    * graphs. Above the threshold (up to ~16 MB of edge ids per 1M
-    * default) the distributed fixpoint below engages unchanged. Both
-    * paths produce the identical (node, min-id) labeling —
-    * PropertySpec runs them against each other on random graphs.
+    * graphs. Above the gate the distributed fixpoint below engages
+    * unchanged. Both paths produce the identical (node, min-id)
+    * labeling — PropertySpec runs them against each other on random
+    * graphs.
     *
-    * @param edges (id_a, id_b) undirected pair edges
+    * @param edges (id_a, id_b) undirected pair edges; an edge with a
+    *              NULL endpoint is dropped on both paths ([[LocalGate]]'s
+    *              NULL rule)
     * @return (node, comp) where comp = min node id in the component
     * @throws IllegalStateException when the distributed fixpoint is
     *         still changing labels after `maxIter` rounds
     */
-  def connectedComponents(edges: DataFrame, maxIter: Int = 20,
-      localEdgeThreshold: Long = 1L << 20): DataFrame = {
+  def connectedComponents(edges: DataFrame, maxIter: Int = 20): DataFrame = {
     // materialize the (possibly expensive) pair pipeline exactly once:
     // the union below would otherwise execute it per branch, and the
-    // size gate scans it anyway
-    val e = edges.select(col("id_a").cast("long"), col("id_b").cast("long"))
-      .localCheckpoint()
-    // one-job gate-and-collect (PageRank.takeUnderGate): the take over
-    // the checkpointed edges both answers the gate and IS the union-
-    // find's edge list — this used to be a count() plus a collect()
-    PageRank.takeUnderGate(e, localEdgeThreshold, "cc") match {
-      case Some(rows) => return localComponents(e.sparkSession, rows)
-      case None => ()
+    // gate's one take-job over it IS the union-find's edge list
+    val e = LocalGate(edges.select(col("id_a").cast("long"), col("id_b").cast("long"))
+        .localCheckpoint(), Seq("id_a", "id_b"), LocalGate.ComponentLimit, "cc") match {
+      case LocalGate.Local(rows) => return localComponents(edges.sparkSession, rows)
+      case LocalGate.Distributed(kept) => kept
     }
     val sym = e.select(col("id_a").as("src"), col("id_b").as("dst"))
       .union(e.select(col("id_b").as("src"), col("id_a").as("dst")))
@@ -768,11 +765,11 @@ object Dedup {
     * @return (node, comp) over labeled ∪ delta nodes, comp = min id of
     *         the merged component */
   def incrementalComponents(labels: DataFrame, deltaEdges: DataFrame,
-      maxIter: Int = 20, localEdgeThreshold: Long = 1L << 20): DataFrame =
+      maxIter: Int = 20): DataFrame =
     connectedComponents(
       labels.select(col("node").as("id_a"), col("comp").as("id_b"))
         .unionByName(deltaEdges.select(col("id_a"), col("id_b"))),
-      maxIter, localEdgeThreshold)
+      maxIter)
 
   /** Keep one document per near-duplicate cluster: the min-id member of
     * each component survives, every other member is dropped, documents

@@ -45,51 +45,37 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   *    distinct-endpoints-per-partition, never raw edge count.
   *  - scores are `localCheckpoint`ed every round: bounded lineage, and
   *    the eager materialization lets `release()` run at the end.
-  *  - below [[PageRank.LocalEdgeLimit]] edges the whole loop runs
-  *    driver-local on primitive arrays (the `Dedup.localComponents`
-  *    size-gate pattern): a k-round DataFrame loop pays k× scheduler
-  *    latency that dwarfs the compute for small graphs.
+  *  - below [[LocalGate.EdgeLimit]] edges the whole loop runs
+  *    driver-local on primitive arrays ([[LocalGate]]).
   */
 object Hits {
 
   /** @param edges directed edges (src, dst); duplicates count as
-    *              parallel edges (weight = multiplicity).
+    *              parallel edges (weight = multiplicity); edges with
+    *              a NULL endpoint are dropped on both paths
+    *              ([[LocalGate]]'s NULL rule).
     * @return      one row per node — (node, hub, auth) with the raw
     *              integer endorsement counts after `iterations` full
     *              rounds; nodes with no out-edges have hub = 0, nodes
     *              with no in-edges auth = 0.
     */
-  def run(edges: DataFrame, iterations: Int,
-          localEdgeLimit: Long = PageRank.LocalEdgeLimit): DataFrame = {
+  def run(edges: DataFrame, iterations: Int): DataFrame = {
     require(iterations >= 1, "HITS needs at least one round")
-    // one-job gate + collect (PageRank.takeUnderGate, which see)
-    PageRank.takeUnderGate(edges.select(col("src"), col("dst")),
-        localEdgeLimit, "hits") match {
-      case Some(es) => runLocal(edges.sparkSession,
+    LocalGate(edges, Seq("src", "dst"), LocalGate.EdgeLimit, "hits") match {
+      case LocalGate.Local(es) => runLocal(edges.sparkSession,
         edges.schema("src").dataType, es, iterations)
-      case None => runDistributed(edges, iterations)
+      case LocalGate.Distributed(e) => runDistributed(e, iterations)
     }
   }
 
   /** Driver-local exact twin of the distributed loop (same recurrence,
     * same overflow guard); property-tested against it in HitsSpec. */
-  private[graft] def runLocal(spark: org.apache.spark.sql.SparkSession,
+  private def runLocal(spark: org.apache.spark.sql.SparkSession,
       nodeType: org.apache.spark.sql.types.DataType, es: Array[Row],
       iterations: Int): DataFrame = {
-    val idx = new java.util.HashMap[Any, Integer]()
-    val nodeIds = scala.collection.mutable.ArrayBuffer.empty[Any]
-    def id(v: Any): Int = {
-      val got = idx.get(v)
-      if (got != null) got.intValue()
-      else { idx.put(v, nodeIds.size); nodeIds += v; nodeIds.size - 1 }
-    }
-    val srcIdx = new Array[Int](es.length)
-    val dstIdx = new Array[Int](es.length)
-    var k = 0
-    while (k < es.length) {
-      srcIdx(k) = id(es(k).get(0)); dstIdx(k) = id(es(k).get(1)); k += 1
-    }
-    val n = nodeIds.size
+    val ix = new LocalGate.NodeIndex
+    val (srcIdx, dstIdx) = ix.endpoints(es)
+    val n = ix.size
     var hub = Array.fill(n)(1L)
     val auth = new Array[Long](n)
     var it = 0
@@ -109,7 +95,7 @@ object Hits {
     }
     val rows = new java.util.ArrayList[Row](n)
     var i = 0
-    while (i < n) { rows.add(Row(nodeIds(i), hub(i), auth(i))); i += 1 }
+    while (i < n) { rows.add(Row(ix.node(i), hub(i), auth(i))); i += 1 }
     spark.createDataFrame(rows, StructType(Seq(
       StructField("node", nodeType),
       StructField("hub", LongType), StructField("auth", LongType))))
@@ -118,9 +104,6 @@ object Hits {
   private def runDistributed(edges: DataFrame, iterations: Int): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val t0 = System.nanoTime()
-    def mark(label: String): Unit = System.err.println(
-      f"[graft.hits] $label at ${(System.nanoTime() - t0) / 1e9}%.2f s")
     // one exchange each to lay the edge relation out by src and by dst;
     // the auth half-step joins on src (streams from bySrc), the hub
     // half-step on dst (streams from byDst) — edges never move again
@@ -132,7 +115,6 @@ object Hits {
     val hintNodeSized: DataFrame => DataFrame =
       if (nNodes <= PageRank.BroadcastNodeLimit) broadcast
       else _.hint("shuffle_hash")
-    mark(s"prepare done (nNodes=$nNodes)")
     // scores iterate SPARSE: hub over distinct srcs, auth over distinct
     // dsts. With h₀ = 1 everywhere, every dst gathers ≥ 1 from its
     // in-edges and every src ≥ 1 back, so the sparse relations stay
@@ -142,10 +124,9 @@ object Hits {
     var hub = bySrc.select($"src".as("node")).distinct()
       .select($"node", lit(1L).as("s")).localCheckpoint(true)
     var auth: DataFrame = null
-    for (i <- 1 to iterations) {
+    for (_ <- 1 to iterations) {
       auth = halfStep(bySrc, "src", "dst", hub, hintNodeSized).localCheckpoint(true)
       hub = halfStep(byDst, "dst", "src", auth, hintNodeSized).localCheckpoint(true)
-      mark(s"round $i/$iterations checkpointed")
     }
     val out = finish(nodes, hub, auth, hintNodeSized)
     bySrc.unpersist(false); byDst.unpersist(false); nodes.unpersist(false)

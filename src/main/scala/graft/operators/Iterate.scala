@@ -18,8 +18,8 @@ import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructFiel
   *
   * Size gating: a k-round DataFrame loop pays k× scheduler/checkpoint
   * latency that dwarfs the compute for small graphs (the
-  * [[PageRank.LocalEdgeLimit]] lesson — r5 measured the identical
-  * graph's rank loop collapsing from 130+ s to ~1 s through the gate).
+  * [[LocalGate]] lesson — r5 measured the identical graph's rank loop
+  * collapsing from 130+ s to ~1 s through the gate).
   * [[fixpoint]] takes an OPAQUE step function (the crawl pipeline's
   * fan-out is arbitrary DataFrame code), so it cannot be localized
   * generically — but its two edge-list specializations can and are:
@@ -58,7 +58,7 @@ object Iterate {
   /** Multi-source BFS with hop depth — [[fixpoint]] specialized to an
     * explicit edge list, which is what makes it size-gateable: the step
     * is known to be "join the frontier to `edges`, depth + 1", so under
-    * [[PageRank.LocalEdgeLimit]] the loop runs driver-local over the
+    * [[LocalGate.EdgeLimit]] the loop runs driver-local over the
     * take-collected edges instead of paying ~4 scheduler-synchronized
     * jobs per hop. Above the gate it delegates to [[fixpoint]] with
     * exactly that step (the distributed crawl-scheduler shape: visited
@@ -69,27 +69,26 @@ object Iterate {
     * its minimum hop distance. Seed rows should be distinct per node
     * and same-round arrivals tie-break arbitrarily on the distributed
     * path (the local path keeps the round minimum) — callers wanting
-    * determinism seed every node at one depth, as q127 does.
+    * determinism seed every node at one depth, as q127 does. Edges
+    * with a NULL endpoint are dropped ([[LocalGate]]'s NULL rule).
     *
     * @param seeds (node, depth) initial frontier; depth integral
     * @param edges (src, dst) directed edges
     * @return (node, depth) for every node within `maxIter` hops
     */
-  def bfsDepth(seeds: DataFrame, edges: DataFrame, maxIter: Int,
-      localEdgeLimit: Long = PageRank.LocalEdgeLimit): DataFrame = {
+  def bfsDepth(seeds: DataFrame, edges: DataFrame, maxIter: Int): DataFrame = {
     val depthType = seeds.schema("depth").dataType
-    val localizable = depthType == IntegerType || depthType == LongType
-    val taken =
-      if (localizable)
-        PageRank.takeUnderGate(edges.select(col("src"), col("dst")),
-          localEdgeLimit, "bfs")
-      else None
-    taken match {
-      case Some(es) => bfsLocal(seeds, es, maxIter)
-      case None => fixpoint(
+    val cols = Seq("src", "dst")
+    val path =
+      if (depthType == IntegerType || depthType == LongType)
+        LocalGate(edges, cols, LocalGate.EdgeLimit, "bfs")
+      else LocalGate.Distributed(LocalGate.nonNull(edges, cols))
+    path match {
+      case LocalGate.Local(es) => bfsLocal(seeds, es, maxIter)
+      case LocalGate.Distributed(e) => fixpoint(
         seeds,
-        frontier => edges.join(frontier, edges("src") === frontier("node"))
-          .select(edges("dst").as("node"), (frontier("depth") + 1).as("depth")),
+        frontier => e.join(frontier, e("src") === frontier("node"))
+          .select(e("dst").as("node"), (frontier("depth") + 1).as("depth")),
         keyCols = Seq("node"), maxIter = maxIter)
     }
   }
@@ -103,24 +102,13 @@ object Iterate {
     val depthType = seeds.schema("depth").dataType
     val seedRows = seeds.select(col("node"), col("depth").cast("long")).collect()
     // dense-index every node mentioned anywhere (seeds first, then edges)
-    val idx = new java.util.HashMap[Any, Integer]()
-    val nodeIds = scala.collection.mutable.ArrayBuffer.empty[Any]
-    def id(v: Any): Int = {
-      val got = idx.get(v)
-      if (got != null) got.intValue()
-      else { idx.put(v, nodeIds.size); nodeIds += v; nodeIds.size - 1 }
-    }
-    seedRows.foreach(r => id(r.get(0)))
-    val srcIdx = new Array[Int](es.length)
-    val dstIdx = new Array[Int](es.length)
-    var k = 0
-    while (k < es.length) {
-      srcIdx(k) = id(es(k).get(0)); dstIdx(k) = id(es(k).get(1)); k += 1
-    }
-    val n = nodeIds.size
+    val ix = new LocalGate.NodeIndex
+    seedRows.foreach(r => ix.id(r.get(0)))
+    val (srcIdx, dstIdx) = ix.endpoints(es)
+    val n = ix.size
     // CSR adjacency (out-edges per node)
     val offs = new Array[Int](n + 1)
-    k = 0; while (k < es.length) { offs(srcIdx(k) + 1) += 1; k += 1 }
+    var k = 0; while (k < es.length) { offs(srcIdx(k) + 1) += 1; k += 1 }
     k = 0; while (k < n) { offs(k + 1) += offs(k); k += 1 }
     val adj = new Array[Int](es.length)
     val fill = java.util.Arrays.copyOf(offs, n)
@@ -133,7 +121,7 @@ object Iterate {
     val seenRound = Array.fill(n)(-1)
     var frontier = scala.collection.mutable.ArrayBuffer.empty[Int]
     seedRows.foreach { r =>
-      val i = idx.get(r.get(0)).intValue()
+      val i = ix.id(r.get(0))
       if (!visited(i)) { visited(i) = true; depth(i) = r.getLong(1); frontier += i }
     }
     var round = 0
@@ -156,7 +144,7 @@ object Iterate {
     val rows = new java.util.ArrayList[Row](n)
     var i = 0
     while (i < n) {
-      if (visited(i)) rows.add(Row(nodeIds(i),
+      if (visited(i)) rows.add(Row(ix.node(i),
         if (depthType == IntegerType) depth(i).toInt else depth(i)))
       i += 1
     }
@@ -182,17 +170,17 @@ object Iterate {
     * improved set, pre-combined) + the dist merge on node — the same
     * per-round shape as PageRank's edge-form rounds; `localCheckpoint`
     * cuts the growing lineage exactly as in [[fixpoint]]. Under
-    * [[PageRank.LocalEdgeLimit]] the rounds run driver-local on
+    * [[LocalGate.EdgeLimit]] the rounds run driver-local on
     * primitive arrays (relaxing EVERY edge from d_{k-1} each round —
     * provably the same map as the delta-frontier form, since a
-    * non-improved source's candidates already lost a min).
+    * non-improved source's candidates already lost a min). Edges with
+    * a NULL src, dst or w are dropped ([[LocalGate]]'s NULL rule).
     *
     * @param seed  (node, cost) initial distances (need not be distinct)
     * @param edges (src, dst, w) directed weighted edges; w ≥ 0
     * @return (node, cost) minimum cost within `maxIter` hops of any seed
     */
-  def relaxMin(seed: DataFrame, edges: DataFrame, maxIter: Int,
-      localEdgeLimit: Long = PageRank.LocalEdgeLimit): DataFrame = {
+  def relaxMin(seed: DataFrame, edges: DataFrame, maxIter: Int): DataFrame = {
     val costType = seed.schema("cost").dataType
     // localize only when the local kernel reproduces Spark's arithmetic
     // exactly: cost and w the same type, long (long kernel) or double
@@ -203,14 +191,13 @@ object Iterate {
     // between paths — int-cost callers cast to long for the local path.
     val localizable = costType == edges.schema("w").dataType &&
       (costType == LongType || costType == DoubleType)
-    val taken =
-      if (localizable)
-        PageRank.takeUnderGate(edges.select(col("src"), col("dst"), col("w")),
-          localEdgeLimit, "relaxmin")
-      else None
-    taken match {
-      case Some(es) => relaxLocal(seed, es, maxIter)
-      case None => relaxDistributed(seed, edges, maxIter)
+    val cols = Seq("src", "dst", "w")
+    val path =
+      if (localizable) LocalGate(edges, cols, LocalGate.EdgeLimit, "relaxmin")
+      else LocalGate.Distributed(LocalGate.nonNull(edges, cols))
+    path match {
+      case LocalGate.Local(es) => relaxLocal(seed, es, maxIter)
+      case LocalGate.Distributed(e) => relaxDistributed(seed, e, maxIter)
     }
   }
 
@@ -253,31 +240,17 @@ object Iterate {
     val isLong = costType != DoubleType
     val seedRows = seed.select(col("node"),
       (if (isLong) col("cost").cast("long") else col("cost")).as("cost")).collect()
-    val idx = new java.util.HashMap[Any, Integer]()
-    val nodeIds = scala.collection.mutable.ArrayBuffer.empty[Any]
-    def id(v: Any): Int = {
-      val got = idx.get(v)
-      if (got != null) got.intValue()
-      else { idx.put(v, nodeIds.size); nodeIds += v; nodeIds.size - 1 }
-    }
-    seedRows.foreach(r => id(r.get(0)))
-    val srcIdx = new Array[Int](es.length)
-    val dstIdx = new Array[Int](es.length)
-    val wL = if (isLong) new Array[Long](es.length) else null
-    val wD = if (isLong) null else new Array[Double](es.length)
-    var k = 0
-    while (k < es.length) {
-      srcIdx(k) = id(es(k).get(0)); dstIdx(k) = id(es(k).get(1))
-      if (isLong) wL(k) = es(k).getAs[Number](2).longValue()
-      else wD(k) = es(k).getDouble(2)
-      k += 1
-    }
-    val n = nodeIds.size
+    val ix = new LocalGate.NodeIndex
+    seedRows.foreach(r => ix.id(r.get(0)))
+    val (srcIdx, dstIdx) = ix.endpoints(es)
+    val wL = if (isLong) es.map(_.getAs[Number](2).longValue()) else null
+    val wD = if (isLong) null else es.map(_.getDouble(2))
+    val n = ix.size
     var has = new Array[Boolean](n)
     var dL = if (isLong) new Array[Long](n) else null
     var dD = if (isLong) null else new Array[Double](n)
     seedRows.foreach { r =>
-      val i = idx.get(r.get(0)).intValue()
+      val i = ix.id(r.get(0))
       if (isLong) {
         val c = r.getLong(1)
         if (!has(i) || c < dL(i)) { has(i) = true; dL(i) = c }
@@ -314,7 +287,7 @@ object Iterate {
     val rows = new java.util.ArrayList[Row](n)
     var i = 0
     while (i < n) {
-      if (has(i)) rows.add(Row(nodeIds(i),
+      if (has(i)) rows.add(Row(ix.node(i),
         if (costType == LongType) dL(i) else dD(i)))
       i += 1
     }

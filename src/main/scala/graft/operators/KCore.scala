@@ -16,10 +16,10 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * the endpoint key) + two semi-joins restricting the edge list to the
   * survivors — all keyed shuffles, lineage cut per round with
   * `localCheckpoint` (the [[Iterate]] pattern). Under
-  * [[PageRank.LocalEdgeLimit]] the whole peel runs driver-local on
+  * [[LocalGate.EdgeLimit]] the whole peel runs driver-local on
   * primitive arrays behind the same one-take-job gate as the other
-  * graph loops ([[PageRank.takeUnderGate]]); both paths are
-  * property-tested equal (KCoreSpec).
+  * graph loops ([[LocalGate]]); both paths are property-tested equal
+  * (KCoreSpec).
   */
 object KCore {
 
@@ -32,14 +32,12 @@ object KCore {
     * @return       (node, deg) for every node of the peeled subgraph,
     *               deg = its degree in that subgraph
     */
-  def peel(edges: DataFrame, k: Int, rounds: Int,
-      localEdgeLimit: Long = PageRank.LocalEdgeLimit): DataFrame = {
+  def peel(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(k >= 1 && rounds >= 0, s"need k >= 1, rounds >= 0; got k=$k rounds=$rounds")
-    PageRank.takeUnderGate(edges.select(col("a"), col("b")),
-        localEdgeLimit, "kcore") match {
-      case Some(es) => peelLocal(edges.sparkSession,
+    LocalGate(edges, Seq("a", "b"), LocalGate.EdgeLimit, "kcore") match {
+      case LocalGate.Local(es) => peelLocal(edges.sparkSession,
         edges.schema("a").dataType, es, k, rounds)
-      case None => peelDistributed(edges, k, rounds)
+      case LocalGate.Distributed(e) => peelDistributed(e, k, rounds)
     }
   }
 
@@ -75,27 +73,10 @@ object KCore {
   private def peelLocal(spark: org.apache.spark.sql.SparkSession,
       nodeType: org.apache.spark.sql.types.DataType,
       es: Array[Row], k: Int, rounds: Int): DataFrame = {
-    val idx = new java.util.HashMap[Any, Integer]()
-    val nodeIds = scala.collection.mutable.ArrayBuffer.empty[Any]
-    def id(v: Any): Int = {
-      val got = idx.get(v)
-      if (got != null) got.intValue()
-      else { idx.put(v, nodeIds.size); nodeIds += v; nodeIds.size - 1 }
-    }
-    val seen = new java.util.HashSet[Long]()
-    val ea = new Array[Int](es.length)
-    val eb = new Array[Int](es.length)
-    var m = 0
-    var j = 0
-    while (j < es.length) {
-      val x = id(es(j).get(0)); val y = id(es(j).get(1))
-      if (x != y) {
-        val lo = math.min(x, y); val hi = math.max(x, y)
-        if (seen.add(lo.toLong << 32 | hi)) { ea(m) = lo; eb(m) = hi; m += 1 }
-      }
-      j += 1
-    }
-    val n = nodeIds.size
+    val ix = new LocalGate.NodeIndex
+    val (ea, eb) = ix.undirected(es)
+    val m = ea.length
+    val n = ix.size
     val alive = Array.fill(n)(true)
     val deg = new Array[Int](n)
     var round = 0
@@ -125,7 +106,7 @@ object KCore {
     val rows = new java.util.ArrayList[Row]()
     var v = 0
     while (v < n) {
-      if (deg(v) > 0) rows.add(Row(nodeIds(v), deg(v).toLong))
+      if (deg(v) > 0) rows.add(Row(ix.node(v), deg(v).toLong))
       v += 1
     }
     spark.createDataFrame(rows, StructType(Seq(

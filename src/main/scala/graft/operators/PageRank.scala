@@ -37,6 +37,9 @@ import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
   *    lineage stays bounded and the optimizer replans a small tree
   *    instead of a 2^k-join tree (the connected-components lesson — see
   *    `Dedup.connectedComponents`).
+  *  - at or below [[LocalGate.EdgeLimit]] edges the whole iteration
+  *    runs driver-local: the gate's one take-job collects the edge
+  *    list and [[runLocal]] power-iterates primitive arrays.
   *
   * Dangling nodes (out-degree 0) are not produced by symmetric graphs;
   * for directed input the caller symmetrizes or accepts rank leakage —
@@ -50,35 +53,18 @@ object PageRank {
     * ≈ 100 MB serialized — the conventional broadcast ceiling. */
   val BroadcastNodeLimit: Long = 4L << 20
 
-  /** At or below this edge count the whole iteration runs driver-local:
-    * collect the edge list once and power-iterate primitive arrays —
-    * the `Dedup.connectedComponents` size-gate pattern. 8M edges is
-    * ~130 MB of driver arrays, far under any sane driver heap, and an
-    * 8-round loop over them is milliseconds. The gate exists because a
-    * k-round DataFrame loop pays k× scheduler/broadcast/checkpoint
-    * latency that dwarfs the compute for small graphs (and proved
-    * fragile under a loaded 32-thread session — r2-r4 bench artifacts
-    * read 130-230 s for a graph the local path ranks in <1 s); the
-    * distributed loop below the same API is for edge sets that don't
-    * fit a driver. Diagnostics that need the distributed leg set the
-    * per-call [[GateOverrideProp]] — NOT a different constant. */
-  val LocalEdgeLimit: Long = 8L << 20
-
   /** @param edges directed edges, columns (src, dst); duplicates
-    *              count as parallel edges (weight = multiplicity).
-    *              Under the gate the single take-job IS the only scan;
-    *              callers should still cache/checkpoint an expensive
-    *              edge pipeline so the distributed fallback's re-scan
-    *              (and its per-round reuse) is cheap.
+    *              count as parallel edges (weight = multiplicity);
+    *              edges with a NULL endpoint are dropped on both paths
+    *              ([[LocalGate]]'s NULL rule).
     * @return      one row per node with out-edges: (node, pr)
     */
-  def run(edges: DataFrame, iterations: Int, damping: Double = 0.85,
-          localEdgeLimit: Long = LocalEdgeLimit): DataFrame = {
+  def run(edges: DataFrame, iterations: Int, damping: Double = 0.85): DataFrame = {
     import edges.sparkSession.implicits._
-    takeUnderGate(edges.select($"src", $"dst"), localEdgeLimit, "pagerank") match {
-      case Some(es) => runLocal(edges.sparkSession,
+    LocalGate(edges, Seq("src", "dst"), LocalGate.EdgeLimit, "pagerank") match {
+      case LocalGate.Local(es) => runLocal(edges.sparkSession,
         edges.schema("src").dataType, es, iterations, damping, seeds = None)
-      case None => loop(edges, iterations, damping,
+      case LocalGate.Distributed(e) => loop(e, iterations, damping,
         init = lit(1.0) / $"n_nodes",
         teleport = lit(1.0 - damping) / $"n_nodes")
     }
@@ -89,16 +75,15 @@ object PageRank {
     * (the "related items / similar users" graph feature). Identical
     * one-join-per-round plan; only the two rank expressions differ. */
   def runPersonalized(edges: DataFrame, iterations: Int, seeds: Seq[Long],
-      damping: Double = 0.85,
-      localEdgeLimit: Long = LocalEdgeLimit): DataFrame = {
+      damping: Double = 0.85): DataFrame = {
     require(seeds.nonEmpty, "personalized PageRank needs a seed set")
     import edges.sparkSession.implicits._
-    takeUnderGate(edges.select($"src", $"dst"), localEdgeLimit, "pagerank") match {
-      case Some(es) => runLocal(edges.sparkSession,
+    LocalGate(edges, Seq("src", "dst"), LocalGate.EdgeLimit, "pagerank") match {
+      case LocalGate.Local(es) => runLocal(edges.sparkSession,
         edges.schema("src").dataType, es, iterations, damping, seeds = Some(seeds))
-      case None =>
+      case LocalGate.Distributed(e) =>
         val seedMass = 1.0 / seeds.size
-        loop(edges, iterations, damping,
+        loop(e, iterations, damping,
           init = when($"node".isin(seeds: _*), lit(seedMass)).otherwise(lit(0.0)),
           teleport = when($"node".isin(seeds: _*), lit((1.0 - damping) * seedMass))
             .otherwise(lit(0.0)))
@@ -108,83 +93,6 @@ object PageRank {
   /** Rounds between the distributed loop's rank checkpoints. */
   private val CheckpointEvery = 2
 
-  /** Driver-row ceiling for the gate's speculative collect. A
-    * `take(gate+1)` at the default 8M gate would materialize ~1 GB of
-    * boxed `GenericRow`s on the driver even when the input turns out to
-    * be OVER the gate and the rows are thrown away; capping the probe at
-    * 2M rows (~200 MB transient worst-case) bounds that footprint. */
-  private[graft] val ProbeRowLimit: Long = 2L << 20
-
-  /** Diagnostic gate override, a JVM system property (e.g.
-    * `-Dgraft.gate.override=0` under `tools.Probe --scale`): when it
-    * is set, its value replaces every caller's localEdgeLimit — "0"
-    * forces the DISTRIBUTED path of all size-gated graph ops in one
-    * process, so the plans that would actually run at 100× scale can be
-    * wall-clocked against their local twins. Never set in production
-    * code paths. */
-  private[graft] val GateOverrideProp = "graft.gate.override"
-
-  /** The size gate as ONE driver job in the common case: `take(probe+1)`
-    * both answers "is the edge set under the gate?" and, when it is, IS
-    * the collected edge list the local path iterates (with
-    * `spark.sql.limit.initialNumPartitions` sized to the session's
-    * parallelism the take scans every partition in a single job; the
-    * default incremental scale-up would cost log₄(partitions) jobs on an
-    * under-limit input). The speculative collect is bounded by
-    * [[ProbeRowLimit]], NOT the gate: when the gate is larger and the
-    * probe overflows, a `limit(gate+1).count()` (no driver transfer)
-    * decides the path, and the full collect happens only for inputs
-    * PROVEN under the gate — over-gate inputs never hold more than
-    * probe+1 rows on the driver. Mid-size under-gate inputs pay the
-    * extra count+collect jobs; callers cache expensive edge pipelines,
-    * so those re-scans hit the cache the probe just populated.
-    * Returns None when over the gate (or the gate is disabled: ≤ 0). */
-  private[graft] def takeUnderGate(edges: DataFrame, localEdgeLimit0: Long,
-      tag: String): Option[Array[Row]] = {
-    val localEdgeLimit =
-      sys.props.get(GateOverrideProp).map(_.toLong).getOrElse(localEdgeLimit0)
-    if (localEdgeLimit <= 0) {
-      System.err.println(s"[graft.$tag] gate disabled path=distributed")
-      return None
-    }
-    def logPath(edgesDesc: String, local: Boolean): Unit = System.err.println(
-      s"[graft.$tag] edges=$edgesDesc path=${if (local) "local" else "distributed"}")
-    val cap = math.min(localEdgeLimit, Int.MaxValue - 9L).toInt
-    val probe = math.min(cap.toLong, ProbeRowLimit).toInt
-    // the probe take almost always wants every partition (under-gate
-    // inputs are small; the question is only "are there more rows than
-    // the cap"): scope limit.initialNumPartitions to THIS take so it is
-    // one job, without stealing small interactive LIMITs' incremental
-    // early-out session-wide
-    withLimitScanAllPartitions(edges.sparkSession) {
-      val rows = edges.take(probe + 1)
-      if (rows.length <= probe) { logPath(rows.length.toString, local = true); Some(rows) }
-      else if (probe == cap) { logPath(s">$cap", local = false); None }
-      else {
-        // probe overflowed but the gate is larger: decide with a count
-        // (drivers ship 8 bytes, not rows), collect only if proven under
-        val n = edges.limit(cap + 1).count()
-        if (n <= cap) { logPath(n.toString, local = true); Some(edges.take(cap)) }
-        else { logPath(s">$cap", local = false); None }
-      }
-    }
-  }
-
-  /** Run `body` with `spark.sql.limit.initialNumPartitions` raised so a
-    * LIMIT's first job scans every partition (vs the default 1 +
-    * 4×-growing rescans), restoring the caller's setting after. */
-  private def withLimitScanAllPartitions[A](
-      spark: org.apache.spark.sql.SparkSession)(body: => A): A = {
-    val key = "spark.sql.limit.initialNumPartitions"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "1000")
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   /** Driver-local power iteration for edge sets under the gate. Same
     * formulation as the distributed loop round-for-round: mass gathers
     * as Σ pr(src)/deg(src) per dst, then pr' = teleport + damping·mass;
@@ -192,25 +100,21 @@ object PageRank {
     * distributed gather's inner join on the src-derived node set), and
     * parallel edges contribute once each. Node ids stay whatever type
     * the caller used — the output column keeps the input's `src` type. */
-  private[graft] def runLocal(spark: org.apache.spark.sql.SparkSession,
+  private def runLocal(spark: org.apache.spark.sql.SparkSession,
       nodeType: org.apache.spark.sql.types.DataType, es: Array[Row],
       iterations: Int, damping: Double, seeds: Option[Seq[Long]]): DataFrame = {
     // dense-index the node set (distinct srcs, first-seen order)
-    val idx = new java.util.HashMap[Any, Integer]()
-    val nodeIds = scala.collection.mutable.ArrayBuffer.empty[Any]
-    es.foreach { r =>
-      if (!idx.containsKey(r.get(0))) { idx.put(r.get(0), nodeIds.size); nodeIds += r.get(0) }
-    }
-    val n = nodeIds.size
+    val ix = new LocalGate.NodeIndex
+    es.foreach(r => ix.id(r.get(0)))
+    val n = ix.size
     val srcIdx = new Array[Int](es.length)
     val dstIdx = new Array[Int](es.length)
     val deg = new Array[Double](n)
     var k = 0
     while (k < es.length) {
-      val si = idx.get(es(k).get(0)).intValue()
-      val di = idx.get(es(k).get(1))
+      val si = ix.find(es(k).get(0))
       srcIdx(k) = si
-      dstIdx(k) = if (di == null) -1 else di.intValue()
+      dstIdx(k) = ix.find(es(k).get(1))
       deg(si) += 1.0
       k += 1
     }
@@ -231,7 +135,7 @@ object PageRank {
         val m = 1.0 / ss.size
         var i = 0
         while (i < n) {
-          if (isSeed(nodeIds(i))) { pr(i) = m; teleport(i) = (1.0 - damping) * m }
+          if (isSeed(ix.node(i))) { pr(i) = m; teleport(i) = (1.0 - damping) * m }
           i += 1
         }
     }
@@ -254,7 +158,7 @@ object PageRank {
     }
     val rows = new java.util.ArrayList[Row](n)
     var i = 0
-    while (i < n) { rows.add(Row(nodeIds(i), pr(i))); i += 1 }
+    while (i < n) { rows.add(Row(ix.node(i), pr(i))); i += 1 }
     spark.createDataFrame(rows, StructType(Seq(
       StructField("node", nodeType), StructField("pr", DoubleType))))
   }
@@ -319,11 +223,7 @@ object PageRank {
   private def loop(edges: DataFrame, iterations: Int, damping: Double,
       init: Column, teleport: Column): DataFrame = {
     import edges.sparkSession.implicits._
-    val t0 = System.nanoTime()
-    def mark(label: String): Unit = System.err.println(
-      f"[graft.pagerank] $label at ${(System.nanoTime() - t0) / 1e9}%.2f s")
     val g = prepare(edges)
-    mark(s"prepare done (nNodes=${g.nNodes})")
     var ranks = g.nodes.select($"node", init.as("pr"))
       .localCheckpoint(true)
     for (i <- 1 to iterations) {
@@ -335,9 +235,6 @@ object PageRank {
       // runs
       if (i % CheckpointEvery == 0 || i == iterations) {
         ranks = ranks.localCheckpoint(true)
-        // per-checkpoint wall-clock so a stalled graded-bench run says
-        // WHICH round stalled (r2-r4 artifacts were opaque about it)
-        mark(s"round $i/$iterations checkpointed")
       }
     }
     // the eager checkpoints above fully materialized the result, so the

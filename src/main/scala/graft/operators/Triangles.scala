@@ -63,7 +63,7 @@ object Triangles {
       .select($"a", $"b", $"c")
   }
 
-  /** Triangle COUNT with the [[PageRank.LocalEdgeLimit]] size gate:
+  /** Triangle COUNT with the [[LocalGate.EdgeLimit]] size gate:
     * under the gate the census runs driver-local (same one-take-job
     * gate-and-collect as the other graph operators) with the forward
     * algorithm over a CSR of the degree-oriented DAG — a stamp array
@@ -72,45 +72,26 @@ object Triangles {
     * `triangles(edges).agg(count)` unchanged. The gate returns only a
     * COUNT (one row), never the triangle list — a dense under-gate
     * graph can hold orders of magnitude more triangles than edges, and
-    * those belong to the distributed enumerator.
+    * those belong to the distributed enumerator. Edges with a NULL
+    * endpoint are dropped on both paths ([[LocalGate]]'s NULL rule).
     *
     * @return one row, column `n_triangles` (long)
     */
-  def triangleCount(edges: DataFrame,
-      localEdgeLimit: Long = PageRank.LocalEdgeLimit): DataFrame = {
-    PageRank.takeUnderGate(edges.select(col("a"), col("b")),
-        localEdgeLimit, "triangles") match {
-      case Some(es) => countLocal(edges.sparkSession, es)
-      case None => triangles(edges).agg(count(lit(1)).as("n_triangles"))
+  def triangleCount(edges: DataFrame): DataFrame = {
+    LocalGate(edges, Seq("a", "b"), LocalGate.EdgeLimit, "triangles") match {
+      case LocalGate.Local(es) => countLocal(edges.sparkSession, es)
+      case LocalGate.Distributed(e) => triangles(e).agg(count(lit(1)).as("n_triangles"))
     }
   }
 
   private def countLocal(spark: org.apache.spark.sql.SparkSession,
       es: Array[org.apache.spark.sql.Row]): DataFrame = {
-    // dense-index nodes; canonicalize + dedup undirected edges
-    val idx = new java.util.HashMap[Any, Integer]()
-    var nNodes = 0
-    def id(v: Any): Int = {
-      val got = idx.get(v)
-      if (got != null) got.intValue()
-      else { idx.put(v, nNodes); nNodes += 1; nNodes - 1 }
-    }
-    val seen = new java.util.HashSet[Long]()
-    val ea = new Array[Int](es.length)
-    val eb = new Array[Int](es.length)
-    var m = 0
-    var k = 0
-    while (k < es.length) {
-      val x = id(es(k).get(0)); val y = id(es(k).get(1))
-      if (x != y) {
-        val lo = math.min(x, y); val hi = math.max(x, y)
-        if (seen.add(lo.toLong << 32 | hi)) { ea(m) = lo; eb(m) = hi; m += 1 }
-      }
-      k += 1
-    }
-    val n = nNodes
+    val ix = new LocalGate.NodeIndex
+    val (ea, eb) = ix.undirected(es)
+    val m = ea.length
+    val n = ix.size
     val deg = new Array[Int](n)
-    k = 0; while (k < m) { deg(ea(k)) += 1; deg(eb(k)) += 1; k += 1 }
+    var k = 0; while (k < m) { deg(ea(k)) += 1; deg(eb(k)) += 1; k += 1 }
     // orient each edge from the lower (deg, idx) endpoint — the same
     // packed-key total order as the distributed enumerator
     def key(v: Int): Long = deg(v).toLong << 32 | v

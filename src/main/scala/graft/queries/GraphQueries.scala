@@ -367,7 +367,7 @@ object GraphQueries {
     val seeds = Tables.supplier(spark, dir)
       .filter(col("s_suppkey") <= 3)
       .select((col("s_suppkey") * 2 + 1).as("node"), lit(0).as("depth"))
-    // bfsDepth is size-gated: under PageRank.LocalEdgeLimit the hops run
+    // bfsDepth is size-gated: under LocalGate.EdgeLimit the hops run
     // driver-local over the one-job-collected edge list (the distributed
     // fixpoint paid ~4 scheduler-synchronized jobs PER HOP — bench #1 in
     // r6 at 8.6 s for a graph the local path walks in milliseconds);
@@ -447,7 +447,7 @@ object GraphQueries {
       .filter(col("s_suppkey") <= 3)
       .select((col("s_suppkey") * 2 + 1).as("node"), lit(0L).as("cost"))
     // relaxMin is size-gated like bfsDepth above (driver-local
-    // Bellman-Ford under PageRank.LocalEdgeLimit, distributed delta
+    // Bellman-Ford under LocalGate.EdgeLimit, distributed delta
     // rounds above); its output is already materialized either way
     val dist = Iterate.relaxMin(seeds, edges, maxIter = RelaxRounds)
     edges.unpersist(false); pairs.unpersist(false)
@@ -492,7 +492,7 @@ object GraphQueries {
     * peels off (tendrils first), the dense trading community survives.
     * Same graph as the triangle census so the two community views
     * compose; the peel itself is `KCore.peel`, size-gated driver-local
-    * under `PageRank.LocalEdgeLimit` exactly like the other graph
+    * under `LocalGate.EdgeLimit` exactly like the other graph
     * loops, with the distributed semi-join rounds above the gate.
     * Integer degrees end to end — nothing to flake. */
   val q132KcorePeel = Q(

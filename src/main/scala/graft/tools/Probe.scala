@@ -28,7 +28,7 @@ import graft.sources.Tables
   * quadratic.
   * The size-gated graph ops take their local leg at these sizes; to
   * probe the distributed leg start the JVM with
-  * `-Dgraft.gate.override=0` ([[graft.operators.PageRank]]'s gate
+  * `-Dgraft.gate.override=0` ([[graft.operators.LocalGate]]'s gate
   * override; build.sbt forwards extra java options to forked runs).
   */
 object Probe {

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import graft.functions.TextFns
-import graft.operators.Dedup
+import graft.operators.{Dedup, LocalGate}
 
 /** ScalaCheck properties (SURVEY §5.2.3): algebraic laws the operators
   * must satisfy on arbitrary inputs, not just fixtures. */
@@ -96,11 +96,11 @@ class PropertySpec extends SparkSpec {
         val gotLocal = Dedup.connectedComponents(edges.toDF("id_a", "id_b"))
           .as[(Long, Long)].collect().toMap
         assert(gotLocal === expected)
-        // DISTRIBUTED fixpoint path, forced via a zero threshold — both
-        // paths must produce the identical min-id labeling
-        val gotDist = Dedup.connectedComponents(edges.toDF("id_a", "id_b"),
-            localEdgeThreshold = 0L)
-          .as[(Long, Long)].collect().toMap
+        // DISTRIBUTED fixpoint path, forced via a zero gate override —
+        // both paths must produce the identical min-id labeling
+        val gotDist = LocalGate.withOverride(0)(
+          Dedup.connectedComponents(edges.toDF("id_a", "id_b"))
+            .as[(Long, Long)].collect().toMap)
         assert(gotDist === expected)
       }
     }
@@ -116,8 +116,8 @@ class PropertySpec extends SparkSpec {
         val edges = (pairs ++ pairs.map(_.swap)).toDF("src", "dst")
         val local = PageRank.run(edges, 5)
           .as[(Long, Double)].collect().toMap
-        val dist = PageRank.run(edges, 5, localEdgeLimit = 0)
-          .as[(Long, Double)].collect().toMap
+        val dist = LocalGate.withOverride(0)(PageRank.run(edges, 5)
+          .as[(Long, Double)].collect().toMap)
         assert(local.keySet === dist.keySet)
         local.keys.foreach(k => assert(math.abs(local(k) - dist(k)) < 1e-12,
           s"node $k: local=${local(k)} dist=${dist(k)}"))

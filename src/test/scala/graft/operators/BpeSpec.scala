@@ -108,24 +108,24 @@ class BpeSpec extends SparkSpec {
     assert(curve(1)._4 === Some(13L), "weighted pair count")
     assert(curve(0)._5 - curve(1)._5 === 8L, "greedy removes 8, not 13")
     // the distributed leg must agree exactly
-    val dist = Bpe.compressionCurve(docs, "text", 1, localDictLimit = 0)
+    val dist = LocalGate.withOverride(0)(Bpe.compressionCurve(docs, "text", 1)
       .as[(Int, Option[String], Option[String], Option[Long], Long, Double)]
-      .collect().toSeq.sortBy(_._1)
+      .collect().toSeq.sortBy(_._1))
     assert(dist === curve)
   }
 
-  test("local twin ≡ distributed leg (localDictLimit = 0 forces the loop)") {
+  test("local twin ≡ distributed leg (LocalGate.withOverride(0) forces the loop)") {
     val a = Bpe.learnMerges(sennrichDocs, "text", 10)
       .as[(Int, String, String, Long)].collect().toSeq.sortBy(_._1)
-    val b = Bpe.learnMerges(sennrichDocs, "text", 10, localDictLimit = 0)
-      .as[(Int, String, String, Long)].collect().toSeq.sortBy(_._1)
+    val b = LocalGate.withOverride(0)(Bpe.learnMerges(sennrichDocs, "text", 10)
+      .as[(Int, String, String, Long)].collect().toSeq.sortBy(_._1))
     assert(a === b)
     val ca = Bpe.compressionCurve(sennrichDocs, "text", 6)
       .as[(Int, Option[String], Option[String], Option[Long], Long, Double)]
       .collect().toSeq.sortBy(_._1)
-    val cb = Bpe.compressionCurve(sennrichDocs, "text", 6, localDictLimit = 0)
+    val cb = LocalGate.withOverride(0)(Bpe.compressionCurve(sennrichDocs, "text", 6)
       .as[(Int, Option[String], Option[String], Option[Long], Long, Double)]
-      .collect().toSeq.sortBy(_._1)
+      .collect().toSeq.sortBy(_._1))
     assert(ca === cb)
   }
 
@@ -134,14 +134,14 @@ class BpeSpec extends SparkSpec {
     // rounds = 30 on the FORCED distributed leg must emit 1 step and
     // stop, not pay 29 further provably-empty distributed argmaxes
     val docs = Seq("ab ab ab").toDF("text")
-    val steps = Bpe.learnMerges(docs, "text", rounds = 30, localDictLimit = 0)
-      .as[(Int, String, String, Long)].collect().toSeq
+    val steps = LocalGate.withOverride(0)(Bpe.learnMerges(docs, "text", rounds = 30)
+      .as[(Int, String, String, Long)].collect().toSeq)
     assert(steps.map(s => (s._1, s._2, s._3)) === Seq((1, "a", "b")))
     // the curve form stops identically (its per-round total recount
     // would otherwise also keep running)
-    val curve = Bpe.compressionCurve(docs, "text", 30, localDictLimit = 0)
+    val curve = LocalGate.withOverride(0)(Bpe.compressionCurve(docs, "text", 30)
       .as[(Int, Option[String], Option[String], Option[Long], Long, Double)]
-      .collect().toSeq
+      .collect().toSeq)
     assert(curve.map(_._1) === Seq(0, 1))
   }
 
@@ -151,5 +151,21 @@ class BpeSpec extends SparkSpec {
     assert(df.map(_._1) === (1 to 20))
     assert(df.forall(_._4 > 0))
     df.sliding(2).foreach { case Seq(a, b) => assert(b._4 <= a._4) }
+  }
+
+  test("NULL word or count rows dropped on both legs; an empty dictionary learns nothing") {
+    val counts = Seq[(String, Option[Long])](("low", Some(5L)), ("lower", Some(2L)),
+      ("newest", Some(6L)), ("widest", Some(3L)), (null, Some(9L)), ("zzz", None))
+    val clean = counts.collect { case (w, Some(c)) if w != null => (w, c) }
+    def merges(df: org.apache.spark.sql.DataFrame): Seq[(Int, String, String, Long)] =
+      Bpe.learnMergesFromCounts(df, 6).as[(Int, String, String, Long)]
+        .collect().toSeq.sortBy(_._1)
+    val local = merges(counts.toDF("word", "cnt"))
+    assert(local === LocalGate.withOverride(0)(merges(counts.toDF("word", "cnt"))))
+    assert(local === merges(clean.toDF("word", "cnt")))
+    assert(local.size === 6)
+    val empty = Seq.empty[(String, Long)].toDF("word", "cnt")
+    assert(merges(empty) === Nil)
+    assert(LocalGate.withOverride(0)(merges(empty)) === Nil)
   }
 }

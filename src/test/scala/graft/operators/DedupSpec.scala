@@ -132,15 +132,15 @@ class DedupSpec extends SparkSpec {
 
   test("connectedComponents refuses an unconverged labeling") {
     // a 40-node path needs several rounds of the distributed fixpoint
-    // (localEdgeThreshold = 0 skips the driver-side union-find)
+    // (LocalGate.withOverride(0) skips the driver-side union-find)
     val path = (1L until 40L).map(i => (i, i + 1)).toDF("id_a", "id_b")
     val e = intercept[IllegalStateException] {
-      Dedup.connectedComponents(path, maxIter = 1, localEdgeThreshold = 0).collect()
+      LocalGate.withOverride(0)(Dedup.connectedComponents(path, maxIter = 1).collect())
     }
     assert(e.getMessage.contains("maxIter=1"))
     // with the default round budget the same path converges to one label
-    val got = Dedup.connectedComponents(path, localEdgeThreshold = 0)
-      .as[(Long, Long)].collect()
+    val got = LocalGate.withOverride(0)(Dedup.connectedComponents(path)
+      .as[(Long, Long)].collect())
     assert(got.length === 40 && got.forall(_._2 == 1L))
   }
 
@@ -342,5 +342,21 @@ class DedupSpec extends SparkSpec {
     val got = Dedup.prefixFilterPairs(in, "doc_id", "text", n = 1, threshold = 0.8)
       .select("id_a", "id_b", "jaccard").as[(Long, Long, Double)].collect().toSet
     assert(got === Set((1L, 2L, 0.8)))
+  }
+
+  test("connectedComponents: NULL endpoints dropped on both paths; empty edges") {
+    val withNulls = Seq[(Option[Long], Option[Long])](
+      (Some(1L), Some(2L)), (Some(2L), Some(3L)), (Some(10L), Some(11L)),
+      (None, Some(1L)), (Some(11L), None), (None, None))
+    val clean = withNulls.collect { case (Some(a), Some(b)) => (a, b) }
+    def cc(df: org.apache.spark.sql.DataFrame): Set[(Any, Any)] =
+      Dedup.connectedComponents(df).collect().map(r => (r.get(0), r.get(1))).toSet
+    val local = cc(withNulls.toDF("id_a", "id_b"))
+    assert(local === LocalGate.withOverride(0)(cc(withNulls.toDF("id_a", "id_b"))))
+    assert(local === cc(clean.toDF("id_a", "id_b")))
+    assert(local === Set((1L, 1L), (2L, 1L), (3L, 1L), (10L, 10L), (11L, 10L)))
+    val empty = Seq.empty[(Long, Long)].toDF("id_a", "id_b")
+    assert(cc(empty) === Set.empty)
+    assert(LocalGate.withOverride(0)(cc(empty)) === Set.empty)
   }
 }

@@ -6,12 +6,11 @@ import org.apache.spark.sql.functions._
 class HitsSpec extends SparkSpec {
   import spark.implicits._
 
-  // localEdgeLimit = 0 forces the distributed loop; the default gate
-  // sends these tiny graphs down the driver-local path, so every test
-  // below exercises whichever side it names explicitly
-  private def scores(edges: Seq[(String, String)], iters: Int,
-      localLimit: Long = PageRank.LocalEdgeLimit): Map[String, (Long, Long)] =
-    Hits.run(edges.toDF("src", "dst"), iters, localEdgeLimit = localLimit)
+  // LocalGate.withOverride(0) forces the distributed loop; the default
+  // gate sends these tiny graphs down the driver-local path, so every
+  // test below exercises whichever side it names explicitly
+  private def scores(edges: Seq[(String, String)], iters: Int): Map[String, (Long, Long)] =
+    Hits.run(edges.toDF("src", "dst"), iters)
       .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
 
   test("hand-computed Fibonacci graph: a→x, a→y, b→x") {
@@ -28,7 +27,7 @@ class HitsSpec extends SparkSpec {
     val edges = Seq("a" -> "x", "a" -> "y", "b" -> "x", "c" -> "y", "c" -> "z",
       "x" -> "a", "y" -> "c", "b" -> "z", "a" -> "z")
     val local = scores(edges, iters = 3)
-    val dist = scores(edges, iters = 3, localLimit = 0)
+    val dist = LocalGate.withOverride(0)(scores(edges, iters = 3))
     assert(local === dist)
   }
 
@@ -40,7 +39,7 @@ class HitsSpec extends SparkSpec {
     for (trial <- 1 to 3) {
       val edges = Seq.fill(40)(s"n${next(12)}" -> s"n${next(12)}")
       val local = scores(edges, iters = 3)
-      val dist = scores(edges, iters = 3, localLimit = 0)
+      val dist = LocalGate.withOverride(0)(scores(edges, iters = 3))
       assert(local === dist, s"trial $trial diverged")
     }
   }
@@ -67,5 +66,18 @@ class HitsSpec extends SparkSpec {
     intercept[ArithmeticException] {
       scores(edges, iters = 8)
     }
+  }
+
+  test("NULL endpoints are dropped on both paths; an empty edge set scores nothing") {
+    val withNulls = Seq("a" -> "x", "a" -> "y", "b" -> "x", "c" -> "y",
+      (null: String) -> "x", (null: String) -> "y")
+    val clean = withNulls.filter(_._1 != null)
+    val local = scores(withNulls, iters = 2)
+    assert(local === LocalGate.withOverride(0)(scores(withNulls, iters = 2)))
+    assert(local === scores(clean, iters = 2))
+    assert(!local.contains(null))
+    val empty = Seq.empty[(String, String)]
+    assert(scores(empty, iters = 2) === Map.empty)
+    assert(LocalGate.withOverride(0)(scores(empty, iters = 2)) === Map.empty)
   }
 }

@@ -43,8 +43,8 @@ class IterateSpec extends SparkSpec {
     for (maxIter <- Seq(1, 2, 3, 10)) {
       val local = Iterate.bfsDepth(seeds, edges, maxIter)
         .orderBy("node").collect().toSeq
-      val dist = Iterate.bfsDepth(seeds, edges, maxIter, localEdgeLimit = 0)
-        .orderBy("node").collect().toSeq
+      val dist = LocalGate.withOverride(0)(Iterate.bfsDepth(seeds, edges, maxIter)
+        .orderBy("node").collect().toSeq)
       assert(local === dist, s"maxIter=$maxIter")
     }
     // exact depths at full expansion: e is 2 (via b), not 3 (via d)
@@ -58,8 +58,8 @@ class IterateSpec extends SparkSpec {
     val seeds = Seq((1L, 0), (10L, 0)).toDF("node", "depth")
     val local = Iterate.bfsDepth(seeds, edges, 5)
       .as[(Long, Int)].collect().toMap
-    val dist = Iterate.bfsDepth(seeds, edges, 5, localEdgeLimit = 0)
-      .as[(Long, Int)].collect().toMap
+    val dist = LocalGate.withOverride(0)(Iterate.bfsDepth(seeds, edges, 5)
+      .as[(Long, Int)].collect().toMap)
     assert(local === dist)
     assert(local === Map(1L -> 0, 10L -> 0, 2L -> 1, 3L -> 1, 4L -> 2))
   }
@@ -73,8 +73,8 @@ class IterateSpec extends SparkSpec {
     for (maxIter <- Seq(1, 2, 3, 10)) {
       val local = Iterate.relaxMin(seeds, edges, maxIter)
         .orderBy("node").collect().toSeq
-      val dist = Iterate.relaxMin(seeds, edges, maxIter, localEdgeLimit = 0)
-        .orderBy("node").collect().toSeq
+      val dist = LocalGate.withOverride(0)(Iterate.relaxMin(seeds, edges, maxIter)
+        .orderBy("node").collect().toSeq)
       assert(local === dist, s"maxIter=$maxIter")
     }
     // bounded-hop semantics: at 1 round d costs 10; at 3 rounds, 3
@@ -89,9 +89,37 @@ class IterateSpec extends SparkSpec {
     val seeds = Seq((1L, 5.0), (1L, 1.0), (3L, 0.0)).toDF("node", "cost")
     val local = Iterate.relaxMin(seeds, edges, 4)
       .as[(Long, Double)].collect().toMap
-    val dist = Iterate.relaxMin(seeds, edges, 4, localEdgeLimit = 0)
-      .as[(Long, Double)].collect().toMap
+    val dist = LocalGate.withOverride(0)(Iterate.relaxMin(seeds, edges, 4)
+      .as[(Long, Double)].collect().toMap)
     assert(local === dist)
     assert(local === Map(1L -> 1.0, 2L -> 1.5, 3L -> 0.0))
+  }
+
+  test("bfsDepth / relaxMin: NULL endpoints and weights dropped on both paths; empty edges") {
+    val seeds = Seq(("a", 0)).toDF("node", "depth")
+    val bfsNulls = bfsEdges ++ Seq(("b", null: String), (null: String, "c"))
+    def bfs(e: Seq[(String, String)]): Set[(Any, Any)] =
+      Iterate.bfsDepth(seeds, e.toDF("src", "dst"), 10)
+        .collect().map(r => (r.get(0), r.get(1))).toSet
+    val bl = bfs(bfsNulls)
+    assert(bl === LocalGate.withOverride(0)(bfs(bfsNulls)))
+    assert(bl === bfs(bfsEdges))
+    assert(bfs(Nil) === Set(("a", 0)))
+    assert(LocalGate.withOverride(0)(bfs(Nil)) === Set(("a", 0)))
+
+    val costSeeds = Seq(("a", 0L)).toDF("node", "cost")
+    val weighted = Seq[(String, String, Option[Long])](
+      ("a", "b", Some(1L)), ("b", "c", Some(1L)), ("a", "c", None),
+      ("c", "d", None), ("c", null, Some(1L)))
+    val cleanW = weighted.collect { case (s, d, Some(w)) if d != null => (s, d, w) }
+    def relax(e: org.apache.spark.sql.DataFrame): Set[(Any, Any)] =
+      Iterate.relaxMin(costSeeds, e, 5).collect().map(r => (r.get(0), r.get(1))).toSet
+    val rl = relax(weighted.toDF("src", "dst", "w"))
+    assert(rl === LocalGate.withOverride(0)(relax(weighted.toDF("src", "dst", "w"))))
+    assert(rl === relax(cleanW.toDF("src", "dst", "w")))
+    assert(rl === Set(("a", 0L), ("b", 1L), ("c", 2L)))
+    val noEdges = Seq.empty[(String, String, Long)].toDF("src", "dst", "w")
+    assert(relax(noEdges) === Set(("a", 0L)))
+    assert(LocalGate.withOverride(0)(relax(noEdges)) === Set(("a", 0L)))
   }
 }

@@ -6,9 +6,8 @@ import graft.SparkSpec
 class KCoreSpec extends SparkSpec {
   import spark.implicits._
 
-  private def peel(edges: Seq[(Long, Long)], k: Int, rounds: Int,
-      limit: Long = PageRank.LocalEdgeLimit): Map[Long, Long] =
-    KCore.peel(edges.toDF("a", "b"), k, rounds, localEdgeLimit = limit)
+  private def peel(edges: Seq[(Long, Long)], k: Int, rounds: Int): Map[Long, Long] =
+    KCore.peel(edges.toDF("a", "b"), k, rounds)
       .select(col("node"), col("deg")).as[(Long, Long)].collect().toMap
 
   // K4 core (1-4) with a pendant chain 4-5-6 and an isolated edge 7-8
@@ -38,7 +37,7 @@ class KCoreSpec extends SparkSpec {
 
   test("local (gated) ≡ distributed (gate disabled) on fixed and random graphs") {
     for (k <- Seq(1, 2, 3); rounds <- Seq(1, 2, 5))
-      assert(peel(graph, k, rounds) === peel(graph, k, rounds, limit = 0),
+      assert(peel(graph, k, rounds) === LocalGate.withOverride(0)(peel(graph, k, rounds)),
         s"k=$k rounds=$rounds")
     var s = 98765L
     def nxt(): Long = { s = s * 6364136223846793005L + 1442695040888963407L; s }
@@ -46,7 +45,25 @@ class KCoreSpec extends SparkSpec {
       val edges = (1 to 250).map { _ =>
         (math.floorMod(nxt(), 35), math.floorMod(nxt(), 35))
       }.filter(e => e._1 != e._2)
-      assert(peel(edges, 3, 4) === peel(edges, 3, 4, limit = 0), s"trial $trial")
+      assert(peel(edges, 3, 4) === LocalGate.withOverride(0)(peel(edges, 3, 4)),
+        s"trial $trial")
     }
+  }
+
+  test("NULL endpoints are dropped on both paths; an empty edge set peels to nothing") {
+    // triangle 1-2-3 plus pendant 3-4, and two edges with a NULL source
+    val withNulls = Seq[(Option[Long], Option[Long])](
+      (Some(1L), Some(2L)), (Some(2L), Some(3L)), (Some(3L), Some(1L)),
+      (Some(3L), Some(4L)), (None, Some(1L)), (None, Some(2L)))
+    val clean = withNulls.collect { case (Some(a), Some(b)) => (a, b) }
+    def rows(df: org.apache.spark.sql.DataFrame): Set[(Any, Any)] =
+      KCore.peel(df, 2, 3).collect().map(r => (r.get(0), r.get(1))).toSet
+    val local = rows(withNulls.toDF("a", "b"))
+    assert(local === LocalGate.withOverride(0)(rows(withNulls.toDF("a", "b"))))
+    assert(local === rows(clean.toDF("a", "b")))
+    assert(local === Set((1L, 2L), (2L, 2L), (3L, 2L)))
+    val empty = Seq.empty[(Long, Long)].toDF("a", "b")
+    assert(rows(empty) === Set.empty)
+    assert(LocalGate.withOverride(0)(rows(empty)) === Set.empty)
   }
 }

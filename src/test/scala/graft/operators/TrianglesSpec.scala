@@ -52,9 +52,26 @@ class TrianglesSpec extends SparkSpec {
         (math.floorMod(nxt(), 40), math.floorMod(nxt(), 40))
       }.filter(e => e._1 != e._2)
       val localT = localCount(edges)
-      val distT = Triangles.triangleCount(edges.toDF("a", "b"), localEdgeLimit = 0)
-        .select(org.apache.spark.sql.functions.col("n_triangles")).as[Long].head()
+      val distT = LocalGate.withOverride(0)(localCount(edges))
       assert(localT === distT, s"trial $trial")
     }
+  }
+
+  test("triangleCount: NULL endpoints dropped on both paths; empty edge set counts 0") {
+    // one triangle 1-2-3 plus pendant 3-4; the NULL-source edges would
+    // close a second "triangle" through a NULL node
+    val withNulls = Seq[(Option[Long], Option[Long])](
+      (Some(1L), Some(2L)), (Some(2L), Some(3L)), (Some(3L), Some(1L)),
+      (Some(3L), Some(4L)), (None, Some(1L)), (None, Some(2L)))
+    val clean = withNulls.collect { case (Some(a), Some(b)) => (a, b) }
+    def n(df: org.apache.spark.sql.DataFrame): Long =
+      Triangles.triangleCount(df).head().getLong(0)
+    val local = n(withNulls.toDF("a", "b"))
+    assert(local === LocalGate.withOverride(0)(n(withNulls.toDF("a", "b"))))
+    assert(local === localCount(clean))
+    assert(local === 1L)
+    val empty = Seq.empty[(Long, Long)].toDF("a", "b")
+    assert(n(empty) === 0L)
+    assert(LocalGate.withOverride(0)(n(empty)) === 0L)
   }
 }
