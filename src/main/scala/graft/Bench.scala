@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main (driver contract): times every SparkEntry.queries entry
   * on SPARK_GRAFT_SF_DIR and prints ONE JSON line.
@@ -40,29 +40,17 @@ object Bench {
 
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
     val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
-    // a failed rep records None, not its time-to-failure: a crash-fast
-    // regression must read as FAIL, not as a near-zero speedup
-    val times = scala.collection.mutable.LinkedHashMap[String, List[Option[Double]]]()
-    for (r <- 1 to reps; (name, fn) <- ordered) {
-      val t0 = System.nanoTime()
-      val ok = try { fn(spark, sfDir).count(); true }
-        catch { case t: Throwable =>
-          System.err.println(s"[bench] FAIL rep $r $name: ${t.getClass.getSimpleName}: ${t.getMessage}")
-          false }
-      val dt = (System.nanoTime() - t0) / 1e9
-      times(name) = times.getOrElse(name, Nil) :+ (if (ok) Some(dt) else None)
+    val times = interleaved(
+        ordered.map { case (name, fn) => name -> (() => fn(spark, sfDir)) }, reps,
+        () => resetBetweenQueries(spark)) { (r, name, dt, failure) =>
+      failure.foreach(t => System.err.println(
+        s"[bench] FAIL rep $r $name: ${t.getClass.getSimpleName}: ${t.getMessage}"))
       // per-query progress to stderr: a stalled in-suite run then says
       // exactly which query it was inside when the wall-clock vanished
-      System.err.println(f"[bench] rep $r $name ${dt}%.2f s${if (ok) "" else " FAIL"}")
-      resetBetweenQueries(spark)
+      System.err.println(
+        f"[bench] rep $r $name ${dt}%.2f s${if (failure.isEmpty) "" else " FAIL"}")
     }
     val results = ordered.map { case (name, _) => name -> times(name) }
-    // the per-query statistic: median of successful reps (lower middle
-    // for even counts — the conservative side)
-    def medianOk(ts: List[Option[Double]]): Option[Double] = {
-      val ok = ts.flatten.sorted
-      if (ok.isEmpty) None else Some(ok((ok.size - 1) / 2))
-    }
     val qs = results.map { case (k, ts) =>
       "\"" + k + "\":" + medianOk(ts).fold("null")(_.toString) }
       .mkString("{", ",", "}")
@@ -127,6 +115,39 @@ object Bench {
       else f"${common.map(_._2).sum / common.map(_._3).sum}%.3f"
     println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$top10,"n_queries":${results.size},"failed":$failedJson,"ratio_vs_duck":$ratioSummary,"full":"$outFile","sf":"$sfDir"}""")
     spark.stop()
+  }
+
+  /** The interleaved timing loop (shared with `tools.Probe`): `reps`
+    * rounds, each running every entry of `runs` once, in order —
+    * rep-major (a1 b1 a2 b2 …), so a noisy window hits one rep of many
+    * queries instead of every rep of one. A run is `build().count()`,
+    * timed; `reset` follows every run, untimed. A run that throws
+    * records None, not its time-to-failure — a crash-fast regression
+    * must read as FAIL, not as a near-zero speedup — and the loop goes
+    * on. `report(rep, key, seconds, failure)` sees each run as it ends.
+    * Returns every key's results in rep order. */
+  private[graft] def interleaved[K](runs: Seq[(K, () => DataFrame)], reps: Int,
+      reset: () => Unit)(
+      report: (Int, K, Double, Option[Throwable]) => Unit): Map[K, List[Option[Double]]] = {
+    val times = scala.collection.mutable.LinkedHashMap[K, List[Option[Double]]]()
+    for (r <- 1 to reps; (key, build) <- runs) {
+      val t0 = System.nanoTime()
+      val failure = try { build().count(); None }
+        catch { case t: Throwable => Some(t) }
+      val dt = (System.nanoTime() - t0) / 1e9
+      times(key) = times.getOrElse(key, Nil) :+ (if (failure.isEmpty) Some(dt) else None)
+      report(r, key, dt, failure)
+      reset()
+    }
+    times.toMap
+  }
+
+  /** The per-query statistic: the median of the successful reps (lower
+    * middle for even counts — the conservative side), None when every
+    * rep failed. */
+  private[graft] def medianOk(ts: Seq[Option[Double]]): Option[Double] = {
+    val ok = ts.flatten.sorted
+    if (ok.isEmpty) None else Some(ok((ok.size - 1) / 2))
   }
 
   /** UNTIMED inter-query hygiene: drop any cache a query leaked past its

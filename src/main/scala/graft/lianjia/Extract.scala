@@ -90,13 +90,13 @@ object Extract {
   def dealDate(s: Column): Column =
     to_date(regexp_extract(s, "(\\d{4}[.]\\d{1,2}[.]\\d{1,2})", 1), "yyyy.M.d")
 
-  /** Breadcrumb zone list (C3 inverse: reference flattens with ','.join;
-    * we keep the array and provide the joined form for parity). */
+  /** Breadcrumb zone list (C3 inverse: the reference flattens with
+    * ','.join; we keep the array — stock `array_join(zone, ",")` gives
+    * the joined form). */
   def zoneArray(html: Column): Column =
     filter(transform(
       regexp_extract_all(html, lit("<a[^>]*class=\"crumb\"[^>]*>([^<]+)</a>"), lit(1)),
       s => trim(s)), s => s =!= "")
-  def zoneJoined(zone: Column): Column = array_join(zone, ",")
 
   /** Scrape-time stamp (C10) — UTC where the reference used machine-local
     * time (documented divergence, SURVEY §7.4). */

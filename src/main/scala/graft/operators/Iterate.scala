@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructField, StructType}
 
@@ -70,7 +70,10 @@ object Iterate {
     * and same-round arrivals tie-break arbitrarily on the distributed
     * path (the local path keeps the round minimum) — callers wanting
     * determinism seed every node at one depth, as q127 does. Edges
-    * with a NULL endpoint are dropped ([[LocalGate]]'s NULL rule).
+    * with a NULL endpoint are dropped ([[LocalGate]]'s NULL rule). A
+    * seed with a NULL `depth` raises an error naming the column on both
+    * paths; a NULL seed `node` is kept at its seed depth and reaches
+    * nothing (no edge keeps a NULL endpoint).
     *
     * @param seeds (node, depth) initial frontier; depth integral
     * @param edges (src, dst) directed edges
@@ -86,7 +89,7 @@ object Iterate {
     path match {
       case LocalGate.Local(es) => bfsLocal(seeds, es, maxIter)
       case LocalGate.Distributed(e) => fixpoint(
-        seeds,
+        seeds.withColumn("depth", nonNullSeed("bfsDepth", "depth")),
         frontier => e.join(frontier, e("src") === frontier("node"))
           .select(e("dst").as("node"), (frontier("depth") + 1).as("depth")),
         keyCols = Seq("node"), maxIter = maxIter)
@@ -101,6 +104,7 @@ object Iterate {
     val nodeType = seeds.schema("node").dataType
     val depthType = seeds.schema("depth").dataType
     val seedRows = seeds.select(col("node"), col("depth").cast("long")).collect()
+    requireSeeds(seedRows, "bfsDepth", "depth")
     // dense-index every node mentioned anywhere (seeds first, then edges)
     val ix = new LocalGate.NodeIndex
     seedRows.foreach(r => ix.id(r.get(0)))
@@ -174,7 +178,10 @@ object Iterate {
     * primitive arrays (relaxing EVERY edge from d_{k-1} each round —
     * provably the same map as the delta-frontier form, since a
     * non-improved source's candidates already lost a min). Edges with
-    * a NULL src, dst or w are dropped ([[LocalGate]]'s NULL rule).
+    * a NULL src, dst or w are dropped ([[LocalGate]]'s NULL rule). A
+    * seed with a NULL `cost` raises an error naming the column on both
+    * paths; a NULL seed `node` is kept at its seed cost and reaches
+    * nothing.
     *
     * @param seed  (node, cost) initial distances (need not be distinct)
     * @param edges (src, dst, w) directed weighted edges; w ≥ 0
@@ -197,9 +204,24 @@ object Iterate {
       else LocalGate.Distributed(LocalGate.nonNull(edges, cols))
     path match {
       case LocalGate.Local(es) => relaxLocal(seed, es, maxIter)
-      case LocalGate.Distributed(e) => relaxDistributed(seed, e, maxIter)
+      case LocalGate.Distributed(e) => relaxDistributed(
+        seed.withColumn("cost", nonNullSeed("relaxMin", "cost")), e, maxIter)
     }
   }
+
+  private def nullSeedMessage(op: String, column: String): String =
+    s"Iterate.$op: a seed row has a NULL `$column`; every seed needs a $column"
+
+  /** The distributed paths' seed guard: `column` as is, or a raised
+    * error for a NULL, evaluated in the seed projection. */
+  private def nonNullSeed(op: String, column: String): Column =
+    when(col(column).isNull, raise_error(lit(nullSeedMessage(op, column))))
+      .otherwise(col(column))
+
+  /** The local paths' seed guard, over the seed rows they collect anyway
+    * (value in column 1). */
+  private def requireSeeds(rows: Array[Row], op: String, column: String): Unit =
+    require(!rows.exists(_.isNullAt(1)), nullSeedMessage(op, column))
 
   private def relaxDistributed(seed: DataFrame, edges: DataFrame,
       maxIter: Int): DataFrame = {
@@ -240,6 +262,7 @@ object Iterate {
     val isLong = costType != DoubleType
     val seedRows = seed.select(col("node"),
       (if (isLong) col("cost").cast("long") else col("cost")).as("cost")).collect()
+    requireSeeds(seedRows, "relaxMin", "cost")
     val ix = new LocalGate.NodeIndex
     seedRows.foreach(r => ix.id(r.get(0)))
     val (srcIdx, dstIdx) = ix.endpoints(es)

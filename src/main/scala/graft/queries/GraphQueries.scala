@@ -83,72 +83,95 @@ object GraphQueries {
        |  SELECT a.s AS a, b.s AS b FROM csf a JOIN csf b ON a.c = b.c AND a.s < b.s
        |  GROUP BY 1, 2 HAVING count(*) >= $CoMinShared)""".stripMargin
 
-  /** DuckDB twin: identical power iteration, unrolled one CTE per round
-    * (DuckDB's recursive CTEs cannot re-aggregate per round). The
-    * teleport constant is the Scala-computed double rendered exactly, so
-    * both dialects iterate with bit-identical coefficients. */
-  private def pagerankOracle(iters: Int, damping: Double): String = {
-    val teleport = 1.0 - damping
-    val rounds = (1 to iters).map { k =>
-      s"""r$k AS (
-         |  SELECT d.src AS node, $teleport / nn.n + $damping * coalesce(m.mass, 0.0) AS pr
-         |  FROM deg d CROSS JOIN nn LEFT JOIN (
-         |    SELECT e.dst AS dst, sum(r.pr / d2.deg) AS mass
-         |    FROM edges e JOIN r${k - 1} r ON r.node = e.src JOIN deg d2 ON d2.src = e.src
-         |    GROUP BY e.dst) m ON m.dst = d.src)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH pairs AS (
-       |  SELECT DISTINCT o_custkey * 2 AS cn, l_suppkey * 2 + 1 AS sn
-       |  FROM orders JOIN lineitem ON l_orderkey = o_orderkey
-       |  WHERE o_orderdate >= DATE '$SinceDate'),
-       |edges AS (
-       |  SELECT cn AS src, sn AS dst FROM pairs
-       |  UNION ALL
-       |  SELECT sn AS src, cn AS dst FROM pairs),
-       |deg AS (SELECT src, count(*) AS deg FROM edges GROUP BY src),
-       |nn AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM deg),
-       |r0 AS (SELECT d.src AS node, 1.0 / nn.n AS pr FROM deg d CROSS JOIN nn),
-       |$rounds
-       |SELECT CASE WHEN node % 2 = 0 THEN 'c' || CAST(node // 2 AS VARCHAR)
-       |            ELSE 's' || CAST(node // 2 AS VARCHAR) END AS node,
-       |  round(pr, 7) AS pr
-       |FROM r$iters ORDER BY node""".stripMargin
-  }
-
   /** Personalized teleport: customer 1 (parity-encoded node 2). */
   private val SeedNode = 2L
   /** Personalized rank localizes around the seed in a few rounds —
     * half q76's budget reaches the same 7-dp-stable neighborhood. */
   private val PprIters = 4
 
-  /** DuckDB twin of the personalized variant: same unrolled rounds, with
-    * the uniform teleport replaced by a seed indicator. */
-  private def pprOracle(iters: Int, damping: Double, seed: Long): String = {
+  /** The trade graph's order lines: recent-window orders joined to their
+    * lineitems — the one input of q76/q112/q126/q127/q131. */
+  private def tradeLines(spark: SparkSession, dir: String): DataFrame =
+    Tables.orders(spark, dir)
+      .filter(col("o_orderdate") >= lit(SinceDate).cast("date"))
+      .join(Tables.lineitem(spark, dir), col("l_orderkey") === col("o_orderkey"))
+
+  /** Distinct customer–supplier trade pairs on parity-encoded LONG ids
+    * (customer k → 2k, supplier k → 2k + 1 — no collisions at any key
+    * range), cached: the caller unpersists once its operator has
+    * materialized. [[tradePairsCte]] is the DuckDB twin. */
+  private def tradePairs(spark: SparkSession, dir: String): DataFrame =
+    tradeLines(spark, dir)
+      .select((col("o_custkey") * 2).as("cn"), (col("l_suppkey") * 2 + 1).as("sn"))
+      .distinct()
+      .cache()
+
+  private def tradePairsCte: String =
+    s"""pairs AS (
+       |  SELECT DISTINCT o_custkey * 2 AS cn, l_suppkey * 2 + 1 AS sn
+       |  FROM orders JOIN lineitem ON l_orderkey = o_orderkey
+       |  WHERE o_orderdate >= DATE '$SinceDate')""".stripMargin
+
+  /** The symmetrized edge list (src, dst, `extra`…): every (cn, sn)
+    * pair in both directions. [[bothWaysCte]] is the DuckDB twin. */
+  private def bothWays(pairs: DataFrame, extra: String*): DataFrame = {
+    val ex = extra.map(col)
+    pairs.select(col("cn").as("src") +: col("sn").as("dst") +: ex: _*)
+      .unionAll(pairs.select(col("sn").as("src") +: col("cn").as("dst") +: ex: _*))
+  }
+
+  private def bothWaysCte(extra: String = ""): String =
+    s"""edges AS (
+       |  SELECT cn AS src, sn AS dst$extra FROM pairs
+       |  UNION ALL
+       |  SELECT sn AS src, cn AS dst$extra FROM pairs)""".stripMargin
+
+  /** A parity-encoded `node` decoded to its label: customer k → "ck",
+    * supplier k → "sk". [[nodeLabelSql]] is the DuckDB twin. */
+  private def nodeLabel: org.apache.spark.sql.Column =
+    concat(when(col("node") % 2 === 0, "c").otherwise("s"),
+      expr("node div 2").cast("string")).as("node")
+
+  private def nodeLabelSql: String =
+    """CASE WHEN node % 2 = 0 THEN 'c' || CAST(node // 2 AS VARCHAR)
+      |            ELSE 's' || CAST(node // 2 AS VARCHAR) END AS node""".stripMargin
+
+  /** DuckDB twin of `PageRank.run` (no `seed`) and
+    * `PageRank.runPersonalized` (`seed`): the identical power iteration,
+    * unrolled one CTE per round (DuckDB's recursive CTEs cannot
+    * re-aggregate per round). The personalized form replaces the
+    * uniform teleport with a seed indicator. The teleport constant is
+    * the Scala-computed double rendered exactly, so both dialects
+    * iterate with bit-identical coefficients. */
+  private def rankOracle(iters: Int, damping: Double, seed: Option[Long]): String = {
     val tele = 1.0 - damping
+    val (r0, rank) = seed match {
+      case None => (
+        """nn AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM deg),
+          |r0 AS (SELECT d.src AS node, 1.0 / nn.n AS pr FROM deg d CROSS JOIN nn)""",
+        s"""  SELECT d.src AS node, $tele / nn.n + $damping * coalesce(m.mass, 0.0) AS pr
+           |  FROM deg d CROSS JOIN nn LEFT JOIN (""")
+      case Some(sd) => (
+        s"""r0 AS (SELECT src AS node,
+           |  CASE WHEN src = $sd THEN 1.0 ELSE 0.0 END AS pr FROM deg)""",
+        s"""  SELECT d.src AS node,
+           |    (CASE WHEN d.src = $sd THEN $tele ELSE 0.0 END)
+           |      + $damping * coalesce(m.mass, 0.0) AS pr
+           |  FROM deg d LEFT JOIN (""")
+    }
     val rounds = (1 to iters).map { k =>
       s"""r$k AS (
-         |  SELECT d.src AS node,
-         |    (CASE WHEN d.src = $seed THEN $tele ELSE 0.0 END)
-         |      + $damping * coalesce(m.mass, 0.0) AS pr
-         |  FROM deg d LEFT JOIN (
+         |$rank
          |    SELECT e.dst AS dst, sum(r.pr / d2.deg) AS mass
          |    FROM edges e JOIN r${k - 1} r ON r.node = e.src JOIN deg d2 ON d2.src = e.src
          |    GROUP BY e.dst) m ON m.dst = d.src)""".stripMargin
     }.mkString(",\n")
-    s"""WITH pairs AS (
-       |  SELECT DISTINCT o_custkey * 2 AS cn, l_suppkey * 2 + 1 AS sn
-       |  FROM orders JOIN lineitem ON l_orderkey = o_orderkey
-       |  WHERE o_orderdate >= DATE '$SinceDate'),
-       |edges AS (
-       |  SELECT cn AS src, sn AS dst FROM pairs
-       |  UNION ALL
-       |  SELECT sn AS src, cn AS dst FROM pairs),
+    s"""WITH $tradePairsCte,
+       |${bothWaysCte()},
        |deg AS (SELECT src, count(*) AS deg FROM edges GROUP BY src),
-       |r0 AS (SELECT src AS node,
-       |  CASE WHEN src = $seed THEN 1.0 ELSE 0.0 END AS pr FROM deg),
+       |$r0,
        |$rounds
-       |SELECT CASE WHEN node % 2 = 0 THEN 'c' || CAST(node // 2 AS VARCHAR)
-       |            ELSE 's' || CAST(node // 2 AS VARCHAR) END AS node,
+       |SELECT $nodeLabelSql,
        |  round(pr, 7) AS pr
        |FROM r$iters ORDER BY node""".stripMargin
   }
@@ -159,21 +182,12 @@ object GraphQueries {
     * the two rank expressions change; see PageRank.runPersonalized). */
   val q112PersonalizedPagerank = Q(
     "q112_personalized_pagerank",
-    pprOracle(PprIters, Damping, SeedNode)) { (spark, dir) =>
-    val pairs = Tables.orders(spark, dir)
-      .filter(col("o_orderdate") >= lit(SinceDate).cast("date"))
-      .join(Tables.lineitem(spark, dir), col("l_orderkey") === col("o_orderkey"))
-      .select((col("o_custkey") * 2).as("cn"), (col("l_suppkey") * 2 + 1).as("sn"))
-      .distinct()
-      .cache()
-    val edges = pairs.select(col("cn").as("src"), col("sn").as("dst"))
-      .unionAll(pairs.select(col("sn").as("src"), col("cn").as("dst")))
+    rankOracle(PprIters, Damping, Some(SeedNode))) { (spark, dir) =>
+    val pairs = tradePairs(spark, dir)
+    val edges = bothWays(pairs)
     val pr = PageRank.runPersonalized(edges, PprIters, Seq(SeedNode), Damping)
     pairs.unpersist(false)
-    pr.select(
-        concat(when(col("node") % 2 === 0, "c").otherwise("s"),
-          expr("node div 2").cast("string")).as("node"),
-        round(col("pr"), 7).as("pr"))
+    pr.select(nodeLabel, round(col("pr"), 7).as("pr"))
       .orderBy(col("node"))
   }
 
@@ -188,21 +202,12 @@ object GraphQueries {
     * flake the row set. */
   val q76Pagerank = Q(
     "q76_pagerank",
-    pagerankOracle(Iters, Damping)) { (spark, dir) =>
-    val pairs = Tables.orders(spark, dir)
-      .filter(col("o_orderdate") >= lit(SinceDate).cast("date"))
-      .join(Tables.lineitem(spark, dir), col("l_orderkey") === col("o_orderkey"))
-      .select((col("o_custkey") * 2).as("cn"), (col("l_suppkey") * 2 + 1).as("sn"))
-      .distinct()
-      .cache()
-    val edges = pairs.select(col("cn").as("src"), col("sn").as("dst"))
-      .unionAll(pairs.select(col("sn").as("src"), col("cn").as("dst")))
+    rankOracle(Iters, Damping, None)) { (spark, dir) =>
+    val pairs = tradePairs(spark, dir)
+    val edges = bothWays(pairs)
     val pr = PageRank.run(edges, Iters, Damping) // eager: computed here
     pairs.unpersist(false)
-    pr.select(
-        concat(when(col("node") % 2 === 0, "c").otherwise("s"),
-          expr("node div 2").cast("string")).as("node"),
-        round(col("pr"), 7).as("pr"))
+    pr.select(nodeLabel, round(col("pr"), 7).as("pr"))
       .orderBy(col("node"))
   }
 
@@ -264,10 +269,7 @@ object GraphQueries {
          |  SELECT cn AS node, CAST(sum(a.s) AS BIGINT) AS s
          |  FROM pairs JOIN a$k a ON a.node = sn GROUP BY cn)""".stripMargin
     }.mkString(",\n")
-    s"""WITH pairs AS (
-       |  SELECT DISTINCT o_custkey * 2 AS cn, l_suppkey * 2 + 1 AS sn
-       |  FROM orders JOIN lineitem ON l_orderkey = o_orderkey
-       |  WHERE o_orderdate >= DATE '$SinceDate'),
+    s"""WITH $tradePairsCte,
        |h0 AS (SELECT DISTINCT cn AS node, CAST(1 AS BIGINT) AS s FROM pairs),
        |$rounds,
        |nodes AS (
@@ -296,9 +298,7 @@ object GraphQueries {
   val q126HitsAuthorities = Q(
     "q126_hits_authorities",
     hitsOracle(HitsIters)) { (spark, dir) =>
-    val edges = Tables.orders(spark, dir)
-      .filter(col("o_orderdate") >= lit(SinceDate).cast("date"))
-      .join(Tables.lineitem(spark, dir), col("l_orderkey") === col("o_orderkey"))
+    val edges = tradeLines(spark, dir)
       .select((col("o_custkey") * 2).as("src"), (col("l_suppkey") * 2 + 1).as("dst"))
       .distinct()
     val scores = Hits.run(edges, HitsIters)
@@ -306,9 +306,7 @@ object GraphQueries {
       max(col("hub")).cast("double").as("mh"),
       max(col("auth")).cast("double").as("ma"))
     scores.crossJoin(broadcast(mx)) // 1-row normalizer
-      .select(
-        concat(when(col("node") % 2 === 0, "c").otherwise("s"),
-          expr("node div 2").cast("string")).as("node"),
+      .select(nodeLabel,
         round(col("hub") / col("mh"), 7).as("hub"),
         round(col("auth") / col("ma"), 7).as("auth"))
       .orderBy(col("node"))
@@ -335,14 +333,8 @@ object GraphQueries {
     * vs all-bounded-paths-then-min) that must land on the same map. */
   val q127CrawlDepth = Q(
     "q127_crawl_depth",
-    s"""WITH RECURSIVE pairs AS (
-       |  SELECT DISTINCT o_custkey * 2 AS cn, l_suppkey * 2 + 1 AS sn
-       |  FROM orders JOIN lineitem ON l_orderkey = o_orderkey
-       |  WHERE o_orderdate >= DATE '$SinceDate'),
-       |edges AS (
-       |  SELECT cn AS src, sn AS dst FROM pairs
-       |  UNION ALL
-       |  SELECT sn AS src, cn AS dst FROM pairs),
+    s"""WITH RECURSIVE $tradePairsCte,
+       |${bothWaysCte()},
        |seeds AS (
        |  SELECT s_suppkey * 2 + 1 AS node FROM supplier WHERE s_suppkey <= 3),
        |reach(node, depth) AS (
@@ -351,19 +343,11 @@ object GraphQueries {
        |  SELECT e.dst, r.depth + 1
        |  FROM reach r JOIN edges e ON e.src = r.node
        |  WHERE r.depth < $BfsDepth)
-       |SELECT CASE WHEN node % 2 = 0 THEN 'c' || CAST(node // 2 AS VARCHAR)
-       |            ELSE 's' || CAST(node // 2 AS VARCHAR) END AS node,
+       |SELECT $nodeLabelSql,
        |  CAST(min(depth) AS INTEGER) AS depth
        |FROM reach GROUP BY node ORDER BY node""".stripMargin) { (spark, dir) =>
-    val pairs = Tables.orders(spark, dir)
-      .filter(col("o_orderdate") >= lit(SinceDate).cast("date"))
-      .join(Tables.lineitem(spark, dir), col("l_orderkey") === col("o_orderkey"))
-      .select((col("o_custkey") * 2).as("cn"), (col("l_suppkey") * 2 + 1).as("sn"))
-      .distinct()
-      .cache()
-    val edges = pairs.select(col("cn").as("src"), col("sn").as("dst"))
-      .unionAll(pairs.select(col("sn").as("src"), col("cn").as("dst")))
-      .cache()
+    val pairs = tradePairs(spark, dir)
+    val edges = bothWays(pairs).cache()
     val seeds = Tables.supplier(spark, dir)
       .filter(col("s_suppkey") <= 3)
       .select((col("s_suppkey") * 2 + 1).as("node"), lit(0).as("depth"))
@@ -377,10 +361,7 @@ object GraphQueries {
     // distributed path, a local relation under the gate), so the caches
     // can drop now and the final sort needs no forced materialization
     edges.unpersist(false); pairs.unpersist(false)
-    reached.select(
-        concat(when(col("node") % 2 === 0, "c").otherwise("s"),
-          expr("node div 2").cast("string")).as("node"),
-        col("depth").cast("int").as("depth"))
+    reached.select(nodeLabel, col("depth").cast("int").as("depth"))
       .orderBy(col("node"))
   }
 
@@ -409,16 +390,12 @@ object GraphQueries {
        |  FROM orders JOIN lineitem ON l_orderkey = o_orderkey
        |  WHERE o_orderdate >= DATE '$SinceDate'
        |  GROUP BY 1, 2),
-       |edges AS (
-       |  SELECT cn AS src, sn AS dst, w FROM pairs
-       |  UNION ALL
-       |  SELECT sn AS src, cn AS dst, w FROM pairs),
+       |${bothWaysCte(", w")},
        |d0 AS (
        |  SELECT s_suppkey * 2 + 1 AS node, CAST(0 AS BIGINT) AS cost
        |  FROM supplier WHERE s_suppkey <= 3),
        |$steps
-       |SELECT CASE WHEN node % 2 = 0 THEN 'c' || CAST(node // 2 AS VARCHAR)
-       |            ELSE 's' || CAST(node // 2 AS VARCHAR) END AS node,
+       |SELECT $nodeLabelSql,
        |  cost
        |FROM d$rounds ORDER BY node""".stripMargin
   }
@@ -434,15 +411,11 @@ object GraphQueries {
   val q131CheapestPaths = Q(
     "q131_cheapest_paths",
     relaxOracle(RelaxRounds)) { (spark, dir) =>
-    val pairs = Tables.orders(spark, dir)
-      .filter(col("o_orderdate") >= lit(SinceDate).cast("date"))
-      .join(Tables.lineitem(spark, dir), col("l_orderkey") === col("o_orderkey"))
+    val pairs = tradeLines(spark, dir)
       .groupBy((col("o_custkey") * 2).as("cn"), (col("l_suppkey") * 2 + 1).as("sn"))
       .agg(min(round(col("l_extendedprice") * 100).cast("long")).as("w"))
       .cache()
-    val edges = pairs.select(col("cn").as("src"), col("sn").as("dst"), col("w"))
-      .unionAll(pairs.select(col("sn").as("src"), col("cn").as("dst"), col("w")))
-      .cache()
+    val edges = bothWays(pairs, "w").cache()
     val seeds = Tables.supplier(spark, dir)
       .filter(col("s_suppkey") <= 3)
       .select((col("s_suppkey") * 2 + 1).as("node"), lit(0L).as("cost"))
@@ -451,10 +424,7 @@ object GraphQueries {
     // rounds above); its output is already materialized either way
     val dist = Iterate.relaxMin(seeds, edges, maxIter = RelaxRounds)
     edges.unpersist(false); pairs.unpersist(false)
-    dist.select(
-        concat(when(col("node") % 2 === 0, "c").otherwise("s"),
-          expr("node div 2").cast("string")).as("node"),
-        col("cost"))
+    dist.select(nodeLabel, col("cost"))
       .orderBy(col("node"))
   }
 

@@ -1322,6 +1322,55 @@ object RelationalQueries {
       .orderBy(col("status"))
   }
 
+  /** Per-(nation, month) order revenue `m(n_name, x, y)` of q145/q152:
+    * x counts months from 1995-01, y is the exact BIGINT sum of order
+    * totals in cents. [[monthlyRevenueSince1995Cte]] is the DuckDB twin. */
+  private def monthlyRevenueSince1995(spark: org.apache.spark.sql.SparkSession,
+      dir: String): org.apache.spark.sql.DataFrame =
+    Tables.orders(spark, dir)
+      .join(Tables.customer(spark, dir), col("o_custkey") === col("c_custkey"))
+      .join(broadcast(Tables.nation(spark, dir)), col("c_nationkey") === col("n_nationkey"))
+      .groupBy(col("n_name"),
+        ((year(col("o_orderdate")) - 1995) * 12 + month(col("o_orderdate")) - 1).as("x"))
+      .agg(sum(round(col("o_totalprice") * 100).cast("long")).as("y"))
+
+  private def monthlyRevenueSince1995Cte: String =
+    """m AS (
+      |  SELECT n_name,
+      |    (year(o_orderdate) - 1995) * 12 + month(o_orderdate) - 1 AS x,
+      |    CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS y
+      |  FROM orders JOIN customer ON o_custkey = c_custkey
+      |  JOIN nation ON c_nationkey = n_nationkey
+      |  GROUP BY 1, 2)""".stripMargin
+
+  /** Per-(nation, month) order revenue `m(n_name, x, y)` of the series
+    * family q170/q171/q174/q183/q187: x counts months from 1992-01, y is
+    * the exact BIGINT sum of order totals rounded per order to cents
+    * (`cents`) or to whole dollars. [[monthlyRevenueSince1992Cte]] is the
+    * DuckDB twin. */
+  private def monthlyRevenueSince1992(spark: org.apache.spark.sql.SparkSession,
+      dir: String, cents: Boolean): org.apache.spark.sql.DataFrame =
+    Tables.orders(spark, dir)
+      .join(Tables.customer(spark, dir), col("c_custkey") === col("o_custkey"))
+      .join(broadcast(Tables.nation(spark, dir)),
+        col("n_nationkey") === col("c_nationkey"))
+      .groupBy(col("n_name"),
+        ((year(col("o_orderdate")) - 1992) * 12 + month(col("o_orderdate")) - 1)
+          .as("x"))
+      .agg(sum(round(
+          if (cents) col("o_totalprice") * 100 else col("o_totalprice"))
+        .cast("long")).as("y"))
+
+  private def monthlyRevenueSince1992Cte(cents: Boolean): String =
+    s"""m AS (
+       |  SELECT n_name,
+       |    (year(o_orderdate) - 1992) * 12 + month(o_orderdate) - 1 AS x,
+       |    CAST(sum(CAST(round(${if (cents) "o_totalprice * 100" else "o_totalprice"}) AS BIGINT)) AS BIGINT) AS y
+       |  FROM orders
+       |  JOIN customer ON c_custkey = o_custkey
+       |  JOIN nation ON n_nationkey = c_nationkey
+       |  GROUP BY 1, 2)""".stripMargin
+
   /** Grouped OLS trend — per-nation monthly-revenue slope/intercept, the
     * analytics-engine regression staple done the way a 100 TB engine
     * should: the regression is DERIVED IN CLOSED FORM from mergeable
@@ -1339,13 +1388,7 @@ object RelationalQueries {
     * sufficient-statistics form is what actually hash-gates. */
   val q145RevenueTrend = Q(
     "q145_revenue_trend",
-    """WITH m AS (
-      |  SELECT n_name,
-      |    (year(o_orderdate) - 1995) * 12 + month(o_orderdate) - 1 AS x,
-      |    CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS y
-      |  FROM orders JOIN customer ON o_custkey = c_custkey
-      |  JOIN nation ON c_nationkey = n_nationkey
-      |  GROUP BY 1, 2),
+    s"""WITH $monthlyRevenueSince1995Cte,
       |s AS (
       |  SELECT n_name, CAST(count(*) AS BIGINT) AS n,
       |    CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
@@ -1358,12 +1401,7 @@ object RelationalQueries {
       |    / (CAST(n AS DOUBLE) * sxx - CAST(sx AS DOUBLE) * sx) * sx) / n, 4) + 0.0
       |    AS icept_cents
       |FROM s ORDER BY n_name""".stripMargin) { (spark, dir) =>
-    val m = Tables.orders(spark, dir)
-      .join(Tables.customer(spark, dir), col("o_custkey") === col("c_custkey"))
-      .join(broadcast(Tables.nation(spark, dir)), col("c_nationkey") === col("n_nationkey"))
-      .groupBy(col("n_name"),
-        ((year(col("o_orderdate")) - 1995) * 12 + month(col("o_orderdate")) - 1).as("x"))
-      .agg(sum(round(col("o_totalprice") * 100).cast("long")).as("y"))
+    val m = monthlyRevenueSince1995(spark, dir)
     val s = m.groupBy(col("n_name")).agg(
       count(lit(1)).as("n"),
       sum(col("x")).as("sx"), sum(col("y")).as("sy"),
@@ -1389,13 +1427,7 @@ object RelationalQueries {
     * the aggregate, never the facts. */
   val q152ForecastBacktest = Q(
     "q152_forecast_backtest",
-    """WITH m AS (
-      |  SELECT n_name,
-      |    (year(o_orderdate) - 1995) * 12 + month(o_orderdate) - 1 AS x,
-      |    CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS y
-      |  FROM orders JOIN customer ON o_custkey = c_custkey
-      |  JOIN nation ON c_nationkey = n_nationkey
-      |  GROUP BY 1, 2),
+    s"""WITH $monthlyRevenueSince1995Cte,
       |j AS (
       |  SELECT c.n_name, c.y AS actual, p.y AS pred
       |  FROM m c JOIN m p ON c.n_name = p.n_name AND c.x = p.x + 12)
@@ -1403,12 +1435,7 @@ object RelationalQueries {
       |  round(avg(abs(actual - pred) / CAST(actual AS DOUBLE)), 4) AS mape,
       |  round(sum(pred - actual) / CAST(sum(actual) AS DOUBLE), 4) + 0.0 AS bias
       |FROM j GROUP BY n_name ORDER BY n_name""".stripMargin) { (spark, dir) =>
-    val m = Tables.orders(spark, dir)
-      .join(Tables.customer(spark, dir), col("o_custkey") === col("c_custkey"))
-      .join(broadcast(Tables.nation(spark, dir)), col("c_nationkey") === col("n_nationkey"))
-      .groupBy(col("n_name"),
-        ((year(col("o_orderdate")) - 1995) * 12 + month(col("o_orderdate")) - 1).as("x"))
-      .agg(sum(round(col("o_totalprice") * 100).cast("long")).as("y"))
+    val m = monthlyRevenueSince1995(spark, dir)
     val c = m.select(col("n_name"), col("x"), col("y").as("actual"))
     val p = m.select(col("n_name").as("pn"), (col("x") + 12).as("px"), col("y").as("pred"))
     c.join(p, col("n_name") === col("pn") && col("x") === col("px"))
@@ -1521,14 +1548,7 @@ object RelationalQueries {
     * beyond the monthly aggregate at any corpus scale. */
   val q170CusumChangepoint = Q(
     "q170_cusum_changepoint",
-    """WITH m AS (
-      |  SELECT n_name,
-      |    (year(o_orderdate) - 1992) * 12 + month(o_orderdate) - 1 AS x,
-      |    CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS y
-      |  FROM orders
-      |  JOIN customer ON c_custkey = o_custkey
-      |  JOIN nation ON n_nationkey = c_nationkey
-      |  GROUP BY 1, 2),
+    s"""WITH ${monthlyRevenueSince1992Cte(cents = true)},
       |t AS (
       |  SELECT n_name, CAST(count(*) AS BIGINT) AS n,
       |    CAST(sum(y) AS BIGINT) AS tot
@@ -1552,14 +1572,7 @@ object RelationalQueries {
       |  round(CAST(cusum AS DOUBLE) / n / 100, 4) + 0.0 AS cusum_dollars
       |FROM r WHERE rk = 1 ORDER BY n_name""".stripMargin) { (spark, dir) =>
     import org.apache.spark.sql.expressions.Window
-    val m = Tables.orders(spark, dir)
-      .join(Tables.customer(spark, dir), col("c_custkey") === col("o_custkey"))
-      .join(broadcast(Tables.nation(spark, dir)),
-        col("n_nationkey") === col("c_nationkey"))
-      .groupBy(col("n_name"),
-        ((year(col("o_orderdate")) - 1992) * 12 + month(col("o_orderdate")) - 1)
-          .as("x"))
-      .agg(sum(round(col("o_totalprice") * 100).cast("long")).as("y"))
+    val m = monthlyRevenueSince1992(spark, dir, cents = true)
     val t = m.groupBy(col("n_name"))
       .agg(count(lit(1)).as("n"), sum(col("y")).as("tot"))
     val byNation = Window.partitionBy(col("n_name")).orderBy(col("x"))
@@ -1596,14 +1609,7 @@ object RelationalQueries {
     * checks force all 13 months present — pigeonhole). */
   val q171SeasonalDecompose = Q(
     "q171_seasonal_decompose",
-    """WITH m AS (
-      |  SELECT n_name,
-      |    (year(o_orderdate) - 1992) * 12 + month(o_orderdate) - 1 AS x,
-      |    CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS y
-      |  FROM orders
-      |  JOIN customer ON c_custkey = o_custkey
-      |  JOIN nation ON n_nationkey = c_nationkey
-      |  GROUP BY 1, 2),
+    s"""WITH ${monthlyRevenueSince1992Cte(cents = true)},
       |w AS (
       |  SELECT n_name, x, y,
       |    lag(y, 6) OVER nw AS l6, lead(y, 6) OVER nw AS f6,
@@ -1638,14 +1644,7 @@ object RelationalQueries {
       |  CAST(seasonal_e4 AS DOUBLE) / 10000 AS seasonal_dollars
       |FROM e ORDER BY 1, 2""".stripMargin) { (spark, dir) =>
     import org.apache.spark.sql.expressions.Window
-    val m = Tables.orders(spark, dir)
-      .join(Tables.customer(spark, dir), col("c_custkey") === col("o_custkey"))
-      .join(broadcast(Tables.nation(spark, dir)),
-        col("n_nationkey") === col("c_nationkey"))
-      .groupBy(col("n_name"),
-        ((year(col("o_orderdate")) - 1992) * 12 + month(col("o_orderdate")) - 1)
-          .as("x"))
-      .agg(sum(round(col("o_totalprice") * 100).cast("long")).as("y"))
+    val m = monthlyRevenueSince1992(spark, dir, cents = true)
     val nw = Window.partitionBy(col("n_name")).orderBy(col("x"))
     val c11 = nw.rowsBetween(-5, 5)
     m.withColumn("l6", lag(col("y"), 6).over(nw))
@@ -1763,14 +1762,7 @@ object RelationalQueries {
     * for even counts exactly as the oracle's median() does. */
   val q174TheilSen = Q(
     "q174_theil_sen",
-    """WITH m AS (
-      |  SELECT n_name,
-      |    (year(o_orderdate) - 1992) * 12 + month(o_orderdate) - 1 AS x,
-      |    CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS y
-      |  FROM orders
-      |  JOIN customer ON c_custkey = o_custkey
-      |  JOIN nation ON n_nationkey = c_nationkey
-      |  GROUP BY 1, 2),
+    s"""WITH ${monthlyRevenueSince1992Cte(cents = true)},
       |p AS (
       |  SELECT a.n_name, (b.y - a.y) / CAST(b.x - a.x AS DOUBLE) AS slope
       |  FROM m a JOIN m b ON a.n_name = b.n_name AND a.x < b.x),
@@ -1780,14 +1772,7 @@ object RelationalQueries {
       |  FROM p GROUP BY 1)
       |SELECT n_name, n_pairs, round(med / 100, 6) + 0.0 AS ts_slope_dollars
       |FROM s ORDER BY n_name""".stripMargin) { (spark, dir) =>
-    val m = Tables.orders(spark, dir)
-      .join(Tables.customer(spark, dir), col("c_custkey") === col("o_custkey"))
-      .join(broadcast(Tables.nation(spark, dir)),
-        col("n_nationkey") === col("c_nationkey"))
-      .groupBy(col("n_name"),
-        ((year(col("o_orderdate")) - 1992) * 12 + month(col("o_orderdate")) - 1)
-          .as("x"))
-      .agg(sum(round(col("o_totalprice") * 100).cast("long")).as("y"))
+    val m = monthlyRevenueSince1992(spark, dir, cents = true)
     val a = m.select(col("n_name"), col("x").as("ax"), col("y").as("ay"))
     val b = m.select(col("n_name").as("bn"), col("x").as("bx"), col("y").as("by"))
     a.join(b, col("n_name") === col("bn") && col("ax") < col("bx"))
@@ -2011,14 +1996,7 @@ object RelationalQueries {
     * nothing float ever aggregates. */
   val q183MannKendall = Q(
     "q183_mann_kendall",
-    """WITH m AS (
-      |  SELECT n_name,
-      |    (year(o_orderdate) - 1992) * 12 + month(o_orderdate) - 1 AS x,
-      |    CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS y
-      |  FROM orders
-      |  JOIN customer ON c_custkey = o_custkey
-      |  JOIN nation ON n_nationkey = c_nationkey
-      |  GROUP BY 1, 2),
+    s"""WITH ${monthlyRevenueSince1992Cte(cents = true)},
       |p AS (
       |  SELECT a.n_name,
       |    CASE WHEN b.y > a.y THEN 1 WHEN b.y < a.y THEN -1 ELSE 0 END AS sgn
@@ -2036,14 +2014,7 @@ object RelationalQueries {
       |    / sqrt(nn.n * (nn.n - 1) * (2 * nn.n + 5) / 18.0), 4) + 0.0 AS z
       |FROM s JOIN nn ON nn.n_name = s.n_name
       |ORDER BY s.n_name""".stripMargin) { (spark, dir) =>
-    val m = Tables.orders(spark, dir)
-      .join(Tables.customer(spark, dir), col("c_custkey") === col("o_custkey"))
-      .join(broadcast(Tables.nation(spark, dir)),
-        col("n_nationkey") === col("c_nationkey"))
-      .groupBy(col("n_name"),
-        ((year(col("o_orderdate")) - 1992) * 12 + month(col("o_orderdate")) - 1)
-          .as("x"))
-      .agg(sum(round(col("o_totalprice") * 100).cast("long")).as("y"))
+    val m = monthlyRevenueSince1992(spark, dir, cents = true)
     val a = m.select(col("n_name"), col("x").as("ax"), col("y").as("ay"))
     val b = m.select(col("n_name").as("bn"), col("x").as("bx"), col("y").as("by"))
     val s = a.join(b, col("n_name") === col("bn") && col("ax") < col("bx"))
@@ -2121,6 +2092,63 @@ object RelationalQueries {
       .orderBy(col("n_name"))
   }
 
+  /** The (segment, order value in cents) histogram of the pre-1998 vs
+    * 1998+ drift split: `c1` counts the earlier orders, `c2` the later
+    * ones (q185/q199/q203/q205/q207/q210). [[segmentEraHistCtes]] is the
+    * DuckDB twin (`j`, `d`). */
+  private def segmentEraHist(spark: org.apache.spark.sql.SparkSession,
+      dir: String): org.apache.spark.sql.DataFrame =
+    Tables.orders(spark, dir)
+      .join(Tables.customer(spark, dir), col("c_custkey") === col("o_custkey"))
+      .select(col("c_mktsegment"),
+        round(col("o_totalprice") * 100).cast("long").as("v"),
+        when(year(col("o_orderdate")) < 1998, 1L).otherwise(0L).as("g"))
+      .groupBy(col("c_mktsegment"), col("v"))
+      .agg(sum(col("g")).as("c1"), sum(lit(1L) - col("g")).as("c2"))
+
+  private def segmentEraHistCtes: String =
+    """j AS (
+      |  SELECT c_mktsegment, CAST(round(o_totalprice * 100) AS BIGINT) AS v,
+      |    CASE WHEN year(o_orderdate) < 1998 THEN 1 ELSE 0 END AS g
+      |  FROM orders JOIN customer ON c_custkey = o_custkey),
+      |d AS (
+      |  SELECT c_mktsegment, v, CAST(sum(g) AS BIGINT) AS c1,
+      |    CAST(sum(1 - g) AS BIGINT) AS c2
+      |  FROM j GROUP BY 1, 2)""".stripMargin
+
+  /** The (segment, order value in cents) histogram with one count `c`
+    * (q197/q200). [[segmentValueCountsCtes]] is the DuckDB twin. */
+  private def segmentValueCounts(spark: org.apache.spark.sql.SparkSession,
+      dir: String): org.apache.spark.sql.DataFrame =
+    Tables.orders(spark, dir)
+      .join(Tables.customer(spark, dir), col("c_custkey") === col("o_custkey"))
+      .select(col("c_mktsegment"),
+        round(col("o_totalprice") * 100).cast("long").as("v"))
+      .groupBy(col("c_mktsegment"), col("v"))
+      .agg(count(lit(1)).as("c"))
+
+  private def segmentValueCountsCtes: String =
+    """j AS (
+      |  SELECT c_mktsegment, CAST(round(o_totalprice * 100) AS BIGINT) AS v
+      |  FROM orders JOIN customer ON c_custkey = o_custkey),
+      |d AS (
+      |  SELECT c_mktsegment, v, CAST(count(*) AS BIGINT) AS c
+      |  FROM j GROUP BY 1, 2)""".stripMargin
+
+  /** q185/q199's twin of the `Ecdf.groupedCumsum` step over the era
+    * histogram `d`: per-segment totals `t(n1, n2)` and the cumulative
+    * counts `c(a, b)` in value order. */
+  private def segmentEraEcdfCtes: String =
+    """t AS (
+      |  SELECT c_mktsegment, CAST(sum(c1) AS BIGINT) AS n1,
+      |    CAST(sum(c2) AS BIGINT) AS n2
+      |  FROM d GROUP BY 1),
+      |c AS (
+      |  SELECT c_mktsegment,
+      |    CAST(sum(c1) OVER (PARTITION BY c_mktsegment ORDER BY v) AS BIGINT) AS a,
+      |    CAST(sum(c2) OVER (PARTITION BY c_mktsegment ORDER BY v) AS BIGINT) AS b
+      |  FROM d)""".stripMargin
+
   /** Exact two-sample Kolmogorov–Smirnov drift test per market segment:
     * did the order-value distribution SHIFT between the pre-1998 and
     * 1998+ eras? (The distribution-level companion to q149's binned PSI
@@ -2137,36 +2165,15 @@ object RelationalQueries {
     * aggregate, so shuffled bytes track distinct values, not rows. */
   val q185KsDrift = Q(
     "q185_ks_drift",
-    """WITH j AS (
-      |  SELECT c_mktsegment, CAST(round(o_totalprice * 100) AS BIGINT) AS v,
-      |    CASE WHEN year(o_orderdate) < 1998 THEN 1 ELSE 0 END AS g
-      |  FROM orders JOIN customer ON c_custkey = o_custkey),
-      |d AS (
-      |  SELECT c_mktsegment, v, CAST(sum(g) AS BIGINT) AS c1,
-      |    CAST(sum(1 - g) AS BIGINT) AS c2
-      |  FROM j GROUP BY 1, 2),
-      |t AS (
-      |  SELECT c_mktsegment, CAST(sum(c1) AS BIGINT) AS n1,
-      |    CAST(sum(c2) AS BIGINT) AS n2
-      |  FROM d GROUP BY 1),
-      |c AS (
-      |  SELECT c_mktsegment,
-      |    CAST(sum(c1) OVER (PARTITION BY c_mktsegment ORDER BY v) AS BIGINT) AS a,
-      |    CAST(sum(c2) OVER (PARTITION BY c_mktsegment ORDER BY v) AS BIGINT) AS b
-      |  FROM d)
+    s"""WITH $segmentEraHistCtes,
+      |$segmentEraEcdfCtes
       |SELECT c_mktsegment, n1, n2,
       |  round(CAST(max(abs(a * n2 - b * n1)) AS DOUBLE)
       |    / (CAST(n1 AS DOUBLE) * n2), 6) AS ks_d
       |FROM c JOIN t USING (c_mktsegment)
       |GROUP BY c_mktsegment, n1, n2
       |ORDER BY c_mktsegment""".stripMargin) { (spark, dir) =>
-    val d = Tables.orders(spark, dir)
-      .join(Tables.customer(spark, dir), col("c_custkey") === col("o_custkey"))
-      .select(col("c_mktsegment"),
-        round(col("o_totalprice") * 100).cast("long").as("v"),
-        when(year(col("o_orderdate")) < 1998, 1L).otherwise(0L).as("g"))
-      .groupBy(col("c_mktsegment"), col("v"))
-      .agg(sum(col("g")).as("c1"), sum(lit(1L) - col("g")).as("c2"))
+    val d = segmentEraHist(spark, dir)
     // the distributed-ECDF offset pattern, factored (r9) into
     // Ecdf.groupedCumsum; per-segment totals ride the offset table
     // (tot_c1/tot_c2), so d has NO second consumer — a separate
@@ -2280,14 +2287,7 @@ object RelationalQueries {
     * aggregate is dimension-sized. */
   val q187RevenueAcf = Q(
     "q187_revenue_acf",
-    """WITH m AS (
-      |  SELECT n_name,
-      |    (year(o_orderdate) - 1992) * 12 + month(o_orderdate) - 1 AS x,
-      |    CAST(sum(CAST(round(o_totalprice) AS BIGINT)) AS BIGINT) AS y
-      |  FROM orders
-      |  JOIN customer ON c_custkey = o_custkey
-      |  JOIN nation ON n_nationkey = c_nationkey
-      |  GROUP BY 1, 2),
+    s"""WITH ${monthlyRevenueSince1992Cte(cents = false)},
       |t AS (
       |  SELECT n_name, CAST(count(*) AS BIGINT) AS n, CAST(sum(y) AS BIGINT) AS tot
       |  FROM m GROUP BY 1),
@@ -2309,14 +2309,7 @@ object RelationalQueries {
       |JOIN (VALUES (1), (2), (3), (4), (5), (6)) l(k) ON true
       |JOIN z b ON b.n_name = a.n_name AND b.x = a.x + l.k
       |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin) { (spark, dir) =>
-    val m = Tables.orders(spark, dir)
-      .join(Tables.customer(spark, dir), col("c_custkey") === col("o_custkey"))
-      .join(broadcast(Tables.nation(spark, dir)),
-        col("n_nationkey") === col("c_nationkey"))
-      .groupBy(col("n_name"),
-        ((year(col("o_orderdate")) - 1992) * 12 + month(col("o_orderdate")) - 1)
-          .as("x"))
-      .agg(sum(round(col("o_totalprice")).cast("long")).as("y"))
+    val m = monthlyRevenueSince1992(spark, dir, cents = false)
     val t = m.groupBy(col("n_name"))
       .agg(count(lit(1)).as("n"), sum(col("y")).as("tot"))
     val d = m.join(t, "n_name")
@@ -2357,12 +2350,7 @@ object RelationalQueries {
     * three final divisions. */
   val q197RobustMeans = Q(
     "q197_robust_means",
-    """WITH j AS (
-      |  SELECT c_mktsegment, CAST(round(o_totalprice * 100) AS BIGINT) AS v
-      |  FROM orders JOIN customer ON c_custkey = o_custkey),
-      |d AS (
-      |  SELECT c_mktsegment, v, CAST(count(*) AS BIGINT) AS c
-      |  FROM j GROUP BY 1, 2),
+    s"""WITH $segmentValueCountsCtes,
       |t AS (
       |  SELECT c_mktsegment, CAST(sum(c) AS BIGINT) AS n,
       |    sum(CAST(v AS HUGEINT) * c) AS s
@@ -2387,12 +2375,7 @@ object RelationalQueries {
       |  round((CAST(tsum AS DOUBLE) + CAST(k AS DOUBLE) * lo_v
       |    + CAST(k AS DOUBLE) * hi_v) / n / 100, 4) AS winsorized_mean
       |FROM g ORDER BY c_mktsegment""".stripMargin) { (spark, dir) =>
-    val d = Tables.orders(spark, dir)
-      .join(Tables.customer(spark, dir), col("c_custkey") === col("o_custkey"))
-      .select(col("c_mktsegment"),
-        round(col("o_totalprice") * 100).cast("long").as("v"))
-      .groupBy(col("c_mktsegment"), col("v"))
-      .agg(count(lit(1)).as("c"))
+    val d = segmentValueCounts(spark, dir)
     // totals ride the cumsum (tot_c) and the plain-mean numerator is
     // just another aggregate over the SAME value-grain rows, so d has
     // exactly one consumer — no separate groupBy(segment) branch that
@@ -2535,23 +2518,8 @@ object RelationalQueries {
     * (segment, value) aggregate is dimension-sized. */
   val q199DriftAlarmsBh = Q(
     "q199_drift_alarms_bh",
-    """WITH j AS (
-      |  SELECT c_mktsegment, CAST(round(o_totalprice * 100) AS BIGINT) AS v,
-      |    CASE WHEN year(o_orderdate) < 1998 THEN 1 ELSE 0 END AS g
-      |  FROM orders JOIN customer ON c_custkey = o_custkey),
-      |d AS (
-      |  SELECT c_mktsegment, v, CAST(sum(g) AS BIGINT) AS c1,
-      |    CAST(sum(1 - g) AS BIGINT) AS c2
-      |  FROM j GROUP BY 1, 2),
-      |t AS (
-      |  SELECT c_mktsegment, CAST(sum(c1) AS BIGINT) AS n1,
-      |    CAST(sum(c2) AS BIGINT) AS n2
-      |  FROM d GROUP BY 1),
-      |c AS (
-      |  SELECT c_mktsegment,
-      |    CAST(sum(c1) OVER (PARTITION BY c_mktsegment ORDER BY v) AS BIGINT) AS a,
-      |    CAST(sum(c2) OVER (PARTITION BY c_mktsegment ORDER BY v) AS BIGINT) AS b
-      |  FROM d),
+    s"""WITH $segmentEraHistCtes,
+      |$segmentEraEcdfCtes,
       |ks AS (
       |  SELECT c_mktsegment, n1, n2,
       |    CAST(max(abs(a * n2 - b * n1)) AS DOUBLE)
@@ -2578,13 +2546,7 @@ object RelationalQueries {
       |FROM pass CROSS JOIN cut
       |ORDER BY c_mktsegment""".stripMargin) { (spark, dir) =>
     import graft.operators.Ecdf
-    val d = Tables.orders(spark, dir)
-      .join(Tables.customer(spark, dir), col("c_custkey") === col("o_custkey"))
-      .select(col("c_mktsegment"),
-        round(col("o_totalprice") * 100).cast("long").as("v"),
-        when(year(col("o_orderdate")) < 1998, 1L).otherwise(0L).as("g"))
-      .groupBy(col("c_mktsegment"), col("v"))
-      .agg(sum(col("g")).as("c1"), sum(lit(1L) - col("g")).as("c2"))
+    val d = segmentEraHist(spark, dir)
     val ks = Ecdf.groupedCumsum(d, Seq("c_mktsegment"), "v", Seq("c1", "c2"))
       .select(col("c_mktsegment"), col("cum_c1").as("a"), col("cum_c2").as("b"),
         col("tot_c1").as("n1"), col("tot_c2").as("n2"))
@@ -2633,12 +2595,7 @@ object RelationalQueries {
     * standard a-few-percent Hill window. */
   val q200HillTailIndex = Q(
     "q200_hill_tail_index",
-    """WITH j AS (
-      |  SELECT c_mktsegment, CAST(round(o_totalprice * 100) AS BIGINT) AS v
-      |  FROM orders JOIN customer ON c_custkey = o_custkey),
-      |d AS (
-      |  SELECT c_mktsegment, v, CAST(count(*) AS BIGINT) AS c
-      |  FROM j GROUP BY 1, 2),
+    s"""WITH $segmentValueCountsCtes,
       |t AS (
       |  SELECT c_mktsegment, CAST(sum(c) AS BIGINT) AS n,
       |    least(CAST(ceil(sum(c) * 0.05) AS BIGINT), 1000) AS k
@@ -2662,12 +2619,7 @@ object RelationalQueries {
       |    6) AS hill_alpha
       |FROM s ORDER BY c_mktsegment""".stripMargin) { (spark, dir) =>
     import graft.operators.Ecdf
-    val d = Tables.orders(spark, dir)
-      .join(Tables.customer(spark, dir), col("c_custkey") === col("o_custkey"))
-      .select(col("c_mktsegment"),
-        round(col("o_totalprice") * 100).cast("long").as("v"))
-      .groupBy(col("c_mktsegment"), col("v"))
-      .agg(count(lit(1)).as("c"))
+    val d = segmentValueCounts(spark, dir)
     val cw = Ecdf.groupedCumsum(d, Seq("c_mktsegment"), "v", Seq("c"))
       .withColumn("n", col("tot_c"))
       .withColumn("k", least(ceil(col("n") * 0.05).cast("long"), lit(1000L)))
@@ -2711,14 +2663,7 @@ object RelationalQueries {
     * is the final division — hash-stable by construction. */
   val q203WassersteinDrift = Q(
     "q203_wasserstein_drift",
-    """WITH j AS (
-      |  SELECT c_mktsegment, CAST(round(o_totalprice * 100) AS BIGINT) AS v,
-      |    CASE WHEN year(o_orderdate) < 1998 THEN 1 ELSE 0 END AS g
-      |  FROM orders JOIN customer ON c_custkey = o_custkey),
-      |d AS (
-      |  SELECT c_mktsegment, v, CAST(sum(g) AS BIGINT) AS c1,
-      |    CAST(sum(1 - g) AS BIGINT) AS c2
-      |  FROM j GROUP BY 1, 2),
+    s"""WITH $segmentEraHistCtes,
       |c AS (
       |  SELECT c_mktsegment, v,
       |    sum(c1) OVER w AS a, sum(c2) OVER w AS b,
@@ -2735,13 +2680,7 @@ object RelationalQueries {
       |FROM c
       |GROUP BY c_mktsegment, n1, n2
       |ORDER BY c_mktsegment""".stripMargin) { (spark, dir) =>
-    val d = Tables.orders(spark, dir)
-      .join(Tables.customer(spark, dir), col("c_custkey") === col("o_custkey"))
-      .select(col("c_mktsegment"),
-        round(col("o_totalprice") * 100).cast("long").as("v"),
-        when(year(col("o_orderdate")) < 1998, 1L).otherwise(0L).as("g"))
-      .groupBy(col("c_mktsegment"), col("v"))
-      .agg(sum(col("g")).as("c1"), sum(lit(1L) - col("g")).as("c2"))
+    val d = segmentEraHist(spark, dir)
     // one shared implementation of the exact transport sum
     // (operators/Drift.reductions); this query only rescales to dollars
     graft.operators.Drift
@@ -2752,6 +2691,56 @@ object RelationalQueries {
             / (col("n1").cast("double") * col("n2")) / 100, 6))
           .as("w1_dollars"))
       .orderBy(col("c_mktsegment"))
+  }
+
+  /** DuckDB twin of `Drift.ksAndW1` over [[segmentEraHist]]'s era
+    * split, shared by q205/q207/q210: per segment KS D, W1 and CvM, plus
+    * Anderson–Darling (`withAd`) and the energy distance (`withEnergy`),
+    * each NULL when a side is empty. */
+  private def driftPanelSql(withAd: Boolean, withEnergy: Boolean): String = {
+    val ad = if (!withAd) "" else
+      """,
+        |  CASE WHEN n1 > 0 AND n2 > 0 THEN
+        |    round(CAST(sum(CASE WHEN nv IS NOT NULL
+        |          AND (a + b) * (n1 + n2 - a - b) > 0 THEN
+        |        (CAST(cnt AS HUGEINT) * abs(a * n2 - b * n1)
+        |          * abs(a * n2 - b * n1) * 1000000)
+        |          // ((a + b) * (n1 + n2 - a - b))
+        |        ELSE CAST(0 AS HUGEINT) END) AS DOUBLE)
+        |      / (CAST(n1 AS DOUBLE) * n2 * 1e6), 6) END AS ad"""
+    val energy = if (!withEnergy) "" else
+      """,
+        |  CASE WHEN n1 > 0 AND n2 > 0 THEN
+        |    round(2 * CAST(sum(CASE WHEN nv IS NULL THEN CAST(0 AS HUGEINT)
+        |        ELSE CAST(abs(a * n2 - b * n1) AS HUGEINT)
+        |          * abs(a * n2 - b * n1) * (nv - v) END) AS DOUBLE)
+        |      / (CAST(n1 AS DOUBLE) * n2 * (CAST(n1 AS DOUBLE) * n2)), 6)
+        |    END AS energy_cents"""
+    s"""WITH $segmentEraHistCtes,
+       |c AS (
+       |  SELECT c_mktsegment, v, c1 + c2 AS cnt,
+       |    sum(c1) OVER w AS a, sum(c2) OVER w AS b,
+       |    sum(c1) OVER (PARTITION BY c_mktsegment) AS n1,
+       |    sum(c2) OVER (PARTITION BY c_mktsegment) AS n2,
+       |    lead(v) OVER (PARTITION BY c_mktsegment ORDER BY v) AS nv
+       |  FROM d
+       |  WINDOW w AS (PARTITION BY c_mktsegment ORDER BY v))
+       |SELECT c_mktsegment, CAST(n1 AS BIGINT) AS n1, CAST(n2 AS BIGINT) AS n2,
+       |  CASE WHEN n1 > 0 AND n2 > 0 THEN
+       |    round(CAST(max(abs(a * n2 - b * n1)) AS DOUBLE)
+       |      / (CAST(n1 AS DOUBLE) * n2), 6) END AS ks_d,
+       |  CASE WHEN n1 > 0 AND n2 > 0 THEN
+       |    round(CAST(sum(CASE WHEN nv IS NULL THEN CAST(0 AS HUGEINT)
+       |        ELSE CAST(abs(a * n2 - b * n1) AS HUGEINT) * (nv - v) END) AS DOUBLE)
+       |      / (CAST(n1 AS DOUBLE) * n2), 6) END AS w1_cents,
+       |  CASE WHEN n1 > 0 AND n2 > 0 THEN
+       |    round(CAST(sum(CAST(cnt AS HUGEINT)
+       |        * abs(a * n2 - b * n1) * abs(a * n2 - b * n1)) AS DOUBLE)
+       |      / (CAST(n1 AS DOUBLE) * n2
+       |        * CAST(n1 + n2 AS DOUBLE) * CAST(n1 + n2 AS DOUBLE)), 6) END AS cvm$ad$energy
+       |FROM c
+       |GROUP BY c_mktsegment, n1, n2
+       |ORDER BY c_mktsegment""".stripMargin
   }
 
   /** One-pass drift monitor (`operators/Drift.ksAndW1`): KS D AND
@@ -2766,45 +2755,8 @@ object RelationalQueries {
     * out (PlanSpec pins the single-scan shape). */
   val q205DriftMonitor = Q(
     "q205_drift_monitor",
-    """WITH j AS (
-      |  SELECT c_mktsegment, CAST(round(o_totalprice * 100) AS BIGINT) AS v,
-      |    CASE WHEN year(o_orderdate) < 1998 THEN 1 ELSE 0 END AS g
-      |  FROM orders JOIN customer ON c_custkey = o_custkey),
-      |d AS (
-      |  SELECT c_mktsegment, v, CAST(sum(g) AS BIGINT) AS c1,
-      |    CAST(sum(1 - g) AS BIGINT) AS c2
-      |  FROM j GROUP BY 1, 2),
-      |c AS (
-      |  SELECT c_mktsegment, v, c1 + c2 AS cnt,
-      |    sum(c1) OVER w AS a, sum(c2) OVER w AS b,
-      |    sum(c1) OVER (PARTITION BY c_mktsegment) AS n1,
-      |    sum(c2) OVER (PARTITION BY c_mktsegment) AS n2,
-      |    lead(v) OVER (PARTITION BY c_mktsegment ORDER BY v) AS nv
-      |  FROM d
-      |  WINDOW w AS (PARTITION BY c_mktsegment ORDER BY v))
-      |SELECT c_mktsegment, CAST(n1 AS BIGINT) AS n1, CAST(n2 AS BIGINT) AS n2,
-      |  CASE WHEN n1 > 0 AND n2 > 0 THEN
-      |    round(CAST(max(abs(a * n2 - b * n1)) AS DOUBLE)
-      |      / (CAST(n1 AS DOUBLE) * n2), 6) END AS ks_d,
-      |  CASE WHEN n1 > 0 AND n2 > 0 THEN
-      |    round(CAST(sum(CASE WHEN nv IS NULL THEN CAST(0 AS HUGEINT)
-      |        ELSE CAST(abs(a * n2 - b * n1) AS HUGEINT) * (nv - v) END) AS DOUBLE)
-      |      / (CAST(n1 AS DOUBLE) * n2), 6) END AS w1_cents,
-      |  CASE WHEN n1 > 0 AND n2 > 0 THEN
-      |    round(CAST(sum(CAST(cnt AS HUGEINT)
-      |        * abs(a * n2 - b * n1) * abs(a * n2 - b * n1)) AS DOUBLE)
-      |      / (CAST(n1 AS DOUBLE) * n2
-      |        * CAST(n1 + n2 AS DOUBLE) * CAST(n1 + n2 AS DOUBLE)), 6) END AS cvm
-      |FROM c
-      |GROUP BY c_mktsegment, n1, n2
-      |ORDER BY c_mktsegment""".stripMargin) { (spark, dir) =>
-    val d = Tables.orders(spark, dir)
-      .join(Tables.customer(spark, dir), col("c_custkey") === col("o_custkey"))
-      .select(col("c_mktsegment"),
-        round(col("o_totalprice") * 100).cast("long").as("v"),
-        when(year(col("o_orderdate")) < 1998, 1L).otherwise(0L).as("g"))
-      .groupBy(col("c_mktsegment"), col("v"))
-      .agg(sum(col("g")).as("c1"), sum(lit(1L) - col("g")).as("c2"))
+    driftPanelSql(withAd = false, withEnergy = false)) { (spark, dir) =>
+    val d = segmentEraHist(spark, dir)
     graft.operators.Drift.ksAndW1(d, Seq("c_mktsegment"), "v", "c1", "c2")
       .withColumnRenamed("w1", "w1_cents")
       .orderBy(col("c_mktsegment"))
@@ -2832,53 +2784,8 @@ object RelationalQueries {
     * ad against a driver-side BigInt reference). */
   val q207AdMonitor = Q(
     "q207_ad_monitor",
-    """WITH j AS (
-      |  SELECT c_mktsegment, CAST(round(o_totalprice * 100) AS BIGINT) AS v,
-      |    CASE WHEN year(o_orderdate) < 1998 THEN 1 ELSE 0 END AS g
-      |  FROM orders JOIN customer ON c_custkey = o_custkey),
-      |d AS (
-      |  SELECT c_mktsegment, v, CAST(sum(g) AS BIGINT) AS c1,
-      |    CAST(sum(1 - g) AS BIGINT) AS c2
-      |  FROM j GROUP BY 1, 2),
-      |c AS (
-      |  SELECT c_mktsegment, v, c1 + c2 AS cnt,
-      |    sum(c1) OVER w AS a, sum(c2) OVER w AS b,
-      |    sum(c1) OVER (PARTITION BY c_mktsegment) AS n1,
-      |    sum(c2) OVER (PARTITION BY c_mktsegment) AS n2,
-      |    lead(v) OVER (PARTITION BY c_mktsegment ORDER BY v) AS nv
-      |  FROM d
-      |  WINDOW w AS (PARTITION BY c_mktsegment ORDER BY v))
-      |SELECT c_mktsegment, CAST(n1 AS BIGINT) AS n1, CAST(n2 AS BIGINT) AS n2,
-      |  CASE WHEN n1 > 0 AND n2 > 0 THEN
-      |    round(CAST(max(abs(a * n2 - b * n1)) AS DOUBLE)
-      |      / (CAST(n1 AS DOUBLE) * n2), 6) END AS ks_d,
-      |  CASE WHEN n1 > 0 AND n2 > 0 THEN
-      |    round(CAST(sum(CASE WHEN nv IS NULL THEN CAST(0 AS HUGEINT)
-      |        ELSE CAST(abs(a * n2 - b * n1) AS HUGEINT) * (nv - v) END) AS DOUBLE)
-      |      / (CAST(n1 AS DOUBLE) * n2), 6) END AS w1_cents,
-      |  CASE WHEN n1 > 0 AND n2 > 0 THEN
-      |    round(CAST(sum(CAST(cnt AS HUGEINT)
-      |        * abs(a * n2 - b * n1) * abs(a * n2 - b * n1)) AS DOUBLE)
-      |      / (CAST(n1 AS DOUBLE) * n2
-      |        * CAST(n1 + n2 AS DOUBLE) * CAST(n1 + n2 AS DOUBLE)), 6) END AS cvm,
-      |  CASE WHEN n1 > 0 AND n2 > 0 THEN
-      |    round(CAST(sum(CASE WHEN nv IS NOT NULL
-      |          AND (a + b) * (n1 + n2 - a - b) > 0 THEN
-      |        (CAST(cnt AS HUGEINT) * abs(a * n2 - b * n1)
-      |          * abs(a * n2 - b * n1) * 1000000)
-      |          // ((a + b) * (n1 + n2 - a - b))
-      |        ELSE CAST(0 AS HUGEINT) END) AS DOUBLE)
-      |      / (CAST(n1 AS DOUBLE) * n2 * 1e6), 6) END AS ad
-      |FROM c
-      |GROUP BY c_mktsegment, n1, n2
-      |ORDER BY c_mktsegment""".stripMargin) { (spark, dir) =>
-    val d = Tables.orders(spark, dir)
-      .join(Tables.customer(spark, dir), col("c_custkey") === col("o_custkey"))
-      .select(col("c_mktsegment"),
-        round(col("o_totalprice") * 100).cast("long").as("v"),
-        when(year(col("o_orderdate")) < 1998, 1L).otherwise(0L).as("g"))
-      .groupBy(col("c_mktsegment"), col("v"))
-      .agg(sum(col("g")).as("c1"), sum(lit(1L) - col("g")).as("c2"))
+    driftPanelSql(withAd = true, withEnergy = false)) { (spark, dir) =>
+    val d = segmentEraHist(spark, dir)
     graft.operators.Drift
       .ksAndW1(d, Seq("c_mktsegment"), "v", "c1", "c2", withAd = true)
       .withColumnRenamed("w1", "w1_cents")
@@ -2906,59 +2813,8 @@ object RelationalQueries {
     * range exchange, group-grain out (PlanSpec pins it). */
   val q210DriftPanel = Q(
     "q210_drift_panel",
-    """WITH j AS (
-      |  SELECT c_mktsegment, CAST(round(o_totalprice * 100) AS BIGINT) AS v,
-      |    CASE WHEN year(o_orderdate) < 1998 THEN 1 ELSE 0 END AS g
-      |  FROM orders JOIN customer ON c_custkey = o_custkey),
-      |d AS (
-      |  SELECT c_mktsegment, v, CAST(sum(g) AS BIGINT) AS c1,
-      |    CAST(sum(1 - g) AS BIGINT) AS c2
-      |  FROM j GROUP BY 1, 2),
-      |c AS (
-      |  SELECT c_mktsegment, v, c1 + c2 AS cnt,
-      |    sum(c1) OVER w AS a, sum(c2) OVER w AS b,
-      |    sum(c1) OVER (PARTITION BY c_mktsegment) AS n1,
-      |    sum(c2) OVER (PARTITION BY c_mktsegment) AS n2,
-      |    lead(v) OVER (PARTITION BY c_mktsegment ORDER BY v) AS nv
-      |  FROM d
-      |  WINDOW w AS (PARTITION BY c_mktsegment ORDER BY v))
-      |SELECT c_mktsegment, CAST(n1 AS BIGINT) AS n1, CAST(n2 AS BIGINT) AS n2,
-      |  CASE WHEN n1 > 0 AND n2 > 0 THEN
-      |    round(CAST(max(abs(a * n2 - b * n1)) AS DOUBLE)
-      |      / (CAST(n1 AS DOUBLE) * n2), 6) END AS ks_d,
-      |  CASE WHEN n1 > 0 AND n2 > 0 THEN
-      |    round(CAST(sum(CASE WHEN nv IS NULL THEN CAST(0 AS HUGEINT)
-      |        ELSE CAST(abs(a * n2 - b * n1) AS HUGEINT) * (nv - v) END) AS DOUBLE)
-      |      / (CAST(n1 AS DOUBLE) * n2), 6) END AS w1_cents,
-      |  CASE WHEN n1 > 0 AND n2 > 0 THEN
-      |    round(CAST(sum(CAST(cnt AS HUGEINT)
-      |        * abs(a * n2 - b * n1) * abs(a * n2 - b * n1)) AS DOUBLE)
-      |      / (CAST(n1 AS DOUBLE) * n2
-      |        * CAST(n1 + n2 AS DOUBLE) * CAST(n1 + n2 AS DOUBLE)), 6) END AS cvm,
-      |  CASE WHEN n1 > 0 AND n2 > 0 THEN
-      |    round(CAST(sum(CASE WHEN nv IS NOT NULL
-      |          AND (a + b) * (n1 + n2 - a - b) > 0 THEN
-      |        (CAST(cnt AS HUGEINT) * abs(a * n2 - b * n1)
-      |          * abs(a * n2 - b * n1) * 1000000)
-      |          // ((a + b) * (n1 + n2 - a - b))
-      |        ELSE CAST(0 AS HUGEINT) END) AS DOUBLE)
-      |      / (CAST(n1 AS DOUBLE) * n2 * 1e6), 6) END AS ad,
-      |  CASE WHEN n1 > 0 AND n2 > 0 THEN
-      |    round(2 * CAST(sum(CASE WHEN nv IS NULL THEN CAST(0 AS HUGEINT)
-      |        ELSE CAST(abs(a * n2 - b * n1) AS HUGEINT)
-      |          * abs(a * n2 - b * n1) * (nv - v) END) AS DOUBLE)
-      |      / (CAST(n1 AS DOUBLE) * n2 * (CAST(n1 AS DOUBLE) * n2)), 6)
-      |    END AS energy_cents
-      |FROM c
-      |GROUP BY c_mktsegment, n1, n2
-      |ORDER BY c_mktsegment""".stripMargin) { (spark, dir) =>
-    val d = Tables.orders(spark, dir)
-      .join(Tables.customer(spark, dir), col("c_custkey") === col("o_custkey"))
-      .select(col("c_mktsegment"),
-        round(col("o_totalprice") * 100).cast("long").as("v"),
-        when(year(col("o_orderdate")) < 1998, 1L).otherwise(0L).as("g"))
-      .groupBy(col("c_mktsegment"), col("v"))
-      .agg(sum(col("g")).as("c1"), sum(lit(1L) - col("g")).as("c2"))
+    driftPanelSql(withAd = true, withEnergy = true)) { (spark, dir) =>
+    val d = segmentEraHist(spark, dir)
     graft.operators.Drift
       .ksAndW1(d, Seq("c_mktsegment"), "v", "c1", "c2", withAd = true,
         withEnergy = true)

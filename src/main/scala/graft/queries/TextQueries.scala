@@ -163,19 +163,13 @@ object TextQueries {
       .orderBy(col("source"))
   }
 
-  /** Exact 3-gram Jaccard near-dup pairs (threshold 0.5) on a
-    * deterministic 1-in-2 doc sample, hot shingles capped at df≤100.
-    * The oracle rebuilds the identical pipeline in SQL. (The sample was
-    * 1-in-5 through r3, which left only 1/25 of dup pairs eligible and
-    * made the sf0.01 gate vacuously pass on 0 rows — r3 verdict item 6;
-    * 1-in-2 yields rows at sf0.01 while still exercising the sampled
-    * path.) */
-  val q28JaccardPairs = Q(
-    "q28_jaccard_pairs",
-    """WITH docs AS (
-      |  SELECT doc_id, string_split_regex(lower(text), '\s+') AS t
-      |  FROM documents WHERE doc_id % 2 = 0),
-      |sh AS (
+  /** DuckDB twin of the Dedup rare-shingle candidate stage over a
+    * `docs(doc_id, t)` CTE, shared by q28 and q166: distinct trigram
+    * shingles `sh`, per-doc set sizes `sizes`, the df ∈ [2, 100] `rare`
+    * shingles, their rows `shr` and the per-pair overlap
+    * `inter(id_a, id_b, n_inter)`. */
+  private def rareShingleOverlapCtes: String =
+    """sh AS (
       |  SELECT DISTINCT doc_id, s FROM docs,
       |    unnest(list_transform(range(1, len(t) - 1),
       |      i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS u(s)
@@ -186,7 +180,21 @@ object TextQueries {
       |inter AS (
       |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_inter
       |  FROM shr a JOIN shr b ON a.s = b.s AND a.doc_id < b.doc_id
-      |  GROUP BY 1, 2)
+      |  GROUP BY 1, 2)""".stripMargin
+
+  /** Exact 3-gram Jaccard near-dup pairs (threshold 0.5) on a
+    * deterministic 1-in-2 doc sample, hot shingles capped at df≤100.
+    * The oracle rebuilds the identical pipeline in SQL. (The sample was
+    * 1-in-5 through r3, which left only 1/25 of dup pairs eligible and
+    * made the sf0.01 gate vacuously pass on 0 rows — r3 verdict item 6;
+    * 1-in-2 yields rows at sf0.01 while still exercising the sampled
+    * path.) */
+  val q28JaccardPairs = Q(
+    "q28_jaccard_pairs",
+    s"""WITH docs AS (
+      |  SELECT doc_id, string_split_regex(lower(text), '\\s+') AS t
+      |  FROM documents WHERE doc_id % 2 = 0),
+      |$rareShingleOverlapCtes
       |SELECT id_a, id_b,
       |  round(CAST(n_inter AS DOUBLE) / (sa.n_sh + sb.n_sh - n_inter), 4) AS jaccard
       |FROM inter
@@ -1884,6 +1892,129 @@ object TextQueries {
       .orderBy(col("doc_id"))
   }
 
+  /** DuckDB twin of [[Bm25.postingIndex]], shared by every BM25 oracle
+    * (q137/q141/q142/q169/q212/q213): the token arrays `docs` (carrying
+    * `docCols`), the trigram shingles, tf, doc lengths, the df ∈
+    * [2, dfMaxForCorpus] vocabulary and the precomputed doc-side weight
+    * `w(doc_id, t, wgt)` = idf × tf saturation × length norm. */
+  private def bm25IndexCtes(docCols: String): String =
+    s"""docs AS (
+       |  SELECT $docCols, string_split_regex(lower(text), '\\s+') AS tk
+       |  FROM documents),
+       |toks AS (
+       |  SELECT doc_id, s AS t FROM docs,
+       |    unnest(list_transform(range(1, len(tk) - 1),
+       |      i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) AS u(s)
+       |  WHERE len(tk) >= 3),
+       |tf AS (SELECT doc_id, t, count(*) AS cnt FROM toks GROUP BY 1, 2),
+       |dl AS (SELECT doc_id, CAST(sum(cnt) AS DOUBLE) AS dl FROM tf GROUP BY doc_id),
+       |stats AS (
+       |  SELECT CAST(count(*) AS DOUBLE) AS n_docs, avg(dl) AS avgdl FROM dl),
+       |vocab AS (
+       |  SELECT t, CAST(count(*) AS DOUBLE) AS df FROM tf GROUP BY t
+       |  HAVING count(*) BETWEEN 2 AND
+       |    (SELECT greatest(8, CAST(floor(10 * log2(greatest(2, count(*)))) AS INT))
+       |     FROM documents)),
+       |w AS (
+       |  SELECT tf.doc_id, tf.t,
+       |    ln(1 + (s.n_docs - v.df + 0.5) / (v.df + 0.5)) *
+       |      (tf.cnt * 2.2) / (tf.cnt + 1.2 * (0.25 + 0.75 * d.dl / s.avgdl)) AS wgt
+       |  FROM tf JOIN vocab v ON tf.t = v.t
+       |  JOIN dl d ON d.doc_id = tf.doc_id CROSS JOIN stats s)""".stripMargin
+
+  /** MMR rerank at its deployed config (Carbonell–Goldstein, λ = 0.5):
+    * three greedy picks over `cand(qid, doc_id, rel)`, each later round
+    * scoring the remaining candidates by 0.5·rel − 0.5·max-sim-to-picked
+    * on 6-dp-rounded candidate cosines, doc_id breaking every tie.
+    * Returns the picks s1 (qid, doc_id, rel), s2 and s3 (qid, doc_id,
+    * mmr). Shared by q142 and q213's `mmr` leg; [[mmrRoundsCtes]] is its
+    * DuckDB twin. */
+  private def mmrPicks(cand: org.apache.spark.sql.DataFrame,
+      emb: org.apache.spark.sql.DataFrame): (org.apache.spark.sql.DataFrame,
+      org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
+    import graft.functions.VectorFns
+    import org.apache.spark.sql.expressions.Window
+    val candE = cand.join(
+      emb.select(col("vec_id").as("doc_id"), col("embedding")), "doc_id")
+    // (r15 audit: checkpointing this bounded pairwise-sim table was
+    // measured SLOWER — the eager extra job costs more than the three
+    // bounded re-references it saves; left lazy deliberately)
+    val pair = candE.as("a").join(candE.as("b"),
+        col("a.qid") === col("b.qid") && col("a.doc_id") =!= col("b.doc_id"))
+      .select(col("a.qid").as("qid"), col("a.doc_id").as("da"),
+        col("b.doc_id").as("db"),
+        round(VectorFns.cosine(col("a.embedding"), col("b.embedding")), 6)
+          .as("sim"))
+    def top1(df: org.apache.spark.sql.DataFrame,
+        order: org.apache.spark.sql.Column): org.apache.spark.sql.DataFrame =
+      df.withColumn("__rn", row_number().over(
+          Window.partitionBy(col("qid")).orderBy(order.desc, col("doc_id"))))
+        .filter(col("__rn") === 1).drop("__rn")
+    val s1 = top1(cand, col("rel"))
+    val m2 = cand.as("c")
+      .join(s1.as("s1"),
+        col("c.qid") === col("s1.qid") && col("c.doc_id") =!= col("s1.doc_id"))
+      .join(pair.as("p"), col("p.qid") === col("c.qid") &&
+        col("p.da") === col("c.doc_id") && col("p.db") === col("s1.doc_id"))
+      .select(col("c.qid").as("qid"), col("c.doc_id").as("doc_id"),
+        col("c.rel").as("rel"),
+        (lit(0.5) * col("c.rel") - lit(0.5) * col("p.sim")).as("mmr"))
+    val s2 = top1(m2.select(col("qid"), col("doc_id"), col("mmr")), col("mmr"))
+    val m3 = cand.as("c")
+      .join(s1.as("s1"), col("c.qid") === col("s1.qid"))
+      .join(s2.as("s2"), col("c.qid") === col("s2.qid"))
+      .join(pair.as("p1"), col("p1.qid") === col("c.qid") &&
+        col("p1.da") === col("c.doc_id") && col("p1.db") === col("s1.doc_id"))
+      .join(pair.as("p2"), col("p2.qid") === col("c.qid") &&
+        col("p2.da") === col("c.doc_id") && col("p2.db") === col("s2.doc_id"))
+      .filter(col("c.doc_id") =!= col("s1.doc_id")
+        && col("c.doc_id") =!= col("s2.doc_id"))
+      .select(col("c.qid").as("qid"), col("c.doc_id").as("doc_id"),
+        (lit(0.5) * col("c.rel")
+          - lit(0.5) * greatest(col("p1.sim"), col("p2.sim"))).as("mmr"))
+    (s1, s2, top1(m3, col("mmr")))
+  }
+
+  /** DuckDB twin of [[mmrPicks]] over a `cand(qid, doc_id, rel)` CTE:
+    * the pairwise `pair` sims and the rounds s1..s3. */
+  private def mmrRoundsCtes: String =
+    """pair AS (
+      |  SELECT a.qid, a.doc_id AS da, b.doc_id AS db,
+      |    round(list_cosine_similarity(CAST(ea.embedding AS DOUBLE[]),
+      |                                 CAST(eb.embedding AS DOUBLE[])), 6) AS sim
+      |  FROM cand a JOIN cand b ON a.qid = b.qid AND a.doc_id <> b.doc_id
+      |  JOIN embeddings ea ON ea.vec_id = a.doc_id
+      |  JOIN embeddings eb ON eb.vec_id = b.doc_id),
+      |s1 AS (
+      |  SELECT qid, doc_id, rel FROM (
+      |    SELECT qid, doc_id, rel,
+      |      row_number() OVER (PARTITION BY qid ORDER BY rel DESC, doc_id) AS rn
+      |    FROM cand) WHERE rn = 1),
+      |m2 AS (
+      |  SELECT c.qid, c.doc_id, c.rel, 0.5 * c.rel - 0.5 * p.sim AS mmr
+      |  FROM cand c
+      |  JOIN s1 ON s1.qid = c.qid AND c.doc_id <> s1.doc_id
+      |  JOIN pair p ON p.qid = c.qid AND p.da = c.doc_id AND p.db = s1.doc_id),
+      |s2 AS (
+      |  SELECT qid, doc_id, mmr FROM (
+      |    SELECT qid, doc_id, mmr,
+      |      row_number() OVER (PARTITION BY qid ORDER BY mmr DESC, doc_id) AS rn
+      |    FROM m2) WHERE rn = 1),
+      |m3 AS (
+      |  SELECT c.qid, c.doc_id,
+      |    0.5 * c.rel - 0.5 * greatest(p1.sim, p2.sim) AS mmr
+      |  FROM cand c
+      |  JOIN s1 ON s1.qid = c.qid
+      |  JOIN s2 ON s2.qid = c.qid
+      |  JOIN pair p1 ON p1.qid = c.qid AND p1.da = c.doc_id AND p1.db = s1.doc_id
+      |  JOIN pair p2 ON p2.qid = c.qid AND p2.da = c.doc_id AND p2.db = s2.doc_id
+      |  WHERE c.doc_id <> s1.doc_id AND c.doc_id <> s2.doc_id),
+      |s3 AS (
+      |  SELECT qid, doc_id, mmr FROM (
+      |    SELECT qid, doc_id, mmr,
+      |      row_number() OVER (PARTITION BY qid ORDER BY mmr DESC, doc_id) AS rn
+      |    FROM m3) WHERE rn = 1)""".stripMargin
+
   /** BM25 top-k retrieval — the sparse-retrieval baseline every RAG
     * pipeline benchmarks against (Robertson–Spärck Jones probabilistic
     * idf, k1 = 1.2, b = 0.75). Same inverted-index discipline as q85:
@@ -1899,29 +2030,7 @@ object TextQueries {
     * in both engines (the q85 rounding contract applied to ranks). */
   val q137Bm25TopK = Q(
     "q137_bm25_topk",
-    """WITH docs AS (
-      |  SELECT doc_id, string_split_regex(lower(text), '\s+') AS tk
-      |  FROM documents),
-      |toks AS (
-      |  SELECT doc_id, s AS t FROM docs,
-      |    unnest(list_transform(range(1, len(tk) - 1),
-      |      i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) AS u(s)
-      |  WHERE len(tk) >= 3),
-      |tf AS (SELECT doc_id, t, count(*) AS cnt FROM toks GROUP BY 1, 2),
-      |dl AS (SELECT doc_id, CAST(sum(cnt) AS DOUBLE) AS dl FROM tf GROUP BY doc_id),
-      |stats AS (
-      |  SELECT CAST(count(*) AS DOUBLE) AS n_docs, avg(dl) AS avgdl FROM dl),
-      |vocab AS (
-      |  SELECT t, CAST(count(*) AS DOUBLE) AS df FROM tf GROUP BY t
-      |  HAVING count(*) BETWEEN 2 AND
-      |    (SELECT greatest(8, CAST(floor(10 * log2(greatest(2, count(*)))) AS INT))
-      |     FROM documents)),
-      |w AS (
-      |  SELECT tf.doc_id, tf.t,
-      |    ln(1 + (s.n_docs - v.df + 0.5) / (v.df + 0.5)) *
-      |      (tf.cnt * 2.2) / (tf.cnt + 1.2 * (0.25 + 0.75 * d.dl / s.avgdl)) AS wgt
-      |  FROM tf JOIN vocab v ON tf.t = v.t
-      |  JOIN dl d ON d.doc_id = tf.doc_id CROSS JOIN stats s),
+    s"""WITH ${bm25IndexCtes("doc_id")},
       |q AS (SELECT DISTINCT doc_id AS qid, t FROM tf WHERE doc_id % 97 = 0),
       |sc AS (
       |  SELECT q.qid, w.doc_id, round(sum(w.wgt), 4) AS score
@@ -1988,29 +2097,7 @@ object TextQueries {
     * per-query terms ≤ 1e9 → BIGINT sums hold to ~9e9 probes/source. */
   val q212RetrievalNdcg = Q(
     "q212_retrieval_ndcg",
-    """WITH docs AS (
-      |  SELECT doc_id, source, string_split_regex(lower(text), '\s+') AS tk
-      |  FROM documents),
-      |toks AS (
-      |  SELECT doc_id, s AS t FROM docs,
-      |    unnest(list_transform(range(1, len(tk) - 1),
-      |      i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) AS u(s)
-      |  WHERE len(tk) >= 3),
-      |tf AS (SELECT doc_id, t, count(*) AS cnt FROM toks GROUP BY 1, 2),
-      |dl AS (SELECT doc_id, CAST(sum(cnt) AS DOUBLE) AS dl FROM tf GROUP BY doc_id),
-      |stats AS (
-      |  SELECT CAST(count(*) AS DOUBLE) AS n_docs, avg(dl) AS avgdl FROM dl),
-      |vocab AS (
-      |  SELECT t, CAST(count(*) AS DOUBLE) AS df FROM tf GROUP BY t
-      |  HAVING count(*) BETWEEN 2 AND
-      |    (SELECT greatest(8, CAST(floor(10 * log2(greatest(2, count(*)))) AS INT))
-      |     FROM documents)),
-      |w AS (
-      |  SELECT tf.doc_id, tf.t,
-      |    ln(1 + (s.n_docs - v.df + 0.5) / (v.df + 0.5)) *
-      |      (tf.cnt * 2.2) / (tf.cnt + 1.2 * (0.25 + 0.75 * d.dl / s.avgdl)) AS wgt
-      |  FROM tf JOIN vocab v ON tf.t = v.t
-      |  JOIN dl d ON d.doc_id = tf.doc_id CROSS JOIN stats s),
+    s"""WITH ${bm25IndexCtes("doc_id, source")},
       |qt AS (
       |  SELECT DISTINCT qid, source,
       |    half[i] || ' ' || half[i+1] || ' ' || half[i+2] AS t
@@ -2125,29 +2212,7 @@ object TextQueries {
     * shared posting stage and the embedding lookups. */
   val q213ChainNdcg = Q(
     "q213_chain_ndcg",
-    """WITH docs AS (
-      |  SELECT doc_id, source, string_split_regex(lower(text), '\s+') AS tk
-      |  FROM documents),
-      |toks AS (
-      |  SELECT doc_id, s AS t FROM docs,
-      |    unnest(list_transform(range(1, len(tk) - 1),
-      |      i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) AS u(s)
-      |  WHERE len(tk) >= 3),
-      |tf AS (SELECT doc_id, t, count(*) AS cnt FROM toks GROUP BY 1, 2),
-      |dl AS (SELECT doc_id, CAST(sum(cnt) AS DOUBLE) AS dl FROM tf GROUP BY doc_id),
-      |stats AS (
-      |  SELECT CAST(count(*) AS DOUBLE) AS n_docs, avg(dl) AS avgdl FROM dl),
-      |vocab AS (
-      |  SELECT t, CAST(count(*) AS DOUBLE) AS df FROM tf GROUP BY t
-      |  HAVING count(*) BETWEEN 2 AND
-      |    (SELECT greatest(8, CAST(floor(10 * log2(greatest(2, count(*)))) AS INT))
-      |     FROM documents)),
-      |w AS (
-      |  SELECT tf.doc_id, tf.t,
-      |    ln(1 + (s.n_docs - v.df + 0.5) / (v.df + 0.5)) *
-      |      (tf.cnt * 2.2) / (tf.cnt + 1.2 * (0.25 + 0.75 * d.dl / s.avgdl)) AS wgt
-      |  FROM tf JOIN vocab v ON tf.t = v.t
-      |  JOIN dl d ON d.doc_id = tf.doc_id CROSS JOIN stats s),
+    s"""WITH ${bm25IndexCtes("doc_id, source")},
       |qt AS (
       |  SELECT DISTINCT qid, half[i] || ' ' || half[i+1] || ' ' || half[i+2] AS t
       |  FROM (SELECT doc_id AS qid, tk[1 : 6] AS half
@@ -2172,42 +2237,7 @@ object TextQueries {
       |  JOIN embeddings ed ON ed.vec_id = c.doc_id
       |  JOIN embeddings eq ON eq.vec_id = c.qid),
       |cand AS (SELECT qid, doc_id, score AS rel FROM top10 WHERE rnk <= 5),
-      |pair AS (
-      |  SELECT a.qid, a.doc_id AS da, b.doc_id AS db,
-      |    round(list_cosine_similarity(CAST(ea.embedding AS DOUBLE[]),
-      |                                 CAST(eb.embedding AS DOUBLE[])), 6) AS sim
-      |  FROM cand a JOIN cand b ON a.qid = b.qid AND a.doc_id <> b.doc_id
-      |  JOIN embeddings ea ON ea.vec_id = a.doc_id
-      |  JOIN embeddings eb ON eb.vec_id = b.doc_id),
-      |s1 AS (
-      |  SELECT qid, doc_id, rel FROM (
-      |    SELECT qid, doc_id, rel,
-      |      row_number() OVER (PARTITION BY qid ORDER BY rel DESC, doc_id) AS rn
-      |    FROM cand) WHERE rn = 1),
-      |m2 AS (
-      |  SELECT c.qid, c.doc_id, c.rel, 0.5 * c.rel - 0.5 * p.sim AS mmr
-      |  FROM cand c
-      |  JOIN s1 ON s1.qid = c.qid AND c.doc_id <> s1.doc_id
-      |  JOIN pair p ON p.qid = c.qid AND p.da = c.doc_id AND p.db = s1.doc_id),
-      |s2 AS (
-      |  SELECT qid, doc_id, mmr FROM (
-      |    SELECT qid, doc_id, mmr,
-      |      row_number() OVER (PARTITION BY qid ORDER BY mmr DESC, doc_id) AS rn
-      |    FROM m2) WHERE rn = 1),
-      |m3 AS (
-      |  SELECT c.qid, c.doc_id,
-      |    0.5 * c.rel - 0.5 * greatest(p1.sim, p2.sim) AS mmr
-      |  FROM cand c
-      |  JOIN s1 ON s1.qid = c.qid
-      |  JOIN s2 ON s2.qid = c.qid
-      |  JOIN pair p1 ON p1.qid = c.qid AND p1.da = c.doc_id AND p1.db = s1.doc_id
-      |  JOIN pair p2 ON p2.qid = c.qid AND p2.da = c.doc_id AND p2.db = s2.doc_id
-      |  WHERE c.doc_id <> s1.doc_id AND c.doc_id <> s2.doc_id),
-      |s3 AS (
-      |  SELECT qid, doc_id, mmr FROM (
-      |    SELECT qid, doc_id, mmr,
-      |      row_number() OVER (PARTITION BY qid ORDER BY mmr DESC, doc_id) AS rn
-      |    FROM m3) WHERE rn = 1),
+      |$mmrRoundsCtes,
       |mmrleg AS (
       |  SELECT qid, doc_id, 1 AS rnk FROM s1
       |  UNION ALL SELECT qid, doc_id, 2 FROM s2
@@ -2275,46 +2305,8 @@ object TextQueries {
       .localCheckpoint()
     // leg 3: q142's MMR at its deployed config — λ=0.5, 3 picks from
     // the BM25 top-5, unrolled greedy rounds over O(probes×5) rows
-    val cand = top10.filter(col("rnk") <= 5)
-      .select(col("qid"), col("doc_id"), col("score").as("rel"))
-    val candE = cand.join(
-      emb.select(col("vec_id").as("doc_id"), col("embedding")), "doc_id")
-    // (r15 audit: checkpointing this bounded pairwise-sim table was
-    // measured SLOWER, as in q142 — left lazy deliberately)
-    val pair = candE.as("a").join(candE.as("b"),
-        col("a.qid") === col("b.qid") && col("a.doc_id") =!= col("b.doc_id"))
-      .select(col("a.qid").as("qid"), col("a.doc_id").as("da"),
-        col("b.doc_id").as("db"),
-        round(VectorFns.cosine(col("a.embedding"), col("b.embedding")), 6)
-          .as("sim"))
-    def top1(df: org.apache.spark.sql.DataFrame,
-        order: org.apache.spark.sql.Column): org.apache.spark.sql.DataFrame =
-      df.withColumn("__rn", row_number().over(
-          Window.partitionBy(col("qid")).orderBy(order.desc, col("doc_id"))))
-        .filter(col("__rn") === 1).drop("__rn")
-    val s1 = top1(cand, col("rel"))
-    val m2 = cand.as("c")
-      .join(s1.as("s1"),
-        col("c.qid") === col("s1.qid") && col("c.doc_id") =!= col("s1.doc_id"))
-      .join(pair.as("p"), col("p.qid") === col("c.qid") &&
-        col("p.da") === col("c.doc_id") && col("p.db") === col("s1.doc_id"))
-      .select(col("c.qid").as("qid"), col("c.doc_id").as("doc_id"),
-        col("c.rel").as("rel"),
-        (lit(0.5) * col("c.rel") - lit(0.5) * col("p.sim")).as("mmr"))
-    val s2 = top1(m2.select(col("qid"), col("doc_id"), col("mmr")), col("mmr"))
-    val m3 = cand.as("c")
-      .join(s1.as("s1"), col("c.qid") === col("s1.qid"))
-      .join(s2.as("s2"), col("c.qid") === col("s2.qid"))
-      .join(pair.as("p1"), col("p1.qid") === col("c.qid") &&
-        col("p1.da") === col("c.doc_id") && col("p1.db") === col("s1.doc_id"))
-      .join(pair.as("p2"), col("p2.qid") === col("c.qid") &&
-        col("p2.da") === col("c.doc_id") && col("p2.db") === col("s2.doc_id"))
-      .filter(col("c.doc_id") =!= col("s1.doc_id")
-        && col("c.doc_id") =!= col("s2.doc_id"))
-      .select(col("c.qid").as("qid"), col("c.doc_id").as("doc_id"),
-        (lit(0.5) * col("c.rel")
-          - lit(0.5) * greatest(col("p1.sim"), col("p2.sim"))).as("mmr"))
-    val s3 = top1(m3, col("mmr"))
+    val (s1, s2, s3) = mmrPicks(top10.filter(col("rnk") <= 5)
+      .select(col("qid"), col("doc_id"), col("score").as("rel")), emb)
     val mmrleg =
       s1.select(col("qid"), col("doc_id"), lit(1).as("rnk"))
         .unionAll(s2.select(col("qid"), col("doc_id"), lit(2).as("rnk")))
@@ -2609,29 +2601,7 @@ object TextQueries {
     * the gate unchanged. */
   val q141RetrieveRerank = Q(
     "q141_retrieve_rerank",
-    """WITH docs AS (
-      |  SELECT doc_id, string_split_regex(lower(text), '\s+') AS tk
-      |  FROM documents),
-      |toks AS (
-      |  SELECT doc_id, s AS t FROM docs,
-      |    unnest(list_transform(range(1, len(tk) - 1),
-      |      i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) AS u(s)
-      |  WHERE len(tk) >= 3),
-      |tf AS (SELECT doc_id, t, count(*) AS cnt FROM toks GROUP BY 1, 2),
-      |dl AS (SELECT doc_id, CAST(sum(cnt) AS DOUBLE) AS dl FROM tf GROUP BY doc_id),
-      |stats AS (
-      |  SELECT CAST(count(*) AS DOUBLE) AS n_docs, avg(dl) AS avgdl FROM dl),
-      |vocab AS (
-      |  SELECT t, CAST(count(*) AS DOUBLE) AS df FROM tf GROUP BY t
-      |  HAVING count(*) BETWEEN 2 AND
-      |    (SELECT greatest(8, CAST(floor(10 * log2(greatest(2, count(*)))) AS INT))
-      |     FROM documents)),
-      |w AS (
-      |  SELECT tf.doc_id, tf.t,
-      |    ln(1 + (s.n_docs - v.df + 0.5) / (v.df + 0.5)) *
-      |      (tf.cnt * 2.2) / (tf.cnt + 1.2 * (0.25 + 0.75 * d.dl / s.avgdl)) AS wgt
-      |  FROM tf JOIN vocab v ON tf.t = v.t
-      |  JOIN dl d ON d.doc_id = tf.doc_id CROSS JOIN stats s),
+    s"""WITH ${bm25IndexCtes("doc_id")},
       |q AS (SELECT DISTINCT doc_id AS qid, t FROM tf WHERE doc_id % 97 = 0),
       |sc AS (
       |  SELECT q.qid, w.doc_id, round(sum(w.wgt), 4) AS score
@@ -2688,29 +2658,7 @@ object TextQueries {
     * identical argmax rules (doc_id tiebreak). */
   val q142MmrRerank = Q(
     "q142_mmr_rerank",
-    """WITH docs AS (
-      |  SELECT doc_id, string_split_regex(lower(text), '\s+') AS tk
-      |  FROM documents),
-      |toks AS (
-      |  SELECT doc_id, s AS t FROM docs,
-      |    unnest(list_transform(range(1, len(tk) - 1),
-      |      i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) AS u(s)
-      |  WHERE len(tk) >= 3),
-      |tf AS (SELECT doc_id, t, count(*) AS cnt FROM toks GROUP BY 1, 2),
-      |dl AS (SELECT doc_id, CAST(sum(cnt) AS DOUBLE) AS dl FROM tf GROUP BY doc_id),
-      |stats AS (
-      |  SELECT CAST(count(*) AS DOUBLE) AS n_docs, avg(dl) AS avgdl FROM dl),
-      |vocab AS (
-      |  SELECT t, CAST(count(*) AS DOUBLE) AS df FROM tf GROUP BY t
-      |  HAVING count(*) BETWEEN 2 AND
-      |    (SELECT greatest(8, CAST(floor(10 * log2(greatest(2, count(*)))) AS INT))
-      |     FROM documents)),
-      |w AS (
-      |  SELECT tf.doc_id, tf.t,
-      |    ln(1 + (s.n_docs - v.df + 0.5) / (v.df + 0.5)) *
-      |      (tf.cnt * 2.2) / (tf.cnt + 1.2 * (0.25 + 0.75 * d.dl / s.avgdl)) AS wgt
-      |  FROM tf JOIN vocab v ON tf.t = v.t
-      |  JOIN dl d ON d.doc_id = tf.doc_id CROSS JOIN stats s),
+    s"""WITH ${bm25IndexCtes("doc_id")},
       |q AS (SELECT DISTINCT doc_id AS qid, t FROM tf WHERE doc_id % 97 = 0),
       |sc AS (
       |  SELECT q.qid, w.doc_id, round(sum(w.wgt), 4) AS score
@@ -2721,42 +2669,7 @@ object TextQueries {
       |    row_number() OVER (PARTITION BY qid ORDER BY score DESC, doc_id) AS rnk
       |  FROM sc),
       |cand AS (SELECT qid, doc_id, score AS rel FROM rk WHERE rnk <= 5),
-      |pair AS (
-      |  SELECT a.qid, a.doc_id AS da, b.doc_id AS db,
-      |    round(list_cosine_similarity(CAST(ea.embedding AS DOUBLE[]),
-      |                                 CAST(eb.embedding AS DOUBLE[])), 6) AS sim
-      |  FROM cand a JOIN cand b ON a.qid = b.qid AND a.doc_id <> b.doc_id
-      |  JOIN embeddings ea ON ea.vec_id = a.doc_id
-      |  JOIN embeddings eb ON eb.vec_id = b.doc_id),
-      |s1 AS (
-      |  SELECT qid, doc_id, rel FROM (
-      |    SELECT qid, doc_id, rel,
-      |      row_number() OVER (PARTITION BY qid ORDER BY rel DESC, doc_id) AS rn
-      |    FROM cand) WHERE rn = 1),
-      |m2 AS (
-      |  SELECT c.qid, c.doc_id, c.rel, 0.5 * c.rel - 0.5 * p.sim AS mmr
-      |  FROM cand c
-      |  JOIN s1 ON s1.qid = c.qid AND c.doc_id <> s1.doc_id
-      |  JOIN pair p ON p.qid = c.qid AND p.da = c.doc_id AND p.db = s1.doc_id),
-      |s2 AS (
-      |  SELECT qid, doc_id, mmr FROM (
-      |    SELECT qid, doc_id, mmr,
-      |      row_number() OVER (PARTITION BY qid ORDER BY mmr DESC, doc_id) AS rn
-      |    FROM m2) WHERE rn = 1),
-      |m3 AS (
-      |  SELECT c.qid, c.doc_id,
-      |    0.5 * c.rel - 0.5 * greatest(p1.sim, p2.sim) AS mmr
-      |  FROM cand c
-      |  JOIN s1 ON s1.qid = c.qid
-      |  JOIN s2 ON s2.qid = c.qid
-      |  JOIN pair p1 ON p1.qid = c.qid AND p1.da = c.doc_id AND p1.db = s1.doc_id
-      |  JOIN pair p2 ON p2.qid = c.qid AND p2.da = c.doc_id AND p2.db = s2.doc_id
-      |  WHERE c.doc_id <> s1.doc_id AND c.doc_id <> s2.doc_id),
-      |s3 AS (
-      |  SELECT qid, doc_id, mmr FROM (
-      |    SELECT qid, doc_id, mmr,
-      |      row_number() OVER (PARTITION BY qid ORDER BY mmr DESC, doc_id) AS rn
-      |    FROM m3) WHERE rn = 1)
+      |$mmrRoundsCtes
       |SELECT qid, CAST(1 AS INT) AS pick, doc_id,
       |  CAST(round(rel * 10000000) AS BIGINT) AS mmr_e7 FROM s1
       |UNION ALL SELECT qid, CAST(2 AS INT), doc_id,
@@ -2764,8 +2677,6 @@ object TextQueries {
       |UNION ALL SELECT qid, CAST(3 AS INT), doc_id,
       |  CAST(round(mmr * 10000000) AS BIGINT) FROM s3
       |ORDER BY qid, pick""".stripMargin) { (spark, dir) =>
-    import graft.functions.VectorFns
-    import org.apache.spark.sql.expressions.Window
     // the candidate set is O(queries × 5) rows (~n/97·5 — bounded
     // small at any SF) but its lineage is the whole BM25 pipeline,
     // and the three unrolled rounds reference it six times; cut the
@@ -2775,40 +2686,7 @@ object TextQueries {
         querySelector = col("doc_id") % 97 === 0, k = 5)
       .select(col("qid"), col("doc_id"), col("score").as("rel"))
       .localCheckpoint()
-    val emb = Tables.embeddings(spark, dir)
-      .select(col("vec_id").as("doc_id"), col("embedding"))
-    val candE = cand.join(emb, "doc_id")
-    // (r15 audit: checkpointing this bounded pairwise-sim table was
-    // measured SLOWER — the eager extra job costs more than the three
-    // bounded re-references it saves; left lazy deliberately)
-    val pair = candE.as("a").join(candE.as("b"),
-        col("a.qid") === col("b.qid") && col("a.doc_id") =!= col("b.doc_id"))
-      .select(col("a.qid").as("qid"), col("a.doc_id").as("da"), col("b.doc_id").as("db"),
-        round(VectorFns.cosine(col("a.embedding"), col("b.embedding")), 6).as("sim"))
-    def top1(df: org.apache.spark.sql.DataFrame,
-        order: org.apache.spark.sql.Column): org.apache.spark.sql.DataFrame =
-      df.withColumn("__rn", row_number().over(
-          Window.partitionBy(col("qid")).orderBy(order.desc, col("doc_id"))))
-        .filter(col("__rn") === 1).drop("__rn")
-    val s1 = top1(cand, col("rel"))
-    val m2 = cand.as("c")
-      .join(s1.as("s1"), col("c.qid") === col("s1.qid") && col("c.doc_id") =!= col("s1.doc_id"))
-      .join(pair.as("p"), col("p.qid") === col("c.qid") &&
-        col("p.da") === col("c.doc_id") && col("p.db") === col("s1.doc_id"))
-      .select(col("c.qid").as("qid"), col("c.doc_id").as("doc_id"), col("c.rel").as("rel"),
-        (lit(0.5) * col("c.rel") - lit(0.5) * col("p.sim")).as("mmr"))
-    val s2 = top1(m2.select(col("qid"), col("doc_id"), col("mmr")), col("mmr"))
-    val m3 = cand.as("c")
-      .join(s1.as("s1"), col("c.qid") === col("s1.qid"))
-      .join(s2.as("s2"), col("c.qid") === col("s2.qid"))
-      .join(pair.as("p1"), col("p1.qid") === col("c.qid") &&
-        col("p1.da") === col("c.doc_id") && col("p1.db") === col("s1.doc_id"))
-      .join(pair.as("p2"), col("p2.qid") === col("c.qid") &&
-        col("p2.da") === col("c.doc_id") && col("p2.db") === col("s2.doc_id"))
-      .filter(col("c.doc_id") =!= col("s1.doc_id") && col("c.doc_id") =!= col("s2.doc_id"))
-      .select(col("c.qid").as("qid"), col("c.doc_id").as("doc_id"),
-        (lit(0.5) * col("c.rel") - lit(0.5) * greatest(col("p1.sim"), col("p2.sim"))).as("mmr"))
-    val s3 = top1(m3, col("mmr"))
+    val (s1, s2, s3) = mmrPicks(cand, Tables.embeddings(spark, dir))
     // output on the EXACT integer grid: with λ = 0.5 the blend
     // 0.5·rel − 0.5·sim has ≤7 exact decimal digits (rel 4dp / 2,
     // sim 6dp / 2), so a 4dp decimal round lands ON half-boundaries
@@ -3028,6 +2906,40 @@ object TextQueries {
     }
   }
 
+  /** Every source's trigram shingles `(source, tok)`, one row per
+    * occurrence — the set q148/q176 sketch. */
+  private def sourceShingles(
+      docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    docs
+      .select(col("source"), TextFns.tokens(col("text")).as("t"))
+      .select(col("source"), col("t"),
+        explode(TextFns.shinglePositions(col("t"), 3)).as("i"))
+      .select(col("source"), TextFns.shingleAt(col("t"), col("i"), 3).as("tok"))
+
+  /** DuckDB twin of [[sourceShingles]] plus the portable HLL register
+    * build (`PortableHll.registers`), shared by q148/q176: `toks`, the
+    * md5 hashes `hx`, the observed registers `reg0(source, b, m)` and
+    * the 64-bucket `spine` per source. */
+  private def hllRegisterCtes: String =
+    """toks AS (
+      |  SELECT d.source, u.tok
+      |  FROM (SELECT source, string_split_regex(lower(text), '\s+') AS t
+      |        FROM documents) d,
+      |    unnest(list_transform(range(1, len(d.t) - 1),
+      |      i -> d.t[i] || ' ' || d.t[i+1] || ' ' || d.t[i+2])) AS u(tok)
+      |  WHERE len(d.t) >= 3),
+      |hx AS (
+      |  SELECT source, ('0x' || substr(md5(tok), 1, 15))::BIGINT AS h FROM toks),
+      |reg0 AS (
+      |  SELECT source, h % 64 AS b,
+      |    max(CASE WHEN h // 64 = 0 THEN 55
+      |             ELSE 55 - length(bin(h // 64)) END) AS m
+      |  FROM hx GROUP BY 1, 2),
+      |spine AS (
+      |  SELECT s.source, g.b
+      |  FROM (SELECT DISTINCT source FROM documents) s,
+      |    unnest(range(0, 64)) AS g(b))""".stripMargin
+
   /** Portable HyperLogLog (Flajolet et al. 2007) — approximate distinct
     * with the ENTIRE sketch state hash-gated, where q38/q105's native
     * sketches (engine-tuned hash families) can only be rows-only: the
@@ -3049,24 +2961,7 @@ object TextQueries {
     * estimate itself rather than the linear-counting floor. */
   val q148PortableHll = Q(
     "q148_portable_hll",
-    """WITH toks AS (
-      |  SELECT d.source, u.tok
-      |  FROM (SELECT source, string_split_regex(lower(text), '\s+') AS t
-      |        FROM documents) d,
-      |    unnest(list_transform(range(1, len(d.t) - 1),
-      |      i -> d.t[i] || ' ' || d.t[i+1] || ' ' || d.t[i+2])) AS u(tok)
-      |  WHERE len(d.t) >= 3),
-      |hx AS (
-      |  SELECT source, ('0x' || substr(md5(tok), 1, 15))::BIGINT AS h FROM toks),
-      |reg0 AS (
-      |  SELECT source, h % 64 AS b,
-      |    max(CASE WHEN h // 64 = 0 THEN 55
-      |             ELSE 55 - length(bin(h // 64)) END) AS m
-      |  FROM hx GROUP BY 1, 2),
-      |spine AS (
-      |  SELECT s.source, g.b
-      |  FROM (SELECT DISTINCT source FROM documents) s,
-      |    unnest(range(0, 64)) AS g(b)),
+    s"""WITH $hllRegisterCtes,
       |reg AS (
       |  SELECT spine.source, coalesce(reg0.m, 0) AS m
       |  FROM spine LEFT JOIN reg0 ON spine.source = reg0.source AND spine.b = reg0.b),
@@ -3091,11 +2986,7 @@ object TextQueries {
       |ORDER BY est.source""".stripMargin) { (spark, dir) =>
     import graft.functions.PortableHll
     val docs = Tables.documents(spark, dir)
-    val toks = docs
-      .select(col("source"), TextFns.tokens(col("text")).as("t"))
-      .select(col("source"), col("t"),
-        explode(TextFns.shinglePositions(col("t"), 3)).as("i"))
-      .select(col("source"), TextFns.shingleAt(col("t"), col("i"), 3).as("tok"))
+    val toks = sourceShingles(docs)
     val st = PortableHll.state(
       PortableHll.registers(toks, "source", col("tok")),
       docs.select(col("source")).distinct(), "source")
@@ -3540,26 +3431,15 @@ object TextQueries {
     * production-corpus fixture should copy.) */
   val q166ContainmentPairs = Q(
     "q166_containment_pairs",
-    """WITH corpus AS (
+    s"""WITH corpus AS (
       |  SELECT doc_id, text FROM documents WHERE doc_id % 2 = 0
       |  UNION ALL
       |  SELECT doc_id + 1000000 AS doc_id,
-      |    array_to_string(string_split_regex(lower(text), '\s+')[1:40], ' ') AS text
+      |    array_to_string(string_split_regex(lower(text), '\\s+')[1:40], ' ') AS text
       |  FROM documents WHERE doc_id % 20 = 0),
       |docs AS (
-      |  SELECT doc_id, string_split_regex(lower(text), '\s+') AS t FROM corpus),
-      |sh AS (
-      |  SELECT DISTINCT doc_id, s FROM docs,
-      |    unnest(list_transform(range(1, len(t) - 1),
-      |      i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS u(s)
-      |  WHERE len(t) >= 3),
-      |sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-      |rare AS (SELECT s FROM sh GROUP BY s HAVING count(*) BETWEEN 2 AND 100),
-      |shr AS (SELECT sh.doc_id, sh.s FROM sh JOIN rare USING (s)),
-      |inter AS (
-      |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_inter
-      |  FROM shr a JOIN shr b ON a.s = b.s AND a.doc_id < b.doc_id
-      |  GROUP BY 1, 2)
+      |  SELECT doc_id, string_split_regex(lower(text), '\\s+') AS t FROM corpus),
+      |$rareShingleOverlapCtes
       |SELECT id_a, id_b, CAST(n_inter AS BIGINT) AS n_inter,
       |  round(CAST(n_inter AS DOUBLE) / sa.n_sh, 4) AS c_a,
       |  round(CAST(n_inter AS DOUBLE) / sb.n_sh, 4) AS c_b
@@ -3648,29 +3528,7 @@ object TextQueries {
     * the fusion itself costs nothing at corpus scale. */
   val q169RrfFusion = Q(
     "q169_rrf_fusion",
-    """WITH docs AS (
-      |  SELECT doc_id, string_split_regex(lower(text), '\s+') AS tk
-      |  FROM documents),
-      |toks AS (
-      |  SELECT doc_id, s AS t FROM docs,
-      |    unnest(list_transform(range(1, len(tk) - 1),
-      |      i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) AS u(s)
-      |  WHERE len(tk) >= 3),
-      |tf AS (SELECT doc_id, t, count(*) AS cnt FROM toks GROUP BY 1, 2),
-      |dl AS (SELECT doc_id, CAST(sum(cnt) AS DOUBLE) AS dl FROM tf GROUP BY doc_id),
-      |stats AS (
-      |  SELECT CAST(count(*) AS DOUBLE) AS n_docs, avg(dl) AS avgdl FROM dl),
-      |vocab AS (
-      |  SELECT t, CAST(count(*) AS DOUBLE) AS df FROM tf GROUP BY t
-      |  HAVING count(*) BETWEEN 2 AND
-      |    (SELECT greatest(8, CAST(floor(10 * log2(greatest(2, count(*)))) AS INT))
-      |     FROM documents)),
-      |w AS (
-      |  SELECT tf.doc_id, tf.t,
-      |    ln(1 + (s.n_docs - v.df + 0.5) / (v.df + 0.5)) *
-      |      (tf.cnt * 2.2) / (tf.cnt + 1.2 * (0.25 + 0.75 * d.dl / s.avgdl)) AS wgt
-      |  FROM tf JOIN vocab v ON tf.t = v.t
-      |  JOIN dl d ON d.doc_id = tf.doc_id CROSS JOIN stats s),
+    s"""WITH ${bm25IndexCtes("doc_id")},
       |q AS (SELECT DISTINCT doc_id AS qid, t FROM tf
       |      WHERE doc_id IN (0, 97, 194, 291, 388)),
       |sc AS (
@@ -3805,24 +3663,7 @@ object TextQueries {
     * is ever pairwise. */
   val q176HllOverlap = Q(
     "q176_hll_overlap",
-    """WITH toks AS (
-      |  SELECT d.source, u.tok
-      |  FROM (SELECT source, string_split_regex(lower(text), '\s+') AS t
-      |        FROM documents) d,
-      |    unnest(list_transform(range(1, len(d.t) - 1),
-      |      i -> d.t[i] || ' ' || d.t[i+1] || ' ' || d.t[i+2])) AS u(tok)
-      |  WHERE len(d.t) >= 3),
-      |hx AS (
-      |  SELECT source, ('0x' || substr(md5(tok), 1, 15))::BIGINT AS h FROM toks),
-      |reg0 AS (
-      |  SELECT source, h % 64 AS b,
-      |    max(CASE WHEN h // 64 = 0 THEN 55
-      |             ELSE 55 - length(bin(h // 64)) END) AS m
-      |  FROM hx GROUP BY 1, 2),
-      |spine AS (
-      |  SELECT s.source, g.b
-      |  FROM (SELECT DISTINCT source FROM documents) s,
-      |    unnest(range(0, 64)) AS g(b)),
+    s"""WITH $hllRegisterCtes,
       |reg AS (
       |  SELECT spine.source, spine.b, coalesce(reg0.m, 0) AS m
       |  FROM spine LEFT JOIN reg0 ON spine.source = reg0.source AND spine.b = reg0.b),
@@ -3873,11 +3714,7 @@ object TextQueries {
       |FROM est ORDER BY sa, sb""".stripMargin) { (spark, dir) =>
     import graft.functions.PortableHll
     val docs = Tables.documents(spark, dir)
-    val toks = docs
-      .select(col("source"), TextFns.tokens(col("text")).as("t"))
-      .select(col("source"), col("t"),
-        explode(TextFns.shinglePositions(col("t"), 3)).as("i"))
-      .select(col("source"), TextFns.shingleAt(col("t"), col("i"), 3).as("tok"))
+    val toks = sourceShingles(docs)
     val sources = docs.select(col("source")).distinct()
     val spine = sources
       .select(col("source"), explode(sequence(lit(0L), lit(63L))).as("b"))

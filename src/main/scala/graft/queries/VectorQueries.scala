@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.VectorFns
 import graft.sources.Tables
@@ -632,14 +632,7 @@ object VectorQueries {
     * against the same truth. */
   val q39CentroidAggregator = Q(
     "q39_centroid_aggregator",
-    """WITH comps AS (
-      |  SELECT label, i, avg(CAST(embedding[i] AS DOUBLE)) AS m
-      |  FROM embeddings, range(1, 65) t(i)
-      |  GROUP BY label, i)
-      |SELECT label, round(sqrt(sum(m * m)), 6) AS centroid_norm
-      |FROM comps
-      |GROUP BY label
-      |ORDER BY label""".stripMargin) { (spark, dir) =>
+    q32CentroidNorms.oracle.get) { (spark, dir) =>
     import graft.functions.VectorAgg
     Tables.embeddings(spark, dir)
       .groupBy(col("label"))
@@ -650,43 +643,15 @@ object VectorQueries {
       .orderBy(col("label"))
   }
 
-  /** IVF-style ANN (the coarse-quantizer scale path, vs q33's LSH):
-    * 8 deterministic cells seeded by vec_id % 8, cell centroids as
-    * element-wise means, every vector re-assigned to its nearest
-    * centroid by cosine, then the probe searches ONLY its own cell —
-    * at 100 TB the assignment is one broadcast join against 8 rows and
-    * the search scans 1/8th of the corpus (nprobe=1). Deterministic
-    * end-to-end → full DuckDB oracle despite being approximate. */
-  val q45IvfAnn = Q(
-    "q45_ivf_ann",
-    """WITH cent0 AS (
-      |  SELECT vec_id % 8 AS cell, i, avg(CAST(embedding[i] AS DOUBLE)) AS m
-      |  FROM embeddings, range(1, 65) t(i)
-      |  GROUP BY 1, 2),
-      |cent AS (SELECT cell, list(m ORDER BY i) AS c FROM cent0 GROUP BY cell),
-      |sims AS (
-      |  SELECT e.vec_id, e.label, CAST(e.embedding AS DOUBLE[]) AS v, cent.cell,
-      |    list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), cent.c) AS sim
-      |  FROM embeddings e CROSS JOIN cent),
-      |assign AS (
-      |  SELECT vec_id, label, v, cell FROM (
-      |    SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY sim DESC, cell) AS rn
-      |    FROM sims) t
-      |  WHERE rn = 1),
-      |probe AS (SELECT cell, v FROM assign WHERE vec_id = 0)
-      |SELECT a.vec_id, a.label, round(list_cosine_similarity(a.v, p.v), 6) + 0.0 AS cos_sim
-      |FROM assign a JOIN probe p ON a.cell = p.cell
-      |WHERE a.vec_id <> 0
-      |ORDER BY cos_sim DESC, a.vec_id
-      |LIMIT 10""".stripMargin) { (spark, dir) =>
-    val emb = Tables.embeddings(spark, dir)
-    // codebook: element-wise mean per cell, assembled in dimension order
-    // (mirrors the oracle's avg-then-list so fp values match), then
-    // COLLECTED — an IVF codebook is tiny by definition (8×64 doubles
-    // here; a few MB for real nlist), so it ships to every task as a
-    // literal and vector→cell assignment is a fully NARROW argmax: no
-    // cross join, no window shuffle, one pass over the corpus.
-    val codebook = emb
+  /** The IVF coarse quantizer of q45/q122/q214: 8 cells seeded by
+    * vec_id % 8, each centroid the element-wise mean of its cell,
+    * assembled in dimension order (mirrors the oracle's avg-then-list
+    * so fp values match), then COLLECTED — an IVF codebook is tiny by
+    * definition (8×64 doubles here; a few MB for real nlist) — and
+    * returned as one nested array literal (constant ArrayData), not
+    * 8×64 unrolled lit() nodes (r16 task-binary hoist, same values). */
+  private def ivfCodebook(emb: DataFrame): Column = {
+    val cells = emb
       .select(pmod(col("vec_id"), lit(8)).as("cell"),
         posexplode(col("embedding").cast("array<double>")).as(Seq("i", "x")))
       .groupBy(col("cell"), col("i")).agg(avg(col("x")).as("m"))
@@ -696,15 +661,58 @@ object VectorQueries {
       .orderBy(col("cell"))
       .collect()
       .map(_.getSeq[Double](1))
-    // one nested array literal (constant ArrayData), not 8×64 unrolled
-    // lit() nodes — r16 task-binary hoist, same values
-    val cb = typedLit(codebook.map(_.toSeq).toSeq)
+    typedLit(cells.map(_.toSeq).toSeq)
+  }
+
+  /** Every embedding's nearest [[ivfCodebook]] cell by cosine, a narrow
+    * in-row argmax: (vec_id, label, v, cell). The first index holding
+    * the max similarity = the lowest cell on ties, identical to the
+    * oracle's ORDER BY sim DESC, cell. [[ivfAssignCtes]] is the DuckDB
+    * twin of both. */
+  private def ivfAssign(emb: DataFrame, cb: Column): DataFrame = {
     val v = col("embedding").cast("array<double>")
-    // first index holding the max similarity = lowest cell on ties —
-    // identical to the oracle's ORDER BY sim DESC, cell
     val simArr = transform(cb, c => VectorFns.cosine(v, c))
-    val assign = emb.select(col("vec_id"), col("label"), v.as("v"),
+    emb.select(col("vec_id"), col("label"), v.as("v"),
       (array_position(simArr, array_max(simArr)) - 1).cast("int").as("cell"))
+  }
+
+  private def ivfAssignCtes: String =
+    s"""cent0 AS (
+       |  SELECT vec_id % 8 AS cell, i, avg(CAST(embedding[i] AS DOUBLE)) AS m
+       |  FROM embeddings, range(1, ${Dim + 1}) t(i)
+       |  GROUP BY 1, 2),
+       |cent AS (SELECT cell, list(m ORDER BY i) AS c FROM cent0 GROUP BY cell),
+       |sims AS (
+       |  SELECT e.vec_id, e.label, CAST(e.embedding AS DOUBLE[]) AS v, cent.cell,
+       |    list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), cent.c) AS sim
+       |  FROM embeddings e CROSS JOIN cent),
+       |assign AS (
+       |  SELECT vec_id, label, v, cell FROM (
+       |    SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY sim DESC, cell) AS rn
+       |    FROM sims) t
+       |  WHERE rn = 1)""".stripMargin
+
+  /** IVF-style ANN (the coarse-quantizer scale path, vs q33's LSH):
+    * 8 deterministic cells seeded by vec_id % 8, cell centroids as
+    * element-wise means, every vector re-assigned to its nearest
+    * centroid by cosine, then the probe searches ONLY its own cell —
+    * at 100 TB the assignment is one broadcast join against 8 rows and
+    * the search scans 1/8th of the corpus (nprobe=1). Deterministic
+    * end-to-end → full DuckDB oracle despite being approximate. */
+  val q45IvfAnn = Q(
+    "q45_ivf_ann",
+    s"""WITH $ivfAssignCtes,
+      |probe AS (SELECT cell, v FROM assign WHERE vec_id = 0)
+      |SELECT a.vec_id, a.label, round(list_cosine_similarity(a.v, p.v), 6) + 0.0 AS cos_sim
+      |FROM assign a JOIN probe p ON a.cell = p.cell
+      |WHERE a.vec_id <> 0
+      |ORDER BY cos_sim DESC, a.vec_id
+      |LIMIT 10""".stripMargin) { (spark, dir) =>
+    val emb = Tables.embeddings(spark, dir)
+    // the codebook ships to every task as a literal, so vector→cell
+    // assignment is a fully NARROW argmax: no cross join, no window
+    // shuffle, one pass over the corpus
+    val assign = ivfAssign(emb, ivfCodebook(emb))
     val probe = assign.filter(col("vec_id") === 0)
       .select(col("cell").as("p_cell"), col("v").as("p_v"))
     assign.join(broadcast(probe), col("cell") === col("p_cell"))
@@ -819,6 +827,48 @@ object VectorQueries {
   private val PqSub = 8
   private val PqC = 16
 
+  /** The PQ codebook of q93/q122/q214 over `v(vec_id, v)`: per code
+    * j = vec_id % [[PqC]] and dimension i, the 6-dp-rounded mean,
+    * COLLECTED as (j, i) → c (1024 doubles — a real PQ codebook is
+    * M·C·sub ≈ KBs even at billion scale). [[pqCodebookCte]] is the
+    * DuckDB twin (`cbc`, keyed by subspace m). */
+  private def pqCodebook(v: DataFrame): Map[(Int, Int), Double] =
+    v.select(pmod(col("vec_id"), lit(PqC)).cast("int").as("j"),
+        posexplode(col("v")).as(Seq("i", "x")))
+      .groupBy(col("j"), col("i")).agg(round(avg(col("x")), 6).as("c"))
+      .collect().map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(2)).toMap
+
+  private def pqCodebookCte: String =
+    s"""cbc AS (
+       |  SELECT CAST((i - 1) // $PqSub AS INT) AS m, CAST(vec_id % $PqC AS INT) AS j, i,
+       |    round(avg(CAST(embedding[i] AS DOUBLE)), 6) AS c
+       |  FROM embeddings, range(1, ${Dim + 1}) t(i)
+       |  GROUP BY 1, 2, i)""".stripMargin
+
+  /** The asymmetric distance of a row's PQ `codes` to the probe vector
+    * `pVec` (q93/q122): the probe's [[PqM]]×[[PqC]] distance table is
+    * computed DRIVER-side (the ADC lookup-table trick: a real index
+    * computes it once per probe, never per candidate) with a
+    * left-to-right fold, and each row sums its PqM table lookups. */
+  private def pqAdc(pVec: Seq[Double], cbRows: Map[(Int, Int), Double]): Column = {
+    val pd: Array[Array[Double]] = Array.tabulate(PqM) { m =>
+      Array.tabulate(PqC) { j =>
+        var s = 0.0
+        var kk = 0
+        while (kk < PqSub) {
+          val diff = pVec(m * PqSub + kk) - cbRows((j, m * PqSub + kk))
+          s += diff * diff
+          kk += 1
+        }
+        s
+      }
+    }
+    (0 until PqM).map { m =>
+      val pdArr = array((0 until PqC).map(j => lit(pd(m)(j))): _*)
+      element_at(pdArr, element_at(col("codes"), m + 1) + 1)
+    }.reduce(_ + _)
+  }
+
   /** PQ + asymmetric-distance (ADC) top-k (Jégou et al. 2011): encode
     * every vector as 8 argmin sub-codes against a 6-dp-rounded codebook,
     * then rank candidates by the sum of the PROBE's exact per-subspace
@@ -857,40 +907,15 @@ object VectorQueries {
       |LIMIT 10""".stripMargin) { (spark, dir) =>
     val base = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("label"), col("embedding").cast("array<double>").as("v"))
-    // codebook: 16×64 means, COLLECTED (1024 doubles — a real PQ codebook
-    // is M·C·sub ≈ KBs even at billion scale) and re-shipped as literals
-    val cbRows = base
-      .select(pmod(col("vec_id"), lit(PqC)).cast("int").as("j"),
-        posexplode(col("v")).as(Seq("i", "x")))
-      .groupBy(col("j"), col("i")).agg(round(avg(col("x")), 6).as("c"))
-      .collect().map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(2)).toMap
+    val cbRows = pqCodebook(base)
     // encode: native one-loop argmin per subspace (plans/PqEncodeExpr) —
     // bit-identical codes to the unrolled 1024-node expression tree it
     // replaced (same ascending-dimension fold, ties → lowest j;
     // PqEncodeExprSpec), with a KB-sized codebook reference instead of
     // multi-second whole-stage codegen compiles
-    // the probe's distance table is 8×16 doubles — computed DRIVER-side
-    // from the collected probe row (the ADC lookup-table trick: at query
-    // time a real index computes this once per probe, never per
-    // candidate) with the same left-to-right fold
     val pVec = base.filter(col("vec_id") === 0).select(col("v"))
       .head().getSeq[Double](0)
-    val pd: Array[Array[Double]] = Array.tabulate(PqM) { m =>
-      Array.tabulate(PqC) { j =>
-        var s = 0.0
-        var kk = 0
-        while (kk < PqSub) {
-          val diff = pVec(m * PqSub + kk) - cbRows((j, m * PqSub + kk))
-          s += diff * diff
-          kk += 1
-        }
-        s
-      }
-    }
-    val adc = (0 until PqM).map { m =>
-      val pdArr = array((0 until PqC).map(j => lit(pd(m)(j))): _*)
-      element_at(pdArr, element_at(col("codes"), m + 1) + 1)
-    }.reduce(_ + _)
+    val adc = pqAdc(pVec, cbRows)
     base.filter(col("vec_id") =!= 0)
       .withColumn("codes",
         graft.plans.PqEncodeExpr.pqEncode(col("v"), cbRows, PqM, PqSub, PqC))
@@ -913,29 +938,12 @@ object VectorQueries {
     * Deterministic end-to-end → full DuckDB oracle. */
   val q122IvfPqAnn = Q(
     "q122_ivfpq_ann",
-    s"""WITH cent0 AS (
-       |  SELECT vec_id % 8 AS cell, i, avg(CAST(embedding[i] AS DOUBLE)) AS m
-       |  FROM embeddings, range(1, ${Dim + 1}) t(i)
-       |  GROUP BY 1, 2),
-       |cent AS (SELECT cell, list(m ORDER BY i) AS c FROM cent0 GROUP BY cell),
-       |sims AS (
-       |  SELECT e.vec_id, e.label, CAST(e.embedding AS DOUBLE[]) AS v, cent.cell,
-       |    list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), cent.c) AS sim
-       |  FROM embeddings e CROSS JOIN cent),
-       |assign AS (
-       |  SELECT vec_id, label, v, cell FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY sim DESC, cell) AS rn
-       |    FROM sims) t
-       |  WHERE rn = 1),
+    s"""WITH $ivfAssignCtes,
        |probe AS (SELECT cell, v FROM assign WHERE vec_id = 0),
        |cands AS (
        |  SELECT a.vec_id, a.label, a.v FROM assign a JOIN probe p ON a.cell = p.cell
        |  WHERE a.vec_id <> 0),
-       |cbc AS (
-       |  SELECT CAST((i - 1) // $PqSub AS INT) AS m, CAST(vec_id % $PqC AS INT) AS j, i,
-       |    round(avg(CAST(embedding[i] AS DOUBLE)), 6) AS c
-       |  FROM embeddings, range(1, ${Dim + 1}) t(i)
-       |  GROUP BY 1, 2, i),
+       |$pqCodebookCte,
        |dists AS (
        |  SELECT b.vec_id, cb.m, cb.j, sum((b.v[cb.i] - cb.c) * (b.v[cb.i] - cb.c)) AS d
        |  FROM cands b JOIN cbc cb ON true
@@ -958,60 +966,24 @@ object VectorQueries {
        |ORDER BY round(a.ad, 6), a.vec_id
        |LIMIT 10""".stripMargin) { (spark, dir) =>
     val emb = Tables.embeddings(spark, dir)
-    // --- IVF leg: q45's codebook + narrow argmax assignment, verbatim ---
-    val ivfCells = emb
-      .select(pmod(col("vec_id"), lit(8)).as("cell"),
-        posexplode(col("embedding").cast("array<double>")).as(Seq("i", "x")))
-      .groupBy(col("cell"), col("i")).agg(avg(col("x")).as("m"))
-      .groupBy(col("cell"))
-      .agg(transform(array_sort(collect_list(struct(col("i"), col("m")))),
-        s => s.getField("m")).as("c"))
-      .orderBy(col("cell"))
-      .collect()
-      .map(_.getSeq[Double](1))
-    // one nested array literal, not 8×64 unrolled lit() nodes — r16
-    // task-binary hoist, same values
-    val cb = typedLit(ivfCells.map(_.toSeq).toSeq)
+    // --- IVF leg: q45's codebook + narrow argmax assignment ---
+    val cb = ivfCodebook(emb)
+    val assign = ivfAssign(Tables.embeddings(spark, dir), cb)
     // probe side built from its OWN scan: sharing assign's lineage trips
     // Catalyst's self-join dedup on the transform() lambda (stale
     // attribute after the rewrite — runtime ATTRIBUTE_NOT_FOUND)
-    def mkAssign(): org.apache.spark.sql.DataFrame = {
-      val v = col("embedding").cast("array<double>")
-      val simArr = transform(cb, c => VectorFns.cosine(v, c))
-      Tables.embeddings(spark, dir).select(col("vec_id"), col("label"), v.as("v"),
-        (array_position(simArr, array_max(simArr)) - 1).cast("int").as("cell"))
-    }
-    val assign = mkAssign()
-    val probe = mkAssign().filter(col("vec_id") === 0)
+    val probe = ivfAssign(Tables.embeddings(spark, dir), cb)
+      .filter(col("vec_id") === 0)
       .select(col("cell").as("p_cell"))
     val cands = assign.join(broadcast(probe), col("cell") === col("p_cell"))
       .filter(col("vec_id") =!= 0)
     // --- PQ leg: q93's codebook, encode, and driver-side ADC table ---
-    val cbRows = emb
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      .select(pmod(col("vec_id"), lit(PqC)).cast("int").as("j"),
-        posexplode(col("v")).as(Seq("i", "x")))
-      .groupBy(col("j"), col("i")).agg(round(avg(col("x")), 6).as("c"))
-      .collect().map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(2)).toMap
+    val cbRows = pqCodebook(
+      emb.select(col("vec_id"), col("embedding").cast("array<double>").as("v")))
     val pVec = emb.filter(col("vec_id") === 0)
       .select(col("embedding").cast("array<double>")).head().getSeq[Double](0)
-    val pd: Array[Array[Double]] = Array.tabulate(PqM) { m =>
-      Array.tabulate(PqC) { j =>
-        var s = 0.0
-        var kk = 0
-        while (kk < PqSub) {
-          val diff = pVec(m * PqSub + kk) - cbRows((j, m * PqSub + kk))
-          s += diff * diff
-          kk += 1
-        }
-        s
-      }
-    }
     // native PQ encode (plans/PqEncodeExpr) — see q93 for the rationale
-    val adc = (0 until PqM).map { m =>
-      val pdArr = array((0 until PqC).map(j => lit(pd(m)(j))): _*)
-      element_at(pdArr, element_at(col("codes"), m + 1) + 1)
-    }.reduce(_ + _)
+    val adc = pqAdc(pVec, cbRows)
     cands
       .withColumn("codes",
         graft.plans.PqEncodeExpr.pqEncode(col("v"), cbRows, PqM, PqSub, PqC))
@@ -1104,6 +1076,45 @@ object VectorQueries {
       .limit(20)
   }
 
+  /** q139's SQ8 encode of every embedding: per-dimension [min, max]
+    * from one exploded agg (64-key partial agg) collapse to a 1-row
+    * broadcast map pair; each vector quantizes IN-ROW to 0..255 integer
+    * codes (floor arithmetic — engine-exact) over the non-constant
+    * dimensions, in dimension order: (vec_id, `codes`). Shared by
+    * q139/q214; [[sq8CodesCtes]] is the DuckDB twin. */
+  private def sq8Codes(emb: DataFrame, codes: String): DataFrame = {
+    val v = emb.select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
+    val bounds = v
+      .select(posexplode(col("e")).as(Seq("i0", "x")))
+      .select((col("i0") + 1).as("i"), col("x"))
+      .groupBy(col("i"))
+      .agg(min(col("x")).as("lo"), max(col("x")).as("hi"))
+      .filter(col("hi") > col("lo"))
+      .agg(map_from_arrays(collect_list(col("i")), collect_list(col("lo"))).as("lom"),
+        map_from_arrays(collect_list(col("i")), collect_list(col("hi"))).as("him"))
+    val dims = filter(sequence(lit(1), size(col("e"))),
+      i => element_at(col("lom"), i).isNotNull)
+    val enc = transform(col("dims"), i =>
+      floor((element_at(col("e"), i) - element_at(col("lom"), i)) * 255.0 /
+        (element_at(col("him"), i) - element_at(col("lom"), i))).cast("long"))
+    v.join(broadcast(bounds)) // 1-row bounded
+      .withColumn("dims", dims)
+      .select(col("vec_id"), enc.as(codes))
+  }
+
+  /** [[sq8Codes]]'s twin over a `vecs(vec_id, e)` CTE: the admitted
+    * dimension bounds `d` and one `codes(vec_id, i, c)` row per code. */
+  private def sq8CodesCtes(vecs: String, codes: String): String =
+    s"""d AS (
+       |  SELECT i, min(e[i]) AS lo, max(e[i]) AS hi
+       |  FROM $vecs, unnest(range(1, len(e) + 1)) AS u(i)
+       |  GROUP BY i
+       |  HAVING max(e[i]) > min(e[i])),
+       |$codes AS (
+       |  SELECT vec_id, i,
+       |    CAST(floor((e[i] - d.lo) * 255.0 / (d.hi - d.lo)) AS BIGINT) AS c
+       |  FROM $vecs, unnest(range(1, len(e) + 1)) AS u(i) JOIN d USING (i))""".stripMargin
+
   /** Scalar (int8) quantization ANN — the remaining member of the
     * vector-compression family (q93 PQ = 8 B/vector via codebooks;
     * this = 64 B/vector with NO codebook training): per-dimension
@@ -1122,17 +1133,9 @@ object VectorQueries {
     * 100 TB. */
   val q139Sq8Ann = Q(
     "q139_sq8_ann",
-    """WITH v AS (
+    s"""WITH v AS (
       |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-      |d AS (
-      |  SELECT i, min(e[i]) AS lo, max(e[i]) AS hi
-      |  FROM v, unnest(range(1, len(e) + 1)) AS u(i)
-      |  GROUP BY i
-      |  HAVING max(e[i]) > min(e[i])),
-      |codes AS (
-      |  SELECT vec_id, i,
-      |    CAST(floor((e[i] - d.lo) * 255.0 / (d.hi - d.lo)) AS BIGINT) AS c
-      |  FROM v, unnest(range(1, len(e) + 1)) AS u(i) JOIN d USING (i)),
+      |${sq8CodesCtes("v", "codes")},
       |probe AS (SELECT i, c FROM codes WHERE vec_id = 7),
       |sc AS (
       |  SELECT codes.vec_id, CAST(sum(codes.c * probe.c) AS BIGINT) AS score
@@ -1146,27 +1149,9 @@ object VectorQueries {
       |SELECT vec_id, score, CAST(rnk AS INT) AS rnk
       |FROM rk WHERE rnk <= 10
       |ORDER BY rnk""".stripMargin) { (spark, dir) =>
-    val v = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
-    // per-dim bounds: 64-key partial agg → 1-row broadcast maps
-    val bounds = v
-      .select(posexplode(col("e")).as(Seq("i0", "x")))
-      .select((col("i0") + 1).as("i"), col("x"))
-      .groupBy(col("i"))
-      .agg(min(col("x")).as("lo"), max(col("x")).as("hi"))
-      .filter(col("hi") > col("lo"))
-      .agg(map_from_arrays(collect_list(col("i")), collect_list(col("lo"))).as("lom"),
-        map_from_arrays(collect_list(col("i")), collect_list(col("hi"))).as("him"))
-    // in-row encode over the admitted dims, in dim order (the oracle's
-    // join-on-i replay is order-insensitive because the sum is integer)
-    val dims = filter(sequence(lit(1), size(col("e"))),
-      i => element_at(col("lom"), i).isNotNull)
-    val codes = transform(col("dims"), i =>
-      floor((element_at(col("e"), i) - element_at(col("lom"), i)) * 255.0 /
-        (element_at(col("him"), i) - element_at(col("lom"), i))).cast("long"))
-    val coded = v.join(broadcast(bounds)) // 1-row bounded
-      .withColumn("dims", dims)
-      .select(col("vec_id"), codes.as("c"))
+    // the oracle's join-on-i replay is order-insensitive because the
+    // score sum is integer
+    val coded = sq8Codes(Tables.embeddings(spark, dir), "c")
     val probe = coded.filter(col("vec_id") === 7)
       .select(col("c").as("pc"))
     coded.join(broadcast(probe)) // 1-row bounded (point lookup on unique key)
@@ -1581,20 +1566,7 @@ object VectorQueries {
     * cross-engine parity. */
   val q214AnnNdcg = Q(
     "q214_ann_ndcg",
-    s"""WITH cent0 AS (
-       |  SELECT vec_id % 8 AS cell, i, avg(CAST(embedding[i] AS DOUBLE)) AS m
-       |  FROM embeddings, range(1, ${Dim + 1}) t(i)
-       |  GROUP BY 1, 2),
-       |cent AS (SELECT cell, list(m ORDER BY i) AS c FROM cent0 GROUP BY cell),
-       |sims AS (
-       |  SELECT e.vec_id, e.label, CAST(e.embedding AS DOUBLE[]) AS v, cent.cell,
-       |    list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), cent.c) AS sim
-       |  FROM embeddings e CROSS JOIN cent),
-       |assign AS (
-       |  SELECT vec_id, label, v, cell FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY sim DESC, cell) AS rn
-       |    FROM sims) t
-       |  WHERE rn = 1),
+    s"""WITH $ivfAssignCtes,
        |probes AS (
        |  SELECT vec_id AS qid, label AS p_label, v AS pv, cell
        |  FROM assign WHERE vec_id % 7 = 0 AND vec_id < ${AnnEvalPanel * 7L}),
@@ -1605,11 +1577,7 @@ object VectorQueries {
        |  SELECT qid, vec_id, row_number() OVER (PARTITION BY qid
        |    ORDER BY round(list_cosine_similarity(v, pv), 6) + 0.0 DESC, vec_id) AS rnk
        |  FROM cands),
-       |cbc AS (
-       |  SELECT CAST((i - 1) // $PqSub AS INT) AS m, CAST(vec_id % $PqC AS INT) AS j, i,
-       |    round(avg(CAST(embedding[i] AS DOUBLE)), 6) AS c
-       |  FROM embeddings, range(1, ${Dim + 1}) t(i)
-       |  GROUP BY 1, 2, i),
+       |$pqCodebookCte,
        |vv AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
        |dists AS (
        |  SELECT b.vec_id, cb.m, cb.j, sum((b.e[cb.i] - cb.c) * (b.e[cb.i] - cb.c)) AS d
@@ -1634,15 +1602,7 @@ object VectorQueries {
        |  SELECT qid, vec_id, row_number() OVER (PARTITION BY qid
        |    ORDER BY round(ad, 6) ASC, vec_id) AS rnk
        |  FROM adc),
-       |d AS (
-       |  SELECT i, min(e[i]) AS lo, max(e[i]) AS hi
-       |  FROM vv, unnest(range(1, len(e) + 1)) AS u(i)
-       |  GROUP BY i
-       |  HAVING max(e[i]) > min(e[i])),
-       |codes8 AS (
-       |  SELECT vec_id, i,
-       |    CAST(floor((e[i] - d.lo) * 255.0 / (d.hi - d.lo)) AS BIGINT) AS c
-       |  FROM vv, unnest(range(1, len(e) + 1)) AS u(i) JOIN d USING (i)),
+       |${sq8CodesCtes("vv", "codes8")},
        |sq8sc AS (
        |  SELECT c.qid, c.vec_id, CAST(sum(a.c * p.c) AS BIGINT) AS score
        |  FROM cands c
@@ -1675,34 +1635,14 @@ object VectorQueries {
        |ORDER BY label, leg""".stripMargin) { (spark, dir) =>
     import org.apache.spark.sql.expressions.Window
     val emb = Tables.embeddings(spark, dir)
-    // IVF codebook + assignment: q122's shape verbatim (KB-scale
-    // collected codebook, narrow in-row argmax; probe side from its
-    // own scan — the q122 self-join-dedup note)
-    val ivfCells = emb
-      .select(pmod(col("vec_id"), lit(8)).as("cell"),
-        posexplode(col("embedding").cast("array<double>")).as(Seq("i", "x")))
-      .groupBy(col("cell"), col("i")).agg(avg(col("x")).as("m"))
-      .groupBy(col("cell"))
-      .agg(transform(array_sort(collect_list(struct(col("i"), col("m")))),
-        s => s.getField("m")).as("c"))
-      .orderBy(col("cell"))
-      .collect()
-      .map(_.getSeq[Double](1))
-    // one nested array literal, not 8×64 unrolled lit() nodes — r16
-    // task-binary hoist, same values
-    val cb = typedLit(ivfCells.map(_.toSeq).toSeq)
-    def mkAssign(): org.apache.spark.sql.DataFrame = {
-      val v = col("embedding").cast("array<double>")
-      val simArr = transform(cb, c => VectorFns.cosine(v, c))
-      Tables.embeddings(spark, dir).select(col("vec_id"), col("label"), v.as("v"),
-        (array_position(simArr, array_max(simArr)) - 1).cast("int").as("cell"))
-    }
+    // IVF codebook + assignment, as in q45/q122
+    val cb = ivfCodebook(emb)
     // the assignment scan feeds three legs plus the probe side — cut
     // the lineage once so the embeddings scan + 8-centroid argmax run
     // once, not per consumer (the q213 shared-stage pattern; the cut
     // also sidesteps q122's self-join-dedup hazard, since the
     // transform lambda never reaches a self-join rewrite)
-    val assign = mkAssign().localCheckpoint()
+    val assign = ivfAssign(Tables.embeddings(spark, dir), cb).localCheckpoint()
     val probes = assign.filter(pmod(col("vec_id"), lit(7)) === 0
         && col("vec_id") < AnnEvalPanel * 7L)
       .select(col("vec_id").as("qid"), col("label").as("p_label"),
@@ -1723,12 +1663,8 @@ object VectorQueries {
     // leg 2: q122's IVF-PQ ADC — probe-side 8×16 distance table built
     // ONCE per probe as one in-row array column, candidates score by
     // 8 array lookups (no per-pair join, no driver-side per-probe data)
-    val cbRows = emb
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      .select(pmod(col("vec_id"), lit(PqC)).cast("int").as("j"),
-        posexplode(col("v")).as(Seq("i", "x")))
-      .groupBy(col("j"), col("i")).agg(round(avg(col("x")), 6).as("c"))
-      .collect().map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(2)).toMap
+    val cbRows = pqCodebook(
+      emb.select(col("vec_id"), col("embedding").cast("array<double>").as("v")))
     // r16 task-binary hoist: the old form unrolled PqM×PqC×PqSub
     // (8×16×8) literal subtraction terms into one giant expression
     // tree — the 2.3 MiB task binaries the r15 verdict flagged. The
@@ -1758,23 +1694,7 @@ object VectorQueries {
         .select(col("qid"), col("vec_id"), round(adcExpr, 6).as("adc")),
       Seq(col("adc")))
     // leg 3: q139's SQ8 integer-dot ranking, cell-restricted
-    val v0 = emb.select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
-    val bounds = v0
-      .select(posexplode(col("e")).as(Seq("i0", "x")))
-      .select((col("i0") + 1).as("i"), col("x"))
-      .groupBy(col("i"))
-      .agg(min(col("x")).as("lo"), max(col("x")).as("hi"))
-      .filter(col("hi") > col("lo"))
-      .agg(map_from_arrays(collect_list(col("i")), collect_list(col("lo"))).as("lom"),
-        map_from_arrays(collect_list(col("i")), collect_list(col("hi"))).as("him"))
-    val dims = filter(sequence(lit(1), size(col("e"))),
-      i => element_at(col("lom"), i).isNotNull)
-    val codes8 = transform(col("dims"), i =>
-      floor((element_at(col("e"), i) - element_at(col("lom"), i)) * 255.0 /
-        (element_at(col("him"), i) - element_at(col("lom"), i))).cast("long"))
-    val coded = v0.join(broadcast(bounds)) // 1-row bounded
-      .withColumn("dims", dims)
-      .select(col("vec_id"), codes8.as("c8"))
+    val coded = sq8Codes(emb, "c8")
     val sq8Leg = rank10(
       coded.join(assign.select(col("vec_id"), col("cell")), "vec_id")
         .join(coded.select(col("vec_id").as("qid"), col("c8").as("pc"))
@@ -1926,6 +1846,44 @@ object VectorQueries {
       .orderBy(col("dim"))
   }
 
+  /** Every embedding's same-bucket neighbors under the count-adaptive
+    * masked LSH bucket (q220/q228): (vec_id, label, nb, cq) with the
+    * pair cosine quantized to the 1e-6 BIGINT grid, ranked per vec_id by
+    * (cq DESC, nb) as `rnk`. [[knnRankCtes]] is the DuckDB twin. */
+  private def knnRanked(spark: org.apache.spark.sql.SparkSession,
+      dir: String): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val emb = Tables.embeddings(spark, dir)
+      .crossJoin(broadcast(lshBitsDf(spark, dir, KnnMinBits, KnnMaxBits, KnnTarget)))
+      .withColumn("bucket",
+        VectorFns.lshBucketMasked(col("embedding"), Dim, col("bits"), KnnMaxBits))
+    val b = emb.select(col("bucket"), col("vec_id").as("nb"),
+      col("embedding").as("nemb"))
+    emb.join(b, Seq("bucket")).filter(col("vec_id") =!= col("nb"))
+      .select(col("vec_id"), col("label"), col("nb"),
+        round(VectorFns.cosine(col("embedding"), col("nemb")) * 1e6)
+          .cast("long").as("cq"))
+      .withColumn("rnk", row_number().over(
+        Window.partitionBy(col("vec_id")).orderBy(col("cq").desc, col("nb"))))
+  }
+
+  private def knnRankCtes: String =
+    s"""nc AS (SELECT count(*) AS n FROM embeddings),
+       |bc AS (SELECT ${duckBitsExpr(KnnMinBits, KnnMaxBits, KnnTarget)} AS bits FROM nc),
+       |buck AS (
+       |  SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS e,
+       |    ${duckBucketMaskedExpr("embedding", KnnMaxBits)} AS bucket
+       |  FROM embeddings, bc),
+       |p AS (
+       |  SELECT a.vec_id, a.label, b.vec_id AS nb,
+       |    CAST(round(list_cosine_similarity(a.e, b.e) * 1000000) AS BIGINT) AS cq
+       |  FROM buck a JOIN buck b USING (bucket)
+       |  WHERE a.vec_id <> b.vec_id),
+       |k AS (
+       |  SELECT vec_id, label, cq, row_number() OVER (PARTITION BY vec_id
+       |    ORDER BY cq DESC, nb) AS rnk
+       |  FROM p)""".stripMargin
+
   /** kNN-distance outlier screen over the embedding corpus — the
     * vector-space leg of the anomaly stack (q106 MADs scalars, this
     * flags vectors whose 10-NN neighborhood is remote: mislabeled
@@ -1953,21 +1911,7 @@ object VectorQueries {
     * final division consumes exact ints. */
   val q220KnnOutliers = Q(
     "q220_knn_outliers",
-    s"""WITH nc AS (SELECT count(*) AS n FROM embeddings),
-       |bc AS (SELECT ${duckBitsExpr(KnnMinBits, KnnMaxBits, KnnTarget)} AS bits FROM nc),
-       |buck AS (
-       |  SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS e,
-       |    ${duckBucketMaskedExpr("embedding", KnnMaxBits)} AS bucket
-       |  FROM embeddings, bc),
-       |p AS (
-       |  SELECT a.vec_id, a.label, b.vec_id AS nb,
-       |    CAST(round(list_cosine_similarity(a.e, b.e) * 1000000) AS BIGINT) AS cq
-       |  FROM buck a JOIN buck b USING (bucket)
-       |  WHERE a.vec_id <> b.vec_id),
-       |k AS (
-       |  SELECT vec_id, label, cq, row_number() OVER (PARTITION BY vec_id
-       |    ORDER BY cq DESC, nb) AS rnk
-       |  FROM p),
+    s"""WITH $knnRankCtes,
        |g AS (
        |  SELECT vec_id, label, CAST(count(*) AS BIGINT) AS n_neighbors,
        |    sum(cq) AS s
@@ -1977,20 +1921,7 @@ object VectorQueries {
        |FROM g
        |ORDER BY mean_knn_cos, vec_id
        |LIMIT 20""".stripMargin) { (spark, dir) =>
-    import org.apache.spark.sql.expressions.Window
-    val emb = Tables.embeddings(spark, dir)
-      .crossJoin(broadcast(lshBitsDf(spark, dir, KnnMinBits, KnnMaxBits, KnnTarget)))
-      .withColumn("bucket",
-        VectorFns.lshBucketMasked(col("embedding"), Dim, col("bits"), KnnMaxBits))
-    val b = emb.select(col("bucket"), col("vec_id").as("nb"),
-      col("embedding").as("nemb"))
-    val pairs = emb.join(b, Seq("bucket")).filter(col("vec_id") =!= col("nb"))
-      .select(col("vec_id"), col("label"), col("nb"),
-        round(VectorFns.cosine(col("embedding"), col("nemb")) * 1e6)
-          .cast("long").as("cq"))
-    pairs
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy(col("vec_id")).orderBy(col("cq").desc, col("nb"))))
+    knnRanked(spark, dir)
       .filter(col("rnk") <= 10)
       .groupBy(col("vec_id"), col("label"))
       .agg(count(lit(1)).as("n_neighbors"), sum(col("cq")).as("s"))
@@ -2167,21 +2098,7 @@ object VectorQueries {
     * (Σ ln μ = 0) raises loudly in BOTH dialects. */
   val q228IntrinsicDim = Q(
     "q228_intrinsic_dim",
-    s"""WITH nc AS (SELECT count(*) AS n FROM embeddings),
-       |bc AS (SELECT ${duckBitsExpr(KnnMinBits, KnnMaxBits, KnnTarget)} AS bits FROM nc),
-       |buck AS (
-       |  SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS e,
-       |    ${duckBucketMaskedExpr("embedding", KnnMaxBits)} AS bucket
-       |  FROM embeddings, bc),
-       |p AS (
-       |  SELECT a.vec_id, a.label, b.vec_id AS nb,
-       |    CAST(round(list_cosine_similarity(a.e, b.e) * 1000000) AS BIGINT) AS cq
-       |  FROM buck a JOIN buck b USING (bucket)
-       |  WHERE a.vec_id <> b.vec_id),
-       |k AS (
-       |  SELECT vec_id, label, cq, row_number() OVER (PARTITION BY vec_id
-       |    ORDER BY cq DESC, nb) AS rnk
-       |  FROM p),
+    s"""WITH $knnRankCtes,
        |tw AS (
        |  SELECT vec_id, label,
        |    max(CASE WHEN rnk = 1 THEN cq END) AS cq1,
@@ -2197,20 +2114,7 @@ object VectorQueries {
        |    THEN error('q228: degenerate neighbor distances - every 2nd neighbor ties the 1st on the 1e-6 grid; refine the grid or dedup first')
        |    ELSE round(CAST(count(*) AS DOUBLE) * 1e9 / sum(lq), 4) END AS intrinsic_dim
        |FROM lg GROUP BY label ORDER BY label""".stripMargin) { (spark, dir) =>
-    import org.apache.spark.sql.expressions.Window
-    val emb = Tables.embeddings(spark, dir)
-      .crossJoin(broadcast(lshBitsDf(spark, dir, KnnMinBits, KnnMaxBits, KnnTarget)))
-      .withColumn("bucket",
-        VectorFns.lshBucketMasked(col("embedding"), Dim, col("bits"), KnnMaxBits))
-    val b = emb.select(col("bucket"), col("vec_id").as("nb"),
-      col("embedding").as("nemb"))
-    val pairs = emb.join(b, Seq("bucket")).filter(col("vec_id") =!= col("nb"))
-      .select(col("vec_id"), col("label"), col("nb"),
-        round(VectorFns.cosine(col("embedding"), col("nemb")) * 1e6)
-          .cast("long").as("cq"))
-    val tw = pairs
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy(col("vec_id")).orderBy(col("cq").desc, col("nb"))))
+    val tw = knnRanked(spark, dir)
       .filter(col("rnk") <= 2)
       .groupBy(col("vec_id"), col("label"))
       .agg(max(when(col("rnk") === 1, col("cq"))).as("cq1"),

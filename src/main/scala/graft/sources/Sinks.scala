@@ -38,13 +38,6 @@ object Sinks {
       .option("columnNameOfCorruptRecord", "_corrupt_record")
       .json(path)
 
-  /** S4: bronze materialization — the batch analog of the HTTP page
-    * cache: persist raw pages once, re-derive everything downstream. */
-  def materializeBronze(df: DataFrame, path: String): DataFrame = {
-    df.write.mode("overwrite").parquet(path)
-    df.sparkSession.read.parquet(path)
-  }
-
   /** CSV sink/source pair — the flat-file interchange surface. Header
     * carried in-band; reads take an explicit schema (inference is a
     * full extra pass over 100 TB — never default to it). */

@@ -14,9 +14,10 @@ import graft.sources.Tables
   *          [--explain | --explain-exec | --scale k1,k2,...]
   *
   * Picks every query whose name contains one of the substrings. Timing
-  * (the default) interleaves reps across the picked queries, as Bench
-  * does, so a noisy window hits one rep of many queries instead of
-  * every rep of one. `--explain` prints each formatted plan without
+  * (the default) runs Bench's interleaved loop ([[Bench.interleaved]])
+  * over the picked queries, so a noisy window hits one rep of many
+  * queries instead of every rep of one, and a rep that throws prints
+  * FAIL instead of ending the probe. `--explain` prints each formatted plan without
   * running it; `--explain-exec` runs the query first (on its own
   * QueryExecution) and prints the final adaptive plan, where AQE stage
   * reuse shows.
@@ -25,7 +26,7 @@ import graft.sources.Tables
   * replica of sfDir for each k ([[relTables]], written once and reused;
   * every rep runs every k) and prints, per query and step, the growth
   * exponent ln(median_b / median_a) / ln(b / a): ~1.0 is linear, ~2.0
-  * quadratic.
+  * quadratic (FAIL when every rep at a or b failed).
   * The size-gated graph ops take their local leg at these sizes; to
   * probe the distributed leg start the JVM with
   * `-Dgraft.gate.override=0` ([[graft.operators.LocalGate]]'s gate
@@ -69,41 +70,31 @@ object Probe {
       spark.range(1000000).selectExpr("sum(id)").collect() // warm-up
       // every k inside every rep: a cold JVM or a noisy window costs one
       // rep of each (query, k), not every rep of the first k
-      val times = time(spark, for ((k, dir) <- dirs; (name, fn) <- picked)
-        yield (name, k) -> (() => fn(spark, dir)), reps)
+      // Bench's loop and between-query reset; a failed rep reads FAIL
+      val times = Bench.interleaved(for ((k, dir) <- dirs; (name, fn) <- picked)
+          yield (name, k) -> (() => fn(spark, dir)), reps,
+        () => Bench.resetBetweenQueries(spark))((_, _, _, _) => ())
       picked.foreach { case (name, _) =>
         dirs.foreach { case (k, _) =>
           report(name, if (ks.isEmpty) "" else f" k=$k%-4d", times((name, k)))
         }
         ks.zip(ks.drop(1)).foreach { case (a, b) =>
-          val e = math.log(median(times((name, b))) / median(times((name, a)))) /
-            math.log(b.toDouble / a)
-          println(f"[scale] $name k=$a->$b exponent=$e%.2f")
+          val e = for (ma <- Bench.medianOk(times((name, a)));
+              mb <- Bench.medianOk(times((name, b))))
+            yield f"${math.log(mb / ma) / math.log(b.toDouble / a)}%.2f"
+          println(s"[scale] $name k=$a->$b exponent=${e.getOrElse("FAIL")}")
         }
       }
     }
     spark.stop()
   }
 
-  /** Interleaved reps of every run, with Bench's untimed between-query
-    * reset: run key → seconds per rep. */
-  private def time[K](spark: SparkSession, runs: Seq[(K, () => DataFrame)],
-      reps: Int): Map[K, Seq[Double]] = {
-    val times = runs.map(_._1 -> Seq.newBuilder[Double]).toMap
-    for (_ <- 1 to reps; (key, build) <- runs) {
-      val t0 = System.nanoTime()
-      build().count()
-      times(key) += (System.nanoTime() - t0) / 1e9
-      Bench.resetBetweenQueries(spark)
-    }
-    times.map { case (key, b) => key -> b.result() }
+  private def report(name: String, tag: String, ts: Seq[Option[Double]]): Unit = {
+    val stats = Bench.medianOk(ts).fold("FAIL")(m =>
+      f"min ${ts.flatten.min}%6.2f  median $m%6.2f")
+    println(f"$name%-32s$tag $stats  " +
+      s"runs ${ts.map(_.fold("FAIL")(t => f"$t%.2f")).mkString(" ")}")
   }
-
-  private def median(ts: Seq[Double]): Double = ts.sorted.apply((ts.size - 1) / 2)
-
-  private def report(name: String, tag: String, ts: Seq[Double]): Unit =
-    println(f"$name%-32s$tag min ${ts.min}%6.2f  median ${median(ts)}%6.2f  " +
-      s"runs ${ts.map(t => f"$t%.2f").mkString(" ")}")
 
   /** Tables that stay FIXED at every k: the bounded dimensions. Nation
     * and region keep their 25/5 rows (per-nation groups grow ×k in

@@ -122,4 +122,42 @@ class IterateSpec extends SparkSpec {
     assert(relax(noEdges) === Set(("a", 0L)))
     assert(LocalGate.withOverride(0)(relax(noEdges)) === Set(("a", 0L)))
   }
+
+  test("bfsDepth / relaxMin: a NULL seed depth or cost is refused by name on both paths; a NULL seed node reaches nothing") {
+    def failure(body: => Any): String =
+      Iterator.iterate(intercept[Exception](body): Throwable)(_.getCause)
+        .takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+    val chain = Seq((1L, 2L), (2L, 3L)).toDF("src", "dst")
+    val nullDepth = Seq[(Long, Option[Int])]((1L, None), (2L, Some(0)))
+      .toDF("node", "depth")
+    def bfsOf(seeds: org.apache.spark.sql.DataFrame) =
+      Iterate.bfsDepth(seeds, chain, 5).collect()
+        .map(r => (Option(r.get(0)), r.get(1))).toSet
+    assert(failure(bfsOf(nullDepth)).contains("NULL `depth`"))
+    assert(failure(LocalGate.withOverride(0)(bfsOf(nullDepth))).contains("NULL `depth`"))
+
+    val weighted = Seq((1L, 2L, 1L), (2L, 3L, 1L)).toDF("src", "dst", "w")
+    val nullCost = Seq[(Long, Option[Long])]((1L, None), (2L, Some(0L)))
+      .toDF("node", "cost")
+    def relaxOf(seeds: org.apache.spark.sql.DataFrame) =
+      Iterate.relaxMin(seeds, weighted, 5).collect()
+        .map(r => (Option(r.get(0)), r.get(1))).toSet
+    assert(failure(relaxOf(nullCost)).contains("NULL `cost`"))
+    assert(failure(LocalGate.withOverride(0)(relaxOf(nullCost))).contains("NULL `cost`"))
+
+    // a NULL seed node keeps its seed value and, with no edge keeping a
+    // NULL endpoint, reaches nothing — the same answer on both paths
+    val nullNodeDepth = Seq[(Option[Long], Int)]((None, 0), (Some(1L), 0))
+      .toDF("node", "depth")
+    val depths = Set[(Option[Any], Any)](
+      (None, 0), (Some(1L), 0), (Some(2L), 1), (Some(3L), 2))
+    assert(bfsOf(nullNodeDepth) === depths)
+    assert(LocalGate.withOverride(0)(bfsOf(nullNodeDepth)) === depths)
+    val nullNodeCost = Seq[(Option[Long], Long)]((None, 5L), (Some(1L), 0L))
+      .toDF("node", "cost")
+    val costs = Set[(Option[Any], Any)](
+      (None, 5L), (Some(1L), 0L), (Some(2L), 1L), (Some(3L), 2L))
+    assert(relaxOf(nullNodeCost) === costs)
+    assert(LocalGate.withOverride(0)(relaxOf(nullNodeCost)) === costs)
+  }
 }
