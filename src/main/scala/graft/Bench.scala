@@ -152,10 +152,10 @@ object Bench {
 
   /** UNTIMED inter-query hygiene: drop any cache a query leaked past its
     * end and nudge the ContextCleaner to reap dereferenced
-    * checkpoint/broadcast blocks. Without this, a 113-query session
-    * accumulates pinned memory that inflates later entries' GC time —
-    * each timed run should start from the same no-pinned-state baseline
-    * it would see in isolation. */
+    * checkpoint/broadcast blocks. Without this, a session that runs
+    * every registered query accumulates pinned memory that inflates
+    * later entries' GC time — each timed run should start from the
+    * same no-pinned-state baseline it would see in isolation. */
   private[graft] def resetBetweenQueries(spark: SparkSession): Unit = {
     try spark.catalog.clearCache() catch { case _: Throwable => () }
     // r16: also unpersist RDD-level blocks (localCheckpoint data)

@@ -101,19 +101,11 @@ object Bm25 {
       n: Int = 3, k1: Double = 1.2, b: Double = 0.75,
       cutLineage: Boolean = true): DataFrame = {
     val id = col(idCol)
-    // r15 perf: the raw posting build (scan → tokenize → shingle
-    // explode → (id,t) aggregate) feeds BOTH the df vocabulary and the
-    // final weight join; without a lineage cut it executed twice per
-    // index build. One checkpoint of the posting-grain rows halves the
-    // tokenize/shingle work for every BM25 caller (q137/q141/q142/
-    // q169/q213); the at-scale deployment story is unchanged —
-    // a 100 TB corpus materializes the index ONCE bucketed by term
-    // (see the object scaladoc) and never rebuilds it per query.
-    // r16 (verdict item 6): caller-gated — a caller whose whole query
-    // is one cheap pass over a small corpus (q212, the family's
-    // smallest) pays more for the checkpoint's fixed job than the
-    // second tokenize costs it, and opts out with cutLineage = false;
-    // the arithmetic is identical either way (Bm25Spec pins it).
+    // the raw posting build feeds both the df vocabulary and the weight
+    // join, unshared by ReuseExchange. At sf0.1 the cut pays 5–22% on
+    // q137/q141/q142/q169/q213 but costs q212 (one cheap pass) 0.41 →
+    // 1.15 s, so q212 passes cutLineage = false (LINEAGE_CUTS.md); the
+    // arithmetic is identical either way (Bm25Spec pins it).
     val tfRaw = postingDeltas(docs, idCol, textCol, n)
     val tf = if (cutLineage) tfRaw.localCheckpoint() else tfRaw
     // corpus stats from one narrow scan: a doc's shingle count is

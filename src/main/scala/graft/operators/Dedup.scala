@@ -687,7 +687,6 @@ object Dedup {
       .union(e.select(col("id_b").as("src"), col("id_a").as("dst")))
     var labels = sym.select(col("src").as("node")).distinct()
       .withColumn("comp", col("node"))
-      .localCheckpoint()
     var converged = false
     var i = 0
     while (!converged && i < maxIter) {

@@ -122,11 +122,11 @@ object Hits {
     // hub 0 / no in-edges → auth 0" — the dense left-join happens once,
     // at output, not per half-step.
     var hub = bySrc.select($"src".as("node")).distinct()
-      .select($"node", lit(1L).as("s")).localCheckpoint(true)
+      .select($"node", lit(1L).as("s"))
     var auth: DataFrame = null
     for (_ <- 1 to iterations) {
-      auth = halfStep(bySrc, "src", "dst", hub, hintNodeSized).localCheckpoint(true)
-      hub = halfStep(byDst, "dst", "src", auth, hintNodeSized).localCheckpoint(true)
+      auth = halfStep(bySrc, "src", "dst", hub, hintNodeSized).localCheckpoint()
+      hub = halfStep(byDst, "dst", "src", auth, hintNodeSized).localCheckpoint()
     }
     val out = finish(nodes, hub, auth, hintNodeSized)
     bySrc.unpersist(false); byDst.unpersist(false); nodes.unpersist(false)
@@ -155,6 +155,6 @@ object Hits {
       .select($"n.node",
         coalesce($"h.s", lit(0L)).as("hub"),
         coalesce($"a.s", lit(0L)).as("auth"))
-      .localCheckpoint(true)
+      .localCheckpoint()
   }
 }

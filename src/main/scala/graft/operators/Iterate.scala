@@ -11,10 +11,23 @@ import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructFiel
   * Scale notes:
   *  - `visited` dedup is a `left_anti` join (shuffle on the key), the
   *    distributed form of the RFPDupeFilter fingerprint set;
-  *  - `localCheckpoint` truncates lineage each round — without it the
-  *    plan tree grows linearly with iterations and planning time blows
-  *    up long before data size matters;
+  *  - each round's accepted frontier is cut (rule (a) below) and
+  *    `visited` is the union of those slices — a flat plan with one
+  *    leaf per round that is never copied again;
   *  - `maxIter` bounds the loop (SURVEY §7.4 watch-list).
+  *
+  * Lineage cuts — the one rule for every `localCheckpoint` in graft
+  * (LINEAGE_CUTS.md measures each call; LineageCutsSpec keeps it in
+  * step with the code). A cut stays only when it
+  *  (a) cuts loop state that references itself: without it the plan
+  *      grows with the round count;
+  *  (b) materializes an intermediate read at least twice that
+  *      ReuseExchange does not share, and a with/without timing shows
+  *      the cut pays; or
+  *  (c) materializes a result before its operator releases the caches
+  *      it was computed from (`Hits.finish`, the `PageRank` loop).
+  * Every other cut is deleted. Kept cuts are plain eager calls, with no
+  * option to choose another kind (ROADMAP direction 4).
   *
   * Size gating: a k-round DataFrame loop pays k× scheduler/checkpoint
   * latency that dwarfs the compute for small graphs (the
@@ -40,16 +53,15 @@ object Iterate {
     */
   def fixpoint(seed: DataFrame, step: DataFrame => DataFrame,
       keyCols: Seq[String], maxIter: Int): DataFrame = {
-    var visited = seed.dropDuplicates(keyCols).localCheckpoint()
-    var frontier = visited
+    var frontier = seed.dropDuplicates(keyCols).localCheckpoint()
+    var visited = frontier
     var i = 0
     while (i < maxIter && !frontier.isEmpty) {
-      val next = step(frontier)
+      frontier = step(frontier)
         .dropDuplicates(keyCols)
         .join(visited, keyCols, "left_anti")
-        .localCheckpoint() // cut lineage; also breaks the self-reference
-      visited = visited.unionByName(next).localCheckpoint()
-      frontier = next
+        .localCheckpoint() // (a): the next round reads it
+      visited = visited.unionByName(frontier)
       i += 1
     }
     visited
@@ -172,8 +184,9 @@ object Iterate {
     *
     * Scale: each round shuffles candidate rows (edge fan-out of the
     * improved set, pre-combined) + the dist merge on node — the same
-    * per-round shape as PageRank's edge-form rounds; `localCheckpoint`
-    * cuts the growing lineage exactly as in [[fixpoint]]. Under
+    * per-round shape as PageRank's edge-form rounds; each round's
+    * candidates, merged distances and improved frontier are cut (the
+    * lineage-cut rule above). Under
     * [[LocalGate.EdgeLimit]] the rounds run driver-local on
     * primitive arrays (relaxing EVERY edge from d_{k-1} each round —
     * provably the same map as the delta-frontier form, since a
@@ -225,7 +238,7 @@ object Iterate {
 
   private def relaxDistributed(seed: DataFrame, edges: DataFrame,
       maxIter: Int): DataFrame = {
-    var dist = seed.groupBy("node").agg(min("cost").as("cost")).localCheckpoint()
+    var dist = seed.groupBy("node").agg(min("cost").as("cost"))
     var frontier = dist
     var i = 0
     while (i < maxIter && !frontier.isEmpty) {

@@ -50,7 +50,6 @@ object KCore {
       .select(least(col("a"), col("b")).as("a"), greatest(col("a"), col("b")).as("b"))
       .where(col("a") =!= col("b"))
       .distinct()
-      .localCheckpoint()
     var i = 0
     while (i < rounds) {
       val keep = degrees(e).filter(col("deg") >= k).select(col("n"))

@@ -62,10 +62,10 @@ object LocalGate {
   final case class Distributed(frame: DataFrame) extends Path
 
   /** Gate `frame` on its `cols` (the NULL rule, then [[take]]). Under
-    * the gate the single take-job IS the only scan; callers should
-    * still cache/checkpoint an expensive input pipeline so the
-    * distributed fallback's re-scan (and its per-round reuse) is
-    * cheap. */
+    * the gate the single take-job IS the only scan. Over it, the
+    * distributed leg scans `frame` again; whether a caller cuts an
+    * expensive input first follows the lineage-cut rule in
+    * [[Iterate]]'s scaladoc, with the measurement in LINEAGE_CUTS.md. */
   def apply(frame: DataFrame, cols: Seq[String], limit: Long,
       tag: String): Path = {
     val kept = nonNull(frame, cols)

@@ -225,7 +225,6 @@ object PageRank {
     import edges.sparkSession.implicits._
     val g = prepare(edges)
     var ranks = g.nodes.select($"node", init.as("pr"))
-      .localCheckpoint(true)
     for (i <- 1 to iterations) {
       ranks = round(g, ranks, damping, teleport)
       // checkpoint every CheckpointEvery rounds (and the last):
@@ -234,7 +233,7 @@ object PageRank {
       // per-round checkpointing dominated the wall-clock of small-graph
       // runs
       if (i % CheckpointEvery == 0 || i == iterations) {
-        ranks = ranks.localCheckpoint(true)
+        ranks = ranks.localCheckpoint()
       }
     }
     // the eager checkpoints above fully materialized the result, so the

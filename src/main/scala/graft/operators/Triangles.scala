@@ -42,20 +42,9 @@ object Triangles {
         when($"ka" < $"kb", $"a").otherwise($"b").as("src"),
         when($"ka" < $"kb", $"b").otherwise($"a").as("dst"),
         when($"ka" < $"kb", $"kb").otherwise($"ka").as("kdst"))
-      // consumed three times (two wedge sides + the closing probe), so
-      // materialize once — as an eager localCheckpoint, NOT cache():
-      // the operator returns a lazy plan over this relation, so it can
-      // never unpersist it itself, and a cache() entry stays pinned in
-      // CacheManager for the session's lifetime (a leak per call in a
-      // long-lived service). Checkpoint blocks are reference-tracked
-      // and reclaimed by ContextCleaner once the result is dropped.
-      // Two accepted costs of the eager form: (1) CONSTRUCTING the
-      // triangles plan runs the orient+checkpoint job immediately, so
-      // plan-only uses (explain, plan specs) pay it too; (2) checkpoint
-      // blocks have no lineage — an executor loss mid-query fails the
-      // query instead of recomputing (retry-level recovery, not
-      // task-level). Both beat the session-lifetime cache leak.
-      .localCheckpoint(true)
+      // read three times (two wedge sides, the closing probe) but not
+      // cut — it cost q189 17% at sf0.1 (LINEAGE_CUTS.md) — nor cached:
+      // the lazy result could never unpersist it
     val wedges = oriented.as("e1").join(oriented.as("e2"),
         col("e1.src") === col("e2.src") && col("e1.kdst") < col("e2.kdst"))
       .select(col("e1.src").as("a"), col("e1.dst").as("b"), col("e2.dst").as("c"))

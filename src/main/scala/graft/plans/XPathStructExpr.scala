@@ -1,7 +1,7 @@
 package graft.plans
 
 import javax.xml.namespace.QName
-import javax.xml.parsers.DocumentBuilderFactory
+import javax.xml.parsers.{DocumentBuilder, DocumentBuilderFactory}
 import javax.xml.xpath.{XPathConstants, XPathExpression, XPathFactory}
 
 import org.apache.spark.sql.Column
@@ -11,6 +11,8 @@ import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
+import org.w3c.dom.Document
+import org.xml.sax.{ErrorHandler, InputSource, SAXParseException}
 
 /** Multi-field XPath extraction with ONE parse per page (SURVEY §2.11:
   * "one parse per page, not per field — the single most important perf
@@ -33,14 +35,7 @@ case class XPathStructExpr(child: Expression, fields: Seq[(String, String)])
   override def dataType: DataType =
     StructType(fields.map { case (name, _) => StructField(name, StringType) })
 
-  @transient private lazy val builder = {
-    val f = DocumentBuilderFactory.newInstance()
-    f.setNamespaceAware(false)
-    // page content is untrusted: no DTDs, no external entities
-    f.setFeature("http://apache.org/xml/features/disallow-doctype-decl", true)
-    f.setExpandEntityReferences(false)
-    f.newDocumentBuilder()
-  }
+  @transient private lazy val builder = XPathStructExpr.newBuilder()
 
   @transient private lazy val compiled: Array[XPathExpression] = {
     val xp = XPathFactory.newInstance().newXPath()
@@ -82,15 +77,32 @@ object XPathStructExpr {
   def xpathAll(html: Column, xpath: String): Column =
     ColumnBridge.column(XPathArrayExpr(ColumnBridge.expression(html), xpath))
 
+  /** The page parser of both expressions; pages are untrusted input. */
+  private[plans] def newBuilder(): DocumentBuilder = {
+    val f = DocumentBuilderFactory.newInstance()
+    f.setNamespaceAware(false)
+    f.setFeature("http://apache.org/xml/features/disallow-doctype-decl", true)
+    f.setExpandEntityReferences(false)
+    f.newDocumentBuilder()
+  }
+
+  /** The default handler without its stderr line (a `[Fatal Error] …`
+    * per tag-soup page, before [[parseLenient]] repairs it). */
+  private object Silent extends ErrorHandler {
+    def warning(e: SAXParseException): Unit = ()
+    def error(e: SAXParseException): Unit = ()
+    def fatalError(e: SAXParseException): Unit = throw e
+  }
+
   /** Strict XML parse; on failure re-parse through the HtmlSoup
     * normalizer (tag-soup repair — reference parity: parsel/lxml accept
     * broken real-world HTML); null only if even the repaired document
     * fails. The strict path stays the fast path for well-formed pages. */
-  private[plans] def parseLenient(html: String,
-      builder: javax.xml.parsers.DocumentBuilder): org.w3c.dom.Document = {
-    def parse(s: String): org.w3c.dom.Document = {
-      builder.reset()
-      builder.parse(new org.xml.sax.InputSource(new java.io.StringReader(s)))
+  private[plans] def parseLenient(html: String, builder: DocumentBuilder): Document = {
+    def parse(s: String): Document = {
+      builder.reset() // also drops the error handler: set it per parse
+      builder.setErrorHandler(Silent)
+      builder.parse(new InputSource(new java.io.StringReader(s)))
     }
     try parse(html)
     catch {
@@ -112,13 +124,7 @@ case class XPathArrayExpr(child: Expression, xpath: String)
   override def dataType: DataType =
     org.apache.spark.sql.types.ArrayType(StringType)
 
-  @transient private lazy val builder = {
-    val f = DocumentBuilderFactory.newInstance()
-    f.setNamespaceAware(false)
-    f.setFeature("http://apache.org/xml/features/disallow-doctype-decl", true)
-    f.setExpandEntityReferences(false)
-    f.newDocumentBuilder()
-  }
+  @transient private lazy val builder = XPathStructExpr.newBuilder()
 
   @transient private lazy val compiled: XPathExpression =
     XPathFactory.newInstance().newXPath().compile(xpath)

@@ -357,9 +357,10 @@ object GraphQueries {
     // r6 at 8.6 s for a graph the local path walks in milliseconds);
     // above the gate it is the same Iterate.fixpoint crawl loop as before
     val reached = Iterate.bfsDepth(seeds, edges, maxIter = BfsDepth)
-    // reached is already materialized (localCheckpoint per round on the
-    // distributed path, a local relation under the gate), so the caches
-    // can drop now and the final sort needs no forced materialization
+    // reached is already materialized (a union of per-round cut slices
+    // on the distributed path, a local relation under the gate), so the
+    // caches can drop now and the final sort needs no forced
+    // materialization
     edges.unpersist(false); pairs.unpersist(false)
     reached.select(nodeLabel, col("depth").cast("int").as("depth"))
       .orderBy(col("node"))

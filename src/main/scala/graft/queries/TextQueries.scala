@@ -1493,10 +1493,8 @@ object TextQueries {
       |WHERE dot / (na.nr * nb.nr) >= 0.3
       |ORDER BY id_a, id_b""".stripMargin) { (spark, dir) =>
     val docs = Tables.documents(spark, dir)
-    // r15 perf: tf feeds BOTH the df vocabulary and the weight/norm
-    // pass — one lineage cut so the tokenize + shingle explode +
-    // (doc,t) aggregate run once, not twice (the Bm25.postingIndex
-    // fix applied to the TF-IDF side)
+    // tf feeds both the df vocabulary and the weight/norm pass; a cut
+    // did not pay at sf0.1 (LINEAGE_CUTS.md)
     val tf = docs
       .repartition(col("doc_id"))
       .select(col("doc_id"), TextFns.tokens(col("text")).as("toks"))
@@ -1505,7 +1503,6 @@ object TextQueries {
         explode(TextFns.shinglePositions(col("toks"), 3)).as("i"))
       .select(col("doc_id"), TextFns.shingleAt(col("toks"), col("i"), 3).as("t"))
       .groupBy(col("doc_id"), col("t")).agg(count(lit(1)).as("cnt"))
-      .localCheckpoint()
     val n = docs.agg(count(lit(1)).cast("double").as("n_docs"))
     // dfMax derives from the corpus size inside the plan, riding the
     // same 1-row count broadcast the idf uses — no extra driver action
@@ -2131,11 +2128,8 @@ object TextQueries {
       |FROM perq GROUP BY source
       |ORDER BY source""".stripMargin) { (spark, dir) =>
     val docs = Tables.documents(spark, dir)
-    // r16: cutLineage = false — q212 consumes the index exactly once
-    // and is the BM25 family's smallest caller, so the posting
-    // checkpoint's fixed job cost the query 2× (r15 scorecard:
-    // 0.40 → 0.81 s); the lazy path re-derives tf for the vocabulary
-    // pass instead, which is cheaper here (A/B'd, OPTIMIZATION_r16.md)
+    // cutLineage = false: the posting cut costs this one-pass query
+    // 0.41 → 1.15 s at sf0.1 (LINEAGE_CUTS.md)
     val index = Bm25.postingIndex(docs, "doc_id", "text",
         cutLineage = false)
       .repartition(col("t"))
@@ -2290,8 +2284,8 @@ object TextQueries {
     val emb = Tables.embeddings(spark, dir)
     // leg 2: dense rerank of the shared candidates (query = probe
     // doc's own embedding — the known-item saturation documented
-    // above); checkpointed because both the hits union and the RRF
-    // fusion consume it, and recomputing would re-scan embeddings
+    // above); read by the hits union and the RRF fusion, not cut: a
+    // cut did not pay at sf0.1 (LINEAGE_CUTS.md)
     val rr = top10
       .join(emb.select(col("vec_id").as("doc_id"), col("embedding").as("e_d")),
         "doc_id")
@@ -2302,7 +2296,6 @@ object TextQueries {
       .withColumn("rnk", row_number().over(
         Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("doc_id"))))
       .select(col("qid"), col("doc_id"), col("rnk"))
-      .localCheckpoint()
     // leg 3: q142's MMR at its deployed config — λ=0.5, 3 picks from
     // the BM25 top-5, unrolled greedy rounds over O(probes×5) rows
     val (s1, s2, s3) = mmrPicks(top10.filter(col("rnk") <= 5)
@@ -2741,16 +2734,14 @@ object TextQueries {
     // bit-identical to q28/q29's)
     val shv = Dedup.shingleSetView(docs, "doc_id", "text", n = 3)
       .localCheckpoint()
-    // both pair sets are near-dup outputs (already candidate-bounded by
-    // df-cap/banding — tiny relative to the corpus); cut their lineage
-    // once so the three count aggregates + intersection don't re-run
-    // the dedup pipelines five times
+    // each pair set feeds its count and the intersection; cutting them
+    // did not pay at sf0.1 once `shv` is cut (LINEAGE_CUTS.md)
     val exact = Dedup.jaccardPairsFromShingles(shv,
         threshold = 0.5, maxDocFreq = 100)
-      .select(col("id_a"), col("id_b")).localCheckpoint()
+      .select(col("id_a"), col("id_b"))
     val approx = Dedup.minhashLshPairsFromShingles(shv,
         bands = 16, rowsPerBand = 4, threshold = 0.5)
-      .select(col("id_a"), col("id_b")).localCheckpoint()
+      .select(col("id_a"), col("id_b"))
     val both = exact.join(approx, Seq("id_a", "id_b"))
     exact.agg(count(lit(1)).as("n_exact"))
       .crossJoin(approx.agg(count(lit(1)).as("n_approx")))
@@ -4944,16 +4935,14 @@ object TextQueries {
           concat_ws(" ", col("t")).as("text")))
       val pairs = Dedup.minhashLshPairs(corpus, "doc_id", "text",
         n = 3, bands = 16, rowsPerBand = 4, threshold = 0.5)
-      // the shingle table is read by THREE downstream consumers (szs,
-      // both sides of the intersection join): cut it once so the corpus
-      // re-read + shingle explode run exactly once (q143 discipline)
+      // read three times (szs, both intersection sides) but not cut: a
+      // cut did not pay at sf0.1 (LINEAGE_CUTS.md)
       val sh = corpus
         .crossJoin(broadcast(off))
         .filter(col("doc_id") % 22 === 0 || col("doc_id") >= col("off"))
         .drop("off")
         .select(col("doc_id"),
           explode(TextFns.shingleSet(col("text"), 3)).as("s"))
-        .localCheckpoint()
       val szs = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
       val gt = plv.select(col("band"), col("d"), col("base_id"),
           col("doc_id").as("vid"))

@@ -1637,12 +1637,9 @@ object VectorQueries {
     val emb = Tables.embeddings(spark, dir)
     // IVF codebook + assignment, as in q45/q122
     val cb = ivfCodebook(emb)
-    // the assignment scan feeds three legs plus the probe side — cut
-    // the lineage once so the embeddings scan + 8-centroid argmax run
-    // once, not per consumer (the q213 shared-stage pattern; the cut
-    // also sidesteps q122's self-join-dedup hazard, since the
-    // transform lambda never reaches a self-join rewrite)
-    val assign = ivfAssign(Tables.embeddings(spark, dir), cb).localCheckpoint()
+    // the assignment feeds three legs plus the probe side; a cut did
+    // not pay at sf0.1 (LINEAGE_CUTS.md)
+    val assign = ivfAssign(Tables.embeddings(spark, dir), cb)
     val probes = assign.filter(pmod(col("vec_id"), lit(7)) === 0
         && col("vec_id") < AnnEvalPanel * 7L)
       .select(col("vec_id").as("qid"), col("label").as("p_label"),

@@ -20,7 +20,7 @@ import graft.sources.Tables
   * FAIL instead of ending the probe. `--explain` prints each formatted plan without
   * running it; `--explain-exec` runs the query first (on its own
   * QueryExecution) and prints the final adaptive plan, where AQE stage
-  * reuse shows.
+  * reuse shows. Both print every field of every node ([[explain]]).
   *
   * `--scale 1,8,32` times the picked queries the same way on a ×k
   * replica of sfDir for each k ([[relTables]], written once and reused;
@@ -58,12 +58,8 @@ object Probe {
       .filter { case (n, _) => subs.exists(n.contains) }
 
     if (flags.nonEmpty) picked.foreach { case (name, fn) =>
-      val df = fn(spark, sfDir)
-      // collect() drives df's OWN QueryExecution; count() would run a
-      // wrapped plan and leave this one un-finalized
-      if (flags.contains("--explain-exec")) df.collect()
       println(s"========== $name ==========")
-      println(df.queryExecution.explainString(FormattedMode))
+      println(explain(fn(spark, sfDir), flags.contains("--explain-exec")))
     } else {
       val dirs = if (ks.isEmpty) Seq(1 -> sfDir)
         else ks.map(k => k -> relTables(spark, sfDir, k))
@@ -87,6 +83,18 @@ object Probe {
       }
     }
     spark.stop()
+  }
+
+  /** `df`'s formatted plan (run first when `exec`: the final adaptive
+    * plan) with every field printed. Spark's default
+    * `spark.sql.debug.maxToStringFields` cuts wide nodes to "... N more
+    * fields", which a plan diff cannot see past. */
+  private[tools] def explain(df: DataFrame, exec: Boolean): String = {
+    df.sparkSession.conf.set("spark.sql.debug.maxToStringFields", Int.MaxValue.toLong)
+    // collect() drives df's OWN QueryExecution; count() would run a
+    // wrapped plan and leave this one un-finalized
+    if (exec) df.collect()
+    df.queryExecution.explainString(FormattedMode)
   }
 
   private def report(name: String, tag: String, ts: Seq[Option[Double]]): Unit = {

@@ -37,6 +37,25 @@ class IterateSpec extends SparkSpec {
     ("a", "b"), ("a", "c"), ("b", "d"), ("c", "d"), ("d", "a"),
     ("b", "e"), ("d", "e"), ("x", "y"))
 
+  test("fixpoint over a 30-link chain: every node once, at most one plan leaf per round") {
+    val n = 30
+    val edges = (0 until n).map(i => (i.toLong, i + 1L)).toDF("src", "dst")
+    var rounds = 0
+    val visited = Iterate.fixpoint(
+      Seq(0L).toDF("n"),
+      f => { rounds += 1; f.join(edges, f("n") === edges("src")).select(edges("dst").as("n")) },
+      keyCols = Seq("n"),
+      maxIter = 100)
+    assert(visited.as[Long].collect().sorted.toSeq === (0L to n))
+    assert(rounds === n + 1) // the last round finds nothing and drains
+    // visited is the union of the seed's and each round's cut slice:
+    // the plan never grows past one leaf per round, and no leaf
+    // re-reads the edges
+    val leaves = visited.queryExecution.optimizedPlan.collectLeaves()
+    assert(leaves.size <= rounds + 1)
+    assert(leaves.forall(_.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD]))
+  }
+
   test("bfsDepth: local (gated) ≡ distributed (gate disabled), depths exact") {
     val edges = bfsEdges.toDF("src", "dst")
     val seeds = Seq(("a", 0)).toDF("node", "depth")

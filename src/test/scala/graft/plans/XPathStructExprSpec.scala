@@ -43,6 +43,26 @@ class XPathStructExprSpec extends SparkSpec {
     assert(got === ((None, None)))
   }
 
+  test("a tag-soup page falls back to HtmlSoup and writes nothing to stderr") {
+    // the unclosed <br> and <li>s fail the strict parse; the repair parses
+    val soup =
+      """<html><body><h1 class="t">标题文本</h1><br>
+        |<li><span>房屋户型</span>3室2厅
+        |<li><span>装修情况</span>精装
+        |</body></html>""".stripMargin
+    val err = new java.io.ByteArrayOutputStream()
+    val saved = System.err
+    System.setErr(new java.io.PrintStream(err, true, "UTF-8"))
+    val got = try Seq(soup).toDF("html")
+        .select(XPathStructExpr.xpathStruct(col("html"), fields).as("x"),
+          XPathStructExpr.xpathAll(col("html"), "//li/span/text()").as("spans"))
+        .select("x.title", "x.layout", "x.deco", "x.missing", "spans")
+        .as[(String, String, String, Option[String], Seq[String])].head()
+      finally System.setErr(saved)
+    assert(got === (("标题文本", "3室2厅", "精装", None, Seq("房屋户型", "装修情况"))))
+    assert(err.toString("UTF-8") === "")
+  }
+
   test("doctype/entity payloads are rejected safely (no XXE)") {
     val evil =
       """<!DOCTYPE foo [<!ENTITY xxe SYSTEM "file:///etc/passwd">]>

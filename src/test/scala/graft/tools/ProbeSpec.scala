@@ -2,6 +2,7 @@ package graft.tools
 
 import java.io.File
 import java.nio.file.Files
+import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.sources.Tables
@@ -61,5 +62,22 @@ class ProbeSpec extends SparkSpec {
   private def deleteRecursively(f: File): Unit = {
     Option(f.listFiles).foreach(_.foreach(deleteRecursively))
     f.delete()
+  }
+
+  test("explain prints every field of a wide plan") {
+    val key = "spark.sql.debug.maxToStringFields"
+    val before = spark.conf.getOption(key)
+    // a local relation prints its output list as the scan's arguments
+    val wide = spark.createDataFrame(
+      java.util.List.of(org.apache.spark.sql.Row.fromSeq((0 until 40).map(_.toLong))),
+      org.apache.spark.sql.types.StructType((0 until 40).map(i =>
+        org.apache.spark.sql.types.StructField(s"c$i", org.apache.spark.sql.types.LongType))))
+    // Spark's default prints the first fields and "... N more fields"
+    assert(wide.queryExecution.explainString(FormattedMode).contains("more fields"))
+    try Seq(false, true).foreach { exec =>
+      val plan = Probe.explain(wide, exec)
+      assert(!plan.contains("more fields"), s"exec=$exec")
+      assert(plan.contains("c39"), s"exec=$exec")
+    } finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 }
