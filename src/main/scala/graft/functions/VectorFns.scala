@@ -36,16 +36,19 @@ object VectorFns {
   def cosineHof(a: Column, b: Column): Column =
     dot(a, b) / (norm2(a) * norm2(b))
 
+  /** Seed of every LSH hyperplane ([[lshCoefs]]), engine and oracles alike. */
+  private[graft] val LshSeed = 42L
+
   /** Random-hyperplane LSH bucket id: `nBits` sign bits of projections
     * onto deterministic pseudo-random hyperplanes. The "hyperplane"
     * coefficients are derived per (bit, dimension) from a hash — fully
     * deterministic, no fitted model, so the operator works on any
     * static or streaming batch without a training pass.
     */
-  def lshBucket(vec: Column, dim: Int, nBits: Int, seed: Long = 42L): Column = {
+  def lshBucket(vec: Column, dim: Int, nBits: Int): Column = {
     val v = d(vec)
     val bits = (0 until nBits).map { b =>
-      val coefs = typedLit(lshCoefs(b, dim, seed).toArray)
+      val coefs = typedLit(lshCoefs(b, dim).toArray)
       // sign via the native one-pass cosine (codegen'd): sign(cos) ≡
       // sign(dot) since norms are positive — the oracle's
       // list_dot_product >= 0 test matches bit for bit
@@ -58,7 +61,7 @@ object VectorFns {
   /** bitsPerBand needed to hold within-band buckets at ~`targetBucket`
     * members for an `n`-vector corpus: log₂(n / targetBucket). Driver-side
     * twin of [[bitsForCorpusCol]] (same floor of 4, same ceil-log₂). */
-  def bitsForCorpus(n: Long, targetBucket: Int = 64): Int =
+  def bitsForCorpus(n: Long, targetBucket: Int): Int =
     math.max(4, math.ceil(math.log(math.max(1.0, n.toDouble / targetBucket)) / math.log(2.0)).toInt)
 
   /** In-query [[bitsForCorpus]]: the smallest b in [minBits, maxBits]
@@ -81,9 +84,9 @@ object VectorFns {
     * bucket and band forms (r13 review). `And` short-circuits, so
     * masked-off planes cost nothing at runtime. */
   private def maskedBandKey(v: Column, dim: Int, bits: Column, maxBits: Int,
-      planeBase: Int, seed: Long): Column =
+      planeBase: Int): Column =
     (0 until maxBits).map { r =>
-      val coefs = typedLit(lshCoefs(planeBase + r, dim, seed).toArray)
+      val coefs = typedLit(lshCoefs(planeBase + r, dim).toArray)
       when(lit(r) < bits &&
           graft.plans.CosineSimExpr.cosineSim(v, coefs) >= 0,
         lit(1L << r)).otherwise(lit(0L))
@@ -94,9 +97,8 @@ object VectorFns {
     * static unrolling keeps a SQL oracle expressible while the bucket
     * count scales with the corpus ([[bitsForCorpusCol]] supplies `bits`
     * from an in-query count). ≡ band 0 of [[lshBandKeysMasked]]. */
-  def lshBucketMasked(vec: Column, dim: Int, bits: Column, maxBits: Int,
-      seed: Long = 42L): Column =
-    maskedBandKey(d(vec), dim, bits, maxBits, planeBase = 0, seed)
+  def lshBucketMasked(vec: Column, dim: Int, bits: Column, maxBits: Int): Column =
+    maskedBandKey(d(vec), dim, bits, maxBits, planeBase = 0)
 
   /** Banded random-hyperplane signature: `nBands` independent bucket
     * keys, each from the RUNTIME `bits` sign bits (same masking contract
@@ -115,10 +117,10 @@ object VectorFns {
     * the corpus only APPENDS sign bits to each band key (prefix-stable
     * bucketing). */
   def lshBandKeysMasked(vec: Column, dim: Int, nBands: Int, bits: Column,
-      maxBitsPerBand: Int, seed: Long = 42L): Column = {
+      maxBitsPerBand: Int): Column = {
     val v = d(vec)
     array((0 until nBands).map { b =>
-      maskedBandKey(v, dim, bits, maxBitsPerBand, b * maxBitsPerBand, seed)
+      maskedBandKey(v, dim, bits, maxBitsPerBand, b * maxBitsPerBand)
     }: _*)
   }
 
@@ -137,10 +139,9 @@ object VectorFns {
     * similarity (quality) — together the standard L = O(N^ρ) LSH
     * schedule. */
   def lshBandKeysMaskedBands(vec: Column, dim: Int, maxBands: Int,
-      nBands: Column, bits: Column, maxBitsPerBand: Int,
-      seed: Long = 42L): Column =
+      nBands: Column, bits: Column, maxBitsPerBand: Int): Column =
     graft.plans.LshBandKeysMaskedExpr.bandKeys(d(vec), nBands.cast("int"),
-      bits.cast("int"), maxBands, maxBitsPerBand, dim, seed)
+      bits.cast("int"), maxBands, maxBitsPerBand, dim, LshSeed)
 
   /** The unfused CaseWhen/[[maskedBandKey]] composition of
     * [[lshBandKeysMaskedBands]] — retained as the REFERENCE form the
@@ -149,15 +150,14 @@ object VectorFns {
     * composed tree blows Janino's method limit inside whole-stage
     * codegen, so the serving path fuses it into one call. */
   private[graft] def lshBandKeysMaskedBandsComposed(vec: Column, dim: Int,
-      maxBands: Int, nBands: Column, bits: Column, maxBitsPerBand: Int,
-      seed: Long = 42L): Column = {
+      maxBands: Int, nBands: Column, bits: Column, maxBitsPerBand: Int): Column = {
     val v = d(vec)
     // r15: sliced to the live-band count — the native expression emits
     // an EXACT-LENGTH array (no padded NULL tail), so the reference
     // composition slices its static-width form to match
     slice(array((0 until maxBands).map { b =>
       when(lit(b) < nBands,
-        maskedBandKey(v, dim, bits, maxBitsPerBand, b * maxBitsPerBand, seed))
+        maskedBandKey(v, dim, bits, maxBitsPerBand, b * maxBitsPerBand))
     }: _*), lit(1), least(coalesce(nBands, lit(0)), lit(maxBands)))
   }
 
@@ -166,7 +166,10 @@ object VectorFns {
     * oracle SQL can inline the IDENTICAL planes as list literals: both
     * engines then bucket every vector the same way and the approximate
     * ANN result is exactly reproducible. */
-  def lshCoefs(b: Int, dim: Int, seed: Long = 42L): Seq[Double] =
+  def lshCoefs(b: Int, dim: Int): Seq[Double] = planeCoefs(b, dim, LshSeed)
+
+  /** [[lshCoefs]] under the seed a [[graft.plans.LshBandKeysMaskedExpr]] carries. */
+  private[graft] def planeCoefs(b: Int, dim: Int, seed: Long): Seq[Double] =
     (0 until dim).map { i =>
       val h = scala.util.hashing.MurmurHash3.productHash((b, i, seed))
       if ((h & 1) == 0) 1.0 else -1.0

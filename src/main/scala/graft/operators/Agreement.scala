@@ -28,6 +28,10 @@ import org.apache.spark.sql.functions._
   * unit is mu² − Σ_c n_uc² — two unit-grain aggregates, no self-join. */
 object Agreement {
 
+  /** [[dawidSkeneStep]]'s driver bounds: label domain, raters × labels². */
+  private[graft] val DsMaxLabels = 64
+  private val DsMaxWeightRows = 2000000
+
   /** Per-`groupCol` Cohen's kappa between `raterA` and `raterB`.
     * @return (group, n_items, n_agree, po, pe, kappa) */
   def cohenKappa(items: DataFrame, groupCol: String, raterA: String,
@@ -106,7 +110,7 @@ object Agreement {
     *              statistic, only the votes
     * @return (group, n_units, n_values, alpha) */
   def krippendorffAlpha(items: DataFrame, groupCol: String,
-      unitCol: String, labelCol: String, maxRaters: Int = 8): DataFrame = {
+      unitCol: String, labelCol: String, maxRaters: Int): DataFrame = {
     require(maxRaters >= 2 && maxRaters <= 16, "maxRaters must be in [2, 16]")
     val scaleS: Long = (1 until maxRaters).map(_.toLong).reduce { (a, b) =>
       a / BigInt(a).gcd(BigInt(b)).toLong * b
@@ -230,10 +234,9 @@ object Agreement {
     * Scale: consensus and confusion are unit-/confusion-grain
     * aggregates; the dense weight table is raters × L² rows — the
     * KB-scale learned-parameter class, COLLECTED under loud bounds
-    * (`maxLabels`, `maxWeightRows` — the fitFromCounts limit-bounded
-    * discipline) and re-broadcast as a LocalRelation; scoring is
-    * votes × L rows with a unit-grain argmax aggregate — never
-    * unit × unit.
+    * ([[LocalGate.collectBounded]]) and re-broadcast as a
+    * LocalRelation; scoring is votes × L rows with a unit-grain argmax
+    * aggregate — never unit × unit.
     *
     * @param items long format: (unitCol, raterCol, labelCol); NULL
     *              labels = missing vote
@@ -241,8 +244,7 @@ object Agreement {
     *         tied units; changed = posterior ≠ majority (or majority
     *         was NULL), the units the reliability weighting rescues */
   def dawidSkeneStep(items: DataFrame, unitCol: String, raterCol: String,
-      labelCol: String, maxLabels: Int = 64,
-      maxWeightRows: Int = 2000000): DataFrame = {
+      labelCol: String): DataFrame = {
     val spark = items.sparkSession
     // checkpoint the votes: they feed five branches (labels, raters,
     // consensus, confusion, scoring) plus an eager label-domain read,
@@ -252,19 +254,15 @@ object Agreement {
       .select(col(unitCol).as("unit"), col(raterCol).as("rater"),
         col(labelCol).as("given"))
       .localCheckpoint()
-    // label domain COLLECTED under a loud bound (the
-    // BradleyTerry.fitFromCounts limit-bounded-read discipline) and
-    // re-created as a LocalRelation: the same driver read that used to
+    // label domain COLLECTED under a loud bound and re-created as a
+    // LocalRelation: the same driver read that used to
     // be a bare count() now also makes every labels broadcast below
     // PROVABLY bounded for the registry-wide broadcast sweep (a
     // Deduplicate over the checkpoint's LogicalRDD is opaque to it)
     val labProj = votes.select(col("given").as("lab")).distinct()
-    val labRows = labProj.limit(maxLabels + 1).collect()
-    if (labRows.length > maxLabels)
-      throw new IllegalArgumentException(
-        s"dawid_skene: label domain exceeds the documented bound " +
-          s"($maxLabels) — relabel at a coarser class grain or raise " +
-          "maxLabels explicitly")
+    val labRows = LocalGate.collectBounded(labProj, DsMaxLabels,
+      s"dawid_skene: label domain exceeds the documented bound " +
+        s"($DsMaxLabels) — relabel at a coarser class grain")
     val labels = spark.createDataFrame(
       java.util.Arrays.asList(labRows: _*), labProj.schema)
     val raters = votes.select(col("rater")).distinct()
@@ -297,12 +295,9 @@ object Agreement {
     // KB-scale codebook class: collect it under a loud bound and
     // re-create a LocalRelation so its broadcast below is provably
     // bounded (same sweep argument as the label domain above)
-    val denseRows = denseDist.limit(maxWeightRows + 1).collect()
-    if (denseRows.length > maxWeightRows)
-      throw new IllegalArgumentException(
-        s"dawid_skene: raters x labels^2 weight table exceeds the " +
-          s"documented driver bound ($maxWeightRows rows) — fit at a " +
-          "coarser rater/label grain or raise maxWeightRows explicitly")
+    val denseRows = LocalGate.collectBounded(denseDist, DsMaxWeightRows,
+      s"dawid_skene: raters x labels^2 weight table exceeds the documented driver " +
+        s"bound ($DsMaxWeightRows rows) — fit at a coarser rater/label grain")
     val dense = spark.createDataFrame(
       java.util.Arrays.asList(denseRows: _*), denseDist.schema)
     val prior = consensus.groupBy(col("truth")).agg(count(lit(1)).as("n0c"))

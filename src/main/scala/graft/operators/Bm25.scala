@@ -34,6 +34,12 @@ import graft.functions.TextFns
   */
 object Bm25 {
 
+  /** Word-shingle length of every BM25 term. */
+  private val N = 3
+  /** Textbook tf saturation (k1) and length norm (b); the oracle CTEs cite them. */
+  private[graft] val K1 = 1.2
+  private[graft] val B = 0.75
+
   /** The INCREMENTAL half of the index: per-document raw postings
     * (id, t, cnt, dl) — a pure function of EACH DOCUMENT ALONE (term
     * counts and length use no corpus statistics), so a micro-batch of
@@ -46,15 +52,14 @@ object Bm25 {
     * [[weightsFromPostings]] folds them over the accumulated store at
     * serving-read time, so late documents shift the statistics
     * without ever invalidating landed postings. */
-  def postingDeltas(docs: DataFrame, idCol: String, textCol: String,
-      n: Int = 3): DataFrame = {
+  def postingDeltas(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     val id = col(idCol)
     val tf = docs
       .repartition(id)
       .select(id, TextFns.tokens(col(textCol)).as("toks"))
       .select(id, col("toks"),
-        explode(TextFns.shinglePositions(col("toks"), n)).as("i"))
-      .select(id, TextFns.shingleAt(col("toks"), col("i"), n).as("t"))
+        explode(TextFns.shinglePositions(col("toks"), N)).as("i"))
+      .select(id, TextFns.shingleAt(col("toks"), col("i"), N).as("t"))
       .groupBy(id, col("t")).agg(count(lit(1)).as("cnt"))
     // per-doc length rides the tf exchange as a window sum
     val byDoc = org.apache.spark.sql.expressions.Window.partitionBy(id)
@@ -64,13 +69,12 @@ object Bm25 {
   /** Serving-read weight fold over an accumulated posting store:
     * identical arithmetic to [[postingIndex]], with n_docs/avgdl/df
     * recomputed from the postings themselves. For any corpus whose
-    * documents all carry ≥ n tokens this reproduces [[postingIndex]]
+    * documents all carry ≥ 3 tokens this reproduces [[postingIndex]]
     * EXACTLY (Bm25Spec pins it); documents too short to emit a single
     * shingle are invisible to the store — they drop out of the df
     * admission window's corpus count here, where the direct-scan
     * index still counts them. */
-  def weightsFromPostings(postings: DataFrame, idCol: String,
-      k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+  def weightsFromPostings(postings: DataFrame, idCol: String): DataFrame = {
     val id = col(idCol)
     val docLens = postings.select(id, col("dl")).distinct()
     val stats = docLens
@@ -82,23 +86,22 @@ object Bm25 {
       .select(col("t"), col("df"))
     postings.join(vocab, "t")
       .join(broadcast(stats)) // 1-row bounded
-      .select(id, col("t"), bm25Weight(k1, b).as("wgt"))
+      .select(id, col("t"), bm25Weight.as("wgt"))
   }
 
   /** The BM25 doc-side weight expression over (cnt, dl, df, n_docs,
     * avgdl) — shared verbatim by [[postingIndex]] and
     * [[weightsFromPostings]] so the two paths cannot drift. */
-  private def bm25Weight(k1: Double, b: Double): Column =
+  private def bm25Weight: Column =
     log(lit(1) + (col("n_docs") - col("df") + 0.5) / (col("df") + 0.5)) *
-      (col("cnt") * (k1 + 1)) /
-      (col("cnt") + lit(k1) * (col("dl") / col("avgdl") * b + (1 - b)))
+      (col("cnt") * (K1 + 1)) /
+      (col("cnt") + lit(K1) * (col("dl") / col("avgdl") * B + (1 - B)))
 
   /** The BM25 posting index: one row per (doc, admitted term) with the
     * final doc-side weight. Pure function of the corpus — reruns and
     * other engines reproduce it exactly (q137's DuckDB oracle replays
     * this arithmetic verbatim). */
   def postingIndex(docs: DataFrame, idCol: String, textCol: String,
-      n: Int = 3, k1: Double = 1.2, b: Double = 0.75,
       cutLineage: Boolean = true): DataFrame = {
     val id = col(idCol)
     // the raw posting build feeds both the df vocabulary and the weight
@@ -106,12 +109,12 @@ object Bm25 {
     // q137/q141/q142/q169/q213 but costs q212 (one cheap pass) 0.41 →
     // 1.15 s, so q212 passes cutLineage = false (LINEAGE_CUTS.md); the
     // arithmetic is identical either way (Bm25Spec pins it).
-    val tfRaw = postingDeltas(docs, idCol, textCol, n)
+    val tfRaw = postingDeltas(docs, idCol, textCol)
     val tf = if (cutLineage) tfRaw.localCheckpoint() else tfRaw
     // corpus stats from one narrow scan: a doc's shingle count is
-    // len(toks) - (n-1), so n_docs/avgdl never need the tf exchange
+    // len(toks) - (N-1), so n_docs/avgdl never need the tf exchange
     val stats = docs
-      .select((size(TextFns.tokens(col(textCol))) - (n - 1)).cast("double").as("dl"))
+      .select((size(TextFns.tokens(col(textCol))) - (N - 1)).cast("double").as("dl"))
       .filter(col("dl") >= 1)
       .agg(count(lit(1)).cast("double").as("n_docs"), avg(col("dl")).as("avgdl"))
     val nAll = docs.agg(count(lit(1)).cast("long").as("nd_all"))
@@ -121,7 +124,7 @@ object Bm25 {
       .select(col("t"), col("df"))
     tf.join(vocab, "t")
       .join(broadcast(stats)) // 1-row bounded
-      .select(id, col("t"), bm25Weight(k1, b).as("wgt"))
+      .select(id, col("t"), bm25Weight.as("wgt"))
   }
 
   /** Score a (qid, t) query-term set against a posting index — fresh
@@ -150,15 +153,15 @@ object Bm25 {
   /** Known-item retrieval in one call: every `querySelector` doc's
     * distinct terms retrieve top k from the whole corpus. */
   def topK(docs: DataFrame, idCol: String, textCol: String,
-      querySelector: Column, k: Int, n: Int = 3): DataFrame = {
-    val index = postingIndex(docs, idCol, textCol, n)
+      querySelector: Column, k: Int): DataFrame = {
+    val index = postingIndex(docs, idCol, textCol)
       .repartition(col("t")) // posting-list layout for the retrieval join
     val queries = docs.filter(querySelector)
       .repartition(col(idCol))
       .select(col(idCol), TextFns.tokens(col(textCol)).as("toks"))
       .select(col(idCol), col("toks"),
-        explode(TextFns.shinglePositions(col("toks"), n)).as("i"))
-      .select(col(idCol).as("qid"), TextFns.shingleAt(col("toks"), col("i"), n).as("t"))
+        explode(TextFns.shinglePositions(col("toks"), N)).as("i"))
+      .select(col(idCol).as("qid"), TextFns.shingleAt(col("toks"), col("i"), N).as("t"))
       .distinct()
     topKAgainstIndex(queries, index, idCol, k)
   }

@@ -94,20 +94,18 @@ object BradleyTerry {
       maxPairs: Int = 2000000): DataFrame = {
     val spark = state.sparkSession
     import spark.implicits._
-    val wins = state.select(col("winner"), col("loser"), col("n"))
-      .as[(String, String, Long)].limit(maxPairs + 1).collect().toSeq
-    if (wins.size > maxPairs)
-      throw new IllegalArgumentException(
-        s"bradley_terry: duel state exceeds the documented items^2 driver " +
-          s"bound ($maxPairs ordered pairs) — fit at a coarser item grain " +
-          "or raise maxPairs explicitly")
-    mmRounds(wins, rounds)
+    val wins = LocalGate.collectBounded(
+      state.select(col("winner"), col("loser"), col("n")).as[(String, String, Long)], maxPairs,
+      s"bradley_terry: duel state exceeds the documented items^2 driver " +
+        s"bound ($maxPairs ordered pairs) — fit at a coarser item grain " +
+        "or raise maxPairs explicitly")
+    mmRounds(wins.toSeq, rounds)
       .toDF("item", "n_wins", "n_losses", "theta_nano")
   }
 
   /** Fit strengths from a duels DataFrame with columns
     * (winner, loser) — one row per duel. The groupBy to (winner,
     * loser, n) is the one corpus-sized stage. */
-  def fit(duels: DataFrame, rounds: Int = 10): DataFrame =
+  def fit(duels: DataFrame, rounds: Int): DataFrame =
     fitFromCounts(duelState(duels), rounds)
 }

@@ -278,6 +278,11 @@ object Dedup {
         coalesce(col("n_dropped"), lit(0L)).as("n_dropped"))
   }
 
+  /** Rare shingles an [[editDistancePairs]] candidate must share (~100×
+    * fewer candidates): random docs often share one, while a near-dup
+    * within maxDist edits keeps all but O(maxDist) of its shingles. */
+  private val EditMinShared = 3
+
   /** Edit-distance near-dup pairs: shingle-blocked candidates (same
     * rare-shingle structure as `jaccardPairs` — NEVER all-pairs), then a
     * length-band prefilter (|len_a − len_b| > k rules the pair out
@@ -293,22 +298,18 @@ object Dedup {
     * @return (id_a, id_b, lev) with id_a < id_b and lev ≤ maxDist
     */
   def editDistancePairs(docs: DataFrame, idCol: String, textCol: String,
-      n: Int, maxDist: Int, maxDocFreq: Int, minShared: Int = 3): DataFrame = {
+      n: Int, maxDist: Int, maxDocFreq: Int): DataFrame = {
     // one sh-layout exchange shared by the df count and both self-join
     // sides (ReuseExchange) — see jaccardPairs
     val shBySh = shingleView(docs, idCol, textCol, n).repartition(col("sh"))
     val rare = shBySh.groupBy("sh").agg(count(lit(1)).as("df"))
       .filter(col("df") <= maxDocFreq && col("df") >= 2)
     val shRare = shBySh.join(rare.select("sh"), Seq("sh"))
-    // minShared cuts the candidate set ~100×: two RANDOM docs often share
-    // one "rare" shingle, but a true near-dup within maxDist edits keeps
-    // all but O(maxDist) of its shingles, so demanding a few shared ones
-    // loses nothing while the DP stage stops paying for coincidences
     val cand = shRare.as("a").join(shRare.as("b"),
         col("a.sh") === col("b.sh") && col("a.id") < col("b.id"))
       .groupBy(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .agg(count(lit(1)).as("n_shared"))
-      .filter(col("n_shared") >= minShared)
+      .filter(col("n_shared") >= EditMinShared)
     val t = docs.select(col(idCol).as("id"), col(textCol).as("txt"))
     cand
       .join(t.as("ta"), col("id_a") === col("ta.id"))
@@ -763,12 +764,10 @@ object Dedup {
     *                   new nodes or already-labeled ones
     * @return (node, comp) over labeled ∪ delta nodes, comp = min id of
     *         the merged component */
-  def incrementalComponents(labels: DataFrame, deltaEdges: DataFrame,
-      maxIter: Int = 20): DataFrame =
+  def incrementalComponents(labels: DataFrame, deltaEdges: DataFrame): DataFrame =
     connectedComponents(
       labels.select(col("node").as("id_a"), col("comp").as("id_b"))
-        .unionByName(deltaEdges.select(col("id_a"), col("id_b"))),
-      maxIter)
+        .unionByName(deltaEdges.select(col("id_a"), col("id_b"))))
 
   /** Keep one document per near-duplicate cluster: the min-id member of
     * each component survives, every other member is dropped, documents
@@ -802,23 +801,19 @@ object Dedup {
     * chunk pathological multi-hundred-MB documents upstream.
     * @return (id, fp) one row per distinct selected fingerprint
     */
-  /** @param carry metadata columns to ride along (one value per doc) —
-    *              carrying them beats joining them back on at the end
-    *              (the join's build side is unbounded at corpus scale) */
   def winnowFingerprints(docs: DataFrame, idCol: String, textCol: String,
-      w: Int, k: Int, carry: Seq[String] = Nil): DataFrame = {
+      w: Int, k: Int): DataFrame = {
     val norm = trim(regexp_replace(lower(col(textCol)), "\\s+", " "))
-    val carryCols = carry.map(col)
     docs
-      .select(col(idCol).as("id") +: carryCols :+ norm.as("norm"): _*)
+      .select(col(idCol).as("id"), norm.as("norm"))
       // need at least one FULL k-gram window: npos = len-(w-1) >= k
       .filter(length(col("norm")) >= w + k - 1)
       // native single-pass winnow (plans/WinnowExpr): identical md5
       // fingerprint values to the declarative two-transform form it
       // replaced (bit-parity in WinnowExprSpec), but O(n) deque minima
       // and no interpreted HOF per element
-      .select(col("id") +: carryCols :+
-        explode(graft.plans.WinnowExpr.winnow(col("norm"), w, k)).as("fp"): _*)
+      .select(col("id"),
+        explode(graft.plans.WinnowExpr.winnow(col("norm"), w, k)).as("fp"))
   }
 
   /** Per-document count of distinct winnowing fingerprints, IN-ROW:
@@ -827,9 +822,11 @@ object Dedup {
     * fingerprint-grain exchange, no re-group (guide §2.4: remove
     * shuffles outright). Same normalization and length gate as
     * [[winnowFingerprints]]; `n_fp` equals exactly the per-id row count
-    * of that method's output. */
+    * of that method's output. `carry` columns (one value per doc) ride
+    * along — carrying them beats joining them back on at the end (the
+    * join's build side is unbounded at corpus scale). */
   def winnowFingerprintCounts(docs: DataFrame, idCol: String, textCol: String,
-      w: Int, k: Int, carry: Seq[String] = Nil): DataFrame = {
+      w: Int, k: Int, carry: Seq[String]): DataFrame = {
     val norm = trim(regexp_replace(lower(col(textCol)), "\\s+", " "))
     val carryCols = carry.map(col)
     docs

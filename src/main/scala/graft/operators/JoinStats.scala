@@ -44,17 +44,19 @@ object JoinStats {
       .select(col("key"), col("n_rows"),
         expr("n_rows * (n_rows - 1) div 2").as("pairs"))
 
+  /** Decimal places of [[hotKeys]]' `pct_of_total`. */
+  private val PctDigits = 4
+
   /** Top-`k` hottest keys of a per-key forecast (by the `weight` column),
     * each annotated with the forecast total and its percent share — the
     * skew report. The total is a 1-row broadcast; the top-k pick is a
     * TakeOrdered, so nothing beyond the key-grain relation ever moves. */
-  def hotKeys(forecast: DataFrame, weight: String, k: Int,
-      roundPct: Int = 4): DataFrame = {
+  def hotKeys(forecast: DataFrame, weight: String, k: Int): DataFrame = {
     val tot = forecast.agg(sum(col(weight)).as("total"))
     forecast.crossJoin(broadcast(tot))
       .orderBy(col(weight).desc, col("key"))
       .limit(k)
       .withColumn("pct_of_total",
-        round(col(weight).cast("double") * 100 / col("total"), roundPct))
+        round(col(weight).cast("double") * 100 / col("total"), PctDigits))
   }
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions.col
 
 /** The size gate every iterate-class operator sits behind: when an
@@ -25,6 +25,16 @@ import org.apache.spark.sql.functions.col
   * process, so the plans that would actually run at 100× scale can be
   * wall-clocked against their local twins. Specs use [[withOverride]].
   * Never set in production code paths.
+  *
+  * Settable values, one rule for the whole library: a default-valued
+  * parameter on a non-private def in src/main stays settable only when
+  * (a) callers outside src/test pass different values, (b) it is a
+  * deployment setting (core count, app name, a path), or (c) a named
+  * spec sets it to reach a branch no fixture reaches at the default
+  * ([[take]]'s `probeRowLimit`). Every other default is a named
+  * constant, private unless a spec or an oracle cites it, like the
+  * limits below. SettableValuesSpec holds the code to COVERAGE.md's
+  * "Settable values" table.
   */
 object LocalGate {
 
@@ -79,6 +89,14 @@ object LocalGate {
     * gate (input types its local kernel does not cover). */
   def nonNull(frame: DataFrame, cols: Seq[String]): DataFrame =
     frame.where(cols.map(c => col(c).isNotNull).reduce[Column](_ && _))
+
+  /** Collect a KB-scale model or state in one `limit(bound + 1)` job;
+    * past `bound` rows, refuse with `refusal`, naming the precondition. */
+  def collectBounded[T](frame: Dataset[T], bound: Int, refusal: String): Array[T] = {
+    val rows = frame.limit(bound + 1).collect()
+    if (rows.length > bound) throw new IllegalArgumentException(refusal)
+    rows
+  }
 
   /** Run `body` with the gate override set to `limit` (0 forces every
     * gate distributed), restoring the previous setting after. */

@@ -22,7 +22,8 @@ import org.apache.spark.sql.types._
   * the mapPartitions batch shape (one decoder chain per partition,
   * streaming iterator — the exact shape a JNI/FFmpeg decoder needs),
   * and the row-preserving contract. Dropping in a WebP/video pixel
-  * codec = adding one [[ImageCodec]] instance; nothing else moves.
+  * codec = adding one [[ImageCodec]] instance to [[DefaultCodecs]];
+  * nothing else moves.
   */
 object Multimodal {
 
@@ -275,14 +276,13 @@ object Multimodal {
     * iterator drains. The iterator is lazy — no partition-sized
     * materialization.
     */
-  def decodeImageMeta(df: DataFrame, payloadCol: String,
-      codecs: Seq[ImageCodec] = DefaultCodecs): DataFrame = {
+  def decodeImageMeta(df: DataFrame, payloadCol: String): DataFrame = {
     val schema = StructType(df.schema.fields :+ StructField("meta", MetaSchema))
     val idx = df.schema.fieldIndex(payloadCol)
     val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(schema)
     df.mapPartitions { rows =>
       // per-partition decoder init goes here (real codec: open once)
-      val chain = codecs
+      val chain = DefaultCodecs
       rows.map { row =>
         val bytes = row.getAs[Array[Byte]](idx)
         val (w, h, f) = chain.view.flatMap(_.decode(bytes)).headOption
@@ -468,6 +468,10 @@ object Multimodal {
     }(enc)
   }
 
+  /** dHash grid: (8−1)·8 = 56 bits, a non-negative BIGINT in every engine. */
+  private val DHashW = 8
+  private val DHashH = 8
+
   /** Difference-hash (dHash) perceptual fingerprint — the image
     * near-dup primitive (Krawetz's dHash; the image-side analogue of
     * the text SimHash family): decode, nearest-neighbor downsample to
@@ -484,12 +488,9 @@ object Multimodal {
     * `(299r + 587g + 114b) / 1000` — pure int arithmetic, so a gray
     * input (r=g=b=v) maps to exactly v and the hash is relationally
     * replayable. Payloads `javax.imageio` cannot read hash to NULL
-    * (the [[decodePixelStats]] contract). `(w−1)·h` must stay ≤ 62 so
-    * the packed hash is a non-negative BIGINT in every engine. */
-  def perceptualHash(df: DataFrame, payloadCol: String,
-      w: Int = 8, h: Int = 8): DataFrame = {
-    require(w >= 2 && h >= 1 && (w - 1) * h <= 62,
-      s"dHash grid ${w}x$h must fit 62 bits")
+    * (the [[decodePixelStats]] contract). */
+  def perceptualHash(df: DataFrame, payloadCol: String): DataFrame = {
+    val (w, h) = (DHashW, DHashH)
     val idx = df.schema.fieldIndex(payloadCol)
     val schema = StructType(df.schema.fields :+
       StructField("phash", LongType, nullable = true))
@@ -744,13 +745,12 @@ object Multimodal {
 
   /** Attach decoded audio metadata; same mapPartitions seam and
     * row-preserving contract as [[decodeImageMeta]]. */
-  def decodeAudioMeta(df: DataFrame, payloadCol: String,
-      codecs: Seq[AudioCodec] = DefaultAudioCodecs): DataFrame = {
+  def decodeAudioMeta(df: DataFrame, payloadCol: String): DataFrame = {
     val schema = StructType(df.schema.fields :+ StructField("audio_meta", AudioMetaSchema))
     val idx = df.schema.fieldIndex(payloadCol)
     val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(schema)
     df.mapPartitions { rows =>
-      val chain = codecs
+      val chain = DefaultAudioCodecs
       rows.map { row =>
         val bytes = row.getAs[Array[Byte]](idx)
         val (ch, rate, bits, dur, f) = chain.view.flatMap(_.decode(bytes)).headOption
@@ -973,13 +973,12 @@ object Multimodal {
     Seq(Mp4Codec, WebmCodec, AviCodec, VideoStubCodec)
 
   /** Attach decoded video metadata; same seam as [[decodeImageMeta]]. */
-  def decodeVideoMeta(df: DataFrame, payloadCol: String,
-      codecs: Seq[VideoCodec] = DefaultVideoCodecs): DataFrame = {
+  def decodeVideoMeta(df: DataFrame, payloadCol: String): DataFrame = {
     val schema = StructType(df.schema.fields :+ StructField("video_meta", VideoMetaSchema))
     val idx = df.schema.fieldIndex(payloadCol)
     val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(schema)
     df.mapPartitions { rows =>
-      val chain = codecs
+      val chain = DefaultVideoCodecs
       rows.map { row =>
         val bytes = row.getAs[Array[Byte]](idx)
         val (w, h, dur, f) = chain.view.flatMap(_.decode(bytes)).headOption

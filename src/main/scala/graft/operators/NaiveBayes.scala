@@ -43,6 +43,9 @@ object NaiveBayes {
     * numerator) inside the one additive state. */
   val DocCountBucket = -1L
 
+  /** Label bound of a [[classify]] model: MaxLabels × (Dim + 1) rows. */
+  private[graft] val MaxLabels = 64
+
   /** 0-based feature bucket of one token — [[Dedup.portableHash60]]
     * reduced mod [[Dim]] (the QualityModel/q234 convention; DuckDB
     * twin: `('0x' || substr(md5(t), 1, 15))::BIGINT % Dim`). */
@@ -106,10 +109,9 @@ object NaiveBayes {
     * aggregate). Documents with zero tokens score on the prior alone.
     *
     * The model is COLLECTED once (the KB-scale learned-parameter /
-    * codebook class, the BradleyTerry.fitFromCounts loud-guard
-    * discipline: limit-bounded read, refuse past `maxLabels`×(Dim+1)
-    * rows) and re-created as a LocalRelation, so the training subplan
-    * executes exactly once AND the two broadcasts below are PROVABLY
+    * codebook class, [[LocalGate.collectBounded]] past [[MaxLabels]] ×
+    * (Dim+1) rows) and re-created as a LocalRelation, so the training
+    * subplan executes exactly once AND the two broadcasts below are PROVABLY
     * bounded for the registry-wide broadcast sweep — a localCheckpoint
     * would hide the bound behind an opaque LogicalRDD. The collected
     * model must be non-empty and dense — exactly Dim weight rows plus
@@ -117,16 +119,13 @@ object NaiveBayes {
     * IllegalArgumentException.
     * @return (idCol, predicted) */
   def classify(docs: DataFrame, idCol: String, textCol: String,
-      model: DataFrame, maxLabels: Int = 64): DataFrame = {
+      model: DataFrame): DataFrame = {
     val spark = model.sparkSession
-    val bound = maxLabels * (Dim + 1)
+    val bound = MaxLabels * (Dim + 1)
     val proj = model.select(col("label"), col("b"), col("w"))
-    val rows = proj.limit(bound + 1).collect()
-    if (rows.length > bound)
-      throw new IllegalArgumentException(
-        s"naive_bayes: model exceeds the documented labels x (Dim+1) driver " +
-          s"bound ($bound rows at maxLabels=$maxLabels) — classify with a " +
-          "coarser label domain or raise maxLabels explicitly")
+    val rows = LocalGate.collectBounded(proj, bound, "naive_bayes: model exceeds the " +
+      s"documented labels x (Dim+1) driver bound ($bound rows at MaxLabels=$MaxLabels)" +
+      " — classify with a coarser label domain")
     // the scoring below assumes the DENSE model shape: an empty model
     // would NULL-predict zero-token docs and drop every tokenized one,
     // and a missing (label, bucket) row would silently drop that

@@ -53,20 +53,23 @@ object PageRank {
     * ≈ 100 MB serialized — the conventional broadcast ceiling. */
   val BroadcastNodeLimit: Long = 4L << 20
 
+  /** Brin–Page damping (follow an out-edge, else teleport); the rank oracles cite it. */
+  val Damping = 0.85
+
   /** @param edges directed edges, columns (src, dst); duplicates
     *              count as parallel edges (weight = multiplicity);
     *              edges with a NULL endpoint are dropped on both paths
     *              ([[LocalGate]]'s NULL rule).
     * @return      one row per node with out-edges: (node, pr)
     */
-  def run(edges: DataFrame, iterations: Int, damping: Double = 0.85): DataFrame = {
+  def run(edges: DataFrame, iterations: Int): DataFrame = {
     import edges.sparkSession.implicits._
     LocalGate(edges, Seq("src", "dst"), LocalGate.EdgeLimit, "pagerank") match {
       case LocalGate.Local(es) => runLocal(edges.sparkSession,
-        edges.schema("src").dataType, es, iterations, damping, seeds = None)
-      case LocalGate.Distributed(e) => loop(e, iterations, damping,
+        edges.schema("src").dataType, es, iterations, Damping, seeds = None)
+      case LocalGate.Distributed(e) => loop(e, iterations, Damping,
         init = lit(1.0) / $"n_nodes",
-        teleport = lit(1.0 - damping) / $"n_nodes")
+        teleport = lit(1.0 - Damping) / $"n_nodes")
     }
   }
 
@@ -74,18 +77,17 @@ object PageRank {
     * instead of everywhere, so ranks measure proximity to the seed set
     * (the "related items / similar users" graph feature). Identical
     * one-join-per-round plan; only the two rank expressions differ. */
-  def runPersonalized(edges: DataFrame, iterations: Int, seeds: Seq[Long],
-      damping: Double = 0.85): DataFrame = {
+  def runPersonalized(edges: DataFrame, iterations: Int, seeds: Seq[Long]): DataFrame = {
     require(seeds.nonEmpty, "personalized PageRank needs a seed set")
     import edges.sparkSession.implicits._
     LocalGate(edges, Seq("src", "dst"), LocalGate.EdgeLimit, "pagerank") match {
       case LocalGate.Local(es) => runLocal(edges.sparkSession,
-        edges.schema("src").dataType, es, iterations, damping, seeds = Some(seeds))
+        edges.schema("src").dataType, es, iterations, Damping, seeds = Some(seeds))
       case LocalGate.Distributed(e) =>
         val seedMass = 1.0 / seeds.size
-        loop(e, iterations, damping,
+        loop(e, iterations, Damping,
           init = when($"node".isin(seeds: _*), lit(seedMass)).otherwise(lit(0.0)),
-          teleport = when($"node".isin(seeds: _*), lit((1.0 - damping) * seedMass))
+          teleport = when($"node".isin(seeds: _*), lit((1.0 - Damping) * seedMass))
             .otherwise(lit(0.0)))
     }
   }

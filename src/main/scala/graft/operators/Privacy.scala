@@ -40,12 +40,15 @@ object Privacy {
       .agg(count(lit(1)).as("c"))
   }
 
+  /** The k of k-anonymity [[audit]] enforces; [[tCloseness]]'s release bar. */
+  private val K = 5
+  private val T = 0.3
+
   /** The release audit over [[classState]] output: per `reportCol`
     * (one of the QI columns) — row/class counts, the smallest class
-    * (k of k-anonymity), the suppression cost of enforcing `k`, and
+    * (k of k-anonymity), the suppression cost of enforcing [[K]], and
     * the l-diversity floor. Matches the registered q215 semantics. */
-  def audit(state: DataFrame, qiCols: Seq[String], reportCol: String,
-      k: Int = 5): DataFrame = {
+  def audit(state: DataFrame, qiCols: Seq[String], reportCol: String): DataFrame = {
     require(qiCols.contains(reportCol),
       s"audit: reportCol '$reportCol' must be one of the QI columns $qiCols")
     require(!qiCols.contains("c"),
@@ -66,9 +69,9 @@ object Privacy {
       .agg(sum(col("sz")).as("n_rows"),
         count(lit(1)).as("n_classes"),
         min(col("sz")).as("k_min"),
-        sum(when(col("sz") < k, 1L).otherwise(0L)).as("classes_below_k"),
-        sum(when(col("sz") < k, col("sz")).otherwise(0L)).as("rows_suppressed"),
-        round(sum(when(col("sz") < k, col("sz")).otherwise(0L)).cast("double")
+        sum(when(col("sz") < K, 1L).otherwise(0L)).as("classes_below_k"),
+        sum(when(col("sz") < K, col("sz")).otherwise(0L)).as("rows_suppressed"),
+        round(sum(when(col("sz") < K, col("sz")).otherwise(0L)).cast("double")
           / sum(col("sz")), 6).as("pct_suppressed"),
         min(col("l_div")).as("min_l_diversity"),
         round(sum(col("l_div")).cast("double") / count(lit(1)), 6)
@@ -82,7 +85,7 @@ object Privacy {
     * sensitive-value distribution and the GLOBAL one —
     * t_c = ½ Σ_v |p_c(v) − p(v)| — then per `reportCol`: worst and
     * mean class distance, and the classes/rows past the release
-    * threshold `t`. Completes the release-audit family: k-anonymity
+    * threshold [[T]]. Completes the release-audit family: k-anonymity
     * bounds re-identification, l-diversity bounds value disclosure
     * within a class, t-closeness bounds what a class reveals RELATIVE
     * to background knowledge (a 5-anonymous, 3-diverse class still
@@ -101,7 +104,7 @@ object Privacy {
     * canonicalization), so the standing streaming monitor serves this
     * from the identical fold. */
   def tCloseness(state: DataFrame, qiCols: Seq[String], sensCol: String,
-      reportCol: String, t: Double = 0.3): DataFrame = {
+      reportCol: String): DataFrame = {
     require(qiCols.contains(reportCol),
       s"tCloseness: reportCol '$reportCol' must be one of the QI columns $qiCols")
     require(!(qiCols :+ sensCol).contains("c"),
@@ -129,7 +132,7 @@ object Privacy {
           .cast("double")
           / (lit(2L) * col("sz") * col("n")).cast("double") * 1e9)
           .cast("long"))
-    val tLong = math.round(t * 1e9)
+    val tLong = math.round(T * 1e9)
     tq.groupBy(col(reportCol))
       .agg(count(lit(1)).as("n_classes"),
         round(max(col("tq")).cast("double") / 1e9, 6).as("max_t"),

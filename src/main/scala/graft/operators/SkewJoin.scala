@@ -42,12 +42,17 @@ object SkewJoin {
     salted.join(replicated, Seq(key, "__salt"), joinType).drop("__salt")
   }
 
-  /** [[saltedJoin]] behind a measured-skew gate: ONE partial-aggregated
-    * count job probes the left side's key histogram (shuffle bytes =
-    * distinct keys, the count itself map-side-combines), and the salted
-    * plan runs only when some key's row count exceeds
-    * `max(minHotRows, skewRatio × totalRows / shufflePartitions)` —
-    * i.e. one post-shuffle partition would hold more than `skewRatio`×
+  /** [[saltedJoinIfSkewed]]'s hot bar in fair per-partition shares —
+    * earlier than AQE's 5× the MEDIAN partition, since crossing it also
+    * pins the downstream same-key aggregation AQE can't split. */
+  private val SkewRatio = 2.0
+
+  /** [[saltedJoin]] (inner) behind a measured-skew gate: ONE
+    * partial-aggregated count job probes the left side's key histogram
+    * (shuffle bytes = distinct keys, the count itself map-side-combines),
+    * and the salted plan runs only when some key's row count exceeds
+    * `max(minHotRows, SkewRatio × totalRows / shufflePartitions)` —
+    * i.e. one post-shuffle partition would hold more than `SkewRatio`×
     * its fair share from that single key. Below the bar the plain join
     * runs: salting there pays `saltFactor`× right-side replication to
     * solve a problem AQE's skew split already covers (and a problem
@@ -55,34 +60,27 @@ object SkewJoin {
     * oracle salting an unskewed key).
     *
     * The probe is one cheap extra job per call; callers that KNOW the
-    * key is hot (or that join inside a loop and can't re-probe) call
-    * [[saltedJoin]] directly.
+    * key is hot (or that join inside a loop and can't re-probe), or
+    * that need an outer join, call [[saltedJoin]] directly.
     *
-    * @param skewRatio  hot bar as a multiple of the fair per-partition
-    *                   share; 2.0 ≈ "one key alone overfills a
-    *                   partition 2×" (AQE's own skew factor is 5× the
-    *                   MEDIAN partition — this bar is deliberately
-    *                   earlier, since crossing it also pins the
-    *                   downstream same-key aggregation AQE can't split)
     * @param minHotRows absolute floor for "hot": below this row count a
     *                   key fits any executor regardless of ratio, so
     *                   tiny inputs never salt. 0 = ratio alone decides.
     */
   def saltedJoinIfSkewed(left: DataFrame, right: DataFrame, key: String,
-      saltFactor: Int, joinType: String = "inner",
-      saltCols: Seq[String] = Nil, skewRatio: Double = 2.0,
+      saltFactor: Int, saltCols: Seq[String] = Nil,
       minHotRows: Long = 0L): DataFrame = {
     val probe = left.groupBy(col(key)).agg(count(lit(1)).as("__c"))
       .agg(max(col("__c")).as("mx"), sum(col("__c")).as("n")).head()
     if (probe.isNullAt(0))
-      return left.join(right, Seq(key), joinType) // empty left side
+      return left.join(right, Seq(key), "inner") // empty left side
     val (mx, n) = (probe.getLong(0), probe.getLong(1))
     val parts = math.max(1, left.sparkSession.sessionState.conf.numShufflePartitions)
-    val hotBar = math.max(minHotRows, (skewRatio * n / parts).toLong)
+    val hotBar = math.max(minHotRows, (SkewRatio * n / parts).toLong)
     val hot = mx > hotBar
     System.err.println(s"[graft.skewjoin] maxKeyRows=$mx totalRows=$n " +
       s"hotBar=$hotBar path=${if (hot) "salted" else "plain"}")
-    if (hot) saltedJoin(left, right, key, saltFactor, joinType, saltCols)
-    else left.join(right, Seq(key), joinType)
+    if (hot) saltedJoin(left, right, key, saltFactor, "inner", saltCols)
+    else left.join(right, Seq(key), "inner")
   }
 }

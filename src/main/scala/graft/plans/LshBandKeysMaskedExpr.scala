@@ -109,7 +109,7 @@ object LshBandKeysMaskedExpr {
       seed: Long): Array[ArrayData] =
     Array.tabulate(maxBands * maxBitsPerBand) { plane =>
       ArrayData.toArrayData(
-        graft.functions.VectorFns.lshCoefs(plane, dim, seed).toArray)
+        graft.functions.VectorFns.planeCoefs(plane, dim, seed).toArray)
     }
 
   /** Shared by interpreted eval and generated code. The output array

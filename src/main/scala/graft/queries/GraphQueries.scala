@@ -12,7 +12,6 @@ import graft.sources.Tables
   */
 object GraphQueries {
 
-  private val Damping = 0.85
   private val Iters = 8
   private val SinceDate = "1997-01-01"
 
@@ -143,7 +142,8 @@ object GraphQueries {
     * uniform teleport with a seed indicator. The teleport constant is
     * the Scala-computed double rendered exactly, so both dialects
     * iterate with bit-identical coefficients. */
-  private def rankOracle(iters: Int, damping: Double, seed: Option[Long]): String = {
+  private def rankOracle(iters: Int, seed: Option[Long]): String = {
+    val damping = PageRank.Damping
     val tele = 1.0 - damping
     val (r0, rank) = seed match {
       case None => (
@@ -182,10 +182,10 @@ object GraphQueries {
     * the two rank expressions change; see PageRank.runPersonalized). */
   val q112PersonalizedPagerank = Q(
     "q112_personalized_pagerank",
-    rankOracle(PprIters, Damping, Some(SeedNode))) { (spark, dir) =>
+    rankOracle(PprIters, Some(SeedNode))) { (spark, dir) =>
     val pairs = tradePairs(spark, dir)
     val edges = bothWays(pairs)
-    val pr = PageRank.runPersonalized(edges, PprIters, Seq(SeedNode), Damping)
+    val pr = PageRank.runPersonalized(edges, PprIters, Seq(SeedNode))
     pairs.unpersist(false)
     pr.select(nodeLabel, round(col("pr"), 7).as("pr"))
       .orderBy(col("node"))
@@ -202,10 +202,10 @@ object GraphQueries {
     * flake the row set. */
   val q76Pagerank = Q(
     "q76_pagerank",
-    rankOracle(Iters, Damping, None)) { (spark, dir) =>
+    rankOracle(Iters, None)) { (spark, dir) =>
     val pairs = tradePairs(spark, dir)
     val edges = bothWays(pairs)
-    val pr = PageRank.run(edges, Iters, Damping) // eager: computed here
+    val pr = PageRank.run(edges, Iters) // eager: computed here
     pairs.unpersist(false)
     pr.select(nodeLabel, round(col("pr"), 7).as("pr"))
       .orderBy(col("node"))

@@ -3172,7 +3172,7 @@ object RelationalQueries {
         Tables.customer(spark, dir)
           .withColumn("bal_band", floor(col("c_acctbal") / 1000).cast("long")),
         Seq("c_nationkey", "bal_band"), "c_mktsegment"),
-      Seq("c_nationkey", "bal_band"), "c_mktsegment", "c_nationkey", t = 0.3)
+      Seq("c_nationkey", "bal_band"), "c_mktsegment", "c_nationkey")
   }
 
   /** q216's shared constants: feature dimension, iteration budget, and

@@ -1894,7 +1894,8 @@ object TextQueries {
     * `docCols`), the trigram shingles, tf, doc lengths, the df ∈
     * [2, dfMaxForCorpus] vocabulary and the precomputed doc-side weight
     * `w(doc_id, t, wgt)` = idf × tf saturation × length norm. */
-  private def bm25IndexCtes(docCols: String): String =
+  private def bm25IndexCtes(docCols: String): String = {
+    import Bm25.{B, K1}
     s"""docs AS (
        |  SELECT $docCols, string_split_regex(lower(text), '\\s+') AS tk
        |  FROM documents),
@@ -1915,9 +1916,10 @@ object TextQueries {
        |w AS (
        |  SELECT tf.doc_id, tf.t,
        |    ln(1 + (s.n_docs - v.df + 0.5) / (v.df + 0.5)) *
-       |      (tf.cnt * 2.2) / (tf.cnt + 1.2 * (0.25 + 0.75 * d.dl / s.avgdl)) AS wgt
+       |      (tf.cnt * ${K1 + 1}) / (tf.cnt + $K1 * (${1 - B} + $B * d.dl / s.avgdl)) AS wgt
        |  FROM tf JOIN vocab v ON tf.t = v.t
        |  JOIN dl d ON d.doc_id = tf.doc_id CROSS JOIN stats s)""".stripMargin
+  }
 
   /** MMR rerank at its deployed config (Carbonell–Goldstein, λ = 0.5):
     * three greedy picks over `cand(qid, doc_id, rel)`, each later round

@@ -61,7 +61,7 @@ object Sinks {
     * one-time layout cost. sortBy makes each bucket file sort-merge-ready
     * (no per-task sort either). */
   def writeBucketed(df: DataFrame, table: String, nBuckets: Int,
-      bucketCols: Seq[String], sortCols: Seq[String] = Nil): Unit = {
+      bucketCols: Seq[String], sortCols: Seq[String]): Unit = {
     val w = df.write.mode("overwrite")
       .bucketBy(nBuckets, bucketCols.head, bucketCols.tail: _*)
     (if (sortCols.nonEmpty) w.sortBy(sortCols.head, sortCols.tail: _*) else w)

@@ -1,7 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.types.StructType
 
 /** Structured Streaming surface (SURVEY §2.10). The reference is a finite
@@ -16,20 +18,29 @@ import org.apache.spark.sql.types.StructType
   */
 object StreamOps {
 
+  /** Files a [[parquetStream]] reads per micro-batch. */
+  private val FilesPerTrigger = 1
+  /** Event-time lateness every watermarked operator here tolerates. */
+  private val Watermark = "2 hours"
+  /** Count-min shape of [[sketchedTypeCounts]]: rows × counters. */
+  private val SketchDepth = 4
+  private val SketchWidth = 256
+  /** Word-shingle length of the span fingerprint store and its read. */
+  private val SpanN = 8
+
   /** File-source stream over a directory of parquet (schema must be
     * supplied — streaming sources cannot infer). */
-  def parquetStream(spark: SparkSession, schema: StructType, path: String,
-      filesPerTrigger: Int = 1): DataFrame =
+  def parquetStream(spark: SparkSession, schema: StructType, path: String): DataFrame =
     spark.readStream
       .schema(schema)
-      .option("maxFilesPerTrigger", filesPerTrigger)
+      .option("maxFilesPerTrigger", FilesPerTrigger)
       .parquet(path)
 
   /** Tumbling event-time counts with a watermark — the streaming twin of
     * EventQueries.q19HourlyAgg. */
-  def hourlyCounts(events: DataFrame, watermark: String = "2 hours"): DataFrame =
+  def hourlyCounts(events: DataFrame): DataFrame =
     events
-      .withWatermark("ts", watermark)
+      .withWatermark("ts", Watermark)
       .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
       .agg(count(lit(1)).as("n"), sum(col("value")).as("total_value"))
       .select(col("w.start").as("hour_start"), col("event_type"), col("n"), col("total_value"))
@@ -37,18 +48,17 @@ object StreamOps {
   /** Sliding event-time counts — streaming twin of q20SlidingAgg. Each
     * event lands in windowSize/slide windows; state per (window, type)
     * is evicted once the watermark passes the window end. */
-  def slidingCounts(events: DataFrame, windowSize: String, slide: String,
-      watermark: String = "2 hours"): DataFrame =
+  def slidingCounts(events: DataFrame, windowSize: String, slide: String): DataFrame =
     events
-      .withWatermark("ts", watermark)
+      .withWatermark("ts", Watermark)
       .groupBy(window(col("ts"), windowSize, slide).as("w"), col("event_type"))
       .agg(count(lit(1)).as("n"))
       .select(col("w.start").as("win_start"), col("event_type"), col("n"))
 
   /** Session windows with watermark — streaming twin of q21Sessions. */
-  def userSessions(events: DataFrame, gap: String, watermark: String = "2 hours"): DataFrame =
+  def userSessions(events: DataFrame, gap: String): DataFrame =
     events
-      .withWatermark("ts", watermark)
+      .withWatermark("ts", Watermark)
       .groupBy(col("user_id"), session_window(col("ts"), gap))
       .agg(count(lit(1)).as("n_events"))
 
@@ -59,10 +69,9 @@ object StreamOps {
     * agg has no rank, so the collect is session-sized — bounded in
     * practice by the session gap + watermark horizon, which caps how
     * long any session can stay open. */
-  def sessionSequences(events: DataFrame, gap: String, maxLen: Int,
-      watermark: String = "2 hours"): DataFrame =
+  def sessionSequences(events: DataFrame, gap: String, maxLen: Int): DataFrame =
     events
-      .withWatermark("ts", watermark)
+      .withWatermark("ts", Watermark)
       .groupBy(col("user_id"), session_window(col("ts"), gap))
       .agg(count(lit(1)).as("n_events"),
         concat_ws(" ", slice(transform(
@@ -71,9 +80,8 @@ object StreamOps {
 
   /** Exactly-once event dedup with bounded state: drops events whose key
     * re-appears within the watermark horizon. */
-  def dedupWithinWatermark(events: DataFrame, keys: Seq[String],
-      watermark: String = "2 hours"): DataFrame =
-    events.withWatermark("ts", watermark)
+  def dedupWithinWatermark(events: DataFrame, keys: Seq[String]): DataFrame =
+    events.withWatermark("ts", Watermark)
       .dropDuplicatesWithinWatermark(keys)
 
   /** Custom keyed state via flatMapGroupsWithState (SURVEY §2.10 "custom
@@ -241,10 +249,9 @@ object StreamOps {
     * bounded — Spark evicts buffered rows once the watermark passes the
     * interval's reach (the unbounded-state trap of naive stream joins). */
   def intervalJoin(left: DataFrame, right: DataFrame, key: String,
-      leftTs: String, rightTs: String, lower: String, upper: String,
-      watermark: String = "2 hours"): DataFrame = {
-    val l = left.withWatermark(leftTs, watermark).alias("l")
-    val r = right.withWatermark(rightTs, watermark).alias("r")
+      leftTs: String, rightTs: String, lower: String, upper: String): DataFrame = {
+    val l = left.withWatermark(leftTs, Watermark).alias("l")
+    val r = right.withWatermark(rightTs, Watermark).alias("r")
     l.join(r,
       col(s"l.$key") === col(s"r.$key") &&
         col(s"r.$rightTs") >= col(s"l.$leftTs") + expr(s"INTERVAL $lower") &&
@@ -259,14 +266,13 @@ object StreamOps {
     * CountMin.agg merge path), so the streamed sketch is bit-identical
     * to the batch sketch over the same rows. Contrast with exact
     * per-key streaming counts, whose state grows with the key space. */
-  def sketchedTypeCounts(events: DataFrame, depth: Int = 4,
-      width: Int = 256): DataFrame = {
+  def sketchedTypeCounts(events: DataFrame): DataFrame = {
     import graft.operators.Dedup
     import graft.functions.CountMin
     events
       .select(Dedup.portableShingleHash(col("event_type")).as("x"))
-      .agg(CountMin.sketch(col("x"), depth, width,
-        Dedup.minhashParams(depth), Dedup.MinhashP).as("sk"))
+      .agg(CountMin.sketch(col("x"), SketchDepth, SketchWidth,
+        Dedup.minhashParams(SketchDepth), Dedup.MinhashP).as("sk"))
   }
 
   /** Streaming mergeable quantile histogram — the q134 sketch as
@@ -474,17 +480,11 @@ object StreamOps {
     * query's file-source log skips already-ingested files
     * (StreamOpsSpec restart drill pins no re-emit / no loss). */
   def bm25IndexDeltas(newDocs: DataFrame, idCol: String, textCol: String,
-      outDir: String, checkpointDir: String, n: Int = 3): Unit = {
-    val q = newDocs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        graft.operators.Bm25.postingDeltas(batch, idCol, textCol, n)
-          .write.mode("overwrite").parquet(s"$outDir/batch_id=$id")
-      }
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-  }
+      outDir: String, checkpointDir: String): Unit =
+    drainBatches(newDocs.writeStream, checkpointDir) { (batch, id) =>
+      graft.operators.Bm25.postingDeltas(batch, idCol, textCol)
+        .write.mode("overwrite").parquet(s"$outDir/batch_id=$id")
+    }
 
   /** Incremental verbatim-span fingerprint store — the q234 novelty
     * screen's train side as an append-only stream (the
@@ -497,18 +497,11 @@ object StreamOps {
     * duplicating). Survives a checkpoint bounce like the BM25 store
     * (file-source log skips ingested files — StreamOpsSpec drill). */
   def spanFingerprintDeltas(newDocs: DataFrame, idCol: String,
-      textCol: String, outDir: String, checkpointDir: String,
-      n: Int = 8): Unit = {
-    val q = newDocs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        graft.operators.Dedup.spanFingerprints(batch, idCol, textCol, n)
-          .write.mode("overwrite").parquet(s"$outDir/batch_id=$id")
-      }
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-  }
+      textCol: String, outDir: String, checkpointDir: String): Unit =
+    drainBatches(newDocs.writeStream, checkpointDir) { (batch, id) =>
+      graft.operators.Dedup.spanFingerprints(batch, idCol, textCol, SpanN)
+        .write.mode("overwrite").parquet(s"$outDir/batch_id=$id")
+    }
 
   /** The serving read over [[spanFingerprintDeltas]]' accumulated
     * store: per test document, its distinct span count and how many of
@@ -519,14 +512,13 @@ object StreamOps {
     * memorization screening). The store side is read as DISTINCT
     * fingerprints — duplicates across deltas (the same span arriving
     * in several batches) must not double-count.
-    * @return (id, carry..., n_spans, n_seen) */
+    * @return (id, n_spans, n_seen) */
   def noveltyAgainstStore(spark: SparkSession, storeDir: String,
-      testDocs: DataFrame, idCol: String, textCol: String, n: Int = 8,
-      carry: Seq[String] = Nil): DataFrame = {
+      testDocs: DataFrame, idCol: String, textCol: String): DataFrame = {
     val store = spark.read.parquet(storeDir).select(col("sh")).distinct()
-    graft.operators.Dedup.spanFingerprints(testDocs, idCol, textCol, n, carry)
+    graft.operators.Dedup.spanFingerprints(testDocs, idCol, textCol, SpanN)
       .join(store.withColumn("seen", lit(1)), Seq("sh"), "left")
-      .groupBy((col("id") +: carry.map(col)): _*)
+      .groupBy(col("id"))
       .agg(count(lit(1)).as("n_spans"),
         sum(coalesce(col("seen"), lit(0))).cast("long").as("n_seen"))
   }
@@ -553,17 +545,10 @@ object StreamOps {
     * drills stop → new files while down → restart → serving read
     * equals the one-shot batch monitor). */
   def sinkCompleteVersions(streamed: DataFrame, outDir: String,
-      checkpointDir: String): Unit = {
-    val q = streamed.writeStream
-      .outputMode("complete")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        batch.write.mode("overwrite").parquet(s"$outDir/v$id")
-      }
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-  }
+      checkpointDir: String): Unit =
+    drainBatches(streamed.writeStream.outputMode("complete"), checkpointDir) {
+      (batch, id) => batch.write.mode("overwrite").parquet(s"$outDir/v$id")
+    }
 
   /** foreachBatch sink: each micro-batch lands as a batch write with
     * its batch id — the production pattern for sinks Structured
@@ -571,16 +556,10 @@ object StreamOps {
     * merge/upsert). The checkpoint dir gives exactly-once per batch id:
     * a replayed batch overwrites its own partition instead of
     * duplicating. Runs to completion (AvailableNow-style drain). */
-  def sinkParquetBatches(streamed: DataFrame, outDir: String, checkpointDir: String): Unit = {
-    val q = streamed.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        batch.write.mode("overwrite").parquet(s"$outDir/batch_id=$id")
-      }
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-  }
+  def sinkParquetBatches(streamed: DataFrame, outDir: String, checkpointDir: String): Unit =
+    drainBatches(streamed.writeStream, checkpointDir) {
+      (batch, id) => batch.write.mode("overwrite").parquet(s"$outDir/batch_id=$id")
+    }
 
   /** Streaming MERGE INTO (the q124 CDC upsert, incremental): maintains
     * a keyed snapshot under `snapDir` by applying every micro-batch of
@@ -606,27 +585,20 @@ object StreamOps {
     * is not meaningful for a parquet micro-batch — cross-batch order is
     * what the version chain preserves). */
   def upsertBatches(changes: DataFrame, key: String, snapDir: String,
-      checkpointDir: String): Unit = {
-    val q = changes.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val spark = batch.sparkSession
-        val b = batch.dropDuplicates(Seq(key))
-        val merged = latestSnapshot(spark, snapDir, beforeId = id) match {
-          case None => b
-          case Some(snap) =>
-            val cols = snap.columns.toSeq
-            snap.as("s").join(b.as("c"),
-                col(s"s.$key") === col(s"c.$key"), "full_outer")
-              .select(cols.map(c =>
-                coalesce(col(s"c.$c"), col(s"s.$c")).as(c)): _*)
-        }
-        merged.write.mode("overwrite").parquet(s"$snapDir/v$id")
+      checkpointDir: String): Unit =
+    drainBatches(changes.writeStream, checkpointDir) { (batch, id) =>
+      val b = batch.dropDuplicates(Seq(key))
+      val merged = latestSnapshot(batch.sparkSession, snapDir, beforeId = id) match {
+        case None => b
+        case Some(snap) =>
+          val cols = snap.columns.toSeq
+          snap.as("s").join(b.as("c"),
+              col(s"s.$key") === col(s"c.$key"), "full_outer")
+            .select(cols.map(c =>
+              coalesce(col(s"c.$c"), col(s"s.$c")).as(c)): _*)
       }
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-  }
+      merged.write.mode("overwrite").parquet(s"$snapDir/v$id")
+    }
 
   /** Seed `snapDir` with an initial snapshot (version -1, before every
     * micro-batch id) — the MERGE target that exists before the change
@@ -688,16 +660,8 @@ object StreamOps {
     require(keepLast >= 1,
       s"gcSnapshots: keepLast must be >= 1 (got $keepLast) - retaining " +
         "zero complete versions would delete the serving snapshot itself")
-    val path = new org.apache.hadoop.fs.Path(snapDir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(path)) return Seq.empty
-    val versions = fs.listStatus(path).toSeq
-      .map(_.getPath.getName)
-      .filter(_.matches("v-?\\d+"))
-      .map(_.drop(1).toLong)
-      .sorted(Ordering[Long].reverse)
-    val complete = versions.filter(v => fs.exists(
-      new org.apache.hadoop.fs.Path(s"$snapDir/v$v/_SUCCESS")))
+    val (fs, versions) = listVersions(spark, snapDir)
+    val complete = versions.filter(v => fs.exists(new Path(s"$snapDir/v$v/_SUCCESS")))
     if (complete.isEmpty) return Seq.empty
     val maxStarted = versions.head
     val replayBase = complete.find(_ < maxStarted)
@@ -707,8 +671,8 @@ object StreamOps {
         !keep.contains(v) && (complete.contains(v) || v < newestComplete))
       .sorted
       .map { v =>
-        fs.delete(new org.apache.hadoop.fs.Path(s"$snapDir/v$v/_SUCCESS"), false)
-        fs.delete(new org.apache.hadoop.fs.Path(s"$snapDir/v$v"), true)
+        fs.delete(new Path(s"$snapDir/v$v/_SUCCESS"), false)
+        fs.delete(new Path(s"$snapDir/v$v"), true)
         s"v$v"
       }
   }
@@ -744,44 +708,44 @@ object StreamOps {
   def latestSnapshot(spark: SparkSession, snapDir: String,
       beforeId: Long = Long.MaxValue,
       requireMarkers: Boolean = true): Option[DataFrame] = {
-    val path = new org.apache.hadoop.fs.Path(snapDir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val (fs, all) = listVersions(spark, snapDir)
     def servable(v: Long): Boolean =
-      if (requireMarkers)
-        fs.exists(new org.apache.hadoop.fs.Path(s"$snapDir/v$v/_SUCCESS"))
+      if (requireMarkers) fs.exists(new Path(s"$snapDir/v$v/_SUCCESS"))
       else {
-        val parts = fs.listStatus(
-            new org.apache.hadoop.fs.Path(s"$snapDir/v$v")).toSeq
+        val parts = fs.listStatus(new Path(s"$snapDir/v$v")).toSeq
           .filter(_.getPath.getName.startsWith("part-"))
         parts.nonEmpty && parts.forall(_.getLen > 0)
       }
-    if (!fs.exists(path)) None
-    else {
-      val versions = fs.listStatus(path).toSeq
-        .map(_.getPath.getName)
-        .filter(_.matches("v-?\\d+"))
-        .map(_.drop(1).toLong)
-        .filter(_ < beforeId)
-        .sorted(Ordering[Long].reverse)
-      val complete = versions.find(servable)
-      if (versions.nonEmpty && complete.isEmpty)
-        throw new IllegalStateException(
-          s"graft.latestSnapshot: $snapDir holds ${versions.size} version " +
-            "directories but none is complete (" +
-            (if (requireMarkers) "no _SUCCESS marker anywhere - either every " +
-              "version is torn (crash mid-write before any commit) or success " +
-              "markers are disabled/stripped on this filesystem " +
-              "(mapreduce.fileoutputcommitter.marksuccessfuljobs=false, or a " +
-              "lifecycle rule deleting zero-byte files); for a deployment " +
-              "that intentionally disables markers, pass " +
-              "requireMarkers = false"
-            else "markers-off probe: no version has exclusively non-empty " +
-              "part-* files") +
-            "). Serving or merging " +
-            "without a complete base would silently drop accumulated state; " +
-            "repair the newest version before reading")
-      complete.map(v => spark.read.parquet(s"$snapDir/v$v"))
-    }
+    val versions = all.filter(_ < beforeId)
+    val complete = versions.find(servable)
+    if (versions.nonEmpty && complete.isEmpty)
+      throw new IllegalStateException(
+        s"graft.latestSnapshot: $snapDir holds ${versions.size} version " +
+          "directories but none is complete (" +
+          (if (requireMarkers) "no _SUCCESS marker anywhere - either every " +
+            "version is torn (crash mid-write before any commit) or success " +
+            "markers are disabled/stripped on this filesystem " +
+            "(mapreduce.fileoutputcommitter.marksuccessfuljobs=false, or a " +
+            "lifecycle rule deleting zero-byte files); for a deployment " +
+            "that intentionally disables markers, pass " +
+            "requireMarkers = false"
+          else "markers-off probe: no version has exclusively non-empty " +
+            "part-* files") +
+          "). Serving or merging " +
+          "without a complete base would silently drop accumulated state; " +
+          "repair the newest version before reading")
+    complete.map(v => spark.read.parquet(s"$snapDir/v$v"))
+  }
+
+  /** `snapDir`'s `v<id>` version ids, newest first, with their filesystem. */
+  private def listVersions(spark: SparkSession, snapDir: String): (FileSystem, Seq[Long]) = {
+    val path = new Path(snapDir)
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val ids =
+      if (!fs.exists(path)) Seq.empty[Long]
+      else fs.listStatus(path).toSeq.map(_.getPath.getName)
+        .filter(_.matches("v-?\\d+")).map(_.drop(1).toLong)
+    (fs, ids.sorted(Ordering[Long].reverse))
   }
 
   /** Run a streaming DataFrame to completion against a memory sink and
@@ -789,13 +753,19 @@ object StreamOps {
     * any batch caller) execute a streaming query synchronously. */
   def runToMemory(spark: SparkSession, streamed: DataFrame, name: String,
       outputMode: String = "update"): DataFrame = {
-    val q = streamed.writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode(outputMode)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
+    drain(streamed.writeStream.format("memory").queryName(name).outputMode(outputMode))
     spark.table(name)
   }
+
+  /** Run a streaming query to completion: start, process all available, stop. */
+  private def drain(writer: DataStreamWriter[Row]): Unit = {
+    val q = writer.start()
+    try q.processAllAvailable()
+    finally q.stop()
+  }
+
+  /** [[drain]] a checkpointed foreachBatch sink; `each` gets (batch, batch id). */
+  private def drainBatches(writer: DataStreamWriter[Row], checkpointDir: String)(
+      each: (DataFrame, Long) => Unit): Unit =
+    drain(writer.option("checkpointLocation", checkpointDir).foreachBatch(each))
 }

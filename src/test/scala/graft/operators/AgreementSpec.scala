@@ -198,4 +198,16 @@ class AgreementSpec extends SparkSpec {
     assert(got(9)._3 === "p", "the reliable rater must win the tie")
     assert(got(9)._4)
   }
+
+  test("dawidSkeneStep refuses a label domain past DsMaxLabels and accepts one at it") {
+    // two raters agreeing on each unit: one label per unit
+    def votes(labels: Int) = (0 until labels).flatMap { u =>
+      Seq((u, "r1", s"l$u"), (u, "r2", s"l$u")) }.toDF("u", "r", "lab")
+    assert(Agreement.dawidSkeneStep(votes(Agreement.DsMaxLabels), "u", "r", "lab")
+      .count() === Agreement.DsMaxLabels.toLong)
+    val e = intercept[IllegalArgumentException] {
+      Agreement.dawidSkeneStep(votes(Agreement.DsMaxLabels + 1), "u", "r", "lab")
+    }
+    assert(e.getMessage.contains("label domain exceeds the documented bound"), e.getMessage)
+  }
 }

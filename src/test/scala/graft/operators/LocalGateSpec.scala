@@ -78,6 +78,21 @@ class LocalGateSpec extends SparkSpec {
     assert(values(LocalGate.take(five, 10, "spec")) === Some(1L to 5L))
   }
 
+  test("collectBounded: bound rows pass, bound + 1 are refused, one job either way") {
+    val kept = collectBounds(1) {
+      assert(LocalGate.collectBounded(five, 5, "spec refusal").map(_.getLong(0)).sorted.toSeq ===
+        (1L to 5L))
+    }
+    assert(kept === Seq(Some(6L)))
+    var refusal = ""
+    val refused = collectBounds(1) {
+      refusal = intercept[IllegalArgumentException](
+        LocalGate.collectBounded(five, 4, "spec refusal")).getMessage
+    }
+    assert(refused === Seq(Some(5L)), "the refusal never collects past bound + 1")
+    assert(refusal === "spec refusal")
+  }
+
   test("NULL rule: rows with a NULL in a gated column are dropped on both paths") {
     val df = Seq[(Option[Long], Option[Long], Option[Long])](
       (Some(1L), Some(2L), None), (None, Some(3L), Some(1L)),

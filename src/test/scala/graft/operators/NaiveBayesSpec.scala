@@ -100,4 +100,16 @@ class NaiveBayesSpec extends SparkSpec {
       .as[(Long, String)].collect().toMap
     assert(got(9L) === "zz")
   }
+
+  test("classify refuses a model past MaxLabels x (Dim+1) rows and accepts one at it") {
+    def model(labels: Int) = (0 until labels).flatMap { l =>
+      (NaiveBayes.DocCountBucket +: (0L until NaiveBayes.Dim)).map(b => (s"l$l", b, 0L))
+    }.toDF("label", "b", "w")
+    val docs = Seq((1L, "some words")).toDF("id", "text")
+    assert(NaiveBayes.classify(docs, "id", "text", model(NaiveBayes.MaxLabels)).count() === 1L)
+    val e = intercept[IllegalArgumentException] {
+      NaiveBayes.classify(docs, "id", "text", model(NaiveBayes.MaxLabels + 1))
+    }
+    assert(e.getMessage.contains("labels x (Dim+1) driver bound"), e.getMessage)
+  }
 }

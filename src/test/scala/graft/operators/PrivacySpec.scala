@@ -77,7 +77,7 @@ class PrivacySpec extends SparkSpec {
       Seq((1, 1L, "X")) ++ Seq.fill(3)((1, 1L, "Y")) ++ Seq.fill(2)((2, 0L, "X"))
     val st = Privacy.classState(rows.toDF("nat", "band", "seg"),
       Seq("nat", "band"), "seg")
-    val got = Privacy.tCloseness(st, Seq("nat", "band"), "seg", "nat", t = 0.3)
+    val got = Privacy.tCloseness(st, Seq("nat", "band"), "seg", "nat")
       .collect().map(r => r.getInt(0) ->
         (r.getLong(1), r.getDouble(2), r.getDouble(3), r.getLong(4), r.getLong(5)))
       .toMap
