@@ -9,6 +9,12 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
 
+  /** How many finished jobs, stages and SQL executions Spark's status
+    * store keeps of each (its defaults are 1000). With the UI off
+    * nothing in graft reads them, and at the defaults a long session's
+    * live heap grows with every query until the caps are reached. */
+  val StatusStoreCap = 50
+
   /** Build a local session. `cores` drives both the master thread count
     * and shuffle partitions — on a real cluster, drop `master` and size
     * `spark.sql.shuffle.partitions` to ~2-3× total executor cores. */
@@ -21,6 +27,9 @@ object GraftSession {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.ui.retainedJobs", StatusStoreCap.toString)
+      .config("spark.ui.retainedStages", StatusStoreCap.toString)
+      .config("spark.sql.ui.retainedExecutions", StatusStoreCap.toString)
       // static conf: the generated-class cache defaults to 100 entries,
       // which a many-query analytics session overflows — each re-run
       // then recompiles its whole-stage codegen. Sizing it to hold the

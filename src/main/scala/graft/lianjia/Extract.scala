@@ -12,11 +12,12 @@ import org.apache.spark.sql.functions._
   * (`XPathStructExpr`/`XPathArrayExpr`) — codegen'd or parse-dominated,
   * null-safe (extraction miss → null/empty, the reference's
   * `extract_first() → None` semantics, F4), no UDFs. The XPath
-  * expressions parse strictly first and fall back to the `HtmlSoup`
-  * tag-soup repair pass, so broken real-world markup (unclosed tags,
-  * bare `&`, HTML entities) extracts like parsel/lxml does in the
-  * reference. CSS selectors (`cssFirst`/`cssAll`) translate to XPath at
-  * plan time via `Css.toXPath`.
+  * expressions read every page through one parser, `HtmlSoup.parse`,
+  * which builds the same tree for well-formed pages and broken
+  * real-world markup (unclosed tags, bare `&`, HTML entities), so both
+  * extract like parsel/lxml does in the reference. CSS selectors
+  * (`cssFirst`/`cssAll`) translate to XPath at plan time via
+  * `Css.toXPath`.
   */
 object Extract {
 
@@ -33,9 +34,9 @@ object Extract {
 
   /** First text content of an element matched by XPath (reference's
     * label-sibling lookups, lianjia.py:131-153: `li[span="房屋户型"]`).
-    * Backed by the lenient-parse struct expression (1 field), so tag-soup
-    * pages extract instead of nulling out; built-in `xpath_string` would
-    * die on the first unclosed tag. */
+    * Backed by the struct expression (1 field) over `HtmlSoup.parse`, so
+    * tag-soup pages extract instead of nulling out; built-in
+    * `xpath_string` would die on the first unclosed tag. */
   def xpathFirst(html: Column, xpath: String): Column =
     graft.plans.XPathStructExpr.xpathStruct(html, Seq("v" -> xpath)).getField("v")
 

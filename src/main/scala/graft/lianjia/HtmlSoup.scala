@@ -1,31 +1,58 @@
 package graft.lianjia
 
+import java.util.Locale
+import javax.xml.parsers.DocumentBuilderFactory
+
 import scala.collection.mutable
 
-/** Tag-soup HTML → well-formed XML normalizer (SURVEY §2.2 P1/P2 parity:
-  * the reference's parsel/lxml tolerates broken real-world markup —
-  * house_spider/spiders/lianjia.py:77-88,131-153 run against live pages
-  * with unclosed <li>, bare &, void tags, HTML entities). The engine's
-  * XPath extraction rides a strict XML DocumentBuilder, so this pass
-  * repairs the input instead: a single-scan state machine, no
-  * dependencies (the build is offline), deterministic output.
+import org.w3c.dom.{Document, Element, Node}
+
+/** The page parser: HTML (well-formed or tag soup) → the DOM every XPath
+  * field reads (SURVEY §2.2 P1/P2 parity: the reference's parsel/lxml
+  * tolerates broken real-world markup — house_spider/spiders/
+  * lianjia.py:77-88,131-153 run against live pages with unclosed <li>,
+  * bare &, void tags, HTML entities). One scan builds the tree directly,
+  * no dependencies (the build is offline), deterministic output. No XML
+  * parser ever reads page text, so DOCTYPE/entity tricks (XXE) have
+  * nothing to act on.
   *
   * Repairs:
-  *  - void tags (<br>, <img …>) → self-closed
+  *  - void tags (<br>, <img …>) → childless elements
   *  - unclosed container tags → closed at the HTML implicit-close
   *    boundaries (<li> closes the previous <li>, <p> a <p>, <td>/<tr>
-  *    table cells) and at end of input
+  *    table cells, <option>, <dt>/<dd>) and at end of input
   *  - stray close tags (</div> with no open <div>) → dropped
-  *  - bare '&' and stray '<'/'>' in text and attributes → escaped
-  *  - HTML named entities (&nbsp; …) → literal chars (XML only defines
-  *    the 5 predefined ones; unknown names degrade to literal "&name;")
-  *  - <script>/<style> bodies → XML-escaped text (they may contain '<')
-  *  - comments, DOCTYPE, processing instructions, CDATA → dropped or
-  *    unwrapped; control chars illegal in XML 1.0 → stripped
-  *  - attributes: re-quoted, duplicates dropped, bare flags expanded
-  *    (checked → checked="checked"), malformed names dropped
-  *  - everything wrapped in a synthetic <root> so multi-rooted soup
-  *    still yields one document (all extraction XPaths are '//'-rooted)
+  *  - bare '&' and stray '<'/'>' → literal text
+  *  - entities: the 5 XML ones, numeric references and common HTML
+  *    named ones (&nbsp; …) decoded; unknown names stay literal "&name;"
+  *  - <script>/<style> bodies → text up to the matching close tag (they
+  *    may contain '<')
+  *  - DOCTYPE and processing instructions → dropped; CDATA → its
+  *    literal content as text
+  *  - attributes: unquoted and bare ones accepted (checked →
+  *    checked="checked"), duplicates dropped (first wins), malformed
+  *    names dropped
+  *
+  * The tree rule — every page, well-formed or not, gets the same tree:
+  *  - names: element and attribute names are lowercased (HTML's rule,
+  *    and lxml's);
+  *  - comments are kept as comment nodes, so `text()` splits at a
+  *    comment;
+  *  - document element: when the top level holds exactly one element
+  *    and no non-whitespace text, that element is the document element
+  *    (absolute paths like /html/body/h1 work); only multi-rooted soup
+  *    is wrapped in a synthetic <root>;
+  *  - a numeric reference to a code point XML cannot hold (&#0;,
+  *    &#x110000;) stays literal text, like an unknown named entity;
+  *  - normalization as an XML parser applies it: CRLF and lone CR → LF,
+  *    and in attribute values each literal tab/CR/LF → a space (CRLF →
+  *    one space); characters decoded from references are kept as they
+  *    are; control characters illegal in XML 1.0 are stripped;
+  *  - adjacent text, including decoded entities and CDATA content,
+  *    forms one text node.
+  * On a well-formed page every path reads this tree as it reads a
+  * strict XML parse's, processing instructions aside (HtmlSoupSpec's
+  * differential case checks every fixture page).
   */
 object HtmlSoup {
 
@@ -55,62 +82,103 @@ object HtmlSoup {
     "deg" -> "°", "plusmn" -> "±", "sup2" -> "²",
     "frac12" -> "½", "iquest" -> "¿")
 
-  private val XmlEntities = Set("amp", "lt", "gt", "quot", "apos")
+  private val XmlEntities = Map(
+    "amp" -> "&", "lt" -> "<", "gt" -> ">", "quot" -> "\"", "apos" -> "'")
+
+  /** Builds empty documents; stateless, so one serves every thread. */
+  private val Dom = DocumentBuilderFactory.newInstance().newDocumentBuilder().getDOMImplementation
 
   private def isNameStart(c: Char) = (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z')
   private def isNameChar(c: Char) =
     isNameStart(c) || (c >= '0' && c <= '9') || c == '-' || c == '_' || c == ':'
+  private def isDigit(c: Char) = c >= '0' && c <= '9'
+  private def isHexDigit(c: Char) =
+    isDigit(c) || (c >= 'a' && c <= 'f') || (c >= 'A' && c <= 'F')
   private def legalXmlChar(c: Char) =
     c == '\t' || c == '\n' || c == '\r' || (c >= ' ' && c != '￾' && c != '￿')
+  private def legalXmlCodePoint(cp: Int) =
+    cp == 0x9 || cp == 0xA || cp == 0xD || (cp >= 0x20 && cp <= 0xD7FF) ||
+      (cp >= 0xE000 && cp <= 0xFFFD) || (cp >= 0x10000 && cp <= 0x10FFFF)
+  private def isXmlSpace(c: Char) = c == ' ' || c == '\t' || c == '\n' || c == '\r'
 
-  def clean(html: String): String = {
-    val n = html.length
-    val out = new StringBuilder(n + (n >> 3) + 16)
-    val stack = mutable.Stack[String]()
-    out.append("<root>")
+  /** How a run of page characters becomes DOM text. */
+  private sealed trait Mode
+  private case object Text extends Mode // text content: entities decoded
+  private case object Attr extends Mode // plus literal tab/CR/LF → space
+  private case object Raw extends Mode // comments, CDATA: no entities
 
-    def emitClose(): Unit = out.append("</").append(stack.pop()).append('>')
+  def parse(html: String): Document = new Scan(html).run()
 
-    /** Escape a text run for XML: entities resolved, specials escaped,
-      * illegal chars dropped. Used for text nodes AND attribute values
-      * (quote char escaped there via &quot;). */
-    def emitText(s: String, from: Int, until: Int): Unit = {
+  private final class Scan(html: String) {
+    private val n = html.length
+    private val doc = Dom.createDocument(null, null, null)
+    /** holds the top level until [[run]] knows whether it needs a <root> */
+    private val top = doc.createElement("root")
+    private val open = mutable.ArrayBuffer[Element]()
+    private val text = new java.lang.StringBuilder
+
+    private def parent: Node = if (open.isEmpty) top else open.last
+
+    private def flushText(): Unit =
+      if (text.length > 0) {
+        parent.appendChild(doc.createTextNode(text.toString))
+        text.setLength(0)
+      }
+
+    private def append(node: Node): Unit = { flushText(); parent.appendChild(node) }
+
+    private def popOpen(): Unit = { flushText(); open.remove(open.length - 1) }
+
+    /** Appends html[from, until) to `out` under `mode`'s rules. */
+    private def decode(from: Int, until: Int, mode: Mode,
+        out: java.lang.StringBuilder): Unit = {
       var i = from
       while (i < until) {
-        val c = s.charAt(i)
-        c match {
-          case '<' => out.append("&lt;"); i += 1
-          case '>' => out.append("&gt;"); i += 1
-          case '"' => out.append("&quot;"); i += 1
-          case '&' =>
-            // &name; / &#123; / &#x1F; — resolve or keep; bare & → &amp;
-            val semi = s.indexOf(';', i + 1)
-            if (semi > i && semi - i <= 10) {
-              val body = s.substring(i + 1, semi)
-              if (XmlEntities(body)) { out.append('&').append(body).append(';'); i = semi + 1 }
-              else if (body.startsWith("#") && body.length > 1 &&
-                  body.drop(1).forall(_.isDigit)) {
-                out.append('&').append(body).append(';'); i = semi + 1
-              } else if ((body.startsWith("#x") || body.startsWith("#X")) &&
-                  body.length > 2 &&
-                  body.drop(2).forall(ch => Character.digit(ch, 16) >= 0)) {
-                out.append('&').append(body).append(';'); i = semi + 1
-              } else NamedEntities.get(body.toLowerCase) match {
-                case Some(lit) => out.append(lit); i = semi + 1
-                case None => out.append("&amp;"); i += 1
-              }
-            } else { out.append("&amp;"); i += 1 }
-          case c if legalXmlChar(c) => out.append(c); i += 1
-          case _ => i += 1 // strip control chars
+        val c = html.charAt(i)
+        if (c == '&' && mode != Raw) i = entity(i, until, out)
+        else {
+          if (c == '\r') {
+            // CRLF → LF, lone CR → LF
+            if (!(i + 1 < until && html.charAt(i + 1) == '\n'))
+              out.append(if (mode == Attr) ' ' else '\n')
+          } else if (mode == Attr && (c == '\t' || c == '\n')) out.append(' ')
+          else if (legalXmlChar(c)) out.append(c) // else: strip control chars
+          i += 1
         }
       }
     }
 
-    /** Parse the inside of an open tag starting after the name; returns
-      * (endIndexAfterGt, selfClosed). Emits re-quoted attributes. */
-    def emitAttrs(i0: Int): (Int, Boolean) = {
+    /** `&…;` at `i`: appends its decoding (or a literal '&') and returns
+      * the index after what it consumed. */
+    private def entity(i: Int, until: Int, out: java.lang.StringBuilder): Int = {
+      val semi = html.indexOf(';', i + 1)
+      if (semi < 0 || semi >= until || semi - i > 10) { out.append('&'); return i + 1 }
+      val body = html.substring(i + 1, semi)
+      val numeric =
+        if (body.length > 1 && body.charAt(0) == '#' && body.drop(1).forall(isDigit))
+          Some(Integer.parseInt(body.substring(1)))
+        else if (body.length > 2 && body.charAt(0) == '#' &&
+            (body.charAt(1) == 'x' || body.charAt(1) == 'X') &&
+            body.drop(2).forall(isHexDigit))
+          Some(Integer.parseInt(body.substring(2), 16))
+        else None
+      numeric match {
+        case Some(cp) =>
+          // a code point XML cannot hold stays literal text
+          if (legalXmlCodePoint(cp)) out.appendCodePoint(cp) else out.append(html, i, semi + 1)
+          semi + 1
+        case None =>
+          XmlEntities.get(body).orElse(NamedEntities.get(body.toLowerCase(Locale.ROOT))) match {
+            case Some(lit) => out.append(lit); semi + 1
+            case None => out.append('&'); i + 1
+          }
+      }
+    }
+
+    /** Reads the attributes of an open tag from `i0` (just after its
+      * name) onto `el`; returns (index after the tag, self-closed). */
+    private def attrs(i0: Int, el: Element): (Int, Boolean) = {
       var i = i0
-      val seen = mutable.Set[String]()
       var selfClosed = false
       var done = false
       while (!done && i < n) {
@@ -120,14 +188,12 @@ object HtmlSoup {
           selfClosed = true; i += 2; done = true
         } else if (c.isWhitespace || c == '/') i += 1
         else {
-          // attribute name
           val ns = i
           while (i < n && !html.charAt(i).isWhitespace &&
             html.charAt(i) != '=' && html.charAt(i) != '>' && html.charAt(i) != '/') i += 1
-          val rawName = html.substring(ns, i)
-          val name = rawName.toLowerCase
-          var value: Option[(Int, Int)] = None // substring bounds
-          // optional = value
+          val name = html.substring(ns, i).toLowerCase(Locale.ROOT)
+          var vs = -1 // value bounds, when there is a value
+          var ve = -1
           var j = i
           while (j < n && html.charAt(j).isWhitespace) j += 1
           if (j < n && html.charAt(j) == '=') {
@@ -135,76 +201,64 @@ object HtmlSoup {
             while (j < n && html.charAt(j).isWhitespace) j += 1
             if (j < n && (html.charAt(j) == '"' || html.charAt(j) == '\'')) {
               val q = html.charAt(j)
-              val vs = j + 1
-              var k = vs
-              while (k < n && html.charAt(k) != q) k += 1
-              value = Some((vs, k))
-              i = math.min(n, k + 1)
+              vs = j + 1
+              ve = vs
+              while (ve < n && html.charAt(ve) != q) ve += 1
+              i = math.min(n, ve + 1)
             } else {
-              val vs = j
-              var k = vs
-              while (k < n && !html.charAt(k).isWhitespace &&
-                html.charAt(k) != '>' && html.charAt(k) != '/') k += 1
-              value = Some((vs, k))
-              i = k
+              vs = j
+              ve = vs
+              while (ve < n && !html.charAt(ve).isWhitespace &&
+                html.charAt(ve) != '>' && html.charAt(ve) != '/') ve += 1
+              i = ve
             }
           }
           val valid = name.nonEmpty && isNameStart(name.charAt(0)) &&
             name.forall(ch => isNameChar(ch) || ch == '.')
-          if (valid && !seen(name)) {
-            seen += name
-            out.append(' ').append(name).append("=\"")
-            value match {
-              case Some((vs, ve)) => emitText(html, vs, ve)
-              case None => out.append(name) // bare flag → checked="checked"
-            }
-            out.append('"')
+          if (valid && !el.hasAttribute(name)) {
+            val value =
+              if (vs < 0) name // bare flag → checked="checked"
+              else { val sb = new java.lang.StringBuilder; decode(vs, ve, Attr, sb); sb.toString }
+            el.setAttribute(name, value)
           }
         }
       }
       (i, selfClosed)
     }
 
-    def openTag(name: String, selfClosed: Boolean): Unit = {
-      // (the "<name" and attributes were already emitted by the caller;
-      //  implicit closes were emitted BEFORE that — see the main loop)
-      if (selfClosed || Void(name)) out.append("/>")
-      else { out.append('>'); stack.push(name) }
-    }
-
-    def closeTag(name: String): Unit = {
-      if (!Void(name) && stack.contains(name)) {
-        while (stack.top != name) emitClose()
-        emitClose()
+    private def closeTag(name: String): Unit =
+      if (!Void(name) && open.exists(_.getTagName == name)) {
+        while (open.last.getTagName != name) popOpen()
+        popOpen()
       } // else: stray close → drop
+
+    /** Index of the `</name` that ends a <script>/<style> body, or -1. */
+    private def rawEnd(from: Int, name: String): Int = {
+      var k = html.indexOf("</", from)
+      while (k >= 0 && !html.regionMatches(true, k + 2, name, 0, name.length))
+        k = html.indexOf("</", k + 2)
+      k
     }
 
-    /** <script>/<style> body: raw until the matching close tag, emitted
-      * as escaped text (may contain '<', '&&', etc.). */
-    def rawContent(i0: Int, name: String): Int = {
-      val lower = html.toLowerCase
-      val close = lower.indexOf("</" + name, i0)
-      val end = if (close < 0) n else close
-      emitText(html, i0, end)
-      if (close < 0) { closeTag(name); n }
-      else {
-        val gt = html.indexOf('>', close)
-        closeTag(name)
-        if (gt < 0) n else gt + 1
-      }
-    }
-
-    var i = 0
-    while (i < n) {
-      val c = html.charAt(i)
-      if (c == '<') {
-        if (html.startsWith("<!--", i)) {
+    def run(): Document = {
+      var i = 0
+      while (i < n) {
+        val c = html.charAt(i)
+        if (c != '<') {
+          var j = i
+          while (j < n && html.charAt(j) != '<') j += 1
+          decode(i, j, Text, text)
+          i = j
+        } else if (html.startsWith("<!--", i)) {
           val e = html.indexOf("-->", i + 4)
+          val end = if (e < 0) n else e
+          val data = new java.lang.StringBuilder
+          decode(i + 4, end, Raw, data)
+          append(doc.createComment(data.toString))
           i = if (e < 0) n else e + 3
         } else if (html.startsWith("<![CDATA[", i)) {
           val e = html.indexOf("]]>", i + 9)
-          val end = if (e < 0) n else e
-          emitText(html, i + 9, end)
+          decode(i + 9, if (e < 0) n else e, Raw, text)
           i = if (e < 0) n else e + 3
         } else if (html.startsWith("<!", i) || html.startsWith("<?", i)) {
           val e = html.indexOf('>', i)
@@ -212,36 +266,51 @@ object HtmlSoup {
         } else if (html.startsWith("</", i) && i + 2 < n && isNameStart(html.charAt(i + 2))) {
           var j = i + 2
           while (j < n && isNameChar(html.charAt(j))) j += 1
-          val name = html.substring(i + 2, j).toLowerCase
+          closeTag(html.substring(i + 2, j).toLowerCase(Locale.ROOT))
           val gt = html.indexOf('>', j)
-          closeTag(name)
           i = if (gt < 0) n else gt + 1
         } else if (i + 1 < n && isNameStart(html.charAt(i + 1))) {
           var j = i + 1
           while (j < n && isNameChar(html.charAt(j))) j += 1
-          val name = html.substring(i + 1, j).toLowerCase
+          val name = html.substring(i + 1, j).toLowerCase(Locale.ROOT)
           ImplicitClose.get(name).foreach { closers =>
-            while (stack.nonEmpty && closers(stack.top)) emitClose()
+            while (open.nonEmpty && closers(open.last.getTagName)) popOpen()
           }
-          out.append('<').append(name)
-          val (after, selfClosed) = emitAttrs(j)
-          openTag(name, selfClosed)
+          val el = doc.createElement(name)
+          val (after, selfClosed) = attrs(j, el)
+          append(el)
           i = after
-          if (!selfClosed && (name == "script" || name == "style"))
-            i = rawContent(i, name)
+          if (!selfClosed && !Void(name)) {
+            open += el
+            if (name == "script" || name == "style") {
+              val close = rawEnd(i, name)
+              decode(i, if (close < 0) n else close, Text, text)
+              closeTag(name)
+              val gt = if (close < 0) -1 else html.indexOf('>', close)
+              i = if (gt < 0) n else gt + 1
+            }
+          }
         } else {
-          emitText(html, i, i + 1) // lone '<' → &lt;
+          text.append('<') // lone '<'
           i += 1
         }
-      } else {
-        var j = i
-        while (j < n && html.charAt(j) != '<') j += 1
-        emitText(html, i, j)
-        i = j
       }
+      while (open.nonEmpty) popOpen()
+      flushText()
+      finish()
     }
-    while (stack.nonEmpty) emitClose()
-    out.append("</root>")
-    out.toString
+
+    /** One top-level element and only whitespace text beside it: that
+      * element becomes the document element (top-level comments stay
+      * document children). Otherwise the synthetic <root> is. */
+    private def finish(): Document = {
+      val kids = (0 until top.getChildNodes.getLength).map(top.getChildNodes.item)
+      def isText(k: Node) = k.getNodeType == Node.TEXT_NODE
+      if (kids.count(_.getNodeType == Node.ELEMENT_NODE) == 1 &&
+          kids.forall(k => !isText(k) || k.getNodeValue.forall(isXmlSpace)))
+        kids.filterNot(isText).foreach(doc.appendChild)
+      else doc.appendChild(top)
+      doc
+    }
   }
 }

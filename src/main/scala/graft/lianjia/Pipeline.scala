@@ -49,21 +49,11 @@ object Pipeline {
     * page instead of one per field (SURVEY §2.11's "single most important
     * perf decision"); regex-based fields (id, zone, geo) don't need the
     * DOM at all. */
-  def villageItems(pages: DataFrame): DataFrame = {
-    val fields = Seq(
-      "name" -> "//h1[@class='detailTitle']/text()",
-      "address" -> "//div[@class='detailDesc']/text()",
-      "year_raw" -> "//span[@class='xiaoquInfoContent year']/text()",
-      "build_type" -> "//li[span='建筑类型']/text()",
-      "property_costs" -> "//li[span='物业费用']/text()",
-      "property_company" -> "//li[span='物业公司']/text()",
-      "developers" -> "//li[span='开发商']/text()",
-      "buildings_raw" -> "//li[span='楼栋总数']/text()",
-      "total_house_raw" -> "//li[span='房屋总数']/text()")
+  def villageItems(pages: DataFrame): DataFrame =
     pages
       .select(
         Extract.urlKey(col("url"), Base + "/xiaoqu/", "/").as("id"),
-        graft.plans.XPathStructExpr.xpathStruct(col("html"), fields).as("x"),
+        graft.plans.XPathStructExpr.xpathStruct(col("html"), villageFields).as("x"),
         Extract.zoneArray(col("html")).as("zone"),
         Extract.geoLat(col("html")).as("latitude"),
         Extract.geoLng(col("html")).as("longitude"),
@@ -76,7 +66,18 @@ object Pipeline {
         col("x.developers").as("developers"),
         col("x.buildings_raw").as("buildings_raw"),
         col("x.total_house_raw").as("total_house_raw"), col("采集时间"))
-  }
+
+  /** The village page's (column name, xpath) pairs. */
+  private[lianjia] val villageFields: Seq[(String, String)] = Seq(
+    "name" -> "//h1[@class='detailTitle']/text()",
+    "address" -> "//div[@class='detailDesc']/text()",
+    "year_raw" -> "//span[@class='xiaoquInfoContent year']/text()",
+    "build_type" -> "//li[span='建筑类型']/text()",
+    "property_costs" -> "//li[span='物业费用']/text()",
+    "property_company" -> "//li[span='物业公司']/text()",
+    "developers" -> "//li[span='开发商']/text()",
+    "buildings_raw" -> "//li[span='楼栋总数']/text()",
+    "total_house_raw" -> "//li[span='房屋总数']/text()")
 
   /** G4 (fan-out half): village page → its two house-listing child urls
     * (`/ershoufang/c<id>` + `/chengjiao/c<id>`, lianjia.py:95-99) — the
@@ -91,7 +92,7 @@ object Pipeline {
   /** The label-sibling field block shared by on-sale and sold pages
     * (lianjia.py:131-153 / 192-214) — (column name, xpath) pairs feeding
     * one XPathStructExpr. */
-  private val houseCommonFields: Seq[(String, String)] = Seq(
+  private[lianjia] val houseCommonFields: Seq[(String, String)] = Seq(
     "标题" -> "//h1[@class='main']/text()",
     "小区" -> "//div[@class='communityName']/a[1]/text()",
     "小区href" -> "//div[@class='communityName']/a[@class='info']/@href",
@@ -140,19 +141,23 @@ object Pipeline {
 
   /** G6: on-sale house detail page → one bronze house row (状态=在售). */
   def onsaleHouseItems(pages: DataFrame): DataFrame =
-    houseItems(pages, "/ershoufang/", "在售", Seq(
-      "售价_raw" -> "//span[@class='total']/text()",
-      "关注人数_raw" -> "//span[@class='count']/text()",
-      "链家编号" -> "//li[span='链家编号']/text()"))
+    houseItems(pages, "/ershoufang/", "在售", onsaleFields)
+
+  private[lianjia] val onsaleFields: Seq[(String, String)] = Seq(
+    "售价_raw" -> "//span[@class='total']/text()",
+    "关注人数_raw" -> "//span[@class='count']/text()",
+    "链家编号" -> "//li[span='链家编号']/text()")
 
   /** G8: sold house detail page → one bronze house row (状态=成交).
     * Sold rows fill 成交价/成交时间, lack 关注人数/链家编号 — the sparse
     * union shape (FIXTURES A2). */
   def soldHouseItems(pages: DataFrame): DataFrame =
-    houseItems(pages, "/chengjiao/", "成交", Seq(
-      "成交价_raw" -> "//span[@class='dealTotalPrice']/i/text()",
-      "售价_raw" -> "//div[@class='price']/b/text()",
-      "成交时间_raw" -> "//div[@class='wrapper']/text()"))
+    houseItems(pages, "/chengjiao/", "成交", soldFields)
+
+  private[lianjia] val soldFields: Seq[(String, String)] = Seq(
+    "成交价_raw" -> "//span[@class='dealTotalPrice']/i/text()",
+    "售价_raw" -> "//div[@class='price']/b/text()",
+    "成交时间_raw" -> "//div[@class='wrapper']/text()")
 
   /** on-sale ∪ sold into the single house table (SURVEY §2.8 union;
     * missing columns null-filled). */

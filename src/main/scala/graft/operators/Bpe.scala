@@ -43,9 +43,10 @@ object Bpe {
 
   /** The additive vocabulary-induction state: (word, cnt) — word-grain
     * lowercase [a-z]+ frequencies, the one corpus-sized stage. Additive
-    * under union (the duelCounts/qiClassCounts monitor class), so a
-    * streaming complete-mode aggregate maintains it incrementally
-    * ([[graft.streaming.StreamOps.bpeWordCounts]]) and
+    * under union (the BradleyTerry.duelState/Privacy.classState monitor
+    * class), so a streaming complete-mode aggregate maintains it
+    * incrementally (this function over a stream, landed by
+    * [[graft.streaming.StreamOps.sinkCompleteVersions]]) and
     * [[learnMergesFromCounts]] serves the same merge table the batch
     * [[learnMerges]] computes — r14 verdict #7. */
   def wordCounts(docs: DataFrame, textCol: String): DataFrame =
@@ -199,8 +200,8 @@ object Bpe {
     learnMergesFromCounts(wordCounts(docs, textCol), rounds)
 
   /** [[learnMerges]] over ALREADY-AGGREGATED (word, cnt) state — the
-    * serving read of the standing vocabulary monitor
-    * ([[graft.streaming.StreamOps.bpeWordCounts]]): the SAME size-gated
+    * serving read of the standing vocabulary monitor ([[wordCounts]]
+    * over a stream): the SAME size-gated
     * rounds the batch fit runs (StreamOpsSpec pins serving ≡ batch
     * across a checkpoint bounce), so a tokenizer refresh wired to the
     * monitor and the batch fit can never disagree. */

@@ -76,7 +76,7 @@ object BradleyTerry {
   /** The additive monitor state: (winner, loser, n) duel counts — one
     * row per ordered pair, items²-grain. Additive under union, so a
     * streaming complete-mode aggregate maintains it incrementally
-    * ([[graft.streaming.StreamOps.duelCounts]]) and [[fitFromCounts]]
+    * (this function over a stream) and [[fitFromCounts]]
     * serves the same strengths the batch fit computes. */
   def duelState(duels: DataFrame): DataFrame =
     duels.groupBy(col("winner"), col("loser"))

@@ -525,6 +525,25 @@ object Dedup {
     when(size(sh) > 0, sig)
   }
 
+  /** LSH band keys of a signature column, for a select: one (band,
+    * bkey) row per band, bkey = the band's slice of the signature,
+    * comma-joined — an engine-neutral join key (a hashed key would
+    * shuffle fewer bytes at scale, but these are 4 ints ≈ the hash
+    * width anyway). DuckDB twin: [[minhashBandsSql]]. */
+  def minhashBands(sig: Column, bands: Int, rowsPerBand: Int): Column =
+    posexplode(array((0 until bands).map { b =>
+      concat_ws(",", (0 until rowsPerBand).map(r =>
+        element_at(sig, b * rowsPerBand + r + 1)): _*)
+    }: _*)).as(Seq("band", "bkey"))
+
+  /** DuckDB twin of [[minhashBands]]: the (doc_id, sig, band, bkey) rows
+    * of the relation `sigl` (doc_id, sig), one UNION ALL leg per band. */
+  def minhashBandsSql(bands: Int, rowsPerBand: Int, sigl: String): String =
+    (0 until bands).map { b =>
+      val slots = (0 until rowsPerBand).map(r => s"sig[${b * rowsPerBand + r + 1}]").mkString(", ")
+      s"SELECT doc_id, sig, $b AS band, concat_ws(',', $slots) AS bkey FROM $sigl"
+    }.mkString(" UNION ALL ")
+
   /** MinHash + LSH banding: docs whose signatures collide in ≥1 of
     * `bands` bands become candidate pairs; candidates are then verified
     * with the estimated Jaccard (fraction of matching signature slots).
@@ -545,18 +564,12 @@ object Dedup {
       rowsPerBand: Int, threshold: Double): DataFrame = {
     val k = bands * rowsPerBand
     val sigs = minhashSignaturesFromShingles(sh, k)
-    // band key = the band's slice of the signature, comma-joined — an
-    // engine-neutral join key (a hashed key would shuffle fewer bytes at
-    // scale, but these are 4 ints ≈ the hash width anyway).
     // repartition by the join key: both self-join sides become IDENTICAL
     // shuffles, so ReuseExchange computes the whole signature pipeline
     // (scan → shingle → md5 → k-way min agg) ONCE — without it the plan
     // recomputes everything per side (seen in .explain).
     val banded = sigs.select(col("id"), col("sig"),
-      posexplode(array((0 until bands).map { b =>
-        concat_ws(",", (0 until rowsPerBand).map(r =>
-          element_at(col("sig"), b * rowsPerBand + r + 1)): _*)
-      }: _*)).as(Seq("band", "bkey")))
+        minhashBands(col("sig"), bands, rowsPerBand))
       .repartition(col("band"), col("bkey"))
     val cands = banded.as("a").join(banded.as("b"),
         col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
@@ -610,11 +623,7 @@ object Dedup {
   def minhashBandIndex(docs: DataFrame, idCol: String, textCol: String,
       n: Int, bands: Int, rowsPerBand: Int): DataFrame =
     minhashSignatures(docs, idCol, textCol, n, bands * rowsPerBand)
-      .select(col("id"), col("sig"),
-        posexplode(array((0 until bands).map { b =>
-          concat_ws(",", (0 until rowsPerBand).map(r =>
-            element_at(col("sig"), b * rowsPerBand + r + 1)): _*)
-        }: _*)).as(Seq("band", "bkey")))
+      .select(col("id"), col("sig"), minhashBands(col("sig"), bands, rowsPerBand))
 
   /** The daily-delta join: incoming docs are signed and banded fresh;
     * the reference side arrives as a PRECOMPUTED [[minhashBandIndex]]

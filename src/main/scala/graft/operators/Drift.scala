@@ -429,9 +429,9 @@ object Drift {
     * exactly once, so `n` is constant across a (label, half)'s cells
     * and the whole state is plain additive counts/sums — a streaming
     * complete-mode aggregate maintains it incrementally
-    * ([[graft.streaming.StreamOps.covarianceCellCounts]]) and
+    * (this function over a stream) and
     * [[covarianceDrift]] serves the same number the batch q233
-    * computes, the qiClassCounts/Privacy.audit split applied to drift.
+    * computes, the Privacy.classState/audit split applied to drift.
     * Input columns: (label, h ∈ {0,1}, q ARRAY<BIGINT> on the caller's
     * integer grid). State size: labels × 2 × D(D+1)/2 rows. */
   def covarianceCellState(rows: DataFrame): DataFrame =

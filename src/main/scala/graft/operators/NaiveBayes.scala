@@ -30,8 +30,8 @@ import org.apache.spark.sql.functions._
   * model joins broadcast, argmax is a doc-grain aggregate. The
   * training state is additive under union (the BPE word-counts /
   * duel-counts monitor class) — see
-  * [[graft.streaming.StreamOps.nbTrainState]] for the standing-monitor
-  * leg; [[modelFromState]] re-sums first, so a union of state deltas
+  * [[trainState]] over a stream is the standing-monitor leg;
+  * [[modelFromState]] re-sums first, so a union of state deltas
   * folds identically to the one-shot build.
   */
 object NaiveBayes {

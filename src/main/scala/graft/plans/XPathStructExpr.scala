@@ -1,7 +1,5 @@
 package graft.plans
 
-import javax.xml.namespace.QName
-import javax.xml.parsers.{DocumentBuilder, DocumentBuilderFactory}
 import javax.xml.xpath.{XPathConstants, XPathExpression, XPathFactory}
 
 import org.apache.spark.sql.Column
@@ -11,8 +9,8 @@ import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
-import org.w3c.dom.Document
-import org.xml.sax.{ErrorHandler, InputSource, SAXParseException}
+
+import graft.lianjia.HtmlSoup
 
 /** Multi-field XPath extraction with ONE parse per page (SURVEY §2.11:
   * "one parse per page, not per field — the single most important perf
@@ -20,22 +18,22 @@ import org.xml.sax.{ErrorHandler, InputSource, SAXParseException}
   *
   * `xpath_string(html, p)` re-parses the document for every field — a
   * 23-field page record (lianjia.py:131-153) costs 23 parses. This
-  * expression parses once and evaluates all compiled XPaths against the
-  * same DOM, returning STRUCT<field: STRING, ...> with null for misses
-  * (the reference's extract_first() → None, F4).
+  * expression parses once, with the one page parser `HtmlSoup.parse`
+  * (well-formed or tag soup, every page gets the same tree), and
+  * evaluates all compiled XPaths against the same DOM, returning
+  * STRUCT<field: STRING, ...> with null for misses (the reference's
+  * extract_first() → None, F4).
   *
-  * Parser/XPath instances are per-task (expressions are deserialized per
+  * XPath instances are per-task (expressions are deserialized per
   * task), created lazily off the transient fields — no cross-thread
-  * sharing. CodegenFallback: parsing dominates eval cost; codegen would
-  * only inline the call.
+  * sharing. CodegenFallback: parsing and XPath evaluation dominate eval
+  * cost; codegen would only inline the call.
   */
 case class XPathStructExpr(child: Expression, fields: Seq[(String, String)])
     extends UnaryExpression with CodegenFallback {
 
   override def dataType: DataType =
     StructType(fields.map { case (name, _) => StructField(name, StringType) })
-
-  @transient private lazy val builder = XPathStructExpr.newBuilder()
 
   @transient private lazy val compiled: Array[XPathExpression] = {
     val xp = XPathFactory.newInstance().newXPath()
@@ -44,18 +42,16 @@ case class XPathStructExpr(child: Expression, fields: Seq[(String, String)])
 
   override def nullSafeEval(input: Any): Any = {
     val html = input.asInstanceOf[UTF8String].toString
-    val doc = XPathStructExpr.parseLenient(html, builder)
+    val doc = HtmlSoup.parse(html)
     val values = new Array[Any](fields.length)
-    if (doc != null) {
-      var i = 0
-      while (i < compiled.length) {
-        try {
-          val s = compiled(i).evaluate(doc, XPathConstants.STRING).asInstanceOf[String]
-          val t = if (s == null) "" else s.trim
-          values(i) = if (t.isEmpty) null else UTF8String.fromString(t)
-        } catch { case _: Exception => values(i) = null }
-        i += 1
-      }
+    var i = 0
+    while (i < compiled.length) {
+      try {
+        val s = compiled(i).evaluate(doc, XPathConstants.STRING).asInstanceOf[String]
+        val t = if (s == null) "" else s.trim
+        values(i) = if (t.isEmpty) null else UTF8String.fromString(t)
+      } catch { case _: Exception => values(i) = null }
+      i += 1
     }
     InternalRow.fromSeq(values.toIndexedSeq)
   }
@@ -73,83 +69,41 @@ object XPathStructExpr {
 
   /** ARRAY<STRING> of the string-values of ALL nodes an XPath matches —
     * the reference's `extract()` (vs `extract_first()`) surface. Same
-    * one-parse, lenient-fallback path as the struct form. */
+    * one `HtmlSoup.parse` per page as the struct form. */
   def xpathAll(html: Column, xpath: String): Column =
     ColumnBridge.column(XPathArrayExpr(ColumnBridge.expression(html), xpath))
-
-  /** The page parser of both expressions; pages are untrusted input. */
-  private[plans] def newBuilder(): DocumentBuilder = {
-    val f = DocumentBuilderFactory.newInstance()
-    f.setNamespaceAware(false)
-    f.setFeature("http://apache.org/xml/features/disallow-doctype-decl", true)
-    f.setExpandEntityReferences(false)
-    f.newDocumentBuilder()
-  }
-
-  /** The default handler without its stderr line (a `[Fatal Error] …`
-    * per tag-soup page, before [[parseLenient]] repairs it). */
-  private object Silent extends ErrorHandler {
-    def warning(e: SAXParseException): Unit = ()
-    def error(e: SAXParseException): Unit = ()
-    def fatalError(e: SAXParseException): Unit = throw e
-  }
-
-  /** Strict XML parse; on failure re-parse through the HtmlSoup
-    * normalizer (tag-soup repair — reference parity: parsel/lxml accept
-    * broken real-world HTML); null only if even the repaired document
-    * fails. The strict path stays the fast path for well-formed pages. */
-  private[plans] def parseLenient(html: String, builder: DocumentBuilder): Document = {
-    def parse(s: String): Document = {
-      builder.reset() // also drops the error handler: set it per parse
-      builder.setErrorHandler(Silent)
-      builder.parse(new InputSource(new java.io.StringReader(s)))
-    }
-    try parse(html)
-    catch {
-      case _: Exception =>
-        try parse(graft.lianjia.HtmlSoup.clean(html))
-        catch { case _: Exception => null }
-    }
-  }
 }
 
 /** ARRAY<STRING> companion of XPathStructExpr: evaluates one XPath as a
   * NODESET and returns every matched node's trimmed string-value (the
   * reference's `extract()` list semantics, lianjia.py:32,48,109). Misses
-  * → empty array. One parse, same untrusted-input hardening, same
-  * tag-soup fallback. */
+  * → empty array. One `HtmlSoup.parse` per page, as in the struct form. */
 case class XPathArrayExpr(child: Expression, xpath: String)
     extends UnaryExpression with CodegenFallback {
 
   override def dataType: DataType =
     org.apache.spark.sql.types.ArrayType(StringType)
 
-  @transient private lazy val builder = XPathStructExpr.newBuilder()
-
   @transient private lazy val compiled: XPathExpression =
     XPathFactory.newInstance().newXPath().compile(xpath)
 
   override def nullSafeEval(input: Any): Any = {
     val html = input.asInstanceOf[UTF8String].toString
-    val doc = XPathStructExpr.parseLenient(html, builder)
-    if (doc == null) new org.apache.spark.sql.catalyst.util.GenericArrayData(Array.empty[Any])
+    val nodes =
+      try compiled.evaluate(HtmlSoup.parse(html), XPathConstants.NODESET)
+        .asInstanceOf[org.w3c.dom.NodeList]
+      catch { case _: Exception => null }
+    if (nodes == null)
+      new org.apache.spark.sql.catalyst.util.GenericArrayData(Array.empty[Any])
     else {
-      val nodes =
-        try compiled.evaluate(doc, XPathConstants.NODESET)
-          .asInstanceOf[org.w3c.dom.NodeList]
-        catch { case _: Exception => null }
-      if (nodes == null)
-        new org.apache.spark.sql.catalyst.util.GenericArrayData(Array.empty[Any])
-      else {
-        val vals = new Array[Any](nodes.getLength)
-        var i = 0
-        while (i < vals.length) {
-          val s = nodes.item(i).getTextContent
-          vals(i) = UTF8String.fromString(if (s == null) "" else s.trim)
-          i += 1
-        }
-        new org.apache.spark.sql.catalyst.util.GenericArrayData(vals)
+      val vals = new Array[Any](nodes.getLength)
+      var i = 0
+      while (i < vals.length) {
+        val s = nodes.item(i).getTextContent
+        vals(i) = UTF8String.fromString(if (s == null) "" else s.trim)
+        i += 1
       }
+      new org.apache.spark.sql.catalyst.util.GenericArrayData(vals)
     }
   }
 

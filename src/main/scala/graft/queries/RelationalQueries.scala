@@ -3098,7 +3098,7 @@ object RelationalQueries {
       |GROUP BY c_nationkey
       |ORDER BY c_nationkey""".stripMargin) { (spark, dir) =>
     // both stages route through the SHARED Privacy fold — the streaming
-    // standing monitor (StreamOps.qiClassCounts + sinkCompleteVersions)
+    // standing monitor (Privacy.classState + sinkCompleteVersions)
     // serves the identical audit from the identical code
     graft.operators.Privacy.audit(
       graft.operators.Privacy.classState(

@@ -225,10 +225,6 @@ object TextQueries {
       s"min(($a*xm+$b)%$p) AS h$i"
     }.mkString(", ")
     val sigList = (0 until k).map(i => s"h$i").mkString("[", ",", "]")
-    val bandSels = (0 until bands).map { b =>
-      val slots = (0 until rowsPerBand).map(r => s"sig[${b * rowsPerBand + r + 1}]").mkString(", ")
-      s"SELECT doc_id, sig, $b AS band, concat_ws(',', $slots) AS bkey FROM ${pfx}sigl"
-    }.mkString(" UNION ALL ")
     s"""${pfx}docs AS (
        |  $docsSql),
        |${pfx}sh AS (
@@ -239,7 +235,7 @@ object TextQueries {
        |${pfx}hx AS (SELECT doc_id, ('0x' || substr(md5(s), 1, 15))::BIGINT % $p AS xm FROM ${pfx}sh),
        |${pfx}sigs AS (SELECT doc_id, $mins FROM ${pfx}hx GROUP BY doc_id),
        |${pfx}sigl AS (SELECT doc_id, $sigList AS sig FROM ${pfx}sigs),
-       |${pfx}bands AS ($bandSels),
+       |${pfx}bands AS (${Dedup.minhashBandsSql(bands, rowsPerBand, s"${pfx}sigl")}),
        |${pfx}cands AS (
        |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b, a.sig AS sa, b.sig AS sb
        |  FROM ${pfx}bands a JOIN ${pfx}bands b
@@ -279,10 +275,6 @@ object TextQueries {
       s"min(($a*xm+$b)%$p) AS h$i"
     }.mkString(", ")
     val sigList = (0 until k).map(i => s"h$i").mkString("[", ",", "]")
-    val bandSels = (0 until bands).map { b =>
-      val slots = (0 until rowsPerBand).map(r => s"sig[${b * rowsPerBand + r + 1}]").mkString(", ")
-      s"SELECT doc_id, sig, $b AS band, concat_ws(',', $slots) AS bkey FROM sigl"
-    }.mkString(" UNION ALL ")
     s"""WITH docs AS (
        |  SELECT doc_id, string_split_regex(lower(text), '\\s+') AS t FROM documents),
        |sh AS (
@@ -293,7 +285,7 @@ object TextQueries {
        |hx AS (SELECT doc_id, ('0x' || substr(md5(s), 1, 15))::BIGINT % $p AS xm FROM sh),
        |sigs AS (SELECT doc_id, $mins FROM hx GROUP BY doc_id),
        |sigl AS (SELECT doc_id, $sigList AS sig FROM sigs),
-       |bands AS ($bandSels),
+       |bands AS (${Dedup.minhashBandsSql(bands, rowsPerBand, "sigl")}),
        |cands AS (
        |  SELECT DISTINCT n.doc_id AS nid, r.doc_id AS rid, n.sig AS sa, r.sig AS sb
        |  FROM bands n JOIN bands r ON n.band = r.band AND n.bkey = r.bkey

@@ -1994,7 +1994,7 @@ object VectorQueries {
        |ORDER BY label""".stripMargin) { (spark, dir) =>
     // state + fold both live in Drift (covarianceCellState /
     // covarianceDrift) so the batch query and the standing streaming
-    // monitor (StreamOps.covarianceCellCounts) run the IDENTICAL
+    // monitor (Drift.covarianceCellState over a stream) run the IDENTICAL
     // exact-integer chain — the r14 streaming leg rides this split
     import graft.operators.Drift
     Drift.covarianceDrift(Drift.covarianceCellState(

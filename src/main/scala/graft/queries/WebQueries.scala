@@ -90,11 +90,11 @@ object WebQueries {
     * @attr, and four `//li[span='…']/text()` label-siblings, exactly
     * the registered house xpaths) while DuckDB replays the fields with
     * anchored regexes over its own copy of the same strings. Every 3rd
-    * page gets a bare `<br>` — invalid XML, so the strict parse fails
-    * and those rows prove the HtmlSoup tag-soup repair path inside the
-    * hash-checked gate, not just in specs. Numeric post-extraction
-    * (rooms from '3室2厅', area from '88.5平米') mirrors the
-    * reference's F2 string→number guards. */
+    * page gets a bare `<br>` — invalid XML — so the hash-checked gate,
+    * not just the specs, checks HtmlSoup's one tree rule: an unclosed
+    * void tag elsewhere on the page changes no field. Numeric
+    * post-extraction (rooms from '3室2厅', area from '88.5平米') mirrors
+    * the reference's F2 string→number guards. */
   val q136PageExtract = Q(
     "q136_page_extract",
     """WITH pages AS (

@@ -127,11 +127,7 @@ object StreamOps {
       .select(col(idCol).cast("long").as("id"),
         Dedup.minhashSigExpr(col(textCol), n, k).as("sig"))
       .filter(col("sig").isNotNull)
-      .select(col("id"), col("sig"),
-        posexplode(array((0 until bands).map { b =>
-          concat_ws(",", (0 until rowsPerBand).map(r =>
-            element_at(col("sig"), b * rowsPerBand + r + 1)): _*)
-        }: _*)).as(Seq("band", "bkey")))
+      .select(col("id"), col("sig"), Dedup.minhashBands(col("sig"), bands, rowsPerBand))
       .as[(Long, Seq[Long], Int, String)]
     banded.groupByKey(d => (d._3, d._4))
       .flatMapGroupsWithState[(Long, Seq[Long]), (Long, Int, Long, Double, Boolean)](
@@ -290,18 +286,6 @@ object StreamOps {
     events.groupBy(col(groupCol))
       .agg(graft.functions.QuantileSketch.sketch(valueCents, lo, width, nBins).as("qs"))
 
-  /** Streaming approximate distinct count — q148's portable HLL
-    * registers as grouped streaming state: ≤ 64 (group, bucket) rows
-    * each holding ONE max-rank int, forever, whatever the stream's
-    * cardinality. MAX is order-independent, so each micro-batch merges
-    * exactly like a batch map-side partial and the streamed register
-    * table is bit-identical to the batch sketch over the same rows;
-    * the cardinality estimate (PortableHll.state + estimate) is derived
-    * on the serving read — the one-aggregation rule puts the spine
-    * join + register sum on the reader, where serving wants it. */
-  def distinctRegisters(items: DataFrame, groupCol: String, item: Column): DataFrame =
-    graft.functions.PortableHll.registers(items, groupCol, item)
-
   /** Streaming A/B experiment monitor — q147's Welch sufficient
     * statistics as grouped streaming state: per (group, cohort) the
     * state is THREE longs (n, Σv, Σv²) forever, and each micro-batch
@@ -397,75 +381,6 @@ object StreamOps {
         col(valueCol).as("v"))
       .agg(count(lit(1)).as("c"))
 
-  /** Standing k-anonymity monitor state — the STREAMING leg of the
-    * q215 release audit: (quasi-identifier × sensitive)-grain counts
-    * maintained incrementally in complete mode. The (QI, sensitive)
-    * grain is what makes l-diversity streamable — the per-class
-    * distinct-sensitive count is the class's state ROW count, so the
-    * whole state is plain additive counts, bounded by the QI ×
-    * sensitive value domain (dimension-grain). Land via
-    * [[sinkCompleteVersions]]; the serving read is
-    * `Privacy.audit(latestSnapshot)` — the SAME fold the batch q215
-    * runs (StreamOpsSpec pins serving ≡ batch across a checkpoint
-    * bounce), so a release gate wired to the monitor and the batch
-    * audit can never disagree. */
-  def qiClassCounts(rows: DataFrame, qiCols: Seq[String],
-      sensCol: String): DataFrame =
-    graft.operators.Privacy.classState(rows, qiCols, sensCol)
-
-  /** Standing covariance-drift monitor state — the STREAMING leg of
-    * the q233 second-moment audit (r13 verdict #7): per (label, half,
-    * upper-triangle cell) exact int64 product sums plus half row
-    * counts, maintained incrementally in complete mode — the state is
-    * additive under union exactly like the k-anonymity class counts,
-    * and it is (labels × 2 × D(D+1)/2)-grain, never row-grain. Land
-    * via [[sinkCompleteVersions]]; the serving read is
-    * `Drift.covarianceDrift(latestSnapshot)` — the SAME fold the batch
-    * q233 runs (StreamOpsSpec pins serving ≡ batch across a bounce),
-    * so a drift alarm wired to the monitor and the batch audit can
-    * never disagree. Input: (label, h ∈ {0,1}, q ARRAY<BIGINT>). */
-  def covarianceCellCounts(rows: DataFrame): DataFrame =
-    graft.operators.Drift.covarianceCellState(rows)
-
-  /** Standing preference monitor state — the STREAMING leg of the q237
-    * Bradley–Terry fit (reward/preference data arrives continuously):
-    * (winner, loser) duel counts maintained incrementally in complete
-    * mode — items²-grain additive counts, the qiClassCounts class.
-    * Land via [[sinkCompleteVersions]]; the serving read is
-    * `BradleyTerry.fitFromCounts(latestSnapshot)` — the SAME MM fold
-    * the batch q237 runs (StreamOpsSpec pins serving ≡ batch across a
-    * bounce), so a leaderboard wired to the monitor and the batch fit
-    * can never disagree. Input columns: (winner, loser). */
-  def duelCounts(duels: DataFrame): DataFrame =
-    graft.operators.BradleyTerry.duelState(duels)
-
-  /** Standing vocabulary-induction monitor state — the STREAMING leg of
-    * the q235/q236 BPE merge learning (r14 verdict #7): word-grain
-    * token-family counts maintained incrementally in complete mode —
-    * additive under union exactly like the duel counts, and
-    * dictionary-grain (Heaps-bounded), never corpus-grain. Land via
-    * [[sinkCompleteVersions]]; the serving read is
-    * `Bpe.learnMergesFromCounts(latestSnapshot, rounds)` — the SAME
-    * size-gated merge rounds the batch q235 runs (StreamOpsSpec pins
-    * serving ≡ batch across a bounce), so a standing tokenizer-refresh
-    * monitor over corpus deltas and the batch fit can never disagree.
-    * Input: docs with `textCol`. */
-  def bpeWordCounts(docs: DataFrame, textCol: String): DataFrame =
-    graft.operators.Bpe.wordCounts(docs, textCol)
-
-  /** Standing trained-filter monitor state — the streaming leg of the
-    * q242 Naive Bayes classifier: (label, bucket, cnt) hashed-token
-    * training counts plus per-label document counts, additive under
-    * union exactly like the BPE word dict, and (label × Dim)-bounded,
-    * never corpus-grain. Land via [[sinkCompleteVersions]]; the
-    * serving read is `NaiveBayes.modelFromState(latestSnapshot)` →
-    * `NaiveBayes.classify` — the SAME dense nano-lattice model the
-    * batch fit builds (StreamOpsSpec pins serving ≡ batch across a
-    * bounce), so a filter retrained from corpus deltas and the batch
-    * fit can never disagree. Input: docs with `textCol`, `labelCol`. */
-  def nbTrainState(docs: DataFrame, textCol: String, labelCol: String): DataFrame =
-    graft.operators.NaiveBayes.trainState(docs, textCol, labelCol)
-
   /** Incremental BM25 posting ingest — the serving-index face of the
     * q94 cross-corpus incremental pattern: each micro-batch of NEW
     * documents lands its per-doc posting delta (id, t, cnt, dl —
@@ -508,7 +423,7 @@ object StreamOps {
     * those spans the store has seen — the q234 per-document statistic,
     * from the SAME [[graft.operators.Dedup.spanFingerprints]] pipeline
     * the batch audit runs, so the standing screen and the batch query
-    * cannot disagree (the qiClassCounts/Privacy contract applied to
+    * cannot disagree (the Privacy.classState/audit contract applied to
     * memorization screening). The store side is read as DISTINCT
     * fingerprints — duplicates across deltas (the same span arriving
     * in several batches) must not double-count.

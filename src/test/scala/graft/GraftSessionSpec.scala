@@ -182,4 +182,14 @@ class GraftSessionSpec extends SparkSpec {
       assert(math.abs(est - exact(lang)) <= 0.55 * exact(lang), s"$lang: $est vs ${exact(lang)}")
     }
   }
+
+  test("the status store keeps at most StatusStoreCap finished jobs") {
+    val sc = spark.sparkContext
+    (1 to GraftSession.StatusStoreCap + 20).foreach(i => sc.parallelize(Seq(i), 1).count())
+    // the store trims asynchronously after a job ends: poll
+    val deadline = System.nanoTime() + 30L * 1000000000L
+    while (sc.statusTracker.getJobIdsForGroup(null).length > GraftSession.StatusStoreCap &&
+        System.nanoTime() < deadline) Thread.sleep(50)
+    assert(sc.statusTracker.getJobIdsForGroup(null).length <= GraftSession.StatusStoreCap)
+  }
 }

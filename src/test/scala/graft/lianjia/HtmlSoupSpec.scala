@@ -3,8 +3,9 @@ package graft.lianjia
 import javax.xml.parsers.DocumentBuilderFactory
 import org.scalatest.funsuite.AnyFunSuite
 
-/** HtmlSoup is a pure function: every output must parse under the SAME
-  * strict, hardened XML configuration XPathStructExpr uses. */
+/** HtmlSoup.parse is a pure function from any page to a DOM. On a
+  * well-formed page its tree must read like the strict, hardened XML
+  * parse below — the spec's reference. */
 class HtmlSoupSpec extends AnyFunSuite {
 
   private def parse(xml: String) = {
@@ -17,7 +18,7 @@ class HtmlSoupSpec extends AnyFunSuite {
   }
 
   private def cleanParses(html: String): org.w3c.dom.Document =
-    parse(HtmlSoup.clean(html))
+    HtmlSoup.parse(html)
 
   test("well-formed fragment passes through with content intact") {
     val doc = cleanParses("""<div class="a"><span>hi</span></div>""")
@@ -74,8 +75,9 @@ class HtmlSoupSpec extends AnyFunSuite {
 
   test("fuzz: clean() of arbitrary markup soup always parses as XML") {
     // deterministic pseudo-random soup from markup-ish fragments — the
-    // property is total: whatever a crawler fetches, the repair pass
-    // must yield a parseable document (worst case: all text)
+    // property is total: whatever a crawler fetches, HtmlSoup.parse must
+    // yield a document (worst case: all text) whose XML serialization
+    // parses under the strict configuration above
     val frags = Array(
       "<div>", "</div>", "<li>", "</li>", "<p class=", "x\">", "'y'>",
       "<br>", "<img src=foo>", "&", "&amp;", "&nbsp;", "&#65;", "&bogus;",
@@ -89,6 +91,12 @@ class HtmlSoupSpec extends AnyFunSuite {
         case e: Exception => fail(s"iteration $i failed on soup:\n$soup\n${e.getMessage}")
       }
       assert(doc != null)
+      val xml = new java.io.StringWriter()
+      javax.xml.transform.TransformerFactory.newInstance().newTransformer().transform(
+        new javax.xml.transform.dom.DOMSource(doc), new javax.xml.transform.stream.StreamResult(xml))
+      try parse(xml.toString) catch {
+        case e: Exception => fail(s"iteration $i serialized to bad XML:\n$soup\n$xml\n${e.getMessage}")
+      }
     }
   }
 
@@ -100,5 +108,136 @@ class HtmlSoupSpec extends AnyFunSuite {
         |<li><span>建筑面积</span>142.3㎡
         |</ul></div></div>""".stripMargin)
     assert(doc.getElementsByTagName("li").getLength === 2)
+  }
+
+  // Well-formed pages: the fixture pages of PipelineSpec,
+  // CrawlIntegrationSpec, XPathStructExprSpec and CssSpec, q136's page
+  // shape, and pages on the XML normalization rules (CRLF text, tab and
+  // newline attribute values, references, comments, entities).
+  private val wellFormedPages: Seq[String] = {
+    val pipeline = Seq(
+      """<div class="position"><a href="/xiaoqu/pudong/">浦东</a>
+        |<a href="/xiaoqu/minhang/">闵行</a><a href="/other/x/">no</a></div>""".stripMargin,
+      """<div data-total-count="2"><a href="https://sh.lianjia.com/xiaoqu/123/">a</a></div>""",
+      """<div page-data='{"curPage":1,"totalPage":3}'>x</div>""",
+      """<div>no pagination attr</div>""",
+      """<html><body>
+        |<h1 class="detailTitle">仁恒河滨城</h1>
+        |<div class="detailDesc">浦东 联洋 芳甸路333弄</div>
+        |<a class="crumb">浦东</a><a class="crumb">联洋</a>
+        |<span class="xiaoquInfoContent year">2003年建成</span>
+        |<li><span>建筑类型</span>板楼</li>
+        |<li><span>物业费用</span>2.5元/平米/月</li>
+        |<li><span>物业公司</span>仁恒物业</li>
+        |<li><span>开发商</span>仁恒置地</li>
+        |<li><span>楼栋总数</span>51栋</li>
+        |<li><span>房屋总数</span>2350户</li>
+        |<script>resblockPosition:'121.552,31.238',resblockName</script>
+        |</body></html>""".stripMargin,
+      "<html><body><script>resblockPosition:'0,0'</script></body></html>",
+      """<html><body>
+        |<h1 class="main">满五唯一 高区view</h1>
+        |<span class="total">1250</span>
+        |<div class="communityName"><a class="info" href="/xiaoqu/42/">仁恒河滨城</a></div>
+        |<li><span>房屋户型</span>3室2厅1厨2卫</li>
+        |<li><span>所在楼层</span>高楼层 (共28层)</li>
+        |<li><span>建筑面积</span>142.3㎡</li>
+        |<li><span>房屋朝向</span>南</li>
+        |<li><span>装修情况</span>精装</li>
+        |<li><span>挂牌时间</span>2021-03-01</li>
+        |<li><span>上次交易</span>2015-06-30</li>
+        |<li><span>链家编号</span>107104000001</li>
+        |<span class="count">89</span>
+        |</body></html>""".stripMargin,
+      """<html><body>
+        |<h1 class="main">中区 两房</h1>
+        |<div class="wrapper">2021.4.15 成交</div>
+        |<span class="dealTotalPrice"><i>980</i></span>
+        |<div class="price"><b>1020</b></div>
+        |<div class="communityName"><a class="info" href="/xiaoqu/42/">仁恒河滨城</a></div>
+        |<li><span>房屋户型</span>2室2厅1厨1卫</li>
+        |<li><span>建筑面积</span>108.6㎡</li>
+        |</body></html>""".stripMargin)
+    def crawlHouse(deal: Boolean) =
+      s"""<html><body><h1 class="main">房源</h1>
+         |${if (deal) """<span class="dealTotalPrice"><i>980</i></span>
+         |<div class="wrapper">2021.5.1 成交</div>"""
+      else """<span class="total">1250</span><span class="count">7</span>"""}
+         |<div class="communityName"><a class="info" href="/xiaoqu/101/">小区A</a></div>
+         |<li><span>建筑面积</span>99.9㎡</li>
+         |</body></html>""".stripMargin
+    val crawl = Seq(
+      """<div><a href="/xiaoqu/pudong/">浦东</a></div>""",
+      """<html><body><h1 class="detailTitle">小区A</h1>
+        |<a class="crumb">浦东</a><a class="crumb">联洋</a>
+        |<span class="xiaoquInfoContent year">2005年建成</span>
+        |<li><span>楼栋总数</span>10栋</li>
+        |<script>resblockPosition:'121.5,31.2',x</script>
+        |</body></html>""".stripMargin,
+      crawlHouse(deal = false), crawlHouse(deal = true))
+    val xpathSpec = Seq(
+      """<html><body>
+        |<h1 class="t">标题文本</h1>
+        |<li><span>房屋户型</span>3室2厅</li>
+        |<li><span>装修情况</span>精装</li>
+        |</body></html>""".stripMargin)
+    val css = Seq(
+      """<div class="listContent"><div class="xiaoquListItem">
+        |<a class="img" href="/xiaoqu/1/">a</a></div>
+        |<div class="xiaoquListItem"><a class="img" href="/xiaoqu/2/">b</a></div></div>"""
+        .stripMargin)
+    // q136 (queries/WebQueries) without its every-third-page <br>
+    def q136(k: Int) =
+      s"""<html><body><div class="sellDetailHeader"><h1 class="main">House $k</h1></div>""" +
+        s"""<div class="communityName"><a class="info">V${k % 50}</a><a class="sub">map</a></div>""" +
+        s"""<div class="houseRecord"><span class="info" data-hid="H$k">record</span></div>""" +
+        s"""<div class="base"><ul><li><span class="label">房屋户型</span>${k % 5 + 1}室${k % 3 + 1}厅</li>""" +
+        s"""<li><span class="label">建筑面积</span>${k % 200 + 50}.5平米</li>""" +
+        s"""<li><span class="label">所在楼层</span>中楼层(共${k % 30 + 2}层)</li>""" +
+        s"""<li><span class="label">配备电梯</span>${if (k % 2 == 0) "有" else "无"}</li>""" +
+        "</ul></div></body></html>"
+    val rules = Seq(
+      "<html>\r\n<body><h1 class=\"main\">a\r\nb\rc&#13;d&#10;e</h1>\r\n" +
+        "<div class=\"communityName\" title=\"x\ty\r\nz\n w\rv&#9;&#10;u\">" +
+        "<a class=\"info\" href=\"/xiaoqu/7/\">T &amp; &lt;b&gt; &#65;&#x4e2d;&#x1F600;</a></div>\r\n" +
+        "</body></html>\r\n",
+      "<!-- lead -->\n<html><body><h1 class=\"main\">a<!-- x -->b</h1>" +
+        "<li><span>房屋户型</span>one<!-- c -->two</li></body></html>\n<!-- tail -->")
+    pipeline ++ crawl ++ xpathSpec ++ css ++ Seq(20, 40, 100).map(q136) ++ rules
+  }
+
+  private val fixturePaths: Seq[String] =
+    (Pipeline.villageFields ++ Pipeline.onsaleFields ++ Pipeline.soldFields ++
+      Pipeline.houseCommonFields).map(_._2) ++
+    Seq( // q136's seven
+      "//h1[@class='main']/text()",
+      "//div[@class='communityName']/a[1]/text()",
+      "//div[@class='houseRecord']/span/@data-hid",
+      "//li[span='房屋户型']/text()",
+      "//li[span='建筑面积']/text()",
+      "//li[span='所在楼层']/text()",
+      "//li[span='配备电梯']/text()") ++
+    Seq("//li/span/text()", "//h1[@class='t']/text()") ++ // XPathStructExprSpec
+    Seq(".listContent .xiaoquListItem a.img::attr(href)", ".absent b::text",
+      ".resultDes span::text", ".resultDes .total span::text",
+      ".xiaoquInfo .xiaoquInfoItem:nth-child(2) .xiaoquInfoContent::text",
+      "a.info::attr(href)").map(Css.toXPath) ++
+    Seq("//div/@title", "//a/@href", "//h1", "/html/body/h1/text()", "/*/body//li[1]",
+      "//comment()", "/node()", "//text()", "//script/text()")
+
+  test("differential: every fixture path reads a well-formed page as a strict XML parse does") {
+    import javax.xml.xpath.{XPathConstants, XPathFactory}
+    val xp = XPathFactory.newInstance().newXPath()
+    def read(doc: org.w3c.dom.Document, path: String) = {
+      val e = xp.compile(path)
+      val nodes = e.evaluate(doc, XPathConstants.NODESET).asInstanceOf[org.w3c.dom.NodeList]
+      (e.evaluate(doc, XPathConstants.STRING),
+        (0 until nodes.getLength).map(i => (nodes.item(i).getNodeName, nodes.item(i).getTextContent)))
+    }
+    val paths = fixturePaths.distinct
+    for (page <- wellFormedPages; path <- paths) {
+      val strict = parse(page)
+      assert(read(HtmlSoup.parse(page), path) === read(strict, path), s"$path on\n$page")
+    }
   }
 }

@@ -77,8 +77,8 @@ class PipelineSpec extends SparkSpec {
   test("villageItems on TAG SOUP: same fields as the well-formed fixture") {
     // the same village page as real-world tag soup: no doctype close, an
     // unclosed <li> chain, <br>, bare &, &nbsp;, unquoted attrs — the
-    // markup parsel/lxml accepts (lianjia.py:131-153); HtmlSoup repairs
-    // it in front of the strict parser
+    // markup parsel/lxml accepts (lianjia.py:131-153); HtmlSoup.parse
+    // repairs it while building the page tree
     val soup =
       """<!DOCTYPE html><html><body>
         |<h1 class=detailTitle>仁恒河滨城</h1><br>

@@ -44,7 +44,7 @@ class XPathStructExprSpec extends SparkSpec {
   }
 
   test("a tag-soup page falls back to HtmlSoup and writes nothing to stderr") {
-    // the unclosed <br> and <li>s fail the strict parse; the repair parses
+    // the unclosed <br> and <li>s are repaired in the one parse
     val soup =
       """<html><body><h1 class="t">标题文本</h1><br>
         |<li><span>房屋户型</span>3室2厅
@@ -70,12 +70,43 @@ class XPathStructExprSpec extends SparkSpec {
     val got = Seq(evil).toDF("html")
       .select(XPathStructExpr.xpathStruct(col("html"), fields).as("x"))
       .select("x.title").as[Option[String]].head()
-    // The strict parser rejects the DOCTYPE outright; the tag-soup repair
-    // then strips it and neutralizes the entity reference into inert
-    // literal text ("&xxe;"). Either way the external entity must never
-    // be RESOLVED — the assertion is on the security property, not the
-    // recovery path.
+    // HtmlSoup.parse drops the DOCTYPE and keeps the unknown entity
+    // reference as inert literal text ("&xxe;"); no XML parser reads the
+    // page, so the external entity is never RESOLVED — the assertion is
+    // on the security property.
     assert(got === Some("&xxe;"))
     assert(!got.get.contains("root:"))
+  }
+
+  /** Each field of `paths` read from the page `<html><body>inner…`,
+    * once as is and once with a stray unclosed <br> elsewhere on it. */
+  private def withAndWithoutBr(inner: String, paths: (String, String)*) =
+    Seq("", "<br>").map { br =>
+      val r = Seq(s"<html><body>$inner<p>pad</p>$br</body></html>").toDF("html")
+        .select(XPathStructExpr.xpathStruct(col("html"), paths).as("x"))
+        .select(col("x.*")).head()
+      (0 until r.length).map(i => Option(r.getString(i)))
+    }
+
+  test("one tree: text() splits at a comment with and without a stray <br>") {
+    assert(withAndWithoutBr("""<h1 class="main">a<!-- x -->b</h1>""",
+      "t" -> "//h1[@class='main']/text()") === Seq(Seq(Some("a")), Seq(Some("a"))))
+  }
+
+  test("one tree: uppercase tags read as lowercase with and without a stray <br>") {
+    assert(withAndWithoutBr("""<H1 class="main">T</H1>""",
+      "t" -> "//h1[@class='main']/text()") === Seq(Seq(Some("T")), Seq(Some("T"))))
+  }
+
+  test("one tree: an absolute path reads the page with and without a stray <br>") {
+    assert(withAndWithoutBr("<h1>T</h1>", "t" -> "/html/body/h1/text()") ===
+      Seq(Seq(Some("T")), Seq(Some("T"))))
+  }
+
+  test("one tree: a numeric reference XML cannot hold stays literal and nulls no field") {
+    for (ref <- Seq("&#0;", "&#x110000;"))
+      assert(withAndWithoutBr(s"""<h1 class="main">T</h1><div class="d">x${ref}y</div>""",
+          "t" -> "//h1[@class='main']/text()", "d" -> "//div[@class='d']/text()") ===
+        Seq.fill(2)(Seq(Some("T"), Some(s"x${ref}y"))), ref)
   }
 }

@@ -587,7 +587,7 @@ class StreamOpsSpec extends SparkSpec {
     batch1.toDF("nat", "band", "seg").coalesce(1).write.parquet(srcDir)
     val schema = spark.read.parquet(srcDir).schema
     def runOnce(): Unit = StreamOps.sinkCompleteVersions(
-      StreamOps.qiClassCounts(
+      graft.operators.Privacy.classState(
         StreamOps.parquetStream(spark, schema, srcDir), qi, "seg"),
       snapDir, ckDir)
     def audit(df: org.apache.spark.sql.DataFrame) =
@@ -640,7 +640,7 @@ class StreamOpsSpec extends SparkSpec {
     batch1.toDF("winner", "loser").coalesce(1).write.parquet(srcDir)
     val schema = spark.read.parquet(srcDir).schema
     def runOnce(): Unit = StreamOps.sinkCompleteVersions(
-      StreamOps.duelCounts(StreamOps.parquetStream(spark, schema, srcDir)),
+      graft.operators.BradleyTerry.duelState(StreamOps.parquetStream(spark, schema, srcDir)),
       snapDir, ckDir)
     def fit(df: org.apache.spark.sql.DataFrame) =
       graft.operators.BradleyTerry.fitFromCounts(df)
@@ -682,7 +682,7 @@ class StreamOpsSpec extends SparkSpec {
     batch1.toDF("label", "h", "q").coalesce(1).write.parquet(srcDir)
     val schema = spark.read.parquet(srcDir).schema
     def runOnce(): Unit = StreamOps.sinkCompleteVersions(
-      StreamOps.covarianceCellCounts(
+      graft.operators.Drift.covarianceCellState(
         StreamOps.parquetStream(spark, schema, srcDir)),
       snapDir, ckDir)
     def fold(df: org.apache.spark.sql.DataFrame) =
@@ -721,7 +721,7 @@ class StreamOpsSpec extends SparkSpec {
     docs.filter(col("doc_id") % 2 === 0).coalesce(1).write.parquet(srcDir)
     val schema = spark.read.parquet(srcDir).schema
     def runOnce(): Unit = StreamOps.sinkCompleteVersions(
-      StreamOps.bpeWordCounts(
+      graft.operators.Bpe.wordCounts(
         StreamOps.parquetStream(spark, schema, srcDir), "text"),
       snapDir, ckDir)
     def serve() = graft.operators.Bpe.learnMergesFromCounts(
@@ -754,7 +754,7 @@ class StreamOpsSpec extends SparkSpec {
     docs.filter(col("doc_id") % 2 === 0).coalesce(1).write.parquet(srcDir)
     val schema = spark.read.parquet(srcDir).schema
     def runOnce(): Unit = StreamOps.sinkCompleteVersions(
-      StreamOps.nbTrainState(
+      graft.operators.NaiveBayes.trainState(
         StreamOps.parquetStream(spark, schema, srcDir), "text", "lang"),
       snapDir, ckDir)
     def serve() = graft.operators.NaiveBayes.classify(probe, "doc_id", "text",
@@ -1123,7 +1123,7 @@ class StreamOpsSpec extends SparkSpec {
       .collect().map(r => (r.getString(0), r.getLong(1)) -> r.getInt(2)).toMap
     val staticSchema = spark.read.parquet(stagedDir).schema
     val streamedRows = StreamOps.runToMemory(spark,
-        StreamOps.distinctRegisters(
+        graft.functions.PortableHll.registers(
           StreamOps.parquetStream(spark, staticSchema, stagedDir),
           "event_type", col("user_id").cast("string")),
         "hll_test", outputMode = "complete")
