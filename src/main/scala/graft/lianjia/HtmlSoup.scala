@@ -30,8 +30,8 @@ import org.w3c.dom.{Document, Element, Node}
   *  - DOCTYPE and processing instructions → dropped; CDATA → its
   *    literal content as text
   *  - attributes: unquoted and bare ones accepted (checked →
-  *    checked="checked"), duplicates dropped (first wins), malformed
-  *    names dropped
+  *    checked="checked"; an unquoted value ends only at whitespace or
+  *    '>'), duplicates dropped (first wins), malformed names dropped
   *
   * The tree rule — every page, well-formed or not, gets the same tree:
   *  - names: element and attribute names are lowercased (HTML's rule,
@@ -208,8 +208,9 @@ object HtmlSoup {
             } else {
               vs = j
               ve = vs
-              while (ve < n && !html.charAt(ve).isWhitespace &&
-                html.charAt(ve) != '>' && html.charAt(ve) != '/') ve += 1
+              // unquoted: ends only at whitespace or '>', so a '/' stays in
+              // the value (`href=/xiaoqu/42/`), as in HTML and lxml
+              while (ve < n && !html.charAt(ve).isWhitespace && html.charAt(ve) != '>') ve += 1
               i = ve
             }
           }

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.CutStats
 import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructField, StructType}
 
 /** The whole-crawl fixpoint (SURVEY §2.3 G9): the reference's Scrapy
@@ -9,8 +10,10 @@ import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructFiel
   * as a driver-side loop of DataFrame ops.
   *
   * Scale notes:
-  *  - `visited` dedup is a `left_anti` join (shuffle on the key), the
-  *    distributed form of the RFPDupeFilter fingerprint set;
+  *  - `visited` dedup is a `left_anti` join, the distributed form of
+  *    the RFPDupeFilter fingerprint set: `visited` is broadcast while
+  *    its measured size fits Spark's broadcast threshold, and the join
+  *    shuffles on the key above it;
   *  - each round's accepted frontier is cut (rule (a) below) and
   *    `visited` is the union of those slices — a flat plan with one
   *    leaf per round that is never copied again;
@@ -27,7 +30,11 @@ import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructFiel
   *  (c) materializes a result before its operator releases the caches
   *      it was computed from (`Hits.finish`, the `PageRank` loop).
   * Every other cut is deleted. Kept cuts are plain eager calls, with no
-  * option to choose another kind (ROADMAP direction 4).
+  * option to choose another kind (ROADMAP direction 4). A kept cut here
+  * carries its measured row count as its plan statistics ([[sized]]),
+  * counted in the cut's own job, so joins over it are planned from its
+  * true size and the loops take emptiness from that count, not from a
+  * job of its own.
   *
   * Size gating: a k-round DataFrame loop pays k× scheduler/checkpoint
   * latency that dwarfs the compute for small graphs (the
@@ -53,18 +60,38 @@ object Iterate {
     */
   def fixpoint(seed: DataFrame, step: DataFrame => DataFrame,
       keyCols: Seq[String], maxIter: Int): DataFrame = {
-    var frontier = seed.dropDuplicates(keyCols).localCheckpoint()
+    var (frontier, rows) = sized(seed.dropDuplicates(keyCols), FrontierMetric)(
+      _.localCheckpoint())
     var visited = frontier
     var i = 0
-    while (i < maxIter && !frontier.isEmpty) {
-      frontier = step(frontier)
+    while (i < maxIter && rows > 0) {
+      val (next, n) = sized(step(frontier)
         .dropDuplicates(keyCols)
-        .join(visited, keyCols, "left_anti")
-        .localCheckpoint() // (a): the next round reads it
+        .join(visited, keyCols, "left_anti"), FrontierMetric)(
+        _.localCheckpoint()) // (a): the next round reads it
+      frontier = next
+      rows = n
       visited = visited.unionByName(frontier)
       i += 1
     }
     visited
+  }
+
+  /** The observed metric that carries each [[fixpoint]] frontier's size
+    * (the seed's, then each round's): one line per round from
+    * [[graft.GraftSession]]'s logger. */
+  val FrontierMetric = "graft.fixpoint.frontier"
+
+  /** A kept cut that knows its size. `cut` is the site's literal
+    * `localCheckpoint`; the row count is observed as `metric` in the
+    * cut's own job (no second job), and the cut's leaf then carries it
+    * as its statistics ([[CutStats]]). Returns the cut and its count. */
+  private def sized(df: DataFrame, metric: String)(
+      cut: DataFrame => DataFrame): (DataFrame, Long) = {
+    val observed = df.observe(metric, count(lit(1)).as("rows"))
+    val c = cut(observed)
+    val rows = observed.queryExecution.observedMetrics(metric).getLong(0)
+    (CutStats.withRowCount(c, rows), rows)
   }
 
   /** Multi-source BFS with hop depth — [[fixpoint]] specialized to an
@@ -240,23 +267,26 @@ object Iterate {
       maxIter: Int): DataFrame = {
     var dist = seed.groupBy("node").agg(min("cost").as("cost"))
     var frontier = dist
+    var rows = -1L // the seed is not cut, so its size is unknown: round 1 runs
     var i = 0
-    while (i < maxIter && !frontier.isEmpty) {
+    while (i < maxIter && rows != 0) {
       // checkpoint: `cand` feeds both the merge and the improved-frontier
       // join below — without it the edges-join + min-aggregate executes
       // twice per round
-      val cand = edges.join(frontier, edges("src") === frontier("node"))
+      val (cand, _) = sized(edges.join(frontier, edges("src") === frontier("node"))
         .select(edges("dst").as("node"), (frontier("cost") + edges("w")).as("cost"))
-        .groupBy("node").agg(min("cost").as("cost"))
-        .localCheckpoint()
-      val merged = dist.unionByName(cand)
-        .groupBy("node").agg(min("cost").as("cost"))
-        .localCheckpoint()
-      frontier = cand
+        .groupBy("node").agg(min("cost").as("cost")), "graft.relaxmin.candidates")(
+        _.localCheckpoint())
+      val (merged, _) = sized(dist.unionByName(cand)
+        .groupBy("node").agg(min("cost").as("cost")), "graft.relaxmin.dist")(
+        _.localCheckpoint())
+      val (improved, n) = sized(cand
         .join(dist.withColumnRenamed("cost", "__old"), Seq("node"), "left")
         .filter(col("__old").isNull || col("cost") < col("__old"))
-        .select("node", "cost")
-        .localCheckpoint()
+        .select("node", "cost"), "graft.relaxmin.frontier")(
+        _.localCheckpoint())
+      frontier = improved
+      rows = n
       dist = merged
       i += 1
     }

@@ -20,8 +20,9 @@ import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
   *    Plain rows keep the whole round codegen'd.)
   *  - the per-round join STRATEGY is pinned by construction, not left
   *    to statistics: after `localCheckpoint` the rank relation is a
-  *    `LogicalRDD` whose size statistics default to "unknown = maximum",
-  *    so a stats-driven planner picks `SortMergeJoin` and re-sorts the
+  *    `LogicalRDD` that keeps its origin plan's size estimate, which
+  *    the join-size rule multiplies through every round's joins, so a
+  *    stats-driven planner can pick `SortMergeJoin` and re-sort the
   *    cached edges EVERY round (r3 verdict measured erratic edge-scale
   *    rounds from exactly this). Instead the node-sized side is hinted:
   *    `broadcast` when the node count fits an executor (zero exchange,

@@ -8,7 +8,8 @@ import org.apache.spark.sql.classic.ExpressionUtils
   * `private[sql]` (`org.apache.spark.sql.classic.ExpressionUtils`), so
   * custom Catalyst expressions need a shim inside the `org.apache.spark
   * .sql` package tree — the standard pattern for Spark extension
-  * libraries. Nothing else of Spark's internals is touched.
+  * libraries. The package's one other use of Spark's internals is
+  * [[CutStats]], which states a lineage cut's measured size.
   */
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)

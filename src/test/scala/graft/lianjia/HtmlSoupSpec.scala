@@ -67,6 +67,17 @@ class HtmlSoupSpec extends AnyFunSuite {
     assert(!el.hasAttribute("2bad"))
   }
 
+  test("an unquoted attribute value ends only at whitespace or '>': a '/' stays in it") {
+    val doc = cleanParses("""<div><a href=/xiaoqu/42/>x</a><a href=/b/ class=c>y</a></div>""")
+    val xp = javax.xml.xpath.XPathFactory.newInstance().newXPath()
+    assert(xp.evaluate("//a/@href", doc) === "/xiaoqu/42/")
+    val as = doc.getElementsByTagName("a")
+    assert(as.item(0).getAttributes.getLength === 1)
+    val second = as.item(1).asInstanceOf[org.w3c.dom.Element]
+    assert(second.getAttribute("href") === "/b/")
+    assert(second.getAttribute("class") === "c")
+  }
+
   test("doctype, comments, CDATA, and multi-root soup") {
     val doc = cleanParses(
       """<!DOCTYPE html><!-- c --><p>one</p><![CDATA[x < y]]><p>two</p>""")

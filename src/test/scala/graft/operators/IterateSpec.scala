@@ -1,9 +1,77 @@
 package graft.operators
 
 import graft.SparkSpec
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{FileSourceScanExec, LogicalRDD, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
-class IterateSpec extends SparkSpec {
+class IterateSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
+
+  /** Runs `body` while a QueryExecutionListener sees every successful
+    * query; returns the result and the cuts' query executions in order,
+    * once `until` holds of them (the listener bus is asynchronous). */
+  private def withCuts[T](until: Seq[QueryExecution] => Boolean)(
+      body: => T): (T, Seq[QueryExecution]) = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
+        if (f == "localCheckpoint") seen.add(qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val result = body
+      def all = seen.toArray(Array.empty[QueryExecution]).toSeq
+      val deadline = System.nanoTime() + 10000000000L
+      while (!until(all) && System.nanoTime() < deadline) Thread.sleep(20)
+      (result, all)
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  /** The call sites (stage names) of every job `body` starts. */
+  private def jobCallSites(body: => Unit): Seq[String] = {
+    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        e.stageInfos.foreach(st => sites.add(st.name))
+    }
+    val marker = "IterateSpec marker job"
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      body
+      // the bus delivers in order: once the marker job is seen, so is every job before it
+      sc.setCallSite(marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearCallSite()
+      val deadline = System.nanoTime() + 10000000000L
+      while (!sites.contains(marker) && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(sites.contains(marker), "the marker job never reached the listener")
+      sites.toArray(Array.empty[String]).toSeq.filter(_ != marker)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** `visited`'s slices, seed first: each round's cut is one leaf. */
+  private def slices(visited: DataFrame): Seq[LogicalRDD] =
+    visited.queryExecution.optimizedPlan.collectLeaves().map {
+      case r: LogicalRDD => r
+      case other => fail(s"a visited slice is not a cut: ${other.nodeName}")
+    }
+
+  // a→b,c; b→d,e; c→d; d→a: slices {a}, {b,c}, {d,e}, then an empty round
+  private val fanEdges = Seq(("a", "b"), ("a", "c"), ("b", "d"), ("b", "e"),
+    ("c", "d"), ("d", "a"))
+
+  private def fanCrawl(maxIter: Int): DataFrame = {
+    val edges = fanEdges.toDF("src", "dst")
+    Iterate.fixpoint(Seq("a").toDF("url"),
+      f => f.join(edges, f("url") === edges("src")).select(edges("dst").as("url")),
+      keyCols = Seq("url"), maxIter = maxIter)
+  }
 
   test("fixpoint traverses a link graph once per node, terminates on drain") {
     // page graph: a→b,c; b→d; c→d; d→a (cycle back)
@@ -178,5 +246,68 @@ class IterateSpec extends SparkSpec {
       (None, 5L), (Some(1L), 0L), (Some(2L), 1L), (Some(3L), 2L))
     assert(relaxOf(nullNodeCost) === costs)
     assert(LocalGate.withOverride(0)(relaxOf(nullNodeCost)) === costs)
+  }
+
+  test("fixpoint: every visited slice carries its actual row count as its statistics") {
+    val cuts = slices(fanCrawl(10))
+    assert(cuts.map(_.rdd.count()) === Seq(1L, 2L, 2L, 0L))
+    cuts.foreach(c => assert(c.stats.rowCount === Some(BigInt(c.rdd.count())), c))
+  }
+
+  test("fixpoint: each frontier's size is its round's graft.* observed metric") {
+    val (visited, cuts) = withCuts(_.size >= 4)(fanCrawl(10))
+    val logged = cuts.flatMap(_.observedMetrics.get(Iterate.FrontierMetric)).map(_.getLong(0))
+    assert(logged === slices(visited).map(_.rdd.count()))
+  }
+
+  test("fixpoint: a crawl-shaped step over a parquet page table broadcasts no file scan in any round") {
+    // a chain of pages p0 ⇄ p1 ⇄ … ⇄ p7, one new page per round (each
+    // back link is deduplicated against `visited`); even and odd pages
+    // are read by two extraction branches, as the crawl's page types are
+    val n = 8
+    val dir = java.nio.file.Files.createTempDirectory("iterate-pages").toString
+    (0 until n).map { i =>
+      (s"/p$i", Seq(i - 1, i + 1).filter(j => j >= 0 && j < n)
+        .map(j => s"""<a href="/p$j">$j</a>""").mkString)
+    }.toDF("url", "html").repartition(2).write.mode("overwrite").parquet(dir)
+    val pages = spark.read.parquet(dir)
+    def links(fetched: DataFrame) =
+      fetched.select(explode(regexp_extract_all(col("html"), lit("href=\"([^\"]+)\""), lit(1))).as("url"))
+    def step(frontier: DataFrame): DataFrame = {
+      val fetched = frontier.select("url").join(pages, Seq("url"))
+      links(fetched.filter(col("url").rlike("[02468]$")))
+        .unionByName(links(fetched.filter(col("url").rlike("[13579]$"))))
+    }
+    val (visited, rounds) = withCuts(_.size >= n + 1)(
+      Iterate.fixpoint(Seq("/p0").toDF("url"), step, Seq("url"), maxIter = 20))
+    assert(visited.as[String].collect().sorted.toSeq === (0 until n).map(i => s"/p$i").sorted)
+    assert(rounds.size === n + 1) // the seed's cut, then one per round
+    def scans(p: SparkPlan) = collectWithSubqueries(p) { case s: FileSourceScanExec => s }
+    rounds.zipWithIndex.foreach { case (qe, round) =>
+      val broadcastScans = collectWithSubqueries(qe.executedPlan) {
+        case b: BroadcastExchangeExec if scans(b).nonEmpty => b
+      }
+      assert(broadcastScans.isEmpty, s"round $round broadcasts the page table:\n${qe.executedPlan}")
+    }
+  }
+
+  test("fixpoint and the distributed relaxMin decide emptiness without an isEmpty job") {
+    val sites = jobCallSites {
+      fanCrawl(10).collect()
+      val edges = Seq(("a", "b", 1L), ("b", "c", 2L), ("a", "c", 5L)).toDF("src", "dst", "w")
+      LocalGate.withOverride(0)(
+        Iterate.relaxMin(Seq(("a", 0L)).toDF("node", "cost"), edges, 10).collect())
+    }
+    assert(sites.exists(_.startsWith("localCheckpoint at Iterate.scala")), sites)
+    assert(!sites.exists(_.startsWith("isEmpty at Iterate.scala")), sites)
+  }
+
+  test("fixpoint: an empty seed calls the step zero times and returns an empty frame") {
+    var calls = 0
+    val visited = Iterate.fixpoint(Seq.empty[String].toDF("url"),
+      f => { calls += 1; f }, keyCols = Seq("url"), maxIter = 5)
+    assert(calls === 0)
+    assert(visited.count() === 0)
+    assert(visited.columns.toSeq === Seq("url"))
   }
 }
