@@ -9,13 +9,15 @@ import org.apache.spark.sql.functions._
   *
   * Design: pure built-in expressions (`regexp_extract`, `from_json`,
   * `regexp_extract_all`) plus the native one-parse XPath expressions
-  * (`XPathStructExpr`/`XPathArrayExpr`) — codegen'd or parse-dominated,
-  * null-safe (extraction miss → null/empty, the reference's
+  * (`XPathStructExpr`/`XPathArrayExpr`) — codegen'd, or one parse per
+  * page, null-safe (extraction miss → null/empty, the reference's
   * `extract_first() → None` semantics, F4), no UDFs. The XPath
   * expressions read every page through one parser, `HtmlSoup.parse`,
   * which builds the same tree for well-formed pages and broken
   * real-world markup (unclosed tags, bare `&`, HTML entities), so both
-  * extract like parsel/lxml does in the reference. CSS selectors
+  * extract like parsel/lxml does in the reference. The struct form reads
+  * every field whose path has `Pipeline`'s shapes from one walk of that
+  * tree (`plans/XPathWalk`) and any other path through JAXP. CSS selectors
   * (`cssFirst`/`cssAll`) translate to XPath at plan time via
   * `Css.toXPath`.
   */

@@ -1,10 +1,9 @@
 package graft.plans
 
-import javax.xml.xpath.{XPathConstants, XPathExpression, XPathFactory}
+import javax.xml.xpath.{XPathConstants, XPathExpression, XPathExpressionException, XPathFactory}
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType}
@@ -19,15 +18,25 @@ import graft.lianjia.HtmlSoup
   * `xpath_string(html, p)` re-parses the document for every field — a
   * 23-field page record (lianjia.py:131-153) costs 23 parses. This
   * expression parses once, with the one page parser `HtmlSoup.parse`
-  * (well-formed or tag soup, every page gets the same tree), and
-  * evaluates all compiled XPaths against the same DOM, returning
-  * STRUCT<field: STRING, ...> with null for misses (the reference's
-  * extract_first() → None, F4).
+  * (well-formed or tag soup, every page gets the same tree), and reads
+  * all fields from the same DOM, returning STRUCT<field: STRING, ...>
+  * with the trimmed string-value of each field and null for misses (the
+  * reference's extract_first() → None, F4).
   *
-  * XPath instances are per-task (expressions are deserialized per
-  * task), created lazily off the transient fields — no cross-thread
-  * sharing. CodegenFallback: parsing and XPath evaluation dominate eval
-  * cost; codegen would only inline the call.
+  * Each field path is compiled once, by its shape: a path in
+  * `XPathWalk`'s subset (`//` then child steps with at most one
+  * `[@a='v']`, `[n]` or `[c='v']` predicate each, ending in `/text()` or
+  * `/@name` — every path of `Pipeline` and q136) is read from one
+  * pre-order walk of the page that serves all such fields; any other
+  * path (`Css.toXPath` output, other axes, functions, absolute paths) is
+  * evaluated by JAXP as `XPathConstants.STRING`, which the walk equals on
+  * its subset. A JAXP evaluation error is a miss (null); any other
+  * exception fails the task.
+  *
+  * The walker and the JAXP expressions are per-task (expressions are
+  * deserialized per task), created lazily off the transient fields — no
+  * cross-thread sharing. CodegenFallback: codegen would only inline the
+  * call to the parse and the walk.
   */
 case class XPathStructExpr(child: Expression, fields: Seq[(String, String)])
     extends UnaryExpression with CodegenFallback {
@@ -35,25 +44,37 @@ case class XPathStructExpr(child: Expression, fields: Seq[(String, String)])
   override def dataType: DataType =
     StructType(fields.map { case (name, _) => StructField(name, StringType) })
 
-  @transient private lazy val compiled: Array[XPathExpression] = {
+  @transient private lazy val walked: Seq[Option[XPathWalk.Path]] =
+    fields.map { case (_, path) => XPathWalk.compile(path) }
+
+  @transient private lazy val walk = new XPathWalk.Reader(walked)
+
+  /** JAXP expressions of the fields outside the walk's subset (null for
+    * the walked ones). */
+  @transient private lazy val jaxp: Array[XPathExpression] = {
     val xp = XPathFactory.newInstance().newXPath()
-    fields.map { case (_, path) => xp.compile(path) }.toArray
+    fields.zip(walked).map {
+      case ((_, path), None) => xp.compile(path)
+      case (_, Some(_)) => null
+    }.toArray
   }
 
   override def nullSafeEval(input: Any): Any = {
     val html = input.asInstanceOf[UTF8String].toString
     val doc = HtmlSoup.parse(html)
+    val walkedValues = walk.read(doc)
     val values = new Array[Any](fields.length)
     var i = 0
-    while (i < compiled.length) {
-      try {
-        val s = compiled(i).evaluate(doc, XPathConstants.STRING).asInstanceOf[String]
-        val t = if (s == null) "" else s.trim
-        values(i) = if (t.isEmpty) null else UTF8String.fromString(t)
-      } catch { case _: Exception => values(i) = null }
+    while (i < values.length) {
+      val s =
+        if (jaxp(i) == null) walkedValues(i)
+        else try jaxp(i).evaluate(doc, XPathConstants.STRING).asInstanceOf[String]
+        catch { case _: XPathExpressionException => null }
+      val t = if (s == null) "" else s.trim
+      values(i) = if (t.isEmpty) null else UTF8String.fromString(t)
       i += 1
     }
-    InternalRow.fromSeq(values.toIndexedSeq)
+    new GenericInternalRow(values)
   }
 
   override protected def withNewChildInternal(newChild: Expression): XPathStructExpr =
@@ -92,7 +113,7 @@ case class XPathArrayExpr(child: Expression, xpath: String)
     val nodes =
       try compiled.evaluate(HtmlSoup.parse(html), XPathConstants.NODESET)
         .asInstanceOf[org.w3c.dom.NodeList]
-      catch { case _: Exception => null }
+      catch { case _: XPathExpressionException => null }
     if (nodes == null)
       new org.apache.spark.sql.catalyst.util.GenericArrayData(Array.empty[Any])
     else {

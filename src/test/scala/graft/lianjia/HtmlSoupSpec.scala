@@ -251,4 +251,59 @@ class HtmlSoupSpec extends AnyFunSuite {
       assert(read(HtmlSoup.parse(page), path) === read(strict, path), s"$path on\n$page")
     }
   }
+
+  test("differential: the walk reads every page as JAXP does, on every fixture path it compiles") {
+    import graft.plans.{WalkOracle, XPathWalk}
+    // every path of Pipeline's four field lists and q136's seven is walked
+    val extraction = fixturePaths.take(Pipeline.villageFields.length + Pipeline.onsaleFields.length +
+      Pipeline.soldFields.length + Pipeline.houseCommonFields.length + 7)
+    extraction.foreach(p => assert(XPathWalk.compile(p).isDefined, p))
+    val soupPages = Seq(
+      """<ul><li>one<br><li>two<img src="x.png"><li>three &mdash; tail""",
+      "<p>Tom & Jerry &nbsp;&copy; a<b if 1<2</p>",
+      "<div>x</span></div></div>",
+      "<div><script>if (a < b && c) { url = \"/x?a=1&b=2\"; }</script><p>after</p></div>",
+      """<input type=checkbox checked class=big class=small 2bad=x data-n="5">""",
+      """<div><a href=/xiaoqu/42/>x</a><a href=/b/ class=c>y</a></div>""",
+      """<!DOCTYPE html><!-- c --><p>one</p><![CDATA[x < y]]><p>two</p>""",
+      """<div class=base><div class=content><ul>
+        |<li><span>房屋户型</span>3室2厅
+        |<li><span>建筑面积</span>142.3㎡
+        |</ul></div></div>""".stripMargin,
+      """<html><body><h1 class="t">标题文本</h1><br>
+        |<li><span>房屋户型</span>3室2厅
+        |<li><span>装修情况</span>精装
+        |</body></html>""".stripMargin,
+      """<html><body><div class="communityName"><a class="info">V1</a><a class="sub">map</a></div>""" +
+        """<br><div class="houseRecord"><span class="info" data-hid="H3">record</span></div>""" +
+        """<div class="base"><ul><li><span class="label">房屋户型</span>2室1厅<li><span class="label">""" +
+        """配备电梯</span>有</ul></div></body></html>""",
+      // prefixed names, namespace declarations
+      "<div><x:li>a</x:li><li>b</li><o:p>c</o:p><p>d</p></div>",
+      """<html xmlns="http://www.w3.org/1999/xhtml" xmlns:o="urn:o" lang="zh"><body>B<o:p>P</o:p>""" +
+        """<p xmlns="u" a="1">Q</p><i xml:lang="en" xmlns:q="w" xmlnsx="x">I</i></body></html>""",
+      """<div><x:a>1</x:a><a zz:href="p" href="q">2</a><a:b>3</a:b><a href="q2" aa:href="r">4</a>""" +
+        """<b z:y:c="5" xmlns="6">b</b><xmlns:e>e</xmlns:e></div>""")
+    val fuzz = {
+      val frags = Array(
+        "<div>", "</div>", "<li>", "</li>", "<p class=", "x\">", "'y'>",
+        "<br>", "<img src=foo>", "&", "&amp;", "&nbsp;", "&#65;", "&bogus;",
+        "<", ">", "</", "<!--", "-->", "<!DOCTYPE html>", "<![CDATA[", "]]>",
+        "<script>", "</script>", "a<b", "q=\"r\"", "text 文本 ", "<3 ", "=",
+        "<span", " id=1 id=2>", "</wrong>", "<a href='u'>", "")
+      val rnd = new scala.util.Random(42)
+      Seq.fill(300)(Seq.fill(rnd.nextInt(40) + 1)(frags(rnd.nextInt(frags.length))).mkString)
+    }
+    val soupPaths = Seq("//li/text()", "//div/text()", "//div/li[1]/text()", "//div/li[2]/text()",
+      "//li/div/text()", "//p/text()", "//span[@id='1']/text()", "//span/@id",
+      "//a[@href='u']/text()", "//a/@href", "//div[li='text 文本 ']/text()", "//div[span='']/text()",
+      "//script/text()", "//div/div/div/text()", "//li/a[1]/@href", "//p/@class", "//b/@if",
+      "//input[@data-n='5']/@class", "//div[a='x']/a[2]/@href", "//ul/li[3]/text()",
+      "//html/@xmlns", "//html/@o", "//html/@lang", "//body/text()", "//p/@a", "//i/@lang", "//i/@q",
+      "//i/@xmlnsx", "//a[2]/text()", "//a[3]/@href", "//a[@href='r']/text()", "//b/text()", "//b/@c",
+      "//e/text()", "//div/e/text()", "//div[a='4']/b/@xmlns", "//div[li='a']/p/text()")
+    val paths = (fixturePaths ++ soupPaths).distinct.filter(XPathWalk.compile(_).isDefined)
+    for (page <- wellFormedPages ++ soupPages ++ fuzz)
+      assert(WalkOracle.viaExpr(page, paths) === WalkOracle.viaJaxp(page, paths), s"on\n$page")
+  }
 }

@@ -109,4 +109,97 @@ class XPathStructExprSpec extends SparkSpec {
           "t" -> "//h1[@class='main']/text()", "d" -> "//div[@class='d']/text()") ===
         Seq.fill(2)(Seq(Some("T"), Some(s"x${ref}y"))), ref)
   }
+
+  /** Asserts each path is in the walk's subset and reads `page` as
+    * `expected` through XPathStructExpr and through JAXP alike. */
+  private def walkReads(page: String, expected: (String, Option[String])*): Unit = {
+    val paths = expected.map(_._1)
+    paths.foreach(p => assert(XPathWalk.compile(p).isDefined, p))
+    assert(WalkOracle.viaExpr(page, paths) === expected.map(_._2), page)
+    assert(WalkOracle.viaJaxp(page, paths) === expected.map(_._2), page)
+  }
+
+  test("walk = JAXP: nested first-step matches read the first text node in document order") {
+    // the outer li's own text comes after the inner li's
+    walkReads("<ul><li><span>L</span><div><li><span>L</span>inner</li></div>outer</li></ul>",
+      "//li[span='L']/text()" -> Some("inner"), "//li/text()" -> Some("inner"),
+      "//div/li[1]/text()" -> Some("inner"), "//ul/li/text()" -> Some("outer"))
+    walkReads("<div class='a'><div class='a'><b>x</b>in</div>out</div>",
+      "//div[@class='a']/text()" -> Some("in"), "//div/b/text()" -> Some("x"))
+  }
+
+  test("walk = JAXP: a comment splits text(), and a whitespace-only first text node wins as NULL") {
+    walkReads("<html><body><h1 class='main'>a<!-- x -->b</h1></body></html>",
+      "//h1[@class='main']/text()" -> Some("a"), "//body/h1/text()" -> Some("a"))
+    walkReads("<ul><li> <span>L</span>value</li><li><span>M</span><!-- c -->m</li></ul>",
+      "//li[span='L']/text()" -> None, "//li[span='M']/text()" -> Some("m"))
+  }
+
+  test("walk = JAXP: missing attributes and positional steps") {
+    val page = """<div class="communityName"><a>first</a><a class="info" href="/xiaoqu/7/">second</a></div>""" +
+      """<p><a href="">empty</a></p>"""
+    walkReads(page,
+      "//div[@class='communityName']/a[1]/text()" -> Some("first"),
+      "//div[@class='communityName']/a[2]/text()" -> Some("second"),
+      "//div[@class='communityName']/a[3]/text()" -> None,
+      "//div[@class='communityName']/a[@class='info']/@href" -> Some("/xiaoqu/7/"),
+      "//a/@href" -> Some("/xiaoqu/7/"),
+      "//p/a/@href" -> None,
+      "//a[@href='']/text()" -> Some("empty"),
+      "//a[@title='']/text()" -> None,
+      "//a/@title" -> None)
+  }
+
+  test("walk = JAXP: a label is its span's whole string-value, nested markup included") {
+    walkReads("<ul><li><span><b>L</b></span>v1</li><li><span>A<i>B</i><!-- c -->C</span>v2</li></ul>",
+      "//li[span='L']/text()" -> Some("v1"), "//li[span='ABC']/text()" -> Some("v2"),
+      "//li[span='A']/text()" -> None, "//li[b='L']/text()" -> None)
+    // the label compares untrimmed
+    walkReads("<ul><li><span> L </span>v1</li></ul>",
+      "//li[span='L']/text()" -> None, "//li[span=' L ']/text()" -> Some("v1"))
+  }
+
+  test("walk = JAXP: the first match without text() gives way to a later one") {
+    walkReads("""<h1 class="main"><b>x</b></h1><h1 class="main">T</h1><h1 class="main">U</h1>""",
+      "//h1[@class='main']/text()" -> Some("T"), "//h1/b/text()" -> Some("x"))
+  }
+
+  test("walk compile: every shape outside the subset is JAXP's, and still reads") {
+    val outside = Seq(
+      "//*/text()", "//div//a/text()", "//a/following-sibling::b/text()", "//a/../b/text()",
+      "//a[contains(@class,'x')]/text()", "//a[normalize-space(.)='x']/text()",
+      "/html/body/h1/text()", "html/body/h1/text()", "//a/text() | //b/text()",
+      "//a[@x=\"v\"]/text()", "//a[@x='it''s']/text()", "//a[@href='/x/']/text()",
+      "//li[span='a/b']/text()", "//a[1][@x='y']/text()", "//A/text()", "//a[@X='y']/text()",
+      "//a", "//a/b", "//a/text()/b", "//a/@*", "//a/@href/text()", "//a[0]/text()",
+      "//a[ @x='y']/text()", "//li[span = 'x']/text()", "//a[last()]/text()",
+      "//a[position()=1]/text()", "//a[@x]/text()", "//node()/text()", "//a/comment()",
+      "//text()", "//@href", "string(//a)", "//a[@x='y']", "//a[@x=$v]/text()")
+    outside.foreach(p => assert(XPathWalk.compile(p).isEmpty, p))
+    val css = Seq("div.communityName a.info::attr(href)", ".base li::text", "h1.main::text")
+      .map(graft.lianjia.Css.toXPath)
+    css.foreach(p => assert(XPathWalk.compile(p).isEmpty, p))
+    val page = """<html><body><h1 class="main x">T</h1><div class="communityName">""" +
+      """<a class="info" href="/xiaoqu/7/">V</a></div><div class="base"><li>one</li></div></body></html>"""
+    val jaxpOnly = css ++ Seq("/html/body/h1/text()", "//div//a/text()", "//a[1][@class='info']/text()")
+    assert(WalkOracle.viaExpr(page, jaxpOnly) ===
+      Seq(Some("/xiaoqu/7/"), Some("one"), Some("T"), Some("T"), Some("V"), Some("V")))
+    assert(WalkOracle.viaExpr(page, jaxpOnly) === WalkOracle.viaJaxp(page, jaxpOnly))
+  }
+
+  test("a JAXP path that fails at evaluation reads NULL; the walked fields still read") {
+    // an unbound variable compiles, then raises XPathExpressionException
+    // on every evaluation
+    val page = "<html><body><h1 class=\"t\">T</h1><a href=\"/u\">A</a></body></html>"
+    val unbound = "//a[@href=$x]/text()"
+    intercept[javax.xml.xpath.XPathExpressionException] {
+      javax.xml.xpath.XPathFactory.newInstance().newXPath().compile(unbound)
+        .evaluate(graft.lianjia.HtmlSoup.parse(page))
+    }
+    val got = Seq(page).toDF("html")
+      .select(XPathStructExpr.xpathStruct(col("html"),
+        Seq("bad" -> unbound, "title" -> "//h1[@class='t']/text()")).as("x"))
+      .select("x.bad", "x.title").as[(Option[String], String)].head()
+    assert(got === ((None, "T")))
+  }
 }
